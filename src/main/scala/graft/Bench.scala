@@ -18,17 +18,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = tools.Harness.defaultCores
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    graft.localScratchConfigs.foreach { case (k, v) => builder.config(k, v) } // local-master harness: tmpfs scratch
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = tools.Harness.localSession(cpus)
     // SPARK_GRAFT_BENCH_ONLY=a,b,c isolates named queries (quiet-box
     // re-measures of a drifted min without the other 180 queries' JVM churn)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")

@@ -1641,7 +1641,6 @@ object OracleSql {
     val e2 = s"CAST('$e20' AS DOUBLE)"
     val nc = s"CAST('$nc0' AS DOUBLE)"
     val cb = s"CAST('$c0' AS DOUBLE)"
-    val rho0 = s"CAST('$rho00' AS DOUBLE)"
     val aa = s"CAST('$a0' AS DOUBLE)"
     s"""WITH p AS (SELECT c_custkey,
        |  radians((c_custkey % 60) * 0.1 + 0.05 - $lon0) AS dlam,

@@ -25,14 +25,7 @@ object SparkEntry {
     */
   private def freshRoot(tag: String, dir: String): String = {
     val p = java.nio.file.Paths.get(s"/tmp/graft_${tag}_${new java.io.File(dir).getName}")
-    def wipe(q: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(q)) {
-        val s = java.nio.file.Files.list(q)
-        try s.iterator().forEachRemaining(wipe) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(q)
-    }
-    wipe(p)
+    deleteRecursively(p)
     p.toString
   }
 
@@ -635,7 +628,7 @@ object SparkEntry {
       // finer grid (near the true bbox-overlap candidate count) plus salt:
       // 0.02° cells spread the join across ~400 cells × 8 salts
       SJoin.pairs(pts, rects, predicate = "within", cellDeg = 0.02,
-          tuning = SJoin.Tuning(cellDeg = 0.02, saltFactor = 8))
+          tuning = SJoin.Tuning(saltFactor = 8))
         .groupBy("s_suppkey")
         .agg(count(lit(1)).as("n_items"), round(sum("l_quantity"), 2).as("qty_sum"))
     }),
@@ -1288,8 +1281,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val qs = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
-          array_join(slice(filter(split(trim(lower(col("text"))), " +"),
-            x => x =!= ""), 1, 4), " ").as("query"))
+          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
       TextAnalysis.searchBM25(docs, qs, topK = 10)
     }),
 
@@ -1301,8 +1293,7 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val qs = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
-          array_join(slice(filter(split(trim(lower(col("text"))), " +"),
-            x => x =!= ""), 1, 4), " ").as("query"))
+          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
       val out = s"/tmp/graft_bm25idx_${new java.io.File(dir).getName}"
       TextAnalysis.buildBM25Index(docs, out)
       TextAnalysis.searchBM25Index(s, out, qs, topK = 10)
@@ -1324,8 +1315,7 @@ object SparkEntry {
         ManifestTable.readSince(s, root, sinceExclusive = 1L))
       val qs = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
-          array_join(slice(filter(split(trim(lower(col("text"))), " +"),
-            x => x =!= ""), 1, 4), " ").as("query"))
+          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
       TextAnalysis.searchBM25Index(s, out, qs, topK = 10)
     }),
 
@@ -1702,8 +1692,7 @@ object SparkEntry {
           col("chunk_text").as("text"))
       val qs = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
-          array_join(slice(filter(split(trim(lower(col("text"))), " +"),
-            x => x =!= ""), 1, 4), " ").as("query"))
+          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
       val hits = TextAnalysis.searchBM25(chunks, qs, topK = 10)
       val byDoc = hits
         .withColumn("src_doc", expr("doc_id div 100000"))
@@ -2106,8 +2095,7 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val qs = docs.where(col("doc_id") % 100 === 7)
         .select(col("doc_id").as("query_id"),
-          array_join(slice(filter(split(trim(lower(col("text"))), " +"),
-            x => x =!= ""), 1, 4), " ").as("query"))
+          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
       val lex = TextAnalysis.searchBM25(docs, qs, topK = 10)
       val sem = Similarity.bruteForceTopK(emb,
           emb.where(col("vec_id") % 100 === 7), "embedding", "vec_id", k = 10)

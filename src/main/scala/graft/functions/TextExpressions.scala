@@ -264,8 +264,13 @@ case class CompressRatio(child: Expression) extends UnaryExpression with Seriali
   override protected def withNewChildInternal(c: Expression): CompressRatio = copy(child = c)
 }
 
+/** |a ∩ b| of two strictly-increasing `array<int>`s. The kernel reads 4-byte
+  * elements, so any other element type is an analysis error, never a
+  * silently wrong count.
+  */
 case class SortedIntersectSize(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ExpectsInputTypes with Serializable {
+  override def inputTypes: Seq[ArrayType] = Seq(ArrayType(IntegerType), ArrayType(IntegerType))
   override def dataType: DataType = IntegerType
   override protected def nullSafeEval(a: Any, b: Any): Any =
     TextKernel.sortedIntersectSize(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

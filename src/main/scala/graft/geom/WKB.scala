@@ -1,7 +1,6 @@
 package graft.geom
 
 import java.nio.{ByteBuffer, ByteOrder}
-import scala.collection.mutable.ArrayBuffer
 
 /** WKB reader/writer (little-endian, 2D). This is graft's on-the-wire
   * geometry representation inside DataFrames: BinaryType columns — compact,

@@ -15,9 +15,9 @@ import org.apache.spark.sql.DataFrame
   * embeds the cached frame — explain-only consumers (plan audits, an
   * abandoned builder chain) never trigger the listener, and a plan
   * containing a nondeterministic expression can never `sameResult`-match.
-  * Such paths must call [[releaseAll]] when done (the Profile tool runs a
-  * real count, so the registry's own inspection path is covered); every
-  * registration is also tracked here so the valve can sweep stragglers.
+  * Such paths must call [[releaseAll]] when done (`Probe plan` does; its
+  * time and jobs modes run real counts); every registration is also
+  * tracked here so the valve can sweep stragglers.
   */
 private[graft] object Caches {
 

@@ -10,7 +10,10 @@ package graft.operators
   * The pool is sized to the task count and torn down before returning —
   * no shared state, no leaked threads. Failures propagate: the first
   * thrown exception is rethrown (unwrapped) after every action has
-  * finished or failed, so a partial write never goes unnoticed.
+  * finished or failed, so a partial write never goes unnoticed. An
+  * interrupt of the calling thread does not cut that wait short (it would
+  * otherwise tear sibling writes down mid-flight): the remaining actions
+  * are awaited, then the InterruptedException is rethrown.
   */
 private[graft] object Concurrent {
 
@@ -24,12 +27,22 @@ private[graft] object Concurrent {
         })
       }
       var firstFailure: Throwable = null
+      var interrupt: InterruptedException = null
       futures.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (firstFailure == null) firstFailure = e.getCause
+        var settled = false
+        while (!settled) {
+          try { f.get(); settled = true }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (firstFailure == null) firstFailure = e.getCause
+              settled = true
+            case e: InterruptedException => if (interrupt == null) interrupt = e
+          }
         }
+      }
+      if (interrupt != null) {
+        if (firstFailure != null) interrupt.addSuppressed(firstFailure)
+        throw interrupt
       }
       if (firstFailure != null) throw firstFailure
     } finally pool.shutdownNow()

@@ -361,8 +361,7 @@ object Dedup {
       shingle: Int = 5,
       candidateThreshold: Double = 0.5,
       jaccardThreshold: Double = 0.8,
-      ngram: Int = 3,
-      maxBucket: Int = 0): DataFrame = {
+      ngram: Int = 3): DataFrame = {
     require(numHashes % numBands == 0, "numBands must divide numHashes")
     val rowsPerBand = numHashes / numBands
     // 128-bit text key + map-side min_by (see textCollapsedPairs): the

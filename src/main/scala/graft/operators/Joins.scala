@@ -328,7 +328,7 @@ object Joins {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
 
     def toksOf(c: Column): Column =
-      array_distinct(filter(split(trim(lower(c)), " +"), x => x =!= ""))
+      array_distinct(TextAnalysis.wordTokens(c))
 
     // both sides normalize to the SAME generic column names before any
     // heavy work, so a true self-join (same frame, same columns) yields
@@ -527,7 +527,7 @@ object Joins {
     require(threshold > 0.0 && threshold <= 1.0, "threshold must be in (0, 1]")
 
     def toksOf(c: Column): Column =
-      array_distinct(filter(split(trim(lower(c)), " +"), x => x =!= ""))
+      array_distinct(TextAnalysis.wordTokens(c))
     def prep(df: DataFrame, id: String, tc: String): DataFrame =
       df.select(col(id).as("__id"), toksOf(col(tc)).as("__toks"))
         .where(size(col("__toks")) > 0)

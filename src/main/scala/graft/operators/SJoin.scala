@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.GeoFunctions._
 
@@ -22,15 +23,14 @@ object SJoin {
 
   val DefaultCellDeg = 0.5
 
-  /** Skew/broadcast tuning. `cellDeg` trades cover size vs selectivity;
-    * `saltFactor` > 1 splits each hot cell's left rows across that many
-    * shuffle keys (right side replicated per salt) — use when one cell holds
-    * a city's worth of geometry; `broadcastRight` hints the exploded right
-    * side for dim-table joins (zones, admin polygons), so the big left side
-    * never shuffles at all.
+  /** Skew/broadcast tuning. `saltFactor` > 1 splits each hot cell's left
+    * rows across that many shuffle keys (right side replicated per salt) —
+    * use when one cell holds a city's worth of geometry; `broadcastRight`
+    * hints the exploded right side for dim-table joins (zones, admin
+    * polygons), so the big left side never shuffles at all. The grid size
+    * is each call's `cellDeg` argument.
     */
   final case class Tuning(
-      cellDeg: Double = DefaultCellDeg,
       saltFactor: Int = 1,
       broadcastRight: Boolean = false)
 
@@ -67,7 +67,7 @@ object SJoin {
   /** Left side with a stable row id (narrow — no shuffle) for the join-back
     * variants (left joins, sagg, slookup, sfilter).
     */
-  private def tagged(left: DataFrame, leftGeom: String, cellDeg: Double): DataFrame =
+  private def tagged(left: DataFrame): DataFrame =
     left.withColumn(LID, monotonically_increasing_id())
 
   /** Deterministic row tag: a 128-bit content hash (two independently seeded
@@ -148,18 +148,36 @@ object SJoin {
   private def stableTagged(left: DataFrame): (DataFrame, Boolean) =
     if (contentTaggable(left)) (contentTagged(left), true)
     else {
-      val lt = tagged(left, "", 0.0)
-      lt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      releaseAfterAction(lt)
+      val lt = tagged(left)
+      val key = lt.queryExecution.analyzed.canonicalized
+      fallbackOwners.synchronized {
+        // claims on an entry someone else already uncached are void
+        val held = if (lt.storageLevel == StorageLevel.NONE) 0 else fallbackOwners.getOrElse(key, 0)
+        fallbackOwners(key) = held + 1
+        lt.persist(StorageLevel.MEMORY_AND_DISK)
+      }
+      releaseAfterAction(lt, key)
       (lt, false)
     }
 
-  /** Unpersists `lt` (and retires the listener) once an action whose
-    * analyzed plan contains the tagged frame completes — success or failure.
-    * Plan containment is checked with `sameResult`, so unrelated queries the
+  /** Open fallback persists per canonical tagged plan. Two calls over the
+    * same nondeterministic left (slookup then sfilter on one sampled frame)
+    * build `sameResult`-equal plans, so they share ONE cache entry — the
+    * second persist is a no-op — while each release runs asynchronously on
+    * the listener bus. Counting owners keeps an earlier call's late release
+    * from uncaching the entry a later call still scans twice.
+    */
+  private val fallbackOwners =
+    scala.collection.mutable.HashMap.empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]
+
+  /** Drops this call's claim on `lt`'s cache entry (and retires the
+    * listener) once an action whose analyzed plan contains the tagged frame
+    * completes — success or failure; the last claim unpersists. Plan
+    * containment is checked with `sameResult`, so unrelated queries the
     * session runs in between never trigger the release.
     */
-  private def releaseAfterAction(lt: DataFrame): Unit = {
+  private def releaseAfterAction(lt: DataFrame,
+      key: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = {
     val session = lt.sparkSession
     val target = lt.queryExecution.analyzed
     val done = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -168,7 +186,14 @@ object SJoin {
         private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
           if (qe.analyzed.find(_.sameResult(target)).isDefined &&
               done.compareAndSet(false, true)) {
-            lt.unpersist(blocking = false)
+            fallbackOwners.synchronized {
+              val n = fallbackOwners.getOrElse(key, 0) - 1
+              if (n > 0) fallbackOwners(key) = n
+              else {
+                fallbackOwners.remove(key)
+                lt.unpersist(blocking = false)
+              }
+            }
             session.listenerManager.unregister(listener)
           }
         override def onSuccess(funcName: String,
@@ -215,7 +240,7 @@ object SJoin {
       rightGeom: String,
       cellDeg: Double,
       rightSuffix: String,
-      tuning: Tuning = Tuning()): DataFrame = {
+      tuning: Tuning): DataFrame = {
     val clash = taggedLeft.columns.toSet
     val renamed = renameClashing(right, clash, rightSuffix)
     val rGeom = if (clash(rightGeom)) rightGeom + rightSuffix else rightGeom
@@ -288,6 +313,40 @@ object SJoin {
       .drop(LB).drop(RB).drop(CELL).drop(SALT)
   }
 
+  /** Candidate sides of the point-distance joins ([[snearest]],
+    * [[sdwithin]], [[sknn]]): each left point (id, `__lx`, `__ly`) explodes
+    * onto every grid cell its `maxDistanceM` search disc touches, each
+    * right point (id, `__rx`, `__ry`) sits in its single home cell — so a
+    * cell-keyed equi-join forms every candidate pair exactly once.
+    */
+  private def discCover(left: DataFrame, right: DataFrame, leftId: String, rightId: String,
+      leftGeom: String, rightGeom: String, maxDistanceM: Double,
+      cellDeg: Double): (DataFrame, DataFrame) = {
+    // conservative degree extents: 1° of latitude is πR/180 ≈ 111 195 m on
+    // the haversine sphere; dividing by 111 000 over-covers slightly
+    val dLat = maxDistanceM / 111000.0
+    val cd = if (cellDeg > 0) cellDeg else math.max(0.05, 2.0 * dLat)
+    val l0 = left.select(col(leftId),
+      st_x(col(leftGeom)).as("__lx"), st_y(col(leftGeom)).as("__ly"))
+    // clamp to a hemisphere: near the poles 1/cos(lat) explodes past any
+    // real longitude span and would generate junk cells no right point owns
+    val dLon = least(lit(180.0), lit(maxDistanceM) /
+      (lit(111000.0) * cos(radians(least(lit(89.9), abs(col("__ly")) + lit(dLat))))))
+    val l = l0
+      .withColumn("__ix", explode(sequence(
+        floor((col("__lx") - dLon + lit(180.0)) / lit(cd)),
+        floor((col("__lx") + dLon + lit(180.0)) / lit(cd)))))
+      .withColumn("__iy", explode(sequence(
+        floor((col("__ly") - lit(dLat) + lit(90.0)) / lit(cd)),
+        floor((col("__ly") + lit(dLat) + lit(90.0)) / lit(cd)))))
+      .withColumn(CELL, shiftleft(col("__ix"), 32)
+        .bitwiseOR(col("__iy").bitwiseAND(lit(0xffffffffL))))
+    val r = right
+      .select(col(rightId), st_x(col(rightGeom)).as("__rx"), st_y(col(rightGeom)).as("__ry"))
+      .withColumn(CELL, st_cellof(col("__rx"), col("__ry"), lit(cd)))
+    (l, r)
+  }
+
   /** Nearest-neighbor spatial join for POINT layers (the GeoPandas
     * `sjoin_nearest` shape; beyond erde's predicate joins): for every left
     * point, the closest right point by great-circle distance within
@@ -317,34 +376,12 @@ object SJoin {
       rightSuffix: String = "_right"): DataFrame = {
     require(how == "inner" || how == "left", s"how must be inner|left, got '$how'")
     require(maxDistanceM > 0, "maxDistanceM must be positive")
-    // conservative degree extents: 1° of latitude is πR/180 ≈ 111 195 m on
-    // the haversine sphere; dividing by 111 000 over-covers slightly
-    val dLat = maxDistanceM / 111000.0
-    val cd = if (cellDeg > 0) cellDeg else math.max(0.05, 2.0 * dLat)
-
     val clash = left.columns.toSet ++ Set("nearest_dist_m")
     val renamed = renameClashing(right, clash, rightSuffix)
     val rGeom = if (clash(rightGeom)) rightGeom + rightSuffix else rightGeom
     val rId = if (clash(rightId)) rightId + rightSuffix else rightId
 
-    val l0 = left.select(col(leftId),
-      st_x(col(leftGeom)).as("__lx"), st_y(col(leftGeom)).as("__ly"))
-    // clamp to a hemisphere: near the poles 1/cos(lat) explodes past any
-    // real longitude span and would generate junk cells no right point owns
-    val dLon = least(lit(180.0), lit(maxDistanceM) /
-      (lit(111000.0) * cos(radians(least(lit(89.9), abs(col("__ly")) + lit(dLat))))))
-    val l = l0
-      .withColumn("__ix", explode(sequence(
-        floor((col("__lx") - dLon + lit(180.0)) / lit(cd)),
-        floor((col("__lx") + dLon + lit(180.0)) / lit(cd)))))
-      .withColumn("__iy", explode(sequence(
-        floor((col("__ly") - lit(dLat) + lit(90.0)) / lit(cd)),
-        floor((col("__ly") + lit(dLat) + lit(90.0)) / lit(cd)))))
-      .withColumn(CELL, shiftleft(col("__ix"), 32)
-        .bitwiseOR(col("__iy").bitwiseAND(lit(0xffffffffL))))
-    val r = renamed
-      .select(col(rId), st_x(col(rGeom)).as("__rx"), st_y(col(rGeom)).as("__ry"))
-      .withColumn(CELL, st_cellof(col("__rx"), col("__ry"), lit(cd)))
+    val (l, r) = discCover(left, renamed, leftId, rId, leftGeom, rGeom, maxDistanceM, cellDeg)
 
     val best = l.join(r, CELL)
       .withColumn("__d", haversineM(col("__lx"), col("__ly"), col("__rx"), col("__ry")))
@@ -379,30 +416,12 @@ object SJoin {
       cellDeg: Double = 0.0,
       rightSuffix: String = "_right"): DataFrame = {
     require(maxDistanceM > 0, "maxDistanceM must be positive")
-    val dLat = maxDistanceM / 111000.0
-    val cd = if (cellDeg > 0) cellDeg else math.max(0.05, 2.0 * dLat)
-
     val clash = left.columns.toSet ++ Set("dist_m")
     val renamed = renameClashing(right, clash, rightSuffix)
     val rGeom = if (clash(rightGeom)) rightGeom + rightSuffix else rightGeom
     val rId = if (clash(rightId)) rightId + rightSuffix else rightId
 
-    val l0 = left.select(col(leftId),
-      st_x(col(leftGeom)).as("__lx"), st_y(col(leftGeom)).as("__ly"))
-    val dLon = least(lit(180.0), lit(maxDistanceM) /
-      (lit(111000.0) * cos(radians(least(lit(89.9), abs(col("__ly")) + lit(dLat))))))
-    val l = l0
-      .withColumn("__ix", explode(sequence(
-        floor((col("__lx") - dLon + lit(180.0)) / lit(cd)),
-        floor((col("__lx") + dLon + lit(180.0)) / lit(cd)))))
-      .withColumn("__iy", explode(sequence(
-        floor((col("__ly") - lit(dLat) + lit(90.0)) / lit(cd)),
-        floor((col("__ly") + lit(dLat) + lit(90.0)) / lit(cd)))))
-      .withColumn(CELL, shiftleft(col("__ix"), 32)
-        .bitwiseOR(col("__iy").bitwiseAND(lit(0xffffffffL))))
-    val r = renamed
-      .select(col(rId), st_x(col(rGeom)).as("__rx"), st_y(col(rGeom)).as("__ry"))
-      .withColumn(CELL, st_cellof(col("__rx"), col("__ry"), lit(cd)))
+    val (l, r) = discCover(left, renamed, leftId, rId, leftGeom, rGeom, maxDistanceM, cellDeg)
 
     val pairs = l.join(r, CELL)
       .withColumn("dist_m", haversineM(col("__lx"), col("__ly"), col("__rx"), col("__ry")))
@@ -438,30 +457,12 @@ object SJoin {
     require(how == "inner" || how == "left", s"how must be inner|left, got '$how'")
     require(k >= 1, "k must be positive")
     require(maxDistanceM > 0, "maxDistanceM must be positive")
-    val dLat = maxDistanceM / 111000.0
-    val cd = if (cellDeg > 0) cellDeg else math.max(0.05, 2.0 * dLat)
-
     val clash = left.columns.toSet ++ Set("knn_dist_m", "knn_rank")
     val renamed = renameClashing(right, clash, rightSuffix)
     val rGeom = if (clash(rightGeom)) rightGeom + rightSuffix else rightGeom
     val rId = if (clash(rightId)) rightId + rightSuffix else rightId
 
-    val l0 = left.select(col(leftId),
-      st_x(col(leftGeom)).as("__lx"), st_y(col(leftGeom)).as("__ly"))
-    val dLon = least(lit(180.0), lit(maxDistanceM) /
-      (lit(111000.0) * cos(radians(least(lit(89.9), abs(col("__ly")) + lit(dLat))))))
-    val l = l0
-      .withColumn("__ix", explode(sequence(
-        floor((col("__lx") - dLon + lit(180.0)) / lit(cd)),
-        floor((col("__lx") + dLon + lit(180.0)) / lit(cd)))))
-      .withColumn("__iy", explode(sequence(
-        floor((col("__ly") - lit(dLat) + lit(90.0)) / lit(cd)),
-        floor((col("__ly") + lit(dLat) + lit(90.0)) / lit(cd)))))
-      .withColumn(CELL, shiftleft(col("__ix"), 32)
-        .bitwiseOR(col("__iy").bitwiseAND(lit(0xffffffffL))))
-    val r = renamed
-      .select(col(rId), st_x(col(rGeom)).as("__rx"), st_y(col(rGeom)).as("__ry"))
-      .withColumn(CELL, st_cellof(col("__rx"), col("__ry"), lit(cd)))
+    val (l, r) = discCover(left, renamed, leftId, rId, leftGeom, rGeom, maxDistanceM, cellDeg)
 
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(leftId)).orderBy(col("__d"), col(rId))
@@ -503,7 +504,7 @@ object SJoin {
     // the left join reads the tagged left twice (matches + anti-join pass):
     // stableTagged picks content hash (no persist) or monotonic id + persist.
     // Inner joins scan once, so a bare monotonic tag is fine there.
-    val lt = if (how == "left") stableTagged(left)._1 else tagged(left, leftGeom, cellDeg)
+    val lt = if (how == "left") stableTagged(left)._1 else tagged(left)
     val inner = pairsKeyed(lt, right, predicate, leftGeom, rightGeom, cellDeg, rightSuffix, tuning)
     how match {
       case "inner" => inner.drop(LID)

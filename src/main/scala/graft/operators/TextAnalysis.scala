@@ -22,6 +22,13 @@ object TextAnalysis {
 
   private def tokens(textCol: String): Column = split(trim(col(textCol)), "\\s+")
 
+  /** Lower-cased, single-space-split, empty-free word tokens — the one
+    * tokenizer of the BM25, TF-IDF, BPE and set-similarity paths and their
+    * SQL mirrors (`list_filter(string_split(...), s -> s <> '')`).
+    */
+  private[graft] def wordTokens(c: Column): Column =
+    filter(split(trim(lower(c)), " +"), x => x =!= "")
+
   /** Deflate compression ratio per document (compressed bytes / raw bytes),
     * the Gopher-family redundancy gate: templated or repetitive documents
     * compress dramatically (< ~0.3) while natural prose sits near 0.4-0.6.
@@ -240,7 +247,7 @@ object TextAnalysis {
       textCol: String = "text",
       idCol: String = "doc_id",
       topK: Int = 0): DataFrame = {
-    val toks = filter(split(trim(lower(col(textCol))), " +"), x => x =!= "")
+    val toks = wordTokens(col(textCol))
     val words = df.select(col(idCol), explode(toks).as("term"))
     val tf = words.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -591,7 +598,7 @@ object TextAnalysis {
     // drop empty tokens: split("") yields [""], which would count one ghost
     // word (n_words 1, top_word_frac 1.0) for empty/whitespace-only docs —
     // the SQL mirror's list_filter(s -> s <> '') semantics
-    val t = filter(split(trim(lower(col(textCol))), " +"), x => x =!= "")
+    val t = wordTokens(col(textCol))
     val n = size(t)
     val bi = zip_with(
       slice(t, lit(1), greatest(n - 1, lit(0))),
@@ -675,7 +682,6 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75,
       topK: Int = 10): DataFrame = {
-    def toks(c: Column) = filter(split(trim(lower(c)), " +"), x => x =!= "")
     // __dl (doc length = Σ tf) is size(tokens) BEFORE the explode — one
     // projection instead of a per-doc window (exchange + sort over the
     // whole posting table); corpus stats likewise come from the un-exploded
@@ -684,7 +690,7 @@ object TextAnalysis {
     // is a single codegen pipeline, and materializing it costs more than
     // running it twice (measured on the r11 A/B).
     val base = corpus
-      .select(col(idCol).as("__doc"), toks(col(textCol)).as("__toks"))
+      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
       .where(size(col("__toks")) > 0)
     val postings = base
       .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
@@ -719,14 +725,13 @@ object TextAnalysis {
       path: String,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    def toks(c: Column) = filter(split(trim(lower(c)), " +"), x => x =!= "")
     // one tokenize + groupBy pass, persisted across the three writes —
     // __dl is size(tokens) before the explode (no per-doc window), __df a
     // per-term aggregate joined back (no per-term window sort); stats and
     // the docs sidecar read the cached postings instead of re-tokenizing
     // the corpus (guide §2.3/§2.4: three corpus passes → one)
     val postings = corpus
-      .select(col(idCol).as("__doc"), toks(col(textCol)).as("__toks"))
+      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
       .where(size(col("__toks")) > 0)
       .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
         explode(col("__toks")).as("__term"))
@@ -777,12 +782,11 @@ object TextAnalysis {
       newDocs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    import java.nio.file.{Files, Path => JPath, Paths}
-    def toks(c: Column) = filter(split(trim(lower(c)), " +"), x => x =!= "")
+    import java.nio.file.{Files, Paths}
     // __dl = size(tokens) before the explode — same no-window shape as
     // [[buildBM25Index]]; values identical to the old per-doc window sum
     val newPost = newDocs
-      .select(col(idCol).as("__doc"), toks(col(textCol)).as("__toks"))
+      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
       .where(size(col("__toks")) > 0)
       .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
         explode(col("__toks")).as("__term"))
@@ -819,13 +823,6 @@ object TextAnalysis {
       val dfNew = unioned.groupBy("__term").agg(count(lit(1)).as("__df"))
       val rewritten = unioned.join(dfNew, "__term")
         .select("__term", "__doc", "__tf", "__dl", "__df", "__bucket")
-      def deleteRec(p: JPath): Unit = {
-        if (Files.isDirectory(p)) {
-          val s = Files.list(p)
-          try s.iterator().forEachRemaining(deleteRec) finally s.close()
-        }
-        Files.deleteIfExists(p)
-      }
       val tmp = s"$path/.postings-tmp-${java.util.UUID.randomUUID()}"
       // the bucket rewrite, the stats accumulation and the docs append touch
       // disjoint paths and all derive from frames already settled above —
@@ -838,10 +835,10 @@ object TextAnalysis {
           buckets.foreach { bkt =>
             val dst = Paths.get(s"$path/postings/__bucket=$bkt")
             val src = Paths.get(s"$tmp/__bucket=$bkt")
-            deleteRec(dst)
+            graft.deleteRecursively(dst)
             if (Files.exists(src)) Files.move(src, dst)
           }
-          deleteRec(Paths.get(tmp))
+          graft.deleteRecursively(Paths.get(tmp))
         },
         () => {
           // stats accumulate; the old row is collected FIRST so the
@@ -881,9 +878,8 @@ object TextAnalysis {
       topK: Int = 10): DataFrame = {
     val postings = spark.read.parquet(s"$path/postings")
     val stats = spark.read.parquet(s"$path/stats")
-    def toks(c: Column) = filter(split(trim(lower(c)), " +"), x => x =!= "")
     val qterms = queries.select(col(queryIdCol).as("__qid"),
-        explode(array_distinct(toks(col(queryTextCol)))).as("__term"))
+        explode(array_distinct(wordTokens(col(queryTextCol)))).as("__term"))
       .withColumn("__bucket", termBucket(col("__term")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val buckets = qterms.select("__bucket").distinct()
@@ -909,9 +905,8 @@ object TextAnalysis {
       k1: Double,
       b: Double,
       topK: Int): DataFrame = {
-    def toks(c: Column) = filter(split(trim(lower(c)), " +"), x => x =!= "")
     val qterms = queries.select(col(queryIdCol).as("__qid"),
-      explode(array_distinct(toks(col(queryTextCol)))).as("__term"))
+      explode(array_distinct(wordTokens(col(queryTextCol)))).as("__term"))
     val matched = qterms
       .join(postingsWithDf, "__term")
       .crossJoin(broadcast(stats))
@@ -988,8 +983,7 @@ object TextAnalysis {
     }
     var prev: Option[DataFrame] = None
     var vocab = df
-      .select(explode(filter(split(trim(lower(col(textCol))), " +"),
-        x => x =!= "")).as("__w"))
+      .select(explode(wordTokens(col(textCol))).as("__w"))
       .groupBy("__w").agg(count(lit(1)).as("__c"))
       .select(sepWrap(col("__w")).as("__s"), col("__c"))
       .localCheckpoint(false)
@@ -1040,7 +1034,7 @@ object TextAnalysis {
     */
   def bpeApply(df: DataFrame, textCol: String = "text",
       merges: Seq[(String, String)]): DataFrame = {
-    val words = filter(split(trim(lower(col(textCol))), " +"), x => x =!= "")
+    val words = wordTokens(col(textCol))
     val tokCount = (w: Column) => {
       val folded = merges.foldLeft(sepWrap(w)) { case (c, (a, b)) =>
         val (pat, rep) = mergePat(a, b)

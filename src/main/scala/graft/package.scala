@@ -29,26 +29,12 @@ package object graft {
 
   /** Reads a test table; normalizes the events `ts` column back to
     * TimestampType so downstream window/date functions see real timestamps.
-    *
-    * The driver's test tables are single-file, SINGLE-ROW-GROUP parquet, so
-    * every scan is one task and per-row-heavy map stages above it (tokenize
-    * + explode, geometry kernels, image decode) serialize on one core —
-    * the "one huge unsplittable file" input-skew case of the optimization
-    * guide (§2.5: repartition immediately after the read). One round-robin
-    * exchange of the sub-10-MB input spreads that work across the session's
-    * cores. Parameterised: SPARK_GRAFT_READ_SPREAD sets the partition
-    * count (0 disables — a production table already arrives in many
-    * splits; this exchange exists for unsplittable single-file inputs,
-    * never for data that is born partitioned).
+    * No blanket repartition: the test tables are single-file parquet, and
+    * only the per-row-heavy stages that need it apply [[spreadScan]].
     */
   def readTable(s: SparkSession, dir: String, name: String): DataFrame = {
     val raw = s.read.parquet(tablePath(dir, name))
-    val df = if (name == "events") normalizeTs(raw) else raw
-    // tolerant parse: a malformed env value degrades to the disabled
-    // default instead of killing every entrypoint with NumberFormatException
-    val spread = sys.env.get("SPARK_GRAFT_READ_SPREAD")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ > 0).getOrElse(0)
-    if (spread > 0) df.repartition(spread) else df
+    if (name == "events") normalizeTs(raw) else raw
   }
 
   /** One round-robin exchange spreading an unsplittable single-file scan
@@ -68,14 +54,10 @@ package object graft {
   val sessionConfigs: Map[String, String] = Map(
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.sql.adaptive.enabled" ->
-      sys.env.getOrElse("SPARK_GRAFT_AQE", "true"),
+    "spark.sql.adaptive.enabled" -> "true",
     // Let the planner pick shuffled-hash over sort-merge when the per-
     // partition build side fits (guide §3.1) — skips two sorts per join.
-    // Env-gated: a deployment on skewed / size-misestimated data can revert
-    // to sort-merge's graceful spill without a code change.
-    "spark.sql.join.preferSortMergeJoin" ->
-      sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"),
+    "spark.sql.join.preferSortMergeJoin" -> "false",
   ) ++
     // explicit scratch override stays honored everywhere (a deliberate env
     // var is not an autodetect)
@@ -100,4 +82,15 @@ package object graft {
         Map("spark.local.dir" -> "/dev/shm/graft_spark_local")
       else Map.empty
     }
+
+  /** Deletes `p` and everything under it; a missing path is a no-op. Each
+    * directory listing is closed before its directory is removed.
+    */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
+    if (java.nio.file.Files.isDirectory(p)) {
+      val s = java.nio.file.Files.list(p)
+      try s.iterator().forEachRemaining(deleteRecursively) finally s.close()
+    }
+    java.nio.file.Files.deleteIfExists(p)
+  }
 }

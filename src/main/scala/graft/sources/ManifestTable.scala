@@ -18,6 +18,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, countDistinct, lit, max, min, sum, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.deleteRecursively
 import graft.geom.GeoJson
 import graft.geom.GeoJson.{J, JArr, JNum, JObj, JStr}
 
@@ -1245,9 +1246,12 @@ object ManifestTable {
   private def footerStats(spark: SparkSession, rootP: JPath,
       dataRel: String): Seq[FileEntry] = {
     val dir = rootP.resolve(dataRel)
-    val files = Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet"))
-      .map(_.toAbsolutePath.toString).toSeq.sorted
+    val s = Files.list(dir)
+    val files =
+      try s.iterator().asScala
+        .filter(p => p.getFileName.toString.endsWith(".parquet"))
+        .map(_.toAbsolutePath.toString).toSeq.sorted
+      finally s.close()
     if (files.isEmpty) return Nil
     val rootStr = rootP.toAbsolutePath.toString
     // footer reads are metadata-only: for a handful of files a driver loop
@@ -1364,7 +1368,9 @@ object ManifestTable {
     val dataDir = rootP.resolve("data")
     if (!Files.isDirectory(dataDir)) return Nil
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val deleted = Files.list(dataDir).iterator().asScala.toSeq.flatMap { d =>
+    val s = Files.list(dataDir)
+    val dirs = try s.iterator().asScala.toSeq finally s.close()
+    val deleted = dirs.flatMap { d =>
       val rel = s"data/${d.getFileName}"
       val old = Files.getLastModifiedTime(d).toMillis <= cutoff
       if (!referenced(rel) && old) { deleteRecursively(d); Some(rel) } else None
@@ -1380,12 +1386,6 @@ object ManifestTable {
           Files.deleteIfExists(feedDir.resolve(feedName(m.version, i)))
     }
     deleted.sorted
-  }
-
-  private def deleteRecursively(p: JPath): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   // ----------------------------------------------------------------- json

@@ -36,7 +36,6 @@ object SqliteDb {
     * [[read]], mirroring `Gpkg.layers`.
     */
   def tables(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
     val head = binaryFiles(spark, path).head()
     new Gpkg.Sqlite(head).master
       .filter(m => m._1 == "table" && !m._2.startsWith("sqlite_"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Dedup, GeoOps, Graph, Joins, Kll, Ops, OsmFilter, SJoin, Similarity, Sketch}
@@ -48,16 +48,9 @@ object ScaleCheck {
     // optional substring filter: `ScaleCheck <sfDir> <factor> graph` times
     // only the matching pairs (iteration stays cheap on a 32-pair harness)
     val only = if (args.length > 2) Some(args(2)) else None
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
     // driver heap is the JVM's own — set it at launch (e.g. `sbt -mem 8192`);
-    // a builder config here would be a silent no-op in a running JVM
-    graft.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    graft.localScratchConfigs.foreach { case (k, v) => builder.config(k, v) } // local-master harness: tmpfs scratch
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // a session config would be a silent no-op in a running JVM
+    val spark = Harness.localSession(Harness.defaultCores)
 
     // the simulated-corpus frames are CHECKPOINTED once: the decorrelation
     // transforms (per-copy translate / array rotate) otherwise recompute on

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Physical-plan audits for the scale claims in SURVEY §4/§6: the grid
   * spatial join must never degenerate into a cartesian product, dimension

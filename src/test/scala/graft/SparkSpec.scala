@@ -13,16 +13,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    graft.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    graft.localScratchConfigs.foreach { case (k, v) => b.config(k, v) } // local-master harness: tmpfs scratch
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = graft.tools.Harness.localSession(4)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

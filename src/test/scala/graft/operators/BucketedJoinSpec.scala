@@ -7,8 +7,6 @@ import graft.SparkSpec
 
 class BucketedJoinSpec extends AnyFunSuite with SparkSpec {
 
-  import testImplicits._
-
   test("bucketed tables join without an exchange") {
     // clean both catalog entries and any orphaned warehouse dirs from aborted runs
     Seq("orders_b", "lineitem_b").foreach { tbl =>

@@ -284,6 +284,14 @@ class JoinsSpec extends AnyFunSuite with SparkSpec {
     assert(got.count() == 0L, got.collect().mkString("\n"))
   }
 
+  test("sorted_intersect_size rejects array<long> at analysis") {
+    val df = Seq((Seq(1L, 2L, 3L), Seq(2L, 3L, 4L))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.select(graft.functions.TextFunctions.sorted_intersect_size($"a", $"b")).collect()
+    }
+    assert(e.getMessage.contains("sorted_intersect_size"), e.getMessage)
+  }
+
   test("setSimJoin plans hash joins only — no cartesian, no BNLJ") {
     val df = simRows.toDF("id", "text")
     val plan = Joins.setSimJoin(df, df, "id", "text", "id", "text", 0.5)

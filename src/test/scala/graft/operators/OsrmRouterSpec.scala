@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec

@@ -187,7 +187,7 @@ class SketchSpec extends AnyFunSuite with SparkSpec {
   test("per-group HLL: each group's estimate tracks its exact cardinality") {
     import testImplicits._
     // group g has (g+1)*500 distinct values, plus repeats
-    val rows = for (g <- 0 to 3; i <- 0 until (g + 1) * 500; rep <- 0 to i % 2)
+    val rows = for (g <- 0 to 3; i <- 0 until (g + 1) * 500; _ <- 0 to i % 2)
       yield (s"g$g", (g * 1000000 + i).toLong)
     val df = rows.toDF("grp", "v").repartition(7)
     val est = Sketch.hllDistinctByGroup(df, "v", Seq("grp"))

@@ -8,8 +8,6 @@ import graft.functions.GeoFunctions._
 
 class UnionAggSpec extends AnyFunSuite with SparkSpec {
 
-  import testImplicits._
-
   test("dissolve of many disjoint buffers: area = sum, and it finishes fast") {
     // 2000 points on a wide grid → disjoint 20-gon buffers; lazy accumulation
     // keeps this linear (the eager per-row re-union was quadratic)

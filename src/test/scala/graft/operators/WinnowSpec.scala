@@ -82,7 +82,6 @@ class WinnowSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("substringDupStats: planted cross-doc template is flagged, unique docs kept") {
-    val rnd = new scala.util.Random(5)
     def noise(n: Int, seed: Int) = {
       val r = new scala.util.Random(seed)
       (0 until n).map(_ => ('a' + r.nextInt(26)).toChar).mkString

@@ -5,7 +5,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, T
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec

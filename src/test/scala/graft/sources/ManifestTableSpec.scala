@@ -777,13 +777,6 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     // and rebuild tables at one path, reusing version numbers; the cache
     // must key on the checkpoint's own id or reads resolve DELETED files
     val root = tmp("ckptwipe")
-    def wipe(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.foreach(wipe) finally s.close()
-      }
-      Files.deleteIfExists(p)
-    }
     def build(tag: String): Unit = {
       (0 until 3).foreach(i =>
         ManifestTable.append(idTable(i * 10 until i * 10 + 10, tag), root))
@@ -791,7 +784,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     }
     build("first")
     assert(ManifestTable.read(spark, root).count() == 30) // populates the cache
-    Files.list(Paths.get(root)).iterator().asScala.toSeq.foreach(wipe)
+    Files.list(Paths.get(root)).iterator().asScala.toSeq.foreach(graft.deleteRecursively)
     build("second")
     val back = ManifestTable.read(spark, root)
     assert(back.count() == 30)
@@ -888,5 +881,22 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     assert(feedCount == 0) // both appends reclaimed with their commits
     // the overwrite's own files are NOT feed entries (appends only)
     assert(ManifestTable.read(spark, root).count() == 3)
+  }
+
+  test("appends and vacuum close every directory handle they open under the root") {
+    val root = tmp("fds")
+    val real = Paths.get(root).toRealPath().toString
+    def openUnderRoot: Seq[String] = {
+      val s = Files.list(Paths.get("/proc/self/fd"))
+      try s.iterator().asScala.toSeq
+        .flatMap(fd => scala.util.Try(Files.readSymbolicLink(fd).toString).toOption)
+        .filter(_.startsWith(real))
+      finally s.close()
+    }
+    (0 until 5).foreach(i => ManifestTable.append(idTable(i * 10 until i * 10 + 10, "a"), root))
+    assert(openUnderRoot.isEmpty, openUnderRoot.mkString("\n"))
+    ManifestTable.overwrite(idTable(100 until 103, "z"), root)
+    ManifestTable.vacuum(root, keepVersions = 1, minAgeMs = 0L)
+    assert(openUnderRoot.isEmpty, openUnderRoot.mkString("\n"))
   }
 }
