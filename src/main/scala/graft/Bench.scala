@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints one JSON line. A first untimed pass warms the JVM (codegen
+  * prints two JSON lines. A first untimed pass warms the JVM (codegen
   * compilation, broadcast machinery, file listing); then the whole suite is
   * timed SPARK_GRAFT_BENCH_RUNS times (default 2) and each query reports its
   * MINIMUM across passes — a single interference spike (GC burst, noisy
@@ -13,7 +13,10 @@ import org.apache.spark.sql.SparkSession
   * interference (large spread, min stable) from a real regression (min
   * itself moved) without a re-run. Queries whose min is still ≥ 2 s after
   * the regular passes — the multi-job iterative tier that inflates 2–4×
-  * under load — get one extra timed pass to firm up their min.
+  * under load — get one extra timed pass to firm up their min. A query
+  * that throws in any timed pass is named on stderr, left out of every
+  * reported map and the total, and makes the main exit 1 once both stdout
+  * lines are out.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -32,26 +35,35 @@ object Bench {
     }
     // whole-suite passes (not back-to-back per query): spacing the repeats
     // decorrelates a burst of box-level noise from any single query
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : (String, Double) = {
+        : Option[(String, Double)] = {
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
+      try {
+        fn(spark, sfDir).count()
+        Some(name -> (System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        None
+      }
     }
-    val basePasses = (1 to nRuns).map { _ => ordered.map((timeOne _).tupled).toMap }
+    val basePasses = (1 to nRuns).map { _ => ordered.flatMap((timeOne _).tupled).toMap }
     // slow-tier top-up: one more pass for queries still ≥ 2 s — exactly the
     // multi-job iterative queries ambient load inflates hardest
-    val slow = ordered.filter { case (n, _) => basePasses.map(_(n)).min >= 2.0 }
-    val extra = if (slow.nonEmpty) Seq(slow.map((timeOne _).tupled).toMap) else Nil
+    val slow = ordered.filter { case (n, _) =>
+      !failed(n) && basePasses.map(_(n)).min >= 2.0 }
+    val extra = if (slow.nonEmpty) Seq(slow.flatMap((timeOne _).tupled).toMap) else Nil
     def passesOf(name: String): Seq[Double] =
       (basePasses ++ extra).flatMap(_.get(name))
-    val results = ordered.map { case (name, _) => name -> passesOf(name).min }
+    val timed = ordered.filterNot { case (name, _) => failed(name) }
+    val results = timed.map { case (name, _) => name -> passesOf(name).min }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val runs = ordered.map { case (name, _) =>
+    val runs = timed.map { case (name, _) =>
       s"\"" + name + "\":" + passesOf(name).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
-    val spread = ordered.map { case (name, _) =>
+    val spread = timed.map { case (name, _) =>
       val p = passesOf(name)
       s"\"" + name + "\":" + (p.max - p.min)
     }.mkString("{", ",", "}")
@@ -85,5 +97,9 @@ object Bench {
         (full + "\n").getBytes("UTF-8"))
     } catch { case _: Exception => () }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -100,7 +100,7 @@ object Clustering {
     val pairs = probe.join(home, Seq("__cx", "__cy"))
       .where(dist2 <= lit(eps * eps))
       .select("__aid", "__bid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.persist)
 
     val core = pairs.groupBy("__aid").agg(count(lit(1)).as("__ncnt"))
       .where(col("__ncnt") >= minPts)

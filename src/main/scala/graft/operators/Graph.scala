@@ -15,17 +15,6 @@ object Graph {
     * as the cheap first stage of the fixpoint test. The sums accumulate in
     * DECIMAL(38,0): a long sum would overflow (and throw under ANSI mode).
     */
-  /** Frees a lazy localCheckpoint's blocks. The persistence lives on the
-    * RDD wrapped by the checkpoint's LogicalRDD plan — `Dataset.unpersist`
-    * only drops CacheManager-registered plans, so it never touches these; a
-    * non-checkpoint plan is left alone.
-    */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
   private def signatureOf(e: DataFrame): (Long, (BigDecimal, BigDecimal)) = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val r = e.agg(
@@ -129,13 +118,11 @@ object Graph {
       converged = nextCount == eCount && nextSig == eSig && next.except(e).isEmpty
       // the prior round's checkpoint is dead once `next` is materialized and
       // the fixpoint test above has read it — free its blocks so a long-lived
-      // session doesn't accumulate one edge-set copy per round. Dataset
-      // .unpersist would be a NO-OP here: localCheckpoint persistence lives
-      // on the wrapped RDD (CacheManager never sees it), so unpersist the
-      // LogicalRDD's rdd itself. Safe: nothing downstream references the
-      // round (a local checkpoint can't recompute after the drop, but e0 and
-      // the final round are never dropped).
-      unpersistCheckpoint(e)
+      // session doesn't accumulate one edge-set copy per round. Safe:
+      // nothing downstream references the round (a local checkpoint can't
+      // recompute after the drop, but e0 and the final round are never
+      // dropped).
+      Caches.release(e)
       e = next
       eCount = nextCount
       eSig = nextSig
@@ -213,7 +200,7 @@ object Graph {
       .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
     val res = out.localCheckpoint(true) // materialize, then release inputs
-    Seq(und, oriented).foreach(unpersistCheckpoint)
+    Seq(und, oriented).foreach(Caches.release)
     res
   }
 
@@ -265,7 +252,7 @@ object Graph {
     // the eager checkpoint materializes the whole round cascade in one job;
     // then every round frontier and the adjacency free their blocks
     val res = frontiers.reduceLeft(_ unionByName _).localCheckpoint(true)
-    (frontiers :+ adj).foreach(unpersistCheckpoint)
+    (frontiers :+ adj).foreach(Caches.release)
     res
   }
 
@@ -343,8 +330,8 @@ object Graph {
     // block checkpoints and the input tables free their blocks — only the
     // final round's RDD stays, backing the returned frame.
     rank.count()
-    dead.dropRight(1).foreach(unpersistCheckpoint)
-    Seq(e0, deg, contrib, nodes).foreach(unpersistCheckpoint)
+    dead.dropRight(1).foreach(Caches.release)
+    Seq(e0, deg, contrib, nodes).foreach(Caches.release)
     rank
   }
 }

@@ -11,13 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Joins {
 
-  // set-similarity frames are referenced two or three times (prefix/index
-  // explode + exact-verify join-back): without the persist every reference
-  // recomputes the aggregation subtree from the scan (~4 corpus scans per
-  // use). Deterministic release policy documented on [[Caches]].
-  private def cachedUntilAction(df: DataFrame): DataFrame =
-    Caches.cachedUntilAction(df)
-
   /** Edit-distance threshold join: all (left, right) pairs with
     * `levenshtein(left[leftCol], right[rightCol]) <= maxDist`, each pair
     * emitted once with an `edit_dist` column.
@@ -356,7 +349,7 @@ object Joins {
     val dfreq = l0.select(explode(col("__toks")).as("__tok"))
       .unionAll(r0.select(explode(col("__toks")).as("__tok")))
       .groupBy("__tok").agg(count(lit(1)).as("__df"))
-    val dict = cachedUntilAction(dfreq.select(col("__tok"),
+    val dict = Caches.cachedUntilAction(dfreq.select(col("__tok"),
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("__df"), col("__tok"))).as("__rnk")))
 
@@ -366,8 +359,10 @@ object Joins {
         .groupBy(col("__id"))
         .agg(sort_array(collect_list(col("__rnk"))).as("__stoks"))
         .select(col("__id"), col("__stoks"), size(col("__stoks")).as("__n"))
-    val ls = cachedUntilAction(sortedSide(l0))
-    val rs = cachedUntilAction(sortedSide(r0))
+    // each side feeds the prefix explode AND the exact-verify join-back —
+    // unpersisted, every reference recomputes the aggregation from the scan
+    val ls = Caches.cachedUntilAction(sortedSide(l0))
+    val rs = Caches.cachedUntilAction(sortedSide(r0))
 
     def prefixLen(n: Column): Column =
       (n - ceil(lit(threshold) * n.cast("double") - lit(1e-9)).cast("int") + 1)
@@ -542,7 +537,7 @@ object Joins {
     val dfreq = l0.select(explode(col("__toks")).as("__tok"))
       .unionAll(r0.select(explode(col("__toks")).as("__tok")))
       .groupBy("__tok").agg(count(lit(1)).as("__df"))
-    val dict = cachedUntilAction(dfreq.select(col("__tok"),
+    val dict = Caches.cachedUntilAction(dfreq.select(col("__tok"),
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("__df"), col("__tok"))).as("__rnk")))
 
@@ -555,8 +550,8 @@ object Joins {
         .groupBy(col("__id"))
         .agg(sort_array(collect_list(col("__rnk"))).as("__stoks"))
         .select(col("__id"), col("__stoks"), size(col("__stoks")).as("__n"))
-    val ls = cachedUntilAction(sortedSide(l0))
-    val rs = cachedUntilAction(sortedSide(r0)
+    val ls = Caches.cachedUntilAction(sortedSide(l0))
+    val rs = Caches.cachedUntilAction(sortedSide(r0)
       .select(col("__id").as("__rid"), col("__stoks").as("__rtoks"),
         col("__n").as("__rn")))
 

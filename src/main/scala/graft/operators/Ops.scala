@@ -909,8 +909,7 @@ object Ops {
       items.groupBy("__b").agg(count(lit(1)).as("__n"))
         .where(col("__n") <= maxBasket && col("__n") >= 2),
       "__b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Caches.releaseAfterAction(sized)
+      .transform(Caches.cachedUntilAction)
     // N travels as a broadcast 1-row aggregate instead of a driver-side
     // count: the scalar fetch was its own full pass over sized (a separate
     // job) just to embed a literal the plan can carry itself

@@ -150,46 +150,12 @@ object OsmFilter {
     val result = keptNodes
       .unionByName(keptWays)
       .unionByName(rels.join(keptRelIds, Seq(idCol), "left_semi"))
-    releaseCheckpointsAfterAction(result, checkpointed.toSeq)
+    // the id checkpoints free once an action over the crop result runs;
+    // re-running an action on the same crop frame afterwards just
+    // re-derives the ids — callers acting twice should cache the
+    // (selectivity-bounded) RESULT
+    Caches.releaseWhen(result, checkpointed.toSeq: _*)
     result
-  }
-
-  /** Frees the lazily localCheckpointed id frames once an action whose plan
-    * contains the crop result completes — the same deterministic-release
-    * discipline as SJoin's fallback persist. `Dataset.unpersist` never
-    * touches these blocks (they live on the RDD wrapped by the checkpoint's
-    * LogicalRDD, invisible to the CacheManager), so the listener unpersists
-    * the wrapped RDDs directly. Re-running an action on the same crop frame
-    * afterwards just re-derives the ids — callers acting twice should cache
-    * the (selectivity-bounded) RESULT.
-    */
-  private def releaseCheckpointsAfterAction(result: DataFrame, cps: Seq[DataFrame]): Unit = {
-    if (cps.isEmpty) return
-    val session = result.sparkSession
-    val target = result.queryExecution.analyzed
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    lazy val listener: org.apache.spark.sql.util.QueryExecutionListener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          if (qe.analyzed.find(_.sameResult(target)).isDefined &&
-              done.compareAndSet(false, true)) {
-            cps.foreach { df =>
-              df.queryExecution.analyzed match {
-                case lr: org.apache.spark.sql.execution.LogicalRDD =>
-                  lr.rdd.unpersist(blocking = false)
-                case _ => ()
-              }
-            }
-            session.listenerManager.unregister(listener)
-          }
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-          maybeRelease(qe)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-          maybeRelease(qe)
-      }
-    session.listenerManager.register(listener)
   }
 
   /** Tag keys whose presence makes a CLOSED way a polygon (the reference's

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.GeoFunctions._
 
@@ -137,74 +136,17 @@ object SJoin {
     * can be 100 TB — else monotonic id + persist, because a second scan of a
     * nondeterministic / round-robin-repartitioned frame can re-assign ids
     * and silently mis-join results onto the wrong rows. The fallback persist
-    * is released DETERMINISTICALLY: a QueryExecutionListener unpersists it
-    * the first time an action consuming the tagged frame completes, so
-    * looped pipelines over nondeterministic frames don't accumulate cached
-    * left sides. (Re-running an action on the same result frame after that
-    * first completion would re-scan uncached — callers that act twice should
+    * is released deterministically by [[Caches.cachedUntilAction]] the first
+    * time an action consuming the tagged frame completes, so looped
+    * pipelines over nondeterministic frames don't accumulate cached left
+    * sides. (Re-running an action on the same result frame after that first
+    * completion would re-scan uncached — callers that act twice should
     * cache the RESULT, which is the cheap side.) Returns
     * (tagged, usedContentTag).
     */
   private def stableTagged(left: DataFrame): (DataFrame, Boolean) =
     if (contentTaggable(left)) (contentTagged(left), true)
-    else {
-      val lt = tagged(left)
-      val key = lt.queryExecution.analyzed.canonicalized
-      fallbackOwners.synchronized {
-        // claims on an entry someone else already uncached are void
-        val held = if (lt.storageLevel == StorageLevel.NONE) 0 else fallbackOwners.getOrElse(key, 0)
-        fallbackOwners(key) = held + 1
-        lt.persist(StorageLevel.MEMORY_AND_DISK)
-      }
-      releaseAfterAction(lt, key)
-      (lt, false)
-    }
-
-  /** Open fallback persists per canonical tagged plan. Two calls over the
-    * same nondeterministic left (slookup then sfilter on one sampled frame)
-    * build `sameResult`-equal plans, so they share ONE cache entry — the
-    * second persist is a no-op — while each release runs asynchronously on
-    * the listener bus. Counting owners keeps an earlier call's late release
-    * from uncaching the entry a later call still scans twice.
-    */
-  private val fallbackOwners =
-    scala.collection.mutable.HashMap.empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Int]
-
-  /** Drops this call's claim on `lt`'s cache entry (and retires the
-    * listener) once an action whose analyzed plan contains the tagged frame
-    * completes — success or failure; the last claim unpersists. Plan
-    * containment is checked with `sameResult`, so unrelated queries the
-    * session runs in between never trigger the release.
-    */
-  private def releaseAfterAction(lt: DataFrame,
-      key: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = {
-    val session = lt.sparkSession
-    val target = lt.queryExecution.analyzed
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    lazy val listener: org.apache.spark.sql.util.QueryExecutionListener =
-      new org.apache.spark.sql.util.QueryExecutionListener {
-        private def maybeRelease(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-          if (qe.analyzed.find(_.sameResult(target)).isDefined &&
-              done.compareAndSet(false, true)) {
-            fallbackOwners.synchronized {
-              val n = fallbackOwners.getOrElse(key, 0) - 1
-              if (n > 0) fallbackOwners(key) = n
-              else {
-                fallbackOwners.remove(key)
-                lt.unpersist(blocking = false)
-              }
-            }
-            session.listenerManager.unregister(listener)
-          }
-        override def onSuccess(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
-          maybeRelease(qe)
-        override def onFailure(funcName: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
-          maybeRelease(qe)
-      }
-    session.listenerManager.register(listener)
-  }
+    else (Caches.cachedUntilAction(tagged(left)), false)
 
   private def renameClashing(right: DataFrame, clash: Set[String], suffix: String): DataFrame =
     right.columns.foldLeft(right) { (df, c0) =>

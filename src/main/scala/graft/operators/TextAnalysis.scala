@@ -881,7 +881,7 @@ object TextAnalysis {
     val qterms = queries.select(col(queryIdCol).as("__qid"),
         explode(array_distinct(wordTokens(col(queryTextCol)))).as("__term"))
       .withColumn("__bucket", termBucket(col("__term")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Caches.persist)
     val buckets = qterms.select("__bucket").distinct()
       .collect().map(_.getLong(0)) // ≤ 64 values — a driver-side IN list
     val pruned = postings.where(col("__bucket").isin(buckets: _*))
@@ -891,7 +891,7 @@ object TextAnalysis {
     // release (the bucket fetch is an internal action; a first-action
     // release would drop the cache before the caller's query runs)
     val res = scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
-    graft.operators.Caches.releaseWhen(res, qterms)
+    Caches.releaseWhen(res, qterms)
     res
   }
 
@@ -976,11 +976,6 @@ object TextAnalysis {
     // the collect — never before, a truncated-lineage checkpoint cannot
     // recompute — and the tail frames free on return: training leaves no
     // persistent RDDs behind (the pagerank release pattern)
-    def release(f: DataFrame): Unit = f.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
     var prev: Option[DataFrame] = None
     var vocab = df
       .select(explode(wordTokens(col(textCol))).as("__w"))
@@ -1001,7 +996,7 @@ object TextAnalysis {
         .groupBy("__p").agg(sum("__c").as("__n"))
         .orderBy(col("__n").desc, col("__p").asc)
         .limit(1).collect() // bounded: one row; materializes `vocab`
-      prev.foreach(release); prev = None
+      prev.foreach(Caches.release); prev = None
       if (best.isEmpty) exhausted = true
       else {
         val Array(a, b) = best(0).getString(0).split(P, 2)
@@ -1017,8 +1012,8 @@ object TextAnalysis {
     // the tail pair: `prev` is materialized, `vocab` never will be (its
     // round never ran) — unpersisting an unmaterialized lazy checkpoint is
     // a no-op, so both free safely
-    prev.foreach(release)
-    release(vocab)
+    prev.foreach(Caches.release)
+    Caches.release(vocab)
     merges.toSeq
   }
 

@@ -160,13 +160,7 @@ object ArrowIpc {
   // ---- read ----------------------------------------------------------------
 
   private def listArrow(path: String): Seq[String] = {
-    val p = Paths.get(path)
-    val files =
-      if (Files.isDirectory(p))
-        Files.walk(p).iterator().asScala
-          .filter(f => f.toString.endsWith(".arrow") && Files.isRegularFile(f))
-          .map(_.toString).toSeq.sorted
-      else Seq(path)
+    val files = graft.listFiles(path, ".arrow")
     require(files.nonEmpty, s"no .arrow files under $path")
     files
   }
@@ -571,13 +565,7 @@ object ArrowIpc {
   // ---- streaming-format read -----------------------------------------------
 
   private def listArrows(path: String): Seq[String] = {
-    val p = Paths.get(path)
-    val files =
-      if (Files.isDirectory(p))
-        Files.walk(p).iterator().asScala
-          .filter(f => f.toString.endsWith(".arrows") && Files.isRegularFile(f))
-          .map(_.toString).toSeq.sorted
-      else Seq(path)
+    val files = graft.listFiles(path, ".arrows")
     require(files.nonEmpty, s"no .arrows files under $path")
     files
   }

@@ -204,13 +204,7 @@ object Avro {
   // ---- read ----------------------------------------------------------------
 
   private def listAvro(path: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(path)
-    val files =
-      if (java.nio.file.Files.isDirectory(p))
-        java.nio.file.Files.walk(p).iterator().asScala
-          .filter(f => f.toString.endsWith(".avro") && java.nio.file.Files.isRegularFile(f))
-          .map(_.toString).toSeq.sorted
-      else Seq(path)
+    val files = graft.listFiles(path, ".avro")
     require(files.nonEmpty, s"no .avro files under $path")
     files
   }

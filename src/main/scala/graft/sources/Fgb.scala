@@ -298,9 +298,7 @@ object Fgb {
     */
   def readSplit(spark: SparkSession, path: String, featuresPerSplit: Int = 4096,
       columns: Seq[String] = Nil): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
-      .filter(_.toString.endsWith(".fgb")).map(_.toString).toSeq.sorted
+    val files = graft.listFiles(path, ".fgb")
     require(files.nonEmpty, s"no .fgb files under $path")
     val headBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(files.head))
     val bbHead = Flatbuf.le(headBytes)

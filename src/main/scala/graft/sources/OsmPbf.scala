@@ -485,10 +485,7 @@ object OsmPbf {
     * use FileSystem ranged reads at the same seam).
     */
   def readSplit(spark: SparkSession, path: String, rangesPerPartition: Int = 4): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator().asScala
-      .filter(p => p.toString.endsWith(".pbf"))
-      .map(_.toString).toSeq.sorted
+    val files = graft.listFiles(path, ".pbf")
     val ranges = files.flatMap { f =>
       val raf = new java.io.RandomAccessFile(f, "r")
       try blobRanges(raf).map { case (off, len) => (f, off, len) } finally raf.close()

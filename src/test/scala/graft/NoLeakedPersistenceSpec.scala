@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * from GraphSpec to every operator surface at once.
   *
   * Two legitimate, bounded exceptions (both release deterministically, just
-  * not synchronously with the action): SJoin's monotonic-tag fallback
-  * persist frees via a QueryExecutionListener on the listener bus, and
+  * not synchronously with the action): operator-internal persists (SJoin's
+  * monotonic-tag fallback among them) free via `Caches`'s
+  * QueryExecutionListener on the listener bus, and
   * Graph/OsmFilter lazy localCheckpoints keep the FINAL round's blocks
   * alive backing the returned frame's lineage. The sweep therefore waits
   * for the listener bus to drain and then allows at most a bounded handful
@@ -83,5 +84,43 @@ class NoLeakedPersistenceSpec extends AnyFunSuite with SparkSpec {
     while (residual.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     assert(residual.isEmpty,
       s"session teardown left persisted RDDs: ${residual.mkString(",")}")
+  }
+
+  test("releaseAll frees SJoin fallback persists and OsmFilter checkpoints whose consuming action never ran") {
+    import testImplicits._
+    import org.apache.spark.sql.functions._
+    import graft.functions.GeoFunctions._
+    val sc = spark.sparkContext
+    spark.sharedState.cacheManager.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    // rand() makes the left nondeterministic → monotonic tag + persist
+    val zones = Seq((1, "POLYGON ((0 0, 3 0, 3 3, 0 3, 0 0))"))
+      .toDF("zid", "wkt")
+      .select(col("zid"), st_geomfromtext(col("wkt")).as("geometry"))
+      .where(rand(7) >= -1.0)
+    val points = Seq((1, 1.0, 1.0), (2, 9.0, 9.0)).toDF("pid", "lon", "lat")
+      .select(col("pid"), st_point(col("lon"), col("lat")).as("geometry"))
+    val agg = graft.operators.SJoin.sagg(zones, points, Seq(count(lit(1)).as("n")),
+      predicate = "contains", how = "left")
+    // node 1 inside the area, way 10 keeps through it, relation 20 through
+    // the way — every id frame is a lazy localCheckpoint
+    val osm = Seq(
+      ("n", 1L, Option(0.5), Option(0.5), Option.empty[Seq[Long]]),
+      ("n", 2L, Option(5.0), Option(5.0), Option.empty[Seq[Long]]),
+      ("w", 10L, Option.empty[Double], Option.empty[Double], Option(Seq(1L, 2L))),
+      ("r", 20L, Option.empty[Double], Option.empty[Double], Option(Seq(10L))))
+      .toDF("type", "id", "lon", "lat", "refs")
+    val crop = graft.operators.OsmFilter.crop(osm,
+      "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", materializeIds = true)
+    // explain-only consumers: no action over either result ever runs
+    agg.queryExecution.executedPlan.toString
+    crop.queryExecution.executedPlan.toString
+    def residual = sc.getPersistentRDDs.keySet.diff(before)
+    assert(!spark.sharedState.cacheManager.isEmpty, "expected the SJoin fallback persist")
+    assert(residual.nonEmpty, "expected the OsmFilter id checkpoints")
+    graft.operators.Caches.releaseAll()
+    val cached = !spark.sharedState.cacheManager.isEmpty
+    assert(!cached && residual.isEmpty, "releaseAll left the SJoin fallback " +
+      s"cached: $cached, persistent RDDs: ${residual.mkString(",")}")
   }
 }
