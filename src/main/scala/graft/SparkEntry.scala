@@ -1286,9 +1286,9 @@ object SparkEntry {
     }),
 
     // --- BM25 persisted index: build-once / search-many roundtrip ----------
-    // identical scoring over the parquet postings layout — the oracle is
-    // the same fit+score mirror as text_bm25; bucket partition pruning is
-    // plan-spec'd in TextAnalysisSpec
+    // identical scoring over the parquet postings layout (df counted at
+    // search time) — the oracle is the same fit+score mirror as text_bm25;
+    // the bucket-directory read is plan-spec'd in TextAnalysisSpec
     "text_bm25_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val qs = docs.where(col("doc_id") % 100 === 7)
@@ -1301,9 +1301,10 @@ object SparkEntry {
 
     // --- BM25 index incremental refresh composed with readSince ------------
     // build over a manifest table's v1 (two thirds of the corpus), append
-    // v2, feed readSince's delta through refreshBM25Index (per-term hash
-    // buckets recompute exact df locally; untouched buckets never read) —
-    // the search must equal the full-corpus build's oracle verbatim
+    // v2, feed readSince's delta through refreshBM25Index (the delta's
+    // postings are appended to their term-hash buckets; no existing file is
+    // read or rewritten) — the search must equal the full-corpus build's
+    // oracle verbatim
     "text_bm25_refresh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val root = freshRoot("bm25_rf", dir)

@@ -469,8 +469,10 @@ object Similarity {
 
   /** [[ivfRefreshEntries]] against the on-disk layout the registry queries
     * persist (`{path}/assigned` cell-partitioned parquet +
-    * `{path}/centroids`): appends the new rows into their cell partitions —
-    * an append never conflicts with concurrent index readers.
+    * `{path}/centroids`): appends the new rows into their cell partitions,
+    * one new file per touched cell — an append never conflicts with
+    * concurrent index readers. The centroids are read with their fixed
+    * (cell INT, centroid ARRAY<FLOAT>) schema, so no inference job runs.
     */
   def ivfRefreshIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -479,7 +481,8 @@ object Similarity {
       vecCol: String,
       idCol: String): Unit =
     ivfRefreshEntries(newCorpus, vecCol, idCol,
-        spark.read.parquet(s"$path/centroids"))
+        spark.read.schema("cell INT, centroid ARRAY<FLOAT>").parquet(s"$path/centroids"))
+      .repartition(col("cell"))
       .write.mode("append").partitionBy("cell").parquet(s"$path/assigned")
 
   /** Serves a query batch from a persisted [[ivfBuildIndex]] layout: probe

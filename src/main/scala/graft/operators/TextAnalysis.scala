@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.TextFunctions._
 
@@ -661,8 +662,8 @@ object TextAnalysis {
     *
     * Scale shape — the inverted-index join, not an index structure: the
     * corpus collapses to (doc, term, tf) postings with one map-side-combined
-    * groupBy; per-doc length is a window over those postings partitioned by
-    * doc (no second corpus scan); (N, total-token) corpus stats are ONE
+    * groupBy; per-doc length is the token count before the explode (no
+    * second corpus scan); (N, total-token) corpus stats are ONE
     * 1-row aggregate broadcast everywhere; document frequencies shuffle on
     * term. Query terms meet the postings in a term-keyed equi-join — the
     * query side of a search workload is orders of magnitude smaller than
@@ -682,26 +683,34 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75,
       topK: Int = 10): DataFrame = {
-    // __dl (doc length = Σ tf) is size(tokens) BEFORE the explode — one
-    // projection instead of a per-doc window (exchange + sort over the
-    // whole posting table); corpus stats likewise come from the un-exploded
-    // token arrays (count + Σ size), so that consumer never pays the
-    // explode + groupBy. Recompute beats a persist here: the postings pass
-    // is a single codegen pipeline, and materializing it costs more than
-    // running it twice (measured on the r11 A/B).
-    val base = corpus
-      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
-      .where(size(col("__toks")) > 0)
-    val postings = base
-      .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
-        explode(col("__toks")).as("__term"))
-      .groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
+    // Recompute beats a persist here: the postings pass is a single codegen
+    // pipeline, and materializing it costs more than running it twice
+    // (measured on the r11 A/B).
+    val base = tokenized(corpus, textCol, col(idCol))
     val stats = base.agg(
       count(lit(1)).as("__n"), sum(size(col("__toks")).cast("long")).as("__tt"))
+    val postings = postingsOf(base)
     val dfreq = postings.groupBy("__term").agg(count(lit(1)).as("__df"))
     searchPostings(postings.join(dfreq, "__term"), stats, queries,
       queryIdCol, queryTextCol, idCol, k1, b, topK)
   }
+
+  /** (__doc, __toks) rows of the documents that have at least one token. */
+  private def tokenized(docs: DataFrame, textCol: String, doc: Column): DataFrame =
+    docs.select(doc.as("__doc"), wordTokens(col(textCol)).as("__toks"))
+      .where(size(col("__toks")) > 0)
+
+  /** (__doc, __dl, __term, __tf) postings with one map-side-combined groupBy.
+    * __dl (doc length = Σ tf) is size(tokens) BEFORE the explode — one
+    * projection instead of a per-doc window (exchange + sort over the whole
+    * posting table); corpus stats can come from the un-exploded token
+    * arrays, so that consumer never pays the explode + groupBy.
+    */
+  private def postingsOf(tokenized: DataFrame): DataFrame =
+    tokenized
+      .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
+        explode(col("__toks")).as("__term"))
+      .groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
 
   /** Number of term-hash buckets a persisted BM25 index is partitioned by. */
   val bm25Buckets = 64
@@ -709,15 +718,36 @@ object TextAnalysis {
   private def termBucket(term: Column): Column =
     pmod(graft.functions.TextFunctions.string_hash64(term, 7L), lit(bm25Buckets.toLong))
 
+  // The persisted layout's fixed schemas: readers never infer them (no
+  // footer job), and files of older indexes that still carry a stored
+  // `__df` column read unchanged because the column is not requested.
+  private val postingsSchema =
+    StructType.fromDDL("__term STRING, __doc BIGINT, __tf BIGINT, __dl BIGINT, __bucket BIGINT")
+  private val statsSchema = StructType.fromDDL("__n BIGINT, __tt BIGINT")
+  private val docsSchema = StructType.fromDDL("__doc BIGINT")
+
+  /** The postings of `docs` in the persisted layout, with their bucket. */
+  private def indexPostings(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+    val idType = docs.schema(idCol).dataType
+    require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
+      s"a persisted BM25 index stores integral doc ids as BIGINT; $idCol is $idType")
+    postingsOf(tokenized(docs, textCol, col(idCol).cast("long")))
+      .withColumn("__bucket", termBucket(col("__term")))
+  }
+
   /** Persists the BM25 index of `corpus` under `path`: `postings/` —
-    * (__term, __doc, __tf, __dl, __df) parquet PARTITIONED BY a 64-way
-    * term-hash bucket, and `stats/` — the 1-row (N, total tokens) table.
-    * Same doc-id-uniqueness PRECONDITION as [[searchBM25]]; the
+    * (__term, __doc, __tf, __dl) parquet PARTITIONED BY a 64-way term-hash
+    * `__bucket`, `stats/` — the 1-row (N, total tokens) table, and `docs/`
+    * — the posting-bearing doc ids, which make [[refreshBM25Index]]'s
+    * duplicate-id guard exact. No document frequency is stored: every
+    * posting of a term sits in that term's bucket, so [[searchBM25Index]]
+    * counts the exact df from the buckets it reads, and [[refreshBM25Index]]
+    * only appends. Doc ids must be integral (stored as BIGINT). Same
+    * doc-id-uniqueness PRECONDITION as [[searchBM25]]; the
     * [[refreshBM25Index]] guard makes later dup ingests loud.
     * The build pays the corpus scan and term aggregation ONCE; every
-    * subsequent query batch served by [[searchBM25Index]] reads only the
-    * partitions its query terms hash into (directory-level pruning via the
-    * pushed bucket filter) — build-once / search-many, the
+    * subsequent query batch reads only the bucket directories its query
+    * terms hash into — build-once / search-many, the
     * [[Similarity.ivfBuildIndex]] pattern for text.
     */
   def buildBM25Index(
@@ -725,34 +755,21 @@ object TextAnalysis {
       path: String,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    // one tokenize + groupBy pass, persisted across the three writes —
-    // __dl is size(tokens) before the explode (no per-doc window), __df a
-    // per-term aggregate joined back (no per-term window sort); stats and
-    // the docs sidecar read the cached postings instead of re-tokenizing
+    // one tokenize + groupBy pass, persisted across the three writes; stats
+    // and the docs sidecar read the cached postings instead of re-tokenizing
     // the corpus (guide §2.3/§2.4: three corpus passes → one)
-    val postings = corpus
-      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
-      .where(size(col("__toks")) > 0)
-      .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
-        explode(col("__toks")).as("__term"))
-      .groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
+    val postings = indexPostings(corpus, textCol, idCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dfreq = postings.groupBy("__term").agg(count(lit(1)).as("__df"))
       // the three writes are independent (distinct output dirs, all reading
       // the one persisted postings pass) — submitted concurrently so the
       // stats/docs jobs back-fill the straggler tail of the big partitioned
       // postings write instead of queuing behind it (guide §2.6); cache
       // block locks keep the shared persist computed exactly once
       Concurrent.awaitAll(
-        () => postings.join(dfreq, "__term")
-          .select("__doc", "__term", "__tf", "__dl", "__df")
-          .withColumn("__bucket", termBucket(col("__term")))
-          .write.mode("overwrite").partitionBy("__bucket").parquet(s"$path/postings"),
+        () => postings.write.mode("overwrite").partitionBy("__bucket").parquet(s"$path/postings"),
         () => postings.agg(countDistinct(col("__doc")).as("__n"), sum(col("__tf")).as("__tt"))
           .write.mode("overwrite").parquet(s"$path/stats"),
-        // `docs/` sidecar: the posting-bearing doc ids — one narrow column
-        // that makes [[refreshBM25Index]]'s duplicate-id guard exact
         () => postings.select("__doc").distinct()
           .write.mode("overwrite").parquet(s"$path/docs"))
     } finally postings.unpersist(blocking = false)
@@ -760,114 +777,67 @@ object TextAnalysis {
 
   /** Incrementally refreshes a [[buildBM25Index]] layout with NEW documents
     * — the `readSince`-composed ingest path: fresh docs join the postings
-    * without a full corpus rebuild. Because postings are hash-partitioned
-    * BY TERM, every row of any given term lives in exactly one bucket, so
-    * the affected buckets (the ones the new docs' terms hash into) can
-    * recompute EXACT document frequencies locally; untouched buckets are
-    * not read, not rewritten — the refresh cost tracks the new batch's
-    * vocabulary, not the index size. Corpus stats accumulate, and the
-    * refreshed index is value-identical to a full rebuild over the union
-    * corpus (same aggregations, same arithmetic).
+    * without a full corpus rebuild. The delta's postings are APPENDED to
+    * their bucket directories, one new file per touched bucket; no existing
+    * file is read or rewritten, so the write tracks the delta, not the
+    * index. Corpus stats accumulate, and a search of the refreshed index is
+    * value-identical to one of a full rebuild over the union corpus.
     *
     * Doc ids must be NEW — a repeated id would double-count its own terms —
-    * and the `docs/` sidecar makes that guard exact and loud. The rewrite
-    * stages affected buckets to a temp sibling and swaps partition
-    * directories (reading and dynamically overwriting one parquet path in
-    * the same job is not safe), so a crash mid-swap loses at most the swap,
-    * never corrupts an unaffected bucket.
+    * and the `docs/` sidecar makes that guard exact and loud. `stats/` and
+    * `docs/` are written only after the postings append has committed, so a
+    * failed append leaves the index as it was and the same delta can be
+    * retried. (A failure after that commit, in the stats or docs write, is
+    * not rolled back.)
     */
   def refreshBM25Index(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       newDocs: DataFrame,
       textCol: String = "text",
       idCol: String = "doc_id"): Unit = {
-    import java.nio.file.{Files, Paths}
-    // __dl = size(tokens) before the explode — same no-window shape as
-    // [[buildBM25Index]]; values identical to the old per-doc window sum
-    val newPost = newDocs
-      .select(col(idCol).as("__doc"), wordTokens(col(textCol)).as("__toks"))
-      .where(size(col("__toks")) > 0)
-      .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
-        explode(col("__toks")).as("__term"))
-      .groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
-      .withColumn("__bucket", termBucket(col("__term")))
-      .persist()
+    val newPost = indexPostings(newDocs, textCol, idCol).persist()
     try {
-      // one bounded fetch for the three driver-side facts (doc count, token
-      // count, affected bucket set ≤ bm25Buckets) instead of three jobs;
-      // the dup-id guard reads the same persisted newPost independently, so
-      // the two bounded actions run as concurrent jobs (guide §2.6) — both
-      // must settle before any write below starts
-      var agg: org.apache.spark.sql.Row = null
+      // the delta's (doc count, token count), the dup-id guard and the old
+      // stats row are independent bounded reads, run as concurrent jobs
+      // (guide §2.6) — all settle before any write below starts
+      var agg: Row = null
       var clash = 0L
+      var oldStats: Row = null
       Concurrent.awaitAll(
-        () => agg = newPost.agg(countDistinct(col("__doc")), sum(col("__tf")),
-          collect_set(col("__bucket"))).head(),
+        () => agg = newPost.agg(countDistinct(col("__doc")), sum(col("__tf"))).head(),
         () => clash = newPost.select("__doc").distinct()
-          .join(spark.read.parquet(s"$path/docs"), Seq("__doc"), "left_semi")
-          .limit(1).count())
+          .join(spark.read.schema(docsSchema).parquet(s"$path/docs"), Seq("__doc"), "left_semi")
+          .limit(1).count(),
+        () => oldStats = spark.read.schema(statsSchema).parquet(s"$path/stats").head())
       if (agg.isNullAt(0) || agg.getLong(0) == 0L) return // nothing to add
       require(clash == 0L,
         s"refreshBM25Index: new doc ids overlap the index at $path — a " +
           "repeated id would double-count its terms; merge upstream first")
-      val buckets = agg.getSeq[Long](2)
-      val old = spark.read.parquet(s"$path/postings")
-        .where(col("__bucket").isin(buckets: _*))
-        .select("__bucket", "__doc", "__term", "__tf", "__dl") // stale __df dropped
-      val unioned = old.unionByName(
-        newPost.select("__bucket", "__doc", "__term", "__tf", "__dl"))
-      // per-term df as an aggregate joined back (same no-window shape as
-      // [[buildBM25Index]]; the affected-bucket read is repeated for the
-      // tiny df table instead of sorting the whole union)
-      val dfNew = unioned.groupBy("__term").agg(count(lit(1)).as("__df"))
-      val rewritten = unioned.join(dfNew, "__term")
-        .select("__term", "__doc", "__tf", "__dl", "__df", "__bucket")
-      val tmp = s"$path/.postings-tmp-${java.util.UUID.randomUUID()}"
-      // the bucket rewrite, the stats accumulation and the docs append touch
-      // disjoint paths and all derive from frames already settled above —
-      // three independent write jobs, submitted concurrently (guide §2.6) so
-      // the small stats/docs jobs back-fill the rewrite's straggler tail.
-      // The directory swap stays strictly after ITS OWN write (same thunk).
+      newPost.repartition(col("__bucket"))
+        .write.mode("append").partitionBy("__bucket").parquet(s"$path/postings")
       Concurrent.awaitAll(
-        () => {
-          rewritten.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-          buckets.foreach { bkt =>
-            val dst = Paths.get(s"$path/postings/__bucket=$bkt")
-            val src = Paths.get(s"$tmp/__bucket=$bkt")
-            graft.deleteRecursively(dst)
-            if (Files.exists(src)) Files.move(src, dst)
-          }
-          graft.deleteRecursively(Paths.get(tmp))
-        },
-        () => {
-          // stats accumulate; the old row is collected FIRST so the
-          // overwrite never reads the path it writes
-          val oldStats = spark.read.parquet(s"$path/stats").head()
-          import spark.implicits._
-          Seq((oldStats.getLong(0) + agg.getLong(0), oldStats.getLong(1) + agg.getLong(1)))
-            .toDF("__n", "__tt").coalesce(1)
-            .write.mode("overwrite").parquet(s"$path/stats")
-        },
+        () => spark.createDataFrame(java.util.List.of(Row(
+            oldStats.getLong(0) + agg.getLong(0), oldStats.getLong(1) + agg.getLong(1))),
+            statsSchema)
+          .write.mode("overwrite").parquet(s"$path/stats"),
         () => newPost.select("__doc").distinct()
           .write.mode("append").parquet(s"$path/docs"))
     } finally newPost.unpersist()
   }
 
-  /** Serves a query batch against a [[buildBM25Index]] layout. Query terms
-    * carry their bucket, and the postings join keys on (bucket, term), so
-    * partition pruning drops every untouched bucket directory at the scan —
-    * the corpus-side read is proportional to the query vocabulary, not the
-    * index.
-    *
-    * The result assumes ONE consuming action (the [[Caches]] contract): the
-    * internal query-term cache is released when the first action over the
-    * returned frame completes, so a caller running several actions on it
-    * (count then collect) recomputes the term prep on the later ones —
-    * `.persist()` the result yourself for multi-action use.
+  /** Serves a query batch against a [[buildBM25Index]] layout. The query
+    * side's (query, term, bucket) rows are collected to the driver once;
+    * the postings read covers only the bucket directories those terms hash
+    * into, so the corpus-side read is proportional to the query vocabulary,
+    * not the index. Each query term's df is counted from those postings in
+    * one map-side-combined aggregate — exact, because every posting of a
+    * term sits in its bucket. A batch whose terms hit no bucket directory
+    * returns an empty frame with the usual (queryIdCol, idCol, score)
+    * schema; doc ids come back as BIGINT.
     */
   def searchBM25Index(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       queries: DataFrame,
       queryIdCol: String = "query_id",
@@ -876,23 +846,28 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75,
       topK: Int = 10): DataFrame = {
-    val postings = spark.read.parquet(s"$path/postings")
-    val stats = spark.read.parquet(s"$path/stats")
     val qterms = queries.select(col(queryIdCol).as("__qid"),
         explode(array_distinct(wordTokens(col(queryTextCol)))).as("__term"))
       .withColumn("__bucket", termBucket(col("__term")))
-      .transform(Caches.persist)
-    val buckets = qterms.select("__bucket").distinct()
-      .collect().map(_.getLong(0)) // ≤ 64 values — a driver-side IN list
-    val pruned = postings.where(col("__bucket").isin(buckets: _*))
-    val matched = qterms.join(pruned, Seq("__bucket", "__term"))
-      .crossJoin(broadcast(stats))
-    // qterms feeds the bucket fetch above AND the probe join — anchored
-    // release (the bucket fetch is an internal action; a first-action
-    // release would drop the cache before the caller's query runs)
-    val res = scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
-    Caches.releaseWhen(res, qterms)
-    res
+    val qrows = qterms.collect().toSeq
+    val local = spark.createDataFrame(java.util.List.of(qrows: _*), qterms.schema)
+      .drop("__bucket")
+    val root = new org.apache.hadoop.fs.Path(s"$path/postings")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = qrows.map(_.getLong(2)).distinct.sorted
+      .map(bkt => new org.apache.hadoop.fs.Path(root, s"__bucket=$bkt"))
+      .filter(fs.exists).map(_.toString)
+    val postings =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), postingsSchema)
+      else spark.read.schema(postingsSchema).option("basePath", root.toString)
+        .parquet(dirs: _*)
+        .where(col("__term").isin(qrows.map(_.getString(1)).distinct: _*))
+    // one row per distinct query term — small enough to broadcast
+    val dfreq = postings.groupBy("__term").agg(count(lit(1)).as("__df"))
+    val matched = local.join(postings, "__term")
+      .join(broadcast(dfreq), "__term")
+      .crossJoin(broadcast(spark.read.schema(statsSchema).parquet(s"$path/stats")))
+    scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
   }
 
   private def searchPostings(

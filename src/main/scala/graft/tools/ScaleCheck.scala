@@ -506,6 +506,22 @@ object ScaleCheck {
       bm25IdxOf(docs, s"$btmp/idx1"),
       bm25IdxOf(docsN, s"$btmp/idxN"))
 
+    // BM25 refresh of one fixed delta (1 in 50 docs of the next copy) into
+    // the 1× and factor× index, built untimed: an append-only refresh
+    // rewrites no bucket, so the ratio must stay near 1
+    val bdelta = docs.where(col("doc_id") % 50 === 3).select(
+      (col("doc_id") + lit(factor * 100000000L)).as("doc_id"),
+      permuted(col("text"), factor).as("text"))
+    if (only.forall("text_bm25_refresh".contains)) {
+      graft.operators.TextAnalysis.buildBM25Index(docs, s"$btmp/rf1")
+      graft.operators.TextAnalysis.buildBM25Index(docsN, s"$btmp/rfN")
+    }
+    def bm25RefreshOf(path: String) = {
+      graft.operators.TextAnalysis.refreshBM25Index(spark, path, bdelta)
+      spark.read.parquet(s"$path/stats")
+    }
+    pair("text_bm25_refresh")(bm25RefreshOf(s"$btmp/rf1"), bm25RefreshOf(s"$btmp/rfN"))
+
     // DBSCAN: copies shift to DISJOINT regions — corpus growth as more
     // geography at constant density (10x density in ONE region would square
     // the true neighbor-pair count: DBSCAN's own answer, not a skew bug)

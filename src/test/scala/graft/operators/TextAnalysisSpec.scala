@@ -372,71 +372,151 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
     assert(top1 == Map(10L -> 1L, 11L -> 1L))
   }
 
+  // BM25 index helpers: the "__bucket=<b>" directories a text column's
+  // terms hash into, and every file under an index subtree with its bytes
+  private def bucketDirs(texts: org.apache.spark.sql.DataFrame, textCol: String): Set[String] =
+    texts.select(explode(TextAnalysis.wordTokens(col(textCol))).as("t"))
+      .select(pmod(graft.functions.TextFunctions.string_hash64(col("t"), 7L),
+        lit(TextAnalysis.bm25Buckets.toLong)))
+      .distinct().as[Long].collect().map(v => s"__bucket=$v").toSet
+  private def files(dir: String): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(p => root.relativize(p).toString ->
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(java.nio.file.Files.readAllBytes(p)))
+      .toMap
+    finally s.close()
+  }
+  private def hits(df: org.apache.spark.sql.DataFrame) =
+    df.select("query_id", "doc_id", "score").as[(Long, Long, Double)].collect().toSet
+  private def tmpDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+  private def refreshCorpora = (
+    (0 until 40).map(i => (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text"),
+    (40 until 60).map(i => (i.toLong, s"word$i alpha gamma common${i % 5}")).toDF("doc_id", "text"))
+
   test("BM25 index: persisted search equals in-memory search; buckets prune") {
     val corpus = (0 until 60).map(i =>
       (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text")
     val qs = Seq((1L, "alpha common2"), (2L, "word7 tail")).toDF("query_id", "query")
-    val dir = java.nio.file.Files.createTempDirectory("bm25idx").toString
+    val dir = tmpDir("bm25idx")
     TextAnalysis.buildBM25Index(corpus, dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "doc_id", "score").as[(Long, Long, Double)].collect().toSet
-    val direct = rows(TextAnalysis.searchBM25(corpus, qs, topK = 5))
-    val viaIdx = rows(TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5))
-    assert(viaIdx == direct && direct.nonEmpty)
-    // the postings scan must carry the bucket partition filter — directory-
-    // level pruning is the whole point of the layout
-    val plan = TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("__bucket"), plan)
+    val direct = hits(TextAnalysis.searchBM25(corpus, qs, topK = 5))
+    val served = TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5)
+    assert(hits(served) == direct && direct.nonEmpty)
+    // the postings scan's root paths are exactly the query terms' bucket
+    // directories — directory-level pruning is the whole point of the layout
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val roots = served.queryExecution.optimizedPlan
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r.location.rootPaths }
+      .filter(_.exists(_.getParent.getName == "postings"))
+    assert(roots.nonEmpty)
+    roots.foreach { ps =>
+      assert(ps.map(_.getName).toSet == bucketDirs(qs, "query") && ps.size == ps.toSet.size, ps)
+    }
+  }
+
+  test("BM25 index: a query whose terms hit no bucket returns an empty frame") {
+    val corpus = Seq((1L, "alpha beta")).toDF("doc_id", "text")
+    val dir = tmpDir("bm25miss")
+    TextAnalysis.buildBM25Index(corpus, dir)
+    val present = bucketDirs(corpus, "text")
+    val miss = (0 until 100).map(i => s"zz$i")
+      .find(t => bucketDirs(Seq(t).toDF("t"), "t").intersect(present).isEmpty).get
+    val hit = TextAnalysis.searchBM25Index(spark, dir, Seq((1L, "alpha")).toDF("query_id", "query"))
+    val none = TextAnalysis.searchBM25Index(spark, dir,
+      Seq((1L, miss), (2L, "")).toDF("query_id", "query"))
+    assert(none.collect().isEmpty && hit.count() == 1L)
+    assert(none.schema == hit.schema)
   }
 
   test("BM25 incremental refresh equals a full rebuild; untouched buckets stay") {
-    val a = (0 until 40).map(i =>
-      (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text")
-    val b = (40 until 60).map(i =>
-      (i.toLong, s"word$i alpha gamma common${i % 5}")).toDF("doc_id", "text")
-    val dir1 = java.nio.file.Files.createTempDirectory("bm25rf1").toString
+    val (a, b) = refreshCorpora
+    val dir1 = tmpDir("bm25rf1")
     TextAnalysis.buildBM25Index(a, dir1)
-    // bucket-dir fingerprints BEFORE the refresh (name, size per file)
-    def snapshot(d: String) = new java.io.File(s"$d/postings").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(f => f.getName ->
-        f.listFiles().map(x => (x.getName, x.length)).toSet).toMap
-    val before = snapshot(dir1)
+    val before = Seq("postings", "docs").map(d => d -> files(s"$dir1/$d")).toMap
     TextAnalysis.refreshBM25Index(spark, dir1, b)
-    val dir2 = java.nio.file.Files.createTempDirectory("bm25rf2").toString
+    val dir2 = tmpDir("bm25rf2")
     TextAnalysis.buildBM25Index(a.unionByName(b), dir2)
-    // postings (incl. recomputed df) and stats are value-identical to the
-    // full union rebuild
+    // postings (no df is stored) and stats are value-identical to the full
+    // union rebuild
     def postings(d: String) = spark.read.parquet(s"$d/postings")
-      .select("__term", "__doc", "__tf", "__dl", "__df", "__bucket")
-      .as[(String, Long, Long, Long, Long, Long)].collect().toSet
+      .select("__term", "__doc", "__tf", "__dl", "__bucket")
+      .as[(String, Long, Long, Long, Long)].collect().toSet
     assert(postings(dir1) == postings(dir2))
     def stats(d: String) = spark.read.parquet(s"$d/stats")
       .as[(Long, Long)].collect().head
     assert(stats(dir1) == stats(dir2))
     // searches agree with the direct in-memory scorer over the union
     val qs = Seq((1L, "alpha common2"), (2L, "word45 gamma")).toDF("query_id", "query")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "doc_id", "score").as[(Long, Long, Double)].collect().toSet
-    val direct = rows(TextAnalysis.searchBM25(a.unionByName(b), qs, topK = 5))
-    assert(rows(TextAnalysis.searchBM25Index(spark, dir1, qs, topK = 5)) == direct)
-    // buckets the delta's vocabulary does not hash into were NOT rewritten
-    val affected = b.select(explode(filter(
-        split(trim(lower(col("text"))), " +"), x => x =!= "")).as("t"))
-      .select(pmod(graft.functions.TextFunctions.string_hash64(col("t"), 7L),
-        lit(TextAnalysis.bm25Buckets.toLong)).as("bkt"))
-      .distinct().as[Long].collect().map(v => s"__bucket=$v").toSet
-    val after = snapshot(dir1)
-    val untouched = before.keySet.diff(affected)
-    assert(untouched.nonEmpty, "test vocabulary hit every bucket — weaken it")
-    untouched.foreach(k => assert(after(k) == before(k), s"$k was rewritten"))
+    val direct = hits(TextAnalysis.searchBM25(a.unionByName(b), qs, topK = 5))
+    assert(hits(TextAnalysis.searchBM25Index(spark, dir1, qs, topK = 5)) == direct)
+    // the refresh only appended: every file present before it is byte-
+    // identical after it, and each bucket the delta's vocabulary hashes
+    // into got exactly one new data file
+    before.foreach { case (d, old) =>
+      val now = files(s"$dir1/$d")
+      old.foreach { case (f, bytes) => assert(now.get(f).contains(bytes), s"$d/$f changed") }
+    }
+    val added = files(s"$dir1/postings").keySet.diff(before("postings").keySet)
+      .filter(_.endsWith(".parquet")).toSeq.map(_.takeWhile(_ != '/'))
+    assert(added.sorted == bucketDirs(b, "text").toSeq.sorted)
     // repeated doc ids fail loudly; an empty delta is a no-op
     intercept[IllegalArgumentException] {
       TextAnalysis.refreshBM25Index(spark, dir1, a.limit(1))
     }
     TextAnalysis.refreshBM25Index(spark, dir1, b.limit(0))
     assert(postings(dir1) == postings(dir2))
+  }
+
+  test("BM25 refresh commits stats and docs only after the postings append") {
+    val (a, b) = refreshCorpora
+    val dir = tmpDir("bm25crash")
+    TextAnalysis.buildBM25Index(a, dir)
+    val qs = Seq((1L, "alpha common2"), (2L, "word45 gamma")).toDF("query_id", "query")
+    val served = hits(TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5))
+    val before = files(dir)
+    val key = "spark.sql.sources.commitProtocolClass"
+    val prev = spark.conf.getOption(key)
+    FailingPostingsCommit.under = dir
+    spark.conf.set(key, classOf[FailingPostingsCommit].getName)
+    try intercept[Exception](TextAnalysis.refreshBM25Index(spark, dir, b))
+    finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      FailingPostingsCommit.under = null
+    }
+    val after = files(dir)
+    Seq("stats/", "docs/").foreach { d =>
+      assert(after.filter(_._1.startsWith(d)) == before.filter(_._1.startsWith(d)), s"$d changed")
+    }
+    assert(hits(TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5)) == served)
+    // the failed delta retries cleanly
+    TextAnalysis.refreshBM25Index(spark, dir, b)
+    assert(hits(TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5)) ==
+      hits(TextAnalysis.searchBM25(a.unionByName(b), qs, topK = 5)))
+  }
+
+  test("BM25 index written with stored document frequencies searches and refreshes") {
+    val (a, b) = refreshCorpora
+    val dir = tmpDir("bm25new")
+    TextAnalysis.buildBM25Index(a, dir)
+    // the older layout: the same bucket directories, each posting carrying
+    // its term's df
+    val old = tmpDir("bm25old")
+    val p = spark.read.parquet(s"$dir/postings")
+    p.join(p.groupBy("__term").agg(count(lit(1)).as("__df")), "__term")
+      .select("__doc", "__term", "__tf", "__dl", "__df", "__bucket")
+      .write.mode("overwrite").partitionBy("__bucket").parquet(s"$old/postings")
+    Seq("stats", "docs").foreach(d =>
+      spark.read.parquet(s"$dir/$d").write.mode("overwrite").parquet(s"$old/$d"))
+    val qs = Seq((1L, "alpha common2"), (2L, "word45 gamma tail")).toDF("query_id", "query")
+    assert(hits(TextAnalysis.searchBM25Index(spark, old, qs, topK = 5)) ==
+      hits(TextAnalysis.searchBM25(a, qs, topK = 5)))
+    TextAnalysis.refreshBM25Index(spark, old, b)
+    assert(hits(TextAnalysis.searchBM25Index(spark, old, qs, topK = 5)) ==
+      hits(TextAnalysis.searchBM25(a.unionByName(b), qs, topK = 5)))
   }
 
   test("BM25: per-query window is pre-shuffle pruned (WindowGroupLimit)") {
@@ -696,4 +776,26 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
         (20 until 40).map(i => got(i.toLong)).max)
     } finally q.stop()
   }
+}
+
+/** Test-only `spark.sql.sources.commitProtocolClass`: a write job whose
+  * output path lies under [[FailingPostingsCommit.under]] and names
+  * `postings` fails in `commitJob`, before any of its files are published;
+  * every other job commits normally.
+  */
+class FailingPostingsCommit(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol(
+      jobId, path, dynamicPartitionOverwrite) {
+  override def commitJob(
+      job: org.apache.hadoop.mapreduce.JobContext,
+      taskCommits: Seq[org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage]): Unit = {
+    val under = FailingPostingsCommit.under
+    if (under != null && path.contains(under) && path.contains("postings"))
+      throw new java.io.IOException(s"injected commit failure: $path")
+    super.commitJob(job, taskCommits)
+  }
+}
+
+object FailingPostingsCommit {
+  @volatile var under: String = null
 }
