@@ -21,7 +21,8 @@ object SparkEntry {
 
   /** Deterministic per-SF scratch dir, wiped before use — manifest-table
     * queries must start from version 0 on every Verify/Bench run (the log
-    * is append-only by design, so a reused root would keep growing).
+    * is append-only by design, so a reused root would keep growing), and a
+    * sharded write refuses a directory holding an earlier write's shards.
     */
   private def freshRoot(tag: String, dir: String): String = {
     val p = java.nio.file.Paths.get(s"/tmp/graft_${tag}_${new java.io.File(dir).getName}")
@@ -426,8 +427,7 @@ object SparkEntry {
     // --- fgb driver end-to-end: write + read + decode (erde/io/fgb.py) -----
     "fgb_roundtrip" -> ((s, dir) => {
       val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(
-        s"/tmp/graft_fgb_${new java.io.File(dir).getName}")
+      val out = new java.io.File(freshRoot("fgb", dir))
       out.mkdirs()
       graft.sources.Fgb.write(pts, s"$out/customer.fgb")
       graft.sources.Fgb.read(s, out.toString)
@@ -439,8 +439,7 @@ object SparkEntry {
     // --- shp driver end-to-end: own ESRI writer + shx-indexed split reader -
     "shp_roundtrip" -> ((s, dir) => {
       val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(
-        s"/tmp/graft_shp_${new java.io.File(dir).getName}")
+      val out = new java.io.File(freshRoot("shp", dir))
       out.mkdirs()
       graft.sources.Shapefile.write(pts, s"$out/customer")
       graft.sources.Shapefile.readSplit(s, s"$out/customer.shp")
@@ -523,8 +522,7 @@ object SparkEntry {
     // --- avro driver end-to-end: own container writer + splittable reader --
     "avro_roundtrip" -> ((s, dir) => {
       val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_avro_${new java.io.File(dir).getName}")
-      out.mkdirs()
+      val out = freshRoot("avro", dir)
       graft.sources.GeoSources.writeAuto(pts, s"$out/customer.avro")
       graft.sources.GeoSources.readAuto(s, s"$out/customer.avro")
         .select(col("c_custkey"), col("c_acctbal"),
@@ -537,8 +535,7 @@ object SparkEntry {
     // differentiator); element probes compare exactly — no float summation
     "arrow_roundtrip" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val out = new java.io.File(s"/tmp/graft_arrow_${new java.io.File(dir).getName}")
-      out.mkdirs()
+      val out = freshRoot("arrow", dir)
       graft.sources.GeoSources.writeAuto(emb, s"$out/embeddings.arrow")
       graft.sources.GeoSources.readAuto(s, s"$out/embeddings.arrow")
         .select(col("vec_id"), col("label"), size(col("embedding")).as("dim"),
@@ -549,8 +546,7 @@ object SparkEntry {
     // --- arrow STREAMING-format twin (.arrows: footerless, per-file tasks) -
     "arrows_roundtrip" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val out = new java.io.File(s"/tmp/graft_arrows_${new java.io.File(dir).getName}")
-      out.mkdirs()
+      val out = freshRoot("arrows", dir)
       graft.sources.GeoSources.writeAuto(emb, s"$out/embeddings.arrows")
       graft.sources.GeoSources.readAuto(s, s"$out/embeddings.arrows")
         .select(col("vec_id"), col("label"), size(col("embedding")).as("dim"),
@@ -561,7 +557,7 @@ object SparkEntry {
     // --- gpkg driver end-to-end: own SQLite writer + b-tree reader ---------
     "gpkg_roundtrip" -> ((s, dir) => {
       val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_gpkg_${new java.io.File(dir).getName}")
+      val out = new java.io.File(freshRoot("gpkg", dir))
       out.mkdirs()
       graft.sources.GeoSources.writeAuto(pts, s"$out/customer.gpkg")
       graft.sources.GeoSources.readAuto(s, s"$out/customer.gpkg")
@@ -600,7 +596,7 @@ object SparkEntry {
           .as("refs"),
         when(col("p_partkey") % 3 === 2, array(lit("w"), lit("n"))).as("member_types"),
         when(col("p_partkey") % 3 === 2, array(lit("outer"), lit(""))).as("member_roles"))
-      val out = new java.io.File(s"/tmp/graft_pbf_${new java.io.File(dir).getName}")
+      val out = new java.io.File(freshRoot("pbf", dir))
       out.mkdirs()
       graft.sources.OsmPbf.write(elements, s"$out/elements.osm.pbf")
       // NULL doubles become NaN in the driver's pandas compare and NaN never

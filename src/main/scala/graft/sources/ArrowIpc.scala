@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -480,11 +480,10 @@ object ArrowIpc {
       s"no null setter for ${other.getClass.getSimpleName}")
   }
 
-  /** Sharded parallel write: one `.arrow` file per input partition, rows
-    * chunked into `batchRows` record batches (each batch is a split on
-    * re-read). `codec` in {"null", "lz4", "zstd"} compresses batch BODIES —
-    * the file stays footer-indexed and batch-splittable. An empty frame
-    * still writes one schema-only file.
+  /** Sharded write: one `.arrow` file per partition in the [[Shards]]
+    * layout, rows chunked into `batchRows` record batches (each batch is a
+    * split on re-read). `codec` in {"null", "lz4", "zstd"} compresses batch
+    * BODIES — the file stays footer-indexed and batch-splittable.
     */
   def write(df: DataFrame, dir: String, codec: String = "lz4",
       batchRows: Int = 1 << 14): Unit =
@@ -505,8 +504,6 @@ object ArrowIpc {
     val schema = df.schema
     schema.fields.foreach(f => arrowField(f.name, f.dataType, f.nullable)) // fail fast
     val schemaJson = arrowSchema(schema).toJson
-    Files.createDirectories(Paths.get(dir))
-    val codecName = codec
     val suffix = if (stream) "arrows" else "arrow"
     def writeOne(file: java.io.File, rows: Iterator[Row]): Long = {
       val aschema = ASchema.fromJSON(schemaJson)
@@ -514,7 +511,7 @@ object ArrowIpc {
       val root = VectorSchemaRoot.create(aschema, alloc)
       val ch = FileChannel.open(file.toPath, StandardOpenOption.CREATE,
         StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-      val (factory, ctype) = codecName match {
+      val (factory, ctype) = codec match {
         case "null" => (NoCompressionCodec.Factory.INSTANCE,
           CompressionUtil.CodecType.NO_COMPRESSION)
         case "lz4" => (CommonsCompressionFactory.INSTANCE, CompressionUtil.CodecType.LZ4_FRAME)
@@ -552,14 +549,7 @@ object ArrowIpc {
       }
       total
     }
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.$suffix"
-        Iterator.single(name -> writeOne(new java.io.File(dir, name), it))
-      }
-    }.collect()
-    if (counts.isEmpty) writeOne(new java.io.File(dir, f"part-00000.$suffix"), Iterator.empty)
+    Shards.write(df, dir, suffix)(writeOne)
   }
 
   // ---- streaming-format read -----------------------------------------------

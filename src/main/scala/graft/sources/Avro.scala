@@ -313,15 +313,13 @@ object Avro {
 
   // ---- write ---------------------------------------------------------------
 
-  /** Sharded parallel write: one `.avro` container per input partition,
-    * `codec` in {"null", "deflate", "snappy"} (deflate default — zlib is
-    * JDK-native, snappy rides the bundled snappy-java). An empty frame
-    * still writes one header-only shard so the schema survives.
+  /** Sharded write: one `.avro` container per partition in the [[Shards]]
+    * layout, `codec` in {"null", "deflate", "snappy"} (deflate default — zlib
+    * is JDK-native, snappy rides the bundled snappy-java).
     */
   def write(df: DataFrame, dir: String, codec: String = "deflate"): Unit = {
     val schema = df.schema
     val avroJson = avroRecord(schema, "row").toString
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     def codecOf(name: String): CodecFactory = name match {
       case "null" => CodecFactory.nullCodec()
       case "deflate" => CodecFactory.deflateCodec(6)
@@ -343,13 +341,6 @@ object Avro {
       } finally w.close()
       n
     }
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.avro"
-        Iterator.single(name -> writeOne(new java.io.File(dir, name), it))
-      }
-    }.collect()
-    if (counts.isEmpty) writeOne(new java.io.File(dir, "part-00000.avro"), Iterator.empty)
+    Shards.write(df, dir, "avro")(writeOne)
   }
 }

@@ -422,12 +422,12 @@ object Fgb {
     out.toArray
   }
 
-  /** Serializes `rows` as one complete .fgb byte stream (magic + header +
-    * size-prefixed features, no spatial index) — shared by the driver-side
-    * [[write]] and the per-partition shards of [[writeSharded]].
+  /** Writes `rows` to `file` as one complete .fgb (magic + header +
+    * size-prefixed features, no spatial index) and returns the row count —
+    * shared by the driver-side [[write]] and the shards of [[writeSharded]].
     */
   private def writeOne(rows: Array[Row], schema: StructType, geometryCol: String,
-      layerName: String, out: java.io.OutputStream): Unit = {
+      layerName: String, file: java.io.File): Long = {
     import Flatbuf._
     val attrFields = schema.fields.filterNot(_.name == geometryCol)
     val specs = attrFields.map(colSpecOf)
@@ -437,7 +437,6 @@ object Fgb {
     val types = geoms.map(fgbGeomType).distinct
     val headerType = if (types.length == 1) types.head else 0
 
-    out.write(Magic)
     // header flatbuffer
     val hb = new FbBuilder
     val headerPos = hb.writeTable(Seq(
@@ -451,16 +450,21 @@ object Fgb {
       8 -> Scalar { val b = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN); b.putLong(rows.length.toLong); b.array() },
       9 -> Scalar(Array[Byte](0, 0)) // index_node_size = 0: no index follows
     ))
-    out.write(hb.sizePrefixed(headerPos))
-    // features
-    rows.zip(geoms).foreach { case (row, geom) =>
-      val fb = new FbBuilder
-      val props = propBytes(row, rowIdxs)
-      val featPos = fb.writeTable(Seq(
-        0 -> Ref((b: FbBuilder) => b.writeTable(geomFields(geom)))) ++
-        (if (props.nonEmpty) Seq(1 -> Ref((b: FbBuilder) => b.writeByteVector(props))) else Nil))
-      out.write(fb.sizePrefixed(featPos))
-    }
+    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(file))
+    try {
+      out.write(Magic)
+      out.write(hb.sizePrefixed(headerPos))
+      // features
+      rows.zip(geoms).foreach { case (row, geom) =>
+        val fb = new FbBuilder
+        val props = propBytes(row, rowIdxs)
+        val featPos = fb.writeTable(Seq(
+          0 -> Ref((b: FbBuilder) => b.writeTable(geomFields(geom)))) ++
+          (if (props.nonEmpty) Seq(1 -> Ref((b: FbBuilder) => b.writeByteVector(props))) else Nil))
+        out.write(fb.sizePrefixed(featPos))
+      }
+    } finally out.close()
+    rows.length.toLong
   }
 
   /** Writes one `.fgb` file (driver-side legacy-export path, no spatial
@@ -469,51 +473,20 @@ object Fgb {
     */
   def write(df: DataFrame, path: String, geometryCol: String = "geometry",
       layerName: String = "layer", maxRows: Int = 1000000): Unit = {
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"Fgb.write collects to the driver and is capped at maxRows=$maxRows rows; " +
-        "use writeSharded (one .fgb per partition) or parquet/geojsonseq for large frames")
-    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
-    try writeOne(rows, df.schema, geometryCol, layerName, out) finally out.close()
+    val rows = Shards.collectCapped(df, maxRows, "Fgb.write",
+      "use writeSharded (one .fgb per partition) or parquet/geojsonseq for large frames")
+    writeOne(rows, df.schema, geometryCol, layerName, new java.io.File(path))
   }
 
-  /** Distributed multi-file write — one `part-NNNNN.fgb` per non-empty
-    * partition under `dir`, plus a `_manifest.json` listing shards and row
-    * counts. No driver collect, no row cap: each task streams only ITS
-    * partition (repartition upstream to size the shards). `dir` must be
-    * visible to executors (local/NFS — same contract as [[readSplit]], which
-    * reads the shard set back as one frame; task retries rewrite their own
-    * shard file idempotently). Every shard is a complete standalone .fgb,
-    * so external tools read them individually too.
+  /** Distributed write: one standalone `.fgb` per partition under `dir` in
+    * the [[Shards]] layout; [[readSplit]] reads the directory back as one
+    * frame.
     */
   def writeSharded(df: DataFrame, dir: String, geometryCol: String = "geometry",
       layerName: String = "layer"): Unit = {
     val schema = df.schema
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      val rows = it.toArray
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.fgb"
-        val out = new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(new java.io.File(dir, name)))
-        try writeOne(rows, schema, geometryCol, layerName, out) finally out.close()
-        Iterator.single(name -> rows.length.toLong)
-      }
-    }.collect().sortBy(_._1).toIndexedSeq
-    // an all-empty frame still yields one header-only shard so read/readSplit
-    // recover the schema instead of failing on an empty directory
-    val shards =
-      if (counts.nonEmpty) counts
-      else {
-        val out = new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(new java.io.File(dir, "part-00000.fgb")))
-        try writeOne(Array.empty, schema, geometryCol, layerName, out) finally out.close()
-        IndexedSeq("part-00000.fgb" -> 0L)
-      }
-    val manifest = shards.map { case (n, c) => s"""{"file":"$n","rows":$c}""" }
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest.json"),
-      (s"""{"layer":"$layerName","shards":$manifest}""" + "\n").getBytes("UTF-8"))
+    Shards.write(df, dir, "fgb", Some(layerName)) { (file, rows) =>
+      writeOne(rows.toArray, schema, geometryCol, layerName, file)
+    }
   }
 }

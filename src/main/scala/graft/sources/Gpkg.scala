@@ -275,10 +275,7 @@ object Gpkg {
     */
   def read(spark: SparkSession, path: String, layer: Option[String] = None,
       columns: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.gpkg").load(path)
-      .select("content").as[Array[Byte]]
+    val files = SqliteDb.binaryFiles(spark, path, Some("*.gpkg"))
 
     // schema from the first file
     val head = files.head()
@@ -347,8 +344,7 @@ object Gpkg {
     */
   def stats(spark: SparkSession, path: String, layer: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val head = spark.read.format("binaryFile").option("pathGlobFilter", "*.gpkg")
-      .load(path).select("content").as[Array[Byte]].head()
+    val head = SqliteDb.binaryFiles(spark, path, Some("*.gpkg")).head()
     val db = new Sqlite(head)
     val (layerName, _, masterRow) = resolveLayer(db, path, layer)
     val cols = parseColumns(masterRow._5)
@@ -381,9 +377,7 @@ object Gpkg {
 
   /** Feature layer names of a gpkg file (driver-side metadata helper). */
   def layers(spark: SparkSession, path: String): Seq[String] = {
-    import spark.implicits._
-    val head = spark.read.format("binaryFile").option("pathGlobFilter", "*.gpkg")
-      .load(path).select("content").as[Array[Byte]].head()
+    val head = SqliteDb.binaryFiles(spark, path, Some("*.gpkg")).head()
     val db = new Sqlite(head)
     db.master.find(_._2 == "gpkg_geometry_columns")
       .map(m => db.table(m._4).map(_._2(0).asInstanceOf[String]))
@@ -675,22 +669,16 @@ object Gpkg {
       require(!df.columns.contains("fid"),
         "Gpkg.write adds its own 'fid' rowid-alias column; rename the incoming " +
           "'fid' column first (the table would otherwise carry duplicate column names)")
-      val rows = df.limit(maxRows + 1).collect()
-      require(rows.length <= maxRows,
-        s"Gpkg.write collects to the driver and is capped at maxRows=$maxRows rows; " +
-          "use writeSharded (one .gpkg per partition) or parquet/geojsonseq for large frames")
+      val rows = Shards.collectCapped(df, maxRows, "Gpkg.write",
+        "use writeSharded (one .gpkg per partition) or parquet/geojsonseq for large frames")
       (layerName, df.schema, rows.toIndexedSeq)
     }
     buildFile(collected, path, geometryCol, srid)
   }
 
-  /** Distributed multi-file write — one complete single-layer `part-NNNNN
-    * .gpkg` per non-empty partition under `dir` (each with its own metadata
-    * trio), plus a `_manifest.json` of shards and row counts. No driver
-    * collect, no row cap (repartition upstream to size shards). `dir` must
-    * be executor-visible; [[read]] pointed at `dir` consumes the shard set
-    * back as one frame, and every shard is a standalone valid GeoPackage for
-    * external tools. Task retries rewrite their own shard idempotently.
+  /** Distributed write: one standalone single-layer `.gpkg` (own metadata
+    * trio) per partition under `dir` in the [[Shards]] layout; [[read]]
+    * reads the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, layerName: String = "layer",
       geometryCol: String = "geometry", srid: Int = 4326): Unit = {
@@ -698,29 +686,11 @@ object Gpkg {
       "Gpkg.writeSharded adds its own 'fid' rowid-alias column; rename the " +
         "incoming 'fid' column first")
     val schema = df.schema
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      val rows = it.toIndexedSeq
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.gpkg"
-        buildFile(Seq((layerName, schema, rows)), new java.io.File(dir, name).getPath,
-          geometryCol, srid)
-        Iterator.single(name -> rows.length.toLong)
-      }
-    }.collect().sortBy(_._1).toIndexedSeq
-    // an all-empty frame still yields one schema-bearing shard
-    val shards =
-      if (counts.nonEmpty) counts
-      else {
-        buildFile(Seq((layerName, schema, IndexedSeq.empty[Row])),
-          new java.io.File(dir, "part-00000.gpkg").getPath, geometryCol, srid)
-        IndexedSeq("part-00000.gpkg" -> 0L)
-      }
-    val manifest = shards.map { case (n, c) => s"""{"file":"$n","rows":$c}""" }
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest.json"),
-      (s"""{"layer":"$layerName","shards":$manifest}""" + "\n").getBytes("UTF-8"))
+    Shards.write(df, dir, "gpkg", Some(layerName)) { (file, rows) =>
+      val rs = rows.toIndexedSeq
+      buildFile(Seq((layerName, schema, rs)), file.getPath, geometryCol, srid)
+      rs.length.toLong
+    }
   }
 
   /** Builds one GeoPackage file from materialized layer rows — shared by the

@@ -247,12 +247,13 @@ object OsmPbf {
 
   // ---- writer (driver-side, capped — fixture/export path) ------------------
 
-  /** Serializes `rows` as one complete .osm.pbf stream (header blob +
-    * zlib'd PrimitiveBlocks of `elementsPerBlock`, nodes sorted and first) —
-    * shared by the driver-side [[write]] and the shards of [[writeSharded]].
+  /** Writes `rows` to `file` as one complete .osm.pbf (header blob +
+    * zlib'd PrimitiveBlocks of `elementsPerBlock`, nodes sorted and first)
+    * and returns the row count — shared by the driver-side [[write]] and the
+    * shards of [[writeSharded]].
     */
   private def writeOne(rows: Array[Row], idx: Map[String, Int],
-      elementsPerBlock: Int, out: java.io.OutputStream): Unit = {
+      elementsPerBlock: Int, file: java.io.File): Long = {
     val nodesAll = rows.filter(_.getString(idx("type")) == "n").sortBy(_.getLong(idx("id")))
     val waysAll = rows.filter(_.getString(idx("type")) == "w")
     val relsAll = rows.filter(_.getString(idx("type")) == "r")
@@ -263,10 +264,12 @@ object OsmPbf {
     hdrBlock.stringField(4, "DenseNodes")
     val hdrBlob = new Pbf.Writer
     hdrBlob.bytesField(1, hdrBlock.toBytes)
-    writeFrame(out, "OSMHeader", hdrBlob.toBytes)
-    chunks.foreach { chunk =>
-      writeFrame(out, "OSMData", blockBlob(chunk, idx))
-    }
+    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(file))
+    try {
+      writeFrame(out, "OSMHeader", hdrBlob.toBytes)
+      chunks.foreach(chunk => writeFrame(out, "OSMData", blockBlob(chunk, idx)))
+    } finally out.close()
+    rows.length.toLong
   }
 
   /** Writes `df` (schema like [[schema]]: type/id/tags and lon/lat for "n",
@@ -278,42 +281,21 @@ object OsmPbf {
     */
   def write(df: DataFrame, path: String, maxRows: Int = 1000000,
       elementsPerBlock: Int = 8000): Unit = {
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"OsmPbf.write collects to the driver and is capped at maxRows=$maxRows rows; " +
-        "use writeSharded (one .osm.pbf per partition) for large frames")
-    val idx = df.schema.fieldNames.zipWithIndex.toMap
-    val out = new java.io.BufferedOutputStream(new java.io.FileOutputStream(path))
-    try writeOne(rows, idx, elementsPerBlock, out) finally out.close()
+    val rows = Shards.collectCapped(df, maxRows, "OsmPbf.write",
+      "use writeSharded (one .osm.pbf per partition) for large frames")
+    writeOne(rows, df.schema.fieldNames.zipWithIndex.toMap, elementsPerBlock,
+      new java.io.File(path))
   }
 
-  /** Distributed multi-file write — one `part-NNNNN.osm.pbf` per non-empty
-    * partition under `dir` (the osm ecosystem's regional-extract shape: a
-    * directory of independent pbf files, [[read]]/[[readSplit]] consume it
-    * back as one frame), plus a `_manifest.json` of shards and row counts.
-    * No driver collect, no row cap — each task streams only ITS partition;
-    * repartition upstream to size shards (e.g. by region/cell for locality).
-    * Node ordering is per-shard (sorted within each file), the regional-
-    * extract contract. `dir` must be visible to executors (local/NFS).
+  /** Distributed write: one standalone `.osm.pbf` per partition under `dir`
+    * in the [[Shards]] layout — the regional-extract shape, nodes sorted per
+    * file; [[read]]/[[readSplit]] read the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, elementsPerBlock: Int = 8000): Unit = {
     val idx = df.schema.fieldNames.zipWithIndex.toMap
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      val rows = it.toArray
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.osm.pbf"
-        val out = new java.io.BufferedOutputStream(
-          new java.io.FileOutputStream(new java.io.File(dir, name)))
-        try writeOne(rows, idx, elementsPerBlock, out) finally out.close()
-        Iterator.single(name -> rows.length.toLong)
-      }
-    }.collect().sortBy(_._1).toIndexedSeq
-    val manifest = counts.map { case (n, c) => s"""{"file":"$n","rows":$c}""" }
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest.json"),
-      (s"""{"shards":$manifest}""" + "\n").getBytes("UTF-8"))
+    Shards.write(df, dir, "osm.pbf") { (file, rows) =>
+      writeOne(rows.toArray, idx, elementsPerBlock, file)
+    }
   }
 
   private def writeFrame(out: java.io.OutputStream, blobType: String, blobBytes: Array[Byte]): Unit = {

@@ -291,59 +291,30 @@ object Shapefile {
   def write(df: DataFrame, base: String, geometryCol: String = "geometry",
       maxRows: Int = 1000000): Unit = {
     val attrCols = df.columns.filterNot(_ == geometryCol)
-    // collect at most maxRows+1: bounds driver memory AND detects overflow
-    // without a separate count pass
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"Shapefile.write collects to the driver and is capped at maxRows=$maxRows rows; " +
-        "use writeSharded (one .shp/.shx/.dbf triple per partition) or " +
+    val rows = Shards.collectCapped(df, maxRows, "Shapefile.write",
+      "use writeSharded (one .shp/.shx/.dbf triple per partition) or " +
         "parquet/geojsonseq for large frames")
     writeOne(rows, attrCols, geometryCol, base)
   }
 
-  /** Distributed multi-file write — one complete `part-NNNNN.shp`/`.shx`/
-    * `.dbf` triple per non-empty partition under `dir`, plus a
-    * `_manifest.json` listing shards and row counts. No driver collect, no
-    * row cap, and each shard stays inside the format's 2 GB file limit as
-    * long as partitions do (repartition upstream to size them). `dir` must
-    * be executor-visible (local/NFS); [[read]]/[[readSplit]] pointed at `dir`
-    * consume the shard set back as one frame, and every shard is a valid
-    * standalone shapefile for external tools. Task retries rewrite their own
-    * triple idempotently.
+  /** Distributed write: one standalone `.shp`/`.shx`/`.dbf` triple per
+    * partition under `dir` in the [[Shards]] layout (listed by its `.shp`),
+    * each inside the format's 2 GB limit as long as partitions are;
+    * [[read]]/[[readSplit]] read the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, geometryCol: String = "geometry"): Unit = {
     val attrCols = df.columns.filterNot(_ == geometryCol)
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      val rows = it.toArray
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d"
-        writeOne(rows, attrCols, geometryCol, new java.io.File(dir, name).getPath)
-        Iterator.single(name -> rows.length.toLong)
-      }
-    }.collect().sortBy(_._1).toIndexedSeq
-    // an all-empty frame still yields one header-only shard so read/readSplit
-    // recover the schema instead of failing on an empty directory
-    val shards =
-      if (counts.nonEmpty) counts
-      else {
-        writeOne(Array.empty[Row], attrCols, geometryCol,
-          new java.io.File(dir, "part-00000").getPath)
-        IndexedSeq("part-00000" -> 0L)
-      }
-    val manifest = shards.map { case (n, c) => s"""{"file":"$n.shp","rows":$c}""" }
-      .mkString("[", ",", "]")
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "_manifest.json"),
-      (s"""{"shards":$manifest}""" + "\n").getBytes(StandardCharsets.UTF_8))
+    Shards.write(df, dir, "shp") { (file, rows) =>
+      writeOne(rows.toArray, attrCols, geometryCol, file.getPath.stripSuffix(".shp"))
+    }
   }
 
-  /** Builds and writes one `.shp`/`.shx`/`.dbf` triple at `base` — shared by
-    * the driver-side [[write]] and the per-partition shards of
-    * [[writeSharded]].
+  /** Builds and writes one `.shp`/`.shx`/`.dbf` triple at `base` and returns
+    * the row count — shared by the driver-side [[write]] and the
+    * per-partition shards of [[writeSharded]].
     */
   private def writeOne(rows: Array[Row], attrCols: Array[String],
-      geometryCol: String, base: String): Unit = {
+      geometryCol: String, base: String): Long = {
     val geoms = rows.map(r => WKB.read(r.getAs[Array[Byte]](geometryCol)))
 
     val shapeType = geoms.headOption.map {
@@ -441,5 +412,6 @@ object Shapefile {
     }
     dbf.put(headerSize + rows.length * recordSize, 0x1a.toByte)
     java.nio.file.Files.write(java.nio.file.Paths.get(base + ".dbf"), dbf.array())
+    rows.length.toLong
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -36,7 +36,7 @@ object SqliteDb {
     * [[read]], mirroring `Gpkg.layers`.
     */
   def tables(spark: SparkSession, path: String): Seq[String] = {
-    val head = binaryFiles(spark, path).head()
+    val head = binaryFiles(spark, path, sqliteGlob(path)).head()
     new Gpkg.Sqlite(head).master
       .filter(m => m._1 == "table" && !m._2.startsWith("sqlite_"))
       .map(_._2)
@@ -51,34 +51,35 @@ object SqliteDb {
     */
   @volatile var maxFileBytes: Long = 1L << 30
 
-  private[sources] def guardFileSizes(spark: SparkSession, path: String,
-      glob: Option[String], cap: Long, driver: String): Unit = {
+  /** The bytes of every file under `path` whose name matches `glob` (every
+    * file when None), one row per file, after failing loudly on a file past
+    * [[maxFileBytes]] (a metadata-only check: content is never scanned) or
+    * on an empty match. Shared with [[Gpkg]]: a GeoPackage is a SQLite page
+    * graph too.
+    */
+  private[sources] def binaryFiles(spark: SparkSession, path: String,
+      glob: Option[String]): Dataset[Array[Byte]] = {
+    import spark.implicits._
     val r = spark.read.format("binaryFile")
-    val meta = glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
-      .select("path", "length") // metadata-only: content is never scanned
-      .where(col("length") > cap).limit(1).collect()
-    meta.headOption.foreach { row =>
-      throw new IllegalArgumentException(
-        s"$driver: ${row.getString(0)} is ${row.getLong(1)} bytes, past the " +
-          s"$cap-byte single-file cap — whole-file formats decode one file " +
-          "per task; shard the data (writeSharded) or raise the cap " +
-          s"($driver.maxFileBytes) if the executors have the heap for it")
-    }
+    val files = glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
+    files.select("path", "length").where(col("length") > maxFileBytes).limit(1).collect()
+      .headOption.foreach { row =>
+        throw new IllegalArgumentException(
+          s"${row.getString(0)} is ${row.getLong(1)} bytes, past the $maxFileBytes-byte " +
+            "single-file cap — whole-file formats decode one file per task; shard the " +
+            "data (writeSharded) or raise the cap (SqliteDb.maxFileBytes) if the " +
+            "executors have the heap for it")
+      }
+    val ds = files.select("content").as[Array[Byte]]
+    require(!ds.isEmpty, s"no files matching ${glob.getOrElse("*")} under $path")
+    ds
   }
 
-  private def binaryFiles(spark: SparkSession, path: String) = {
-    import spark.implicits._
-    val f = spark.read.format("binaryFile")
+  /** `*.{sqlite,sqlite3,db}` unless `path` names one such file. */
+  private def sqliteGlob(path: String): Option[String] = {
     val lower = path.toLowerCase
-    val explicitFile =
-      lower.endsWith(".sqlite") || lower.endsWith(".db") || lower.endsWith(".sqlite3")
-    val glob = if (explicitFile) None else Some("*.{sqlite,sqlite3,db}")
-    guardFileSizes(spark, path, glob, maxFileBytes, "SqliteDb")
-    val ds = glob.fold(f)(g => f.option("pathGlobFilter", g)).load(path)
-      .select("content").as[Array[Byte]]
-    require(!ds.isEmpty,
-      s"SqliteDb: no .sqlite/.sqlite3/.db files under $path")
-    ds
+    if (lower.endsWith(".sqlite") || lower.endsWith(".db") || lower.endsWith(".sqlite3")) None
+    else Some("*.{sqlite,sqlite3,db}")
   }
 
   /** Reads one table (explicit name, or the only user table) from every
@@ -87,7 +88,7 @@ object SqliteDb {
     */
   def read(spark: SparkSession, path: String, table: Option[String] = None,
       columns: Seq[String] = Nil): DataFrame = {
-    val files = binaryFiles(spark, path)
+    val files = binaryFiles(spark, path, sqliteGlob(path))
     val head = files.head()
     val db = new Gpkg.Sqlite(head)
     val user = db.master.filter(m => m._1 == "table" && !m._2.startsWith("sqlite_"))
@@ -203,36 +204,23 @@ object SqliteDb {
       maxRows: Int = 1000000): Unit = {
     require(tablesIn.nonEmpty, "writeTables needs at least one table")
     val collected = tablesIn.map { case (name, df) =>
-      val rows = df.limit(maxRows + 1).collect()
-      require(rows.length <= maxRows,
-        s"SqliteDb.write collects to the driver and is capped at maxRows=$maxRows rows; " +
-          "use writeSharded (one .sqlite per partition) for large frames")
+      val rows = Shards.collectCapped(df, maxRows, "SqliteDb.write",
+        "use writeSharded (one .sqlite per partition) for large frames")
       (name, df.schema, rows.toIndexedSeq)
     }
     buildFile(collected, path)
   }
 
-  /** Distributed multi-file write — one complete `part-NNNNN.sqlite` per
-    * non-empty partition under `dir`, each a standalone valid SQLite
-    * database for external tools; [[read]] pointed at `dir` consumes the
-    * shard set back as one frame. No driver collect, no row cap. Task
-    * retries rewrite their own shard idempotently.
+  /** Distributed write: one standalone single-table `.sqlite` per partition
+    * under `dir` in the [[Shards]] layout; [[read]] reads the directory back
+    * as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, table: String = "data"): Unit = {
     val schema = df.schema
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      val rows = it.toIndexedSeq
-      if (rows.isEmpty) Iterator.empty
-      else {
-        buildFile(Seq((table, schema, rows)),
-          new java.io.File(dir, f"part-$i%05d.sqlite").getPath)
-        Iterator.single(rows.length.toLong)
-      }
-    }.collect() // bounded: one count per shard
-    // an all-empty frame still yields one schema-bearing shard
-    if (counts.isEmpty)
-      buildFile(Seq((table, schema, IndexedSeq.empty[Row])),
-        new java.io.File(dir, "part-00000.sqlite").getPath)
+    Shards.write(df, dir, "sqlite") { (file, rows) =>
+      val rs = rows.toIndexedSeq
+      buildFile(Seq((table, schema, rs)), file.getPath)
+      rs.length.toLong
+    }
   }
 }

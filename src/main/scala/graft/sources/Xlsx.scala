@@ -417,30 +417,18 @@ object Xlsx {
   def writeOds(df: DataFrame, path: String, sheet: String = "Sheet1",
       maxRows: Int = 1048575): Unit = {
     checkWritable(df.schema)
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"Xlsx.writeOds collects to the driver and is capped at maxRows=$maxRows " +
-        "rows; use writeShardedOds or parquet for large frames")
+    val rows = Shards.collectCapped(df, maxRows, "Xlsx.writeOds",
+      "use writeShardedOds or parquet for large frames")
     writeOneOds(rows.iterator, df.schema, sheet, new java.io.File(path))
   }
 
-  /** [[writeSharded]]'s OpenDocument twin: one standalone `.ods` per
-    * non-empty partition; [[readOds]] consumes the directory as one frame.
+  /** [[writeSharded]]'s OpenDocument twin; [[readOds]] reads the directory
+    * back as one frame.
     */
   def writeShardedOds(df: DataFrame, dir: String, sheet: String = "Sheet1"): Unit = {
     checkWritable(df.schema)
     val schema = df.schema
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.ods"
-        val n = writeOneOds(it, schema, sheet, new java.io.File(dir, name))
-        Iterator.single(name -> n)
-      }
-    }.collect()
-    if (counts.isEmpty)
-      writeOneOds(Iterator.empty, schema, sheet, new java.io.File(dir, "part-00000.ods"))
+    Shards.write(df, dir, "ods")((file, rows) => writeOneOds(rows, schema, sheet, file))
   }
 
   /** Writes one `.xlsx` file — a whole-file export collected through the
@@ -452,34 +440,19 @@ object Xlsx {
   def write(df: DataFrame, path: String, sheet: String = "Sheet1",
       maxRows: Int = 1048575): Unit = {
     checkWritable(df.schema)
-    val rows = df.limit(maxRows + 1).collect()
-    require(rows.length <= maxRows,
-      s"Xlsx.write collects to the driver and is capped at maxRows=$maxRows " +
-        "rows (the xlsx sheet limit); use writeSharded or parquet for large frames")
+    val rows = Shards.collectCapped(df, maxRows, "Xlsx.write",
+      "use writeSharded or parquet for large frames (the default cap is the xlsx sheet limit)")
     writeOne(rows.iterator, df.schema, sheet, new java.io.File(path))
   }
 
-  /** Distributed export: one complete standalone `part-NNNNN.xlsx` per
-    * non-empty partition under `dir` — no driver collect, no row cap beyond
-    * the per-sheet limit each partition must respect (repartition upstream
-    * to size shards). [[read]] pointed at `dir` consumes the shard set back
-    * as one frame; every shard opens in Excel on its own. An all-empty
-    * frame still writes one header-only shard so the schema survives.
+  /** Distributed export: one standalone `.xlsx` per partition under `dir` in
+    * the [[Shards]] layout (each partition within the sheet limit); [[read]]
+    * reads the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, sheet: String = "Sheet1"): Unit = {
     checkWritable(df.schema)
     val schema = df.schema
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val counts = df.rdd.mapPartitionsWithIndex { (i, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val name = f"part-$i%05d.xlsx"
-        val n = writeOne(it, schema, sheet, new java.io.File(dir, name))
-        Iterator.single(name -> n)
-      }
-    }.collect()
-    if (counts.isEmpty)
-      writeOne(Iterator.empty, schema, sheet, new java.io.File(dir, "part-00000.xlsx"))
+    Shards.write(df, dir, "xlsx")((file, rows) => writeOne(rows, schema, sheet, file))
   }
 
   /** Reads `*.xlsx` under `path`: header row → column names, typed columns

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Clustering, Dedup, GeoOps, Graph, Joins, Kll, Ops, OsmFilter, SJoin, Similarity, Sketch}
@@ -51,7 +51,14 @@ object ScaleCheck {
     // driver heap is the JVM's own — set it at launch (e.g. `sbt -mem 8192`);
     // a session config would be a silent no-op in a running JVM
     val spark = Harness.localSession(Harness.defaultCores)
+    val scratch = java.nio.file.Files.createTempDirectory("graft_scale")
+    try run(spark, sfDir, factor, only, scratch.toString)
+    finally { graft.deleteRecursively(scratch); spark.stop() }
+  }
 
+  /** Times the pairs `only` selects; persisted inputs go under `scratch`. */
+  private def run(spark: SparkSession, sfDir: String, factor: Int, only: Option[String],
+      scratch: String): Unit = {
     // the simulated-corpus frames are CHECKPOINTED once: the decorrelation
     // transforms (per-copy translate / array rotate) otherwise recompute on
     // every input scan, so an operator that reads its input k times would
@@ -60,19 +67,21 @@ object ScaleCheck {
     // table would never charge. Measured: dedup_semantic 16.5 → ~4 s at
     // 10× with the input materialized.
     val docs = graft.readTable(spark, sfDir, "documents").select("doc_id", "text", "lang")
-    val docsN = (0 until factor).map { i =>
+    lazy val docsN = (0 until factor).map { i =>
       docs.select((col("doc_id") + lit(i.toLong * 100000000L)).as("doc_id"),
         permuted(col("text"), i).as("text"), col("lang"))
     }.reduce(_ unionByName _).localCheckpoint(true)
 
     val emb = graft.readTable(spark, sfDir, "embeddings")
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val embN = (0 until factor).map { i =>
-      val shift = (i * 7) % math.max(dim, 1)
-      emb.select((col("vec_id") + lit(i.toLong * 100000000L)).as("vec_id"),
-        concat(slice(col("embedding"), shift + 1, dim - shift),
-          slice(col("embedding"), 1, shift)).as("embedding"))
-    }.reduce(_ unionByName _).localCheckpoint(true)
+    lazy val embN = {
+      val dim = emb.select(size(col("embedding"))).head().getInt(0)
+      (0 until factor).map { i =>
+        val shift = (i * 7) % math.max(dim, 1)
+        emb.select((col("vec_id") + lit(i.toLong * 100000000L)).as("vec_id"),
+          concat(slice(col("embedding"), shift + 1, dim - shift),
+            slice(col("embedding"), 1, shift)).as("embedding"))
+      }.reduce(_ unionByName _).localCheckpoint(true)
+    }
 
     val li = graft.readTable(spark, sfDir, "lineitem")
       .select("l_orderkey", "l_partkey", "l_quantity")
@@ -495,7 +504,7 @@ object ScaleCheck {
     // build cost tracks the corpus (tokenize + one groupBy + three parallel
     // writes), search cost the query vocabulary via bucket pruning — the
     // timed pair covers build + one search batch at 1× and factor×
-    val btmp = java.nio.file.Files.createTempDirectory("graft_bm25scale").toString
+    val btmp = s"$scratch/bm25"
     def bm25IdxOf(corpus: DataFrame, path: String) = {
       graft.operators.TextAnalysis.buildBM25Index(corpus, path)
       val qs = docs.where(col("doc_id") % 100 === 7)
@@ -564,7 +573,7 @@ object ScaleCheck {
     // splittable avro IO: ONE container file at 1× and factor× — read cost
     // must track bytes through parallel byte-range tasks (sync-marker
     // splits), never serialize on the single file
-    val atmp = java.nio.file.Files.createTempDirectory("graft_ascale").toString
+    val atmp = s"$scratch/avro"
     if (only.forall("avro_read".contains)) {
       graft.sources.Avro.write(docs.repartition(1), s"$atmp/one", codec = "null")
       graft.sources.Avro.write(docsN.repartition(1), s"$atmp/oneN", codec = "null")
@@ -592,7 +601,7 @@ object ScaleCheck {
     // these ratios must hover near 1, not near factor (the whole point of
     // file-level pruning at 100 TB: query cost tracks the QUERY, not the
     // table)
-    val mtmp = java.nio.file.Files.createTempDirectory("graft_mscale").toString
+    val mtmp = s"$scratch/manifest"
     val ordM = graft.readTable(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")
     def ordCopy(i: Int) = ordM.select(
@@ -659,44 +668,45 @@ object ScaleCheck {
       graft.sources.ManifestTable.scan(spark, s"$mtmp/log1", noMatch),
       graft.sources.ManifestTable.scan(spark, s"$mtmp/logN", noMatch))
 
-    // Z-order pruning at factor×: the same bbox read against the curve-
-    // clustered layout vs a round-robin (locality-destroyed) copy of the
-    // same rows — the delta is the I/O the row-group stats let us skip
-    val zpts = (0 until factor).map { i =>
-      li.select(
-        (expr("(l_partkey % 120) * 0.5 - 30 + 0.25") + lit(i * 0.003)).as("lon"),
-        (expr("(l_orderkey % 80) * 0.5 - 20 + 0.25") + lit(i * 0.003)).as("lat"),
-        (col("l_orderkey") + lit(i.toLong * 100000000L)).as("id"))
-    }.reduce(_ unionByName _)
-    val ztmp = java.nio.file.Files.createTempDirectory("graft_zscale").toString
-    GeoOps.writeZOrdered(zpts, "lon", "lat", s"$ztmp/zorder", bits = 16, partitions = 64)
-    zpts.withColumn("__z",
-        graft.functions.GeoFunctions.st_zorder(col("lon"), col("lat"), 16))
-      .repartition(64)
-      .write.mode("overwrite").parquet(s"$ztmp/shuffled")
-    println("zorder_read (clustered vs locality-destroyed, same rows):")
-    // wall-clock is page-cache-flattered at this sf — the honest scale
-    // signals are rows DECODED after row-group pruning and bytes on disk
-    def zProbe(layout: String): (Long, Long, Long) = {
-      val df = GeoOps.readZOrdered(spark, s"$ztmp/$layout", "lon", "lat",
-        -10.0, -10.0, 5.0, 5.0)
-      val qe = df.queryExecution
-      val t0 = System.nanoTime()
-      val n = qe.executedPlan.execute().count()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val m = qe.executedPlan.collectLeaves().head.metrics
-      println(f"  $layout%-10s $secs%6.2fs result=$n scanRows=${m("numOutputRows").value} bytes=${m("filesSize").value}")
-      (n, m("numOutputRows").value, m("filesSize").value)
+    if (only.forall("zorder_read".contains)) {
+      // Z-order pruning at factor×: the same bbox read against the curve-
+      // clustered layout vs a round-robin (locality-destroyed) copy of the
+      // same rows — the delta is the I/O the row-group stats let us skip
+      val zpts = (0 until factor).map { i =>
+        li.select(
+          (expr("(l_partkey % 120) * 0.5 - 30 + 0.25") + lit(i * 0.003)).as("lon"),
+          (expr("(l_orderkey % 80) * 0.5 - 20 + 0.25") + lit(i * 0.003)).as("lat"),
+          (col("l_orderkey") + lit(i.toLong * 100000000L)).as("id"))
+      }.reduce(_ unionByName _)
+      val ztmp = s"$scratch/zorder"
+      GeoOps.writeZOrdered(zpts, "lon", "lat", s"$ztmp/zorder", bits = 16, partitions = 64)
+      zpts.withColumn("__z",
+          graft.functions.GeoFunctions.st_zorder(col("lon"), col("lat"), 16))
+        .repartition(64)
+        .write.mode("overwrite").parquet(s"$ztmp/shuffled")
+      println("zorder_read (clustered vs locality-destroyed, same rows):")
+      // wall-clock is page-cache-flattered at this sf — the honest scale
+      // signals are rows DECODED after row-group pruning and bytes on disk
+      def zProbe(layout: String): (Long, Long, Long) = {
+        val df = GeoOps.readZOrdered(spark, s"$ztmp/$layout", "lon", "lat",
+          -10.0, -10.0, 5.0, 5.0)
+        val qe = df.queryExecution
+        val t0 = System.nanoTime()
+        val n = qe.executedPlan.execute().count()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val m = qe.executedPlan.collectLeaves().head.metrics
+        println(f"  $layout%-10s $secs%6.2fs result=$n scanRows=${m("numOutputRows").value} bytes=${m("filesSize").value}")
+        (n, m("numOutputRows").value, m("filesSize").value)
+      }
+      val (_, zcRows, zcBytes) = zProbe("zorder")
+      val (_, zsRows, zsBytes) = zProbe("shuffled")
+      println(f"  zorder at ${factor}x: ${zsRows.toDouble / zcRows}%.1fx fewer rows decoded, " +
+        f"${zsBytes.toDouble / zcBytes}%.1fx smaller on disk")
     }
-    val (_, zcRows, zcBytes) = zProbe("zorder")
-    val (_, zsRows, zsBytes) = zProbe("shuffled")
-    println(f"  zorder at ${factor}x: ${zsRows.toDouble / zcRows}%.1fx fewer rows decoded, " +
-      f"${zsBytes.toDouble / zcBytes}%.1fx smaller on disk")
 
     println(f"\n${"operator"}%-18s ${"1x"}%8s ${s"${factor}x"}%8s ${"ratio"}%7s  (linear = $factor)")
     results.foreach { case (name, (a, b)) =>
       println(f"$name%-18s $a%7.2fs $b%7.2fs ${b / a}%7.2f")
     }
-    spark.stop()
   }
 }

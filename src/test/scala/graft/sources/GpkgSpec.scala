@@ -299,4 +299,24 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
     val back2 = Gpkg.read(spark, dir2)
     assert(back2.count() == 0 && back2.columns.contains("geometry"))
   }
+
+  test("read, layers and stats share the SQLite file guard: no match and the size cap fail loud") {
+    val none = java.nio.file.Files.createTempDirectory("graft-gpkg-none").toString
+    Seq[() => Any](() => Gpkg.read(spark, none), () => Gpkg.layers(spark, none),
+        () => Gpkg.stats(spark, none)).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains(none), e.getMessage)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-cap").toString
+    val df = Seq((1L, 2.0, 3.0)).toDF("k", "x", "y")
+      .select(col("k"), st_point(col("x"), col("y")).as("geometry"))
+    Gpkg.write(df, s"$dir/t.gpkg")
+    val cap = SqliteDb.maxFileBytes
+    SqliteDb.maxFileBytes = 100
+    try {
+      val e = intercept[IllegalArgumentException](Gpkg.read(spark, dir))
+      assert(e.getMessage.contains("SqliteDb.maxFileBytes"), e.getMessage)
+    } finally SqliteDb.maxFileBytes = cap
+    assert(Gpkg.read(spark, dir).count() == 1)
+  }
 }
