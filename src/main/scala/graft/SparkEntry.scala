@@ -436,13 +436,13 @@ object SparkEntry {
           round(st_y(col("geometry")), 6).as("py"))
     }),
 
-    // --- shp driver end-to-end: own ESRI writer + shx-indexed split reader -
+    // --- shp driver end-to-end: own ESRI writer + shx-indexed ranged reader
     "shp_roundtrip" -> ((s, dir) => {
       val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
       val out = new java.io.File(freshRoot("shp", dir))
       out.mkdirs()
       graft.sources.Shapefile.write(pts, s"$out/customer")
-      graft.sources.Shapefile.readSplit(s, s"$out/customer.shp")
+      graft.sources.Shapefile.read(s, s"$out/customer.shp")
         .select(col("c_custkey").cast("long").as("c_custkey"),
           round(col("c_acctbal").cast("double"), 2).as("acctbal2"),
           round(st_x(col("geometry")), 6).as("px"),

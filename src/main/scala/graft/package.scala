@@ -1,7 +1,6 @@
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-import scala.jdk.CollectionConverters._
 
 package object graft {
   /** Path of a driver-generated test table under an sf dir. */
@@ -83,21 +82,6 @@ package object graft {
         Map("spark.local.dir" -> "/dev/shm/graft_spark_local")
       else Map.empty
     }
-
-  /** The regular files ending in `suffix` under directory `path`, walked
-    * recursively and sorted; a non-directory `path` comes back as-is.
-    */
-  private[graft] def listFiles(path: String, suffix: String): Seq[String] = {
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.isDirectory(p)) Seq(path)
-    else {
-      val s = java.nio.file.Files.walk(p)
-      try s.iterator().asScala
-        .filter(f => f.toString.endsWith(suffix) && java.nio.file.Files.isRegularFile(f))
-        .map(_.toString).toSeq.sorted
-      finally s.close()
-    }
-  }
 
   /** Deletes `p` and everything under it; a missing path is a no-op. Each
     * directory listing is closed before its directory is removed.

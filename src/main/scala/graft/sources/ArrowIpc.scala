@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.channels.FileChannel
 import java.nio.file.{Paths, StandardOpenOption}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.arrow.compression.CommonsCompressionFactory
@@ -159,17 +160,11 @@ object ArrowIpc {
 
   // ---- read ----------------------------------------------------------------
 
-  private def listArrow(path: String): Seq[String] = {
-    val files = graft.listFiles(path, ".arrow")
-    require(files.nonEmpty, s"no .arrow files under $path")
-    files
-  }
-
   /** Spark schema of the IPC file(s) at `path` — one driver-side footer
     * read, no data decode.
     */
   def schemaOf(path: String): StructType = {
-    val ch = FileChannel.open(Paths.get(listArrow(path).head), StandardOpenOption.READ)
+    val ch = FileChannel.open(Paths.get(Shards.list(path, ".arrow").head), StandardOpenOption.READ)
     val alloc = new RootAllocator()
     val r = new ArrowFileReader(ch, alloc)
     try structOf(r.getVectorSchemaRoot.getSchema)
@@ -241,10 +236,9 @@ object ArrowIpc {
   }
 
   /** Per-batch body lengths from one file's footer — metadata-only, no
-    * batch decode. Runs on the driver for few-file layouts and as a Spark
-    * task per file batch for many-file ones.
+    * batch decode.
     */
-  private def footerBatchLens(f: String): Seq[Long] = {
+  private[sources] def footerBatchLens(f: String): Seq[Long] = {
     val ch = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
     val alloc = new RootAllocator()
     val r = new ArrowFileReader(ch, alloc)
@@ -252,87 +246,60 @@ object ArrowIpc {
     finally { r.close(); alloc.close() }
   }
 
-  /** Above this many files the footer census fans out as a distributed
-    * metadata job (one serial driver open per file would dominate planning
-    * on a 100k-small-files drop); below it the driver loop is cheaper than
-    * a job launch.
+  /** `schemaFull` narrowed to `columns` in writer order (deterministic
+    * output, like the avro projection); every column when empty.
     */
-  private[sources] val DistributedCensusThreshold = 64
+  private def project(schemaFull: StructType, columns: Seq[String]): StructType =
+    if (columns.isEmpty) schemaFull
+    else {
+      val missing = columns.filterNot(schemaFull.fieldNames.toSet)
+      require(missing.isEmpty, s"columns not in arrow schema: ${missing.sorted.mkString(", ")}")
+      StructType(schemaFull.fields.filter(f => columns.contains(f.name)))
+    }
 
-  // observability seam: driver-side footer opens during read planning (the
-  // many-files spec asserts the census did NOT run as a driver loop)
-  private[sources] val driverFooterOpens = new java.util.concurrent.atomic.AtomicLong()
+  /** The rows of the batch `root` holds, materialized (the next batch load
+    * reuses its buffers).
+    */
+  private[sources] def batchRows(root: VectorSchemaRoot,
+      fields: Array[(String, DataType)]): IndexedSeq[Row] = {
+    val ex = fields.map { case (n, dt) => extractor(root.getVector(n), dt) }
+    (0 until root.getRowCount).map(i => Row.fromSeq(ex.toIndexedSeq.map(_(i))))
+  }
 
-  /** Footer-indexed parallel read: each file's footer is read
-    * (metadata-only — on the driver for a handful of files, as a distributed
-    * job over the file list beyond [[DistributedCensusThreshold]], the same
-    * shape as ManifestTable.footerStats) and record batches greedily pack
-    * into ~`splitBytes` groups; each task seeks straight to its batches.
-    * `columns` projects at the BATCH LOAD level — unprojected columns'
-    * buffers are still indexed by the footer but their values never decode
-    * into rows.
+  /** Footer-indexed parallel read on the [[Shards]] read path: each file's
+    * footer is read (metadata-only, planned like every [[Shards.plan]]) and
+    * record batches greedily pack into ~`splitBytes` groups; each task
+    * seeks straight to its batches. `columns` projects at the BATCH LOAD
+    * level — unprojected columns' buffers are still indexed by the footer
+    * but their values never decode into rows.
     */
   def read(spark: SparkSession, path: String,
       splitBytes: Long = 32L * 1024 * 1024,
       columns: Seq[String] = Nil): DataFrame = {
-    val files = listArrow(path)
-    driverFooterOpens.incrementAndGet()
-    val schemaFull: StructType = schemaOf(files.head)
-    val census: Seq[(String, Seq[Long])] =
-      if (files.size <= DistributedCensusThreshold)
-        files.map { f => driverFooterOpens.incrementAndGet(); (f, footerBatchLens(f)) }
-      else
-        spark.sparkContext.parallelize(files, math.min(files.size, 32))
-          .map(f => (f, footerBatchLens(f))).collect().sortBy(_._1).toSeq
-    val splits = scala.collection.mutable.ArrayBuffer[(String, Seq[Int])]()
-    census.foreach { case (f, lens) =>
-      var group = scala.collection.mutable.ArrayBuffer[Int]()
+    val files = Shards.list(path, ".arrow")
+    val schema = project(schemaOf(files.head), columns)
+    val splits = Shards.plan(spark, files) { f =>
+      val groups = ArrayBuffer(ArrayBuffer[Int]())
       var bytes = 0L
-      lens.zipWithIndex.foreach { case (len, i) =>
-        if (group.nonEmpty && bytes + len > splitBytes) {
-          splits += ((f, group.toSeq)); group = scala.collection.mutable.ArrayBuffer[Int]()
-          bytes = 0L
-        }
-        group += i; bytes += len
+      footerBatchLens(f).zipWithIndex.foreach { case (len, i) =>
+        if (groups.last.nonEmpty && bytes + len > splitBytes) { groups += ArrayBuffer[Int](); bytes = 0L }
+        groups.last += i; bytes += len
       }
-      if (group.nonEmpty) splits += ((f, group.toSeq))
+      groups.filter(_.nonEmpty).map(g => (f, g.toSeq)).toSeq
     }
-    val schema =
-      if (columns.isEmpty) schemaFull
-      else {
-        val have = schemaFull.fieldNames.toSet
-        val missing = columns.filterNot(have)
-        require(missing.isEmpty, s"columns not in arrow schema: ${missing.sorted.mkString(", ")}")
-        // writer order, like the avro projection: deterministic output
-        StructType(schemaFull.fields.filter(f => columns.contains(f.name)))
-      }
-    if (splits.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val fields = schema.fields.map(f => (f.name, f.dataType))
-    val rdd = spark.sparkContext.parallelize(splits.toSeq, splits.size)
-      .flatMap { case (f, batchIdxs) =>
-        val ch = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-        val alloc = new RootAllocator()
-        val reader = new ArrowFileReader(ch, alloc)
-        var closed = false
-        def closeNow(): Unit = if (!closed) { closed = true; reader.close(); alloc.close() }
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeNow()))
-        try {
-          val blocks = reader.getRecordBlocks
-          val root = reader.getVectorSchemaRoot
-          batchIdxs.iterator.flatMap { bi =>
-            reader.loadRecordBatch(blocks.get(bi))
-            val ex = fields.map { case (n, dt) => extractor(root.getVector(n), dt) }
-            val out = (0 until root.getRowCount).map { i =>
-              Row.fromSeq(ex.toIndexedSeq.map(_(i)))
-            }
-            out // materialized before the next loadRecordBatch reuses buffers
-          } ++ { closeNow(); Iterator.empty }
-        } catch { case e: Throwable => closeNow(); throw e }
+    Shards.read(spark, splits, schema) { case (f, batchIdxs) =>
+      val alloc = new RootAllocator()
+      val reader = new ArrowFileReader(
+        FileChannel.open(Paths.get(f), StandardOpenOption.READ), alloc)
+      Shards.stream(() => { reader.close(); alloc.close() }) {
+        val blocks = reader.getRecordBlocks
+        batchIdxs.iterator.flatMap { bi =>
+          reader.loadRecordBatch(blocks.get(bi))
+          batchRows(reader.getVectorSchemaRoot, fields)
+        }
       }
-    spark.createDataFrame(rdd, schema)
+    }
   }
 
   // ---- write ---------------------------------------------------------------
@@ -554,17 +521,11 @@ object ArrowIpc {
 
   // ---- streaming-format read -----------------------------------------------
 
-  private def listArrows(path: String): Seq[String] = {
-    val files = graft.listFiles(path, ".arrows")
-    require(files.nonEmpty, s"no .arrows files under $path")
-    files
-  }
-
   /** Spark schema of the streaming-format file(s): the schema message leads
     * the stream, so this reads a few hundred bytes of the first file.
     */
   def schemaOfArrows(path: String): StructType = {
-    val ch = FileChannel.open(Paths.get(listArrows(path).head), StandardOpenOption.READ)
+    val ch = FileChannel.open(Paths.get(Shards.list(path, ".arrows").head), StandardOpenOption.READ)
     val alloc = new RootAllocator()
     val r = new ArrowStreamReader(ch, alloc, CommonsCompressionFactory.INSTANCE)
     try structOf(r.getVectorSchemaRoot.getSchema)
@@ -578,46 +539,17 @@ object ArrowIpc {
     */
   def readArrows(spark: SparkSession, path: String,
       columns: Seq[String] = Nil): DataFrame = {
-    val files = listArrows(path)
-    val schemaFull = schemaOfArrows(files.head)
-    val schema =
-      if (columns.isEmpty) schemaFull
-      else {
-        val have = schemaFull.fieldNames.toSet
-        val missing = columns.filterNot(have)
-        require(missing.isEmpty, s"columns not in arrow schema: ${missing.sorted.mkString(", ")}")
-        StructType(schemaFull.fields.filter(f => columns.contains(f.name)))
-      }
+    val files = Shards.list(path, ".arrows")
+    val schema = project(schemaOfArrows(files.head), columns)
     val fields = schema.fields.map(f => (f.name, f.dataType))
-    val rdd = spark.sparkContext.parallelize(files, files.size).flatMap { f =>
-      val ch = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
+    Shards.read(spark, files, schema) { f =>
       val alloc = new RootAllocator()
-      val reader = new ArrowStreamReader(ch, alloc, CommonsCompressionFactory.INSTANCE)
-      var closed = false
-      def closeNow(): Unit = if (!closed) { closed = true; reader.close(); alloc.close() }
-      Option(org.apache.spark.TaskContext.get())
-        .foreach(_.addTaskCompletionListener[Unit](_ => closeNow()))
-      new Iterator[Row] {
-        private var buf: Iterator[Row] = Iterator.empty
-        private var done = false
-        private def advance(): Unit =
-          while (!buf.hasNext && !done) {
-            val loaded =
-              try reader.loadNextBatch()
-              catch { case e: Throwable => closeNow(); throw e }
-            if (loaded) {
-              val root = reader.getVectorSchemaRoot
-              val ex = fields.map { case (n, dt) => extractor(root.getVector(n), dt) }
-              // materialized before the next loadNextBatch reuses buffers
-              buf = (0 until root.getRowCount).map { i =>
-                Row.fromSeq(ex.toIndexedSeq.map(_(i)))
-              }.iterator
-            } else { done = true; closeNow() }
-          }
-        def hasNext: Boolean = { advance(); buf.hasNext }
-        def next(): Row = { advance(); buf.next() }
+      val reader = new ArrowStreamReader(FileChannel.open(Paths.get(f), StandardOpenOption.READ),
+        alloc, CommonsCompressionFactory.INSTANCE)
+      Shards.stream(() => { reader.close(); alloc.close() }) {
+        Iterator.continually(reader.loadNextBatch()).takeWhile(identity)
+          .flatMap(_ => batchRows(reader.getVectorSchemaRoot, fields))
       }
     }
-    spark.createDataFrame(rdd, schema)
   }
 }

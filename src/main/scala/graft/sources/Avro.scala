@@ -124,7 +124,7 @@ object Avro {
     * schema — needed to tell timestamp-micros from timestamp-millis and to
     * carry the decimal scale; unions descend into their non-null branch.
     */
-  private def toSpark(v: Any, dt: DataType, schema: Schema): Any =
+  private[sources] def toSpark(v: Any, dt: DataType, schema: Schema): Any =
     if (v == null) null
     else {
       val s = if (schema.getType == Schema.Type.UNION)
@@ -203,17 +203,11 @@ object Avro {
 
   // ---- read ----------------------------------------------------------------
 
-  private def listAvro(path: String): Seq[String] = {
-    val files = graft.listFiles(path, ".avro")
-    require(files.nonEmpty, s"no .avro files under $path")
-    files
-  }
-
   /** Top-level record schema of the container at `path` (first file's
     * header), as a Spark schema — one driver-side header read, no data scan.
     */
   def schemaOf(path: String): StructType = {
-    val f = listAvro(path).head
+    val f = Shards.list(path, ".avro").head
     val r = new DataFileReader[GenericRecord](
       new SeekableFileInput(new java.io.File(f)), new GenericDatumReader[GenericRecord]())
     try structOf(r.getSchema) finally r.close()
@@ -237,11 +231,10 @@ object Avro {
       java.util.List.of(fields.toSeq: _*))
   }
 
-  /** Splittable read: every file chunks into `splitBytes` byte ranges and
-    * each task syncs to the first block past its range start and reads
-    * until past its end — the Avro container's own split contract, so one
-    * big file fans out across the cluster. `path` must be executor-visible
-    * (local/NFS; HDFS would swap in FileSystem streams at this seam).
+  /** Splittable read on the [[Shards]] read path: every file chunks into
+    * `splitBytes` byte ranges and each task syncs to the first block past
+    * its range start and reads until past its end — the Avro container's own
+    * split contract, so one big file fans out across the cluster.
     *
     * Tasks STREAM their range — one record in flight, the file handle
     * closed on exhaustion or task completion (never buffered: a 32 MB
@@ -252,7 +245,7 @@ object Avro {
   def read(spark: SparkSession, path: String,
       splitBytes: Long = 32L * 1024 * 1024,
       columns: Seq[String] = Nil): DataFrame = {
-    val files = listAvro(path)
+    val files = Shards.list(path, ".avro")
     val head = new DataFileReader[GenericRecord](
       new SeekableFileInput(new java.io.File(files.head)), new GenericDatumReader[GenericRecord]())
     val (writerJson, readerJson) =
@@ -262,12 +255,12 @@ object Avro {
         (w.toString, r.toString)
       } finally head.close()
     val schema = structOf(new Schema.Parser().parse(readerJson))
-    val ranges = files.flatMap { f =>
+    val ranges = Shards.plan(spark, files) { f =>
       val len = new java.io.File(f).length()
       (0L until math.max(len, 1L) by splitBytes).map(off => (f, off, math.min(splitBytes, len - off)))
     }
     val fields = schema.fields.map(f => (f.name, f.dataType))
-    val rdd = spark.sparkContext.parallelize(ranges, ranges.size).flatMap { case (f, off, len) =>
+    Shards.read(spark, ranges, schema) { case (f, off, len) =>
       // two Parser instances: both schemas carry the same record name, and
       // one parser refuses to define it twice
       val writerSchema = new Schema.Parser().parse(writerJson)
@@ -276,39 +269,19 @@ object Avro {
         else new Schema.Parser().parse(readerJson)
       val fieldSchemas = fields.map { case (n, _) => readerSchema.getField(n).schema() }
       val in = new SeekableFileInput(new java.io.File(f))
-      var reader: DataFileReader[GenericRecord] = null
-      try {
-        reader = new DataFileReader[GenericRecord](in,
+      Shards.stream(in) {
+        val reader = new DataFileReader[GenericRecord](in,
           new GenericDatumReader[GenericRecord](writerSchema, readerSchema))
         reader.sync(off)
-      } catch { case e: Throwable =>
-        if (reader != null) reader.close() else in.close()
-        throw e
-      }
-      new Iterator[Row] {
-        private var closed = false
-        private def closeNow(): Unit = if (!closed) { closed = true; reader.close() }
-        // a downstream limit() can drop the iterator before exhaustion —
-        // the task-completion hook still releases the handle
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeNow()))
-        override def hasNext: Boolean = {
-          if (closed) return false
-          val more = try reader.hasNext && !reader.pastSync(off + len)
-            catch { case e: Throwable => closeNow(); throw e }
-          if (!more) closeNow()
-          more
-        }
-        override def next(): Row = {
-          val rec = try reader.next()
-            catch { case e: Throwable => closeNow(); throw e }
-          Row.fromSeq(fields.toIndexedSeq.zipWithIndex.map { case ((n, dt), i) =>
-            toSpark(rec.get(n), dt, fieldSchemas(i))
-          })
-        }
+        Iterator.continually(()).takeWhile(_ => reader.hasNext && !reader.pastSync(off + len))
+          .map { _ =>
+            val rec = reader.next()
+            Row.fromSeq(fields.toIndexedSeq.zipWithIndex.map { case ((n, dt), i) =>
+              toSpark(rec.get(n), dt, fieldSchemas(i))
+            })
+          }
       }
     }
-    spark.createDataFrame(rdd, schema)
   }
 
   // ---- write ---------------------------------------------------------------

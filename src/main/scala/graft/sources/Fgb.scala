@@ -4,7 +4,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,9 +15,8 @@ import graft.geom._
   * schema, optional packed Hilbert R-tree, then size-prefixed flatbuffer
   * Features).
   *
-  * Read is distributed (one task per file via Spark's binaryFile source,
-  * like [[Gpkg]]); the optional spatial index is skipped by its computed
-  * size. Write is the driver-side single-file export path (bounded by
+  * Read is distributed (feature byte ranges on the [[Shards]] read path);
+  * the optional spatial index is skipped by its computed size. Write is the driver-side single-file export path (bounded by
   * `maxRows`, like [[Shapefile.write]]) and emits no index — readers treat
   * `index_node_size = 0` as unindexed.
   */
@@ -76,7 +74,7 @@ object Fgb {
     (name, geomType, cols.toSeq, count, nodeSize)
   }
 
-  private def geomOf(t: Flatbuf.FbTable, headerType: Int): Geom = {
+  private[sources] def geomOf(t: Flatbuf.FbTable, headerType: Int): Geom = {
     val gt = { val own = t.getByte(6) & 0xff; if (own != 0) own else headerType }
     val xy = t.doubleVector(1)
     val ends = t.intVector(0)
@@ -114,7 +112,7 @@ object Fgb {
     * (tagged, length-prefixed), so skipped values advance the cursor without
     * allocating strings/blobs — the projection lever for wide tables.
     */
-  private def parseProps(bb: ByteBuffer, at: Int, len: Int, cols: Seq[ColSpec],
+  private[sources] def parseProps(bb: ByteBuffer, at: Int, len: Int, cols: Seq[ColSpec],
       keep: Array[Int], nOut: Int): Array[Any] = {
     val out = new Array[Any](nOut)
     var p = at
@@ -158,7 +156,7 @@ object Fgb {
     out
   }
 
-  /** Projection plumbing shared by [[read]]/[[readSplit]]: the projected
+  /** Projection plumbing of [[read]]: the projected
     * Spark schema (file column order, geometry last when kept), the
     * file-column → output-slot map for [[parseProps]], and whether the
     * geometry needs decoding at all (skipping it skips the whole
@@ -196,50 +194,54 @@ object Fgb {
       cols.map(c => StructField(c.name, sparkType(c.ct))) :+ StructField("geometry", BinaryType)))
   }
 
-  /** Reads every `.fgb` under `path` — one task per file, header parsed once
-    * on the driver for the schema, features decoded executor-side.
-    * `columns` (optional) projects the decode: unrequested properties are
-    * cursor-skipped in the tagged property stream (no allocation) and an
-    * unrequested geometry skips the flatbuffer walk + WKB encode entirely.
+  /** The magic, size and header flatbuffer of one fgb file (two positional
+    * reads; features untouched), ready for [[parseHeader]].
+    */
+  private def header(file: String): ByteBuffer = {
+    val size = Flatbuf.le(Shards.readRange(file, 8, 4)).getInt(0)
+    Flatbuf.le(Shards.readRange(file, 0, 12 + size))
+  }
+
+  /** Reads every `.fgb` under `path` as one frame on the [[Shards]] read
+    * path: the first file's header gives the columns and the header
+    * geometry type of every file (a layer's shards share them), each file
+    * splits into byte ranges of `featuresPerSplit` features (found by
+    * walking the size prefixes only), and the ranges decode in parallel —
+    * each size-prefixed Feature flatbuffer is self-contained, so one big fgb
+    * fans out across the cluster. `columns` (optional) projects the decode: unrequested
+    * properties are cursor-skipped in the tagged property stream (no
+    * allocation) and an unrequested geometry skips the flatbuffer walk + WKB
+    * encode entirely. `filterWkt` keeps the features intersecting it.
     */
   def read(spark: SparkSession, path: String, filterWkt: Option[String] = None,
-      columns: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
+      columns: Seq[String] = Nil, featuresPerSplit: Int = 4096): DataFrame = {
     require(filterWkt.isEmpty || columns.isEmpty || columns.contains("geometry"),
       "filterWkt needs the geometry column — add it to columns")
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.fgb").load(path)
-      .select("content").as[Array[Byte]]
-    val head = files.head()
-    val bbHead = Flatbuf.le(head)
-    val (_, _, headCols, _, _) = parseHeader(bbHead)
-    val (schema, keep, nOut, withGeom) = projection(headCols, columns)
-    val enc = RowEncoder.encoderFor(schema)
-    val parsed = files.mapPartitions { it =>
-      it.flatMap { bytes =>
-        val bb = Flatbuf.le(bytes)
-        val (_, geomType, cols, count, nodeSize) = parseHeader(bb)
-        val headerSize = bb.getInt(8)
-        var p = 12 + headerSize + indexSize(count, nodeSize).toInt
+    val files = Shards.list(path, ".fgb")
+    val (_, geomType, cols, _, _) = parseHeader(header(files.head))
+    val (schema, keep, nOut, withGeom) = projection(cols, columns)
+    val ranges = Shards.plan(spark, files)(featureRanges(_, featuresPerSplit))
+    val parsed = Shards.read(spark, ranges, schema, 2 * spark.sparkContext.defaultParallelism) {
+      case (f, off, len) =>
+        val buf = Shards.readRange(f, off, len)
+        val bb = Flatbuf.le(buf)
         val rows = ArrayBuffer[Row]()
-        while (p + 4 <= bytes.length) {
+        var p = 0
+        while (p + 4 <= buf.length) {
           val featSize = bb.getInt(p)
           val feat = new Flatbuf.FbTable(bb, p + 4 + bb.getInt(p + 4))
           val props = feat.byteVectorPos(1) match {
-            case Some((at, len)) => parseProps(bb, at, len, cols, keep, nOut)
+            case Some((at, l)) => parseProps(bb, at, l, cols, keep, nOut)
             case None => new Array[Any](nOut)
           }
-          val row =
-            if (withGeom) {
-              val geom = feat.table(0).map(g => WKB.write(geomOf(g, geomType))).orNull
-              Row.fromSeq(props.toIndexedSeq :+ geom)
-            } else Row.fromSeq(props.toIndexedSeq)
-          rows += row
+          rows += (if (withGeom) {
+            val geom = feat.table(0).map(g => WKB.write(geomOf(g, geomType))).orNull
+            Row.fromSeq(props.toIndexedSeq :+ geom)
+          } else Row.fromSeq(props.toIndexedSeq))
           p += 4 + featSize
         }
         rows.iterator
-      }
-    }(enc)
+    }
     filterWkt match {
       case Some(wkt) =>
         import graft.functions.GeoFunctions._
@@ -248,96 +250,38 @@ object Fgb {
     }
   }
 
-  /** Feature-frame byte ranges of one fgb file, `featuresPerSplit` features
-    * per range — found by walking the size prefixes only (seek past each
-    * feature body, never read it).
+  /** The byte ranges of one fgb file's feature frames, `featuresPerSplit`
+    * features per range — found by walking the size prefixes only (seek
+    * past each feature body, never read it).
     */
-  private[sources] def featureRanges(raf: java.io.RandomAccessFile,
-      featuresPerSplit: Int): Seq[(Long, Long)] = {
-    def readIntLE(): Int = {
-      val b = new Array[Byte](4)
-      raf.readFully(b)
-      (b(0) & 0xff) | ((b(1) & 0xff) << 8) | ((b(2) & 0xff) << 16) | ((b(3) & 0xff) << 24)
-    }
-    raf.seek(8)
-    val headerSize = readIntLE()
-    // header needed for the index-skip arithmetic
-    val hdr = new Array[Byte](headerSize)
-    raf.readFully(hdr)
-    val full = new Array[Byte](12 + headerSize)
-    System.arraycopy(hdr, 0, full, 12, headerSize)
-    val bb = Flatbuf.le(full)
-    val root = new Flatbuf.FbTable(bb, 12 + bb.getInt(12))
-    val count = root.getLong(8)
-    val nodeSize = root.getShort(9, 16) & 0xffff
-    var p = 12L + headerSize + indexSize(count, nodeSize)
-    val len = raf.length()
-    val out = ArrayBuffer[(Long, Long)]()
-    var chunkStart = p
-    var inChunk = 0
-    while (p + 4 <= len) {
-      raf.seek(p)
-      val featSize = readIntLE()
-      p += 4 + featSize
-      inChunk += 1
-      if (inChunk >= featuresPerSplit) {
-        out += ((chunkStart, p - chunkStart))
-        chunkStart = p
-        inChunk = 0
+  private[sources] def featureRanges(file: String,
+      featuresPerSplit: Int): Seq[(String, Long, Int)] = {
+    val hdr = header(file)
+    val (_, _, _, count, nodeSize) = parseHeader(hdr)
+    val raf = new java.io.RandomAccessFile(file, "r")
+    try {
+      val len = raf.length()
+      var p = hdr.capacity + indexSize(count, nodeSize)
+      val out = ArrayBuffer[(String, Long, Int)]()
+      var chunkStart = p
+      var inChunk = 0
+      while (p + 4 <= len) {
+        raf.seek(p)
+        p += 4 + Integer.reverseBytes(raf.readInt())
+        inChunk += 1
+        if (inChunk >= featuresPerSplit) {
+          out += ((file, chunkStart, (p - chunkStart).toInt))
+          chunkStart = p
+          inChunk = 0
+        }
       }
-    }
-    if (inChunk > 0) out += ((chunkStart, p - chunkStart))
-    out.toSeq
+      if (inChunk > 0) out += ((file, chunkStart, (p - chunkStart).toInt))
+      out.toSeq
+    } finally raf.close()
   }
 
-  /** Splittable read: feature ranges listed with size-prefix-only IO, then
-    * decoded in parallel ranged reads (each size-prefixed Feature flatbuffer
-    * is self-contained) — one big fgb fans out across the cluster. `path`
-    * must be executor-visible (local/NFS; HDFS would swap in ranged
-    * FileSystem reads at this seam).
-    */
-  def readSplit(spark: SparkSession, path: String, featuresPerSplit: Int = 4096,
-      columns: Seq[String] = Nil): DataFrame = {
-    val files = graft.listFiles(path, ".fgb")
-    require(files.nonEmpty, s"no .fgb files under $path")
-    val headBytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(files.head))
-    val bbHead = Flatbuf.le(headBytes)
-    val (_, geomType, cols, _, _) = parseHeader(bbHead)
-    val (schema, keep, nOut, withGeom) = projection(cols, columns)
-    val ranges = files.flatMap { f =>
-      val raf = new java.io.RandomAccessFile(f, "r")
-      try featureRanges(raf, featuresPerSplit).map { case (off, len) => (f, off, len) }
-      finally raf.close()
-    }
-    val rdd = spark.sparkContext
-      .parallelize(ranges, math.max(1, math.min(ranges.size, spark.sparkContext.defaultParallelism * 2)))
-      .flatMap { case (f, off, len) =>
-        val raf = new java.io.RandomAccessFile(f, "r")
-        try {
-          val buf = new Array[Byte](len.toInt)
-          raf.seek(off)
-          raf.readFully(buf)
-          val bb = Flatbuf.le(buf)
-          val rows = ArrayBuffer[Row]()
-          var p = 0
-          while (p + 4 <= buf.length) {
-            val featSize = bb.getInt(p)
-            val feat = new Flatbuf.FbTable(bb, p + 4 + bb.getInt(p + 4))
-            val props = feat.byteVectorPos(1) match {
-              case Some((at, l)) => parseProps(bb, at, l, cols, keep, nOut)
-              case None => new Array[Any](nOut)
-            }
-            rows += (if (withGeom) {
-              val geom = feat.table(0).map(g => WKB.write(geomOf(g, geomType))).orNull
-              Row.fromSeq(props.toIndexedSeq :+ geom)
-            } else Row.fromSeq(props.toIndexedSeq))
-            p += 4 + featSize
-          }
-          rows.iterator
-        } finally raf.close()
-      }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** The earlier name of [[read]], kept for its callers. */
+  def readSplit(spark: SparkSession, path: String): DataFrame = read(spark, path)
 
   // ---- writer --------------------------------------------------------------
 
@@ -479,7 +423,7 @@ object Fgb {
   }
 
   /** Distributed write: one standalone `.fgb` per partition under `dir` in
-    * the [[Shards]] layout; [[readSplit]] reads the directory back as one
+    * the [[Shards]] layout; [[read]] reads the directory back as one
     * frame.
     */
   def writeSharded(df: DataFrame, dir: String, geometryCol: String = "geometry",

@@ -198,43 +198,32 @@ object GeoSources {
       filterWkt: Option[String] = None): DataFrame = {
     val (path, layer) = splitLayer(path0)
     val p = path.toLowerCase
+    // the readers that take the filter themselves; every other reader's
+    // frame gets it applied after parsing
+    val filtering = Seq(".csv", ".geojsonl", ".geojsonseq", ".ndjson", ".geojson", ".json",
+      ".parquet", ".fgb").exists(p.endsWith)
     val df =
       if (p.startsWith("postgresql://")) Postgres.read(spark, path)
       else if (p.endsWith(".osm.pbf")) OsmPbf.read(spark, path)
       else if (p.endsWith(".csv")) GeoCSV.read(spark, path, filterWkt = filterWkt)
       else if (p.endsWith(".geojsonl") || p.endsWith(".geojsonseq") || p.endsWith(".ndjson"))
         GeoJSONSeq.read(spark, path, filterWkt = filterWkt)
-      else if (p.endsWith(".jsonl")) {
-        val j = Jsonl.read(spark, path)
-        if (j.columns.contains("geometry")) applyFilter(j, "geometry", filterWkt) else j
-      }
+      else if (p.endsWith(".jsonl")) Jsonl.read(spark, path)
       else if (p.endsWith(".geojson") || p.endsWith(".json"))
         GeoJSON.read(spark, path, filterWkt = filterWkt)
       else if (p.endsWith(".parquet")) GeoParquet.read(spark, path, filterWkt = filterWkt)
       // ORC rides Spark's native reader — same WKB binary geometry contract
       // as parquet (splittable, predicate pushdown, column pruning)
-      else if (p.endsWith(".orc")) {
-        val o = spark.read.orc(path)
-        if (o.columns.contains("geometry")) applyFilter(o, "geometry", filterWkt) else o
-      }
+      else if (p.endsWith(".orc")) spark.read.orc(path)
       // avro container files: own splittable driver (no spark-avro module
       // in the bundled jars) — WKB binary geometry as avro bytes
-      else if (p.endsWith(".avro")) {
-        val a = Avro.read(spark, path)
-        if (a.columns.contains("geometry")) applyFilter(a, "geometry", filterWkt) else a
-      }
+      else if (p.endsWith(".avro")) Avro.read(spark, path)
       // arrow IPC files: own footer-indexed splittable driver (no arrow
       // DataSource in the bundled jars) — WKB binary geometry convention;
       // .arrows is the footerless STREAMING framing (one task per file)
-      else if (p.endsWith(".arrows")) {
-        val a = ArrowIpc.readArrows(spark, path)
-        if (a.columns.contains("geometry")) applyFilter(a, "geometry", filterWkt) else a
-      }
-      else if (p.endsWith(".arrow")) {
-        val a = ArrowIpc.read(spark, path)
-        if (a.columns.contains("geometry")) applyFilter(a, "geometry", filterWkt) else a
-      }
-      else if (p.endsWith(".shp")) Shapefile.readSplit(spark, path)
+      else if (p.endsWith(".arrows")) ArrowIpc.readArrows(spark, path)
+      else if (p.endsWith(".arrow")) ArrowIpc.read(spark, path)
+      else if (p.endsWith(".shp")) Shapefile.read(spark, path)
       else if (p.endsWith(".gpkg")) Gpkg.read(spark, path, layer = layer)
       // plain sqlite databases: the generic table driver (`file.db:table`)
       else if (p.endsWith(".sqlite") || p.endsWith(".sqlite3") || p.endsWith(".db"))
@@ -243,15 +232,8 @@ object GeoSources {
       else if (p.endsWith(".xlsx")) parseWktCol(Xlsx.read(spark, path, sheet = layer))
       else if (p.endsWith(".ods")) parseWktCol(Xlsx.readOds(spark, path, sheet = layer))
       else throw new IllegalArgumentException(s"no driver for '$path0'")
-    // formats whose readers take no filter get it applied post-parse
-    filterWkt match {
-      case Some(w) if df.columns.contains("geometry") &&
-          (p.endsWith(".shp") || p.endsWith(".gpkg") ||
-            p.endsWith(".xlsx") || p.endsWith(".ods") ||
-            p.startsWith("postgresql://")) =>
-        applyFilter(df, "geometry", Some(w))
-      case _ => df
-    }
+    if (filtering || !df.columns.contains("geometry")) df
+    else applyFilter(df, "geometry", filterWkt)
   }
 
   // spreadsheets carry geometry as WKT text (erde/io/xls.py semantics)

@@ -1237,10 +1237,9 @@ object ManifestTable {
 
   // -------------------------------------------------------- footer stats
 
-  /** Footer-only stats for every parquet file under `dataRel`, as a
-    * distributed metadata job — one task per file batch, no row decode.
-    * Columns keep stats when every row group recorded them and the physical
-    * type maps to long/double/string; everything else is omitted
+  /** Footer-only stats for every parquet file under `dataRel` (no row
+    * decode). Columns keep stats when every row group recorded them and the
+    * physical type maps to long/double/string; everything else is omitted
     * (conservative for pruning).
     */
   private def footerStats(spark: SparkSession, rootP: JPath,
@@ -1252,20 +1251,11 @@ object ManifestTable {
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .map(_.toAbsolutePath.toString).toSeq.sorted
       finally s.close()
-    if (files.isEmpty) return Nil
     val rootStr = rootP.toAbsolutePath.toString
-    // footer reads are metadata-only: for a handful of files a driver loop
-    // is cheaper than launching a Spark job per commit (the ArrowIpc
-    // DistributedCensusThreshold rationale — one job per append adds up in
-    // multi-commit verbs); a 100k-small-files drop still fans out
-    if (files.size <= ArrowIpc.DistributedCensusThreshold)
-      files.map(abs => statsOfFile(abs, rootStr)).sortBy(_.path)
-    else {
-      val parts = math.min(files.size, 32)
-      spark.sparkContext.parallelize(files, parts).map { abs =>
-        statsOfFile(abs, rootStr)
-      }.collect().toSeq.sortBy(_.path)
-    }
+    // footer reads are metadata-only: planned like a file read's splits, in
+    // a driver loop for a handful of files (one job per append would add up
+    // in multi-commit verbs) and as one job for a 100k-small-files drop
+    Shards.plan(spark, files)(abs => Seq(statsOfFile(abs, rootStr))).sortBy(_.path)
   }
 
   private def statsOfFile(abs: String, rootStr: String): FileEntry = {

@@ -4,7 +4,6 @@ import java.util.zip.{Deflater, Inflater}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.types._
 
 /** Pure-Scala `.osm.pbf` source (reference: erde/op/osm.py:8 shells out to
@@ -13,12 +12,9 @@ import org.apache.spark.sql.types._
   * BlobHeader/Blob frames, zlib-compressed PrimitiveBlocks holding a string
   * table and dense-coded elements).
   *
-  * Read is one task per file (Spark binaryFile, like [[Gpkg]]/[[Fgb]]);
-  * blobs decode sequentially inside the task. At cluster scale the natural
-  * split is per-blob byte ranges (each Blob is independently decompressible)
-  * — the osm planet is ~2000 files nowadays split by region, so per-file
-  * parallelism is the common case and per-blob splitting is left for a
-  * ranged-read source.
+  * Read splits every file into per-blob byte ranges (each Blob is
+  * independently decompressible) on the [[Shards]] read path, so one planet
+  * file fans out as well as ~2000 regional extracts do.
   *
   * Output schema: `type` ("n"/"w"/"r"), `id`, `tags map<string,string>`,
   * `lon`/`lat` (nodes; null otherwise), `refs array<long>` (way node refs /
@@ -52,49 +48,6 @@ object OsmPbf {
     while (off < rawSize && !inf.finished()) off += inf.inflate(out, off, rawSize - off)
     inf.end()
     out
-  }
-
-  private def be32(b: Array[Byte], o: Int): Int =
-    ((b(o) & 0xff) << 24) | ((b(o + 1) & 0xff) << 16) | ((b(o + 2) & 0xff) << 8) | (b(o + 3) & 0xff)
-
-  /** Parses every element of one .osm.pbf byte array. */
-  private[sources] def parseFile(bytes: Array[Byte]): Iterator[Row] = {
-    val blocks = ArrayBuffer[Array[Byte]]()
-    var p = 0
-    while (p + 4 <= bytes.length) {
-      val headerLen = be32(bytes, p)
-      val hr = new Pbf.Reader(bytes, p + 4, p + 4 + headerLen)
-      var blobType = ""
-      var dataSize = 0
-      while (hr.hasMore) {
-        val (f, w) = hr.tag()
-        f match {
-          case 1 => val (s, l) = hr.lenDelimited(); blobType = new String(bytes, s, l, "UTF-8")
-          case 3 => dataSize = hr.varint().toInt
-          case _ => hr.skip(w)
-        }
-      }
-      val blobStart = p + 4 + headerLen
-      if (blobType == "OSMData") {
-        val br = new Pbf.Reader(bytes, blobStart, blobStart + dataSize)
-        var raw: Array[Byte] = null
-        var rawSize = -1
-        var zlib: (Int, Int) = null
-        while (br.hasMore) {
-          val (f, w) = br.tag()
-          f match {
-            case 1 => val (s, l) = br.lenDelimited(); raw = br.sliceBytes(s, l)
-            case 2 => rawSize = br.varint().toInt
-            case 3 => zlib = br.lenDelimited()
-            case _ => br.skip(w)
-          }
-        }
-        if (raw != null) blocks += raw
-        else if (zlib != null) blocks += inflate(br.sliceBytes(zlib._1, zlib._2), rawSize)
-      }
-      p = blobStart + dataSize
-    }
-    blocks.iterator.flatMap(parsePrimitiveBlock)
   }
 
   private def parsePrimitiveBlock(block: Array[Byte]): Iterator[Row] = {
@@ -235,14 +188,17 @@ object OsmPbf {
     }
   }
 
-  /** Reads every `.pbf`/`.osm.pbf` under `path` into the element frame. */
+  /** Reads every `.pbf`/`.osm.pbf` under `path` into the element frame on
+    * the [[Shards]] read path: each file's OSMData blob ranges are listed
+    * with header-only IO, then decoded in parallel — each zlib Blob is
+    * independently decompressible, so one big file fans out across the
+    * cluster instead of pinning one task.
+    */
   def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.pbf").load(path)
-      .select("content").as[Array[Byte]]
-    val enc = RowEncoder.encoderFor(schema)
-    files.mapPartitions(it => it.flatMap(parseFile))(enc)
+    val ranges = Shards.plan(spark, Shards.list(path, ".pbf"))(blobRanges)
+    Shards.read(spark, ranges, schema, 2 * spark.sparkContext.defaultParallelism) {
+      case (f, off, len) => parseBlobBytes(Shards.readRange(f, off, len))
+    }
   }
 
   // ---- writer (driver-side, capped — fixture/export path) ------------------
@@ -277,7 +233,7 @@ object OsmPbf {
     * — [[writeSharded]] is the scale path. Elements are chunked into
     * PrimitiveBlocks of `elementsPerBlock` (each with its own string table)
     * — real planet files carry thousands of such blocks, which is what makes
-    * [[readSplit]]'s per-blob ranges work.
+    * [[read]]'s per-blob ranges work.
     */
   def write(df: DataFrame, path: String, maxRows: Int = 1000000,
       elementsPerBlock: Int = 8000): Unit = {
@@ -289,7 +245,7 @@ object OsmPbf {
 
   /** Distributed write: one standalone `.osm.pbf` per partition under `dir`
     * in the [[Shards]] layout — the regional-extract shape, nodes sorted per
-    * file; [[read]]/[[readSplit]] read the directory back as one frame.
+    * file; [[read]] reads the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, elementsPerBlock: Int = 8000): Unit = {
     val idx = df.schema.fieldNames.zipWithIndex.toMap
@@ -407,39 +363,42 @@ object OsmPbf {
 
   // ---- splittable read (per-blob byte ranges) ------------------------------
 
-  /** OSMData blob byte ranges of one file: (offset, length) pairs, found by
+  /** OSMData blob byte ranges of one file: (file, offset, length), found by
     * walking the frame headers — reads only the 4-byte lengths and the small
     * BlobHeaders, never the data.
     */
-  private[sources] def blobRanges(raf: java.io.RandomAccessFile): Seq[(Long, Int)] = {
-    val out = ArrayBuffer[(Long, Int)]()
-    val len = raf.length()
-    var p = 0L
-    val hdrBuf = new Array[Byte](64)
-    while (p + 4 <= len) {
-      raf.seek(p)
-      val headerLen = raf.readInt()
-      val hb = if (headerLen <= hdrBuf.length) hdrBuf else new Array[Byte](headerLen)
-      raf.readFully(hb, 0, headerLen)
-      val hr = new Pbf.Reader(hb, 0, headerLen)
-      var blobType = ""
-      var dataSize = 0
-      while (hr.hasMore) {
-        val (f, w) = hr.tag()
-        f match {
-          case 1 => val (s, l) = hr.lenDelimited(); blobType = new String(hb, s, l, "UTF-8")
-          case 3 => dataSize = hr.varint().toInt
-          case _ => hr.skip(w)
+  private[sources] def blobRanges(file: String): Seq[(String, Long, Int)] = {
+    val raf = new java.io.RandomAccessFile(file, "r")
+    try {
+      val out = ArrayBuffer[(String, Long, Int)]()
+      val len = raf.length()
+      var p = 0L
+      val hdrBuf = new Array[Byte](64)
+      while (p + 4 <= len) {
+        raf.seek(p)
+        val headerLen = raf.readInt()
+        val hb = if (headerLen <= hdrBuf.length) hdrBuf else new Array[Byte](headerLen)
+        raf.readFully(hb, 0, headerLen)
+        val hr = new Pbf.Reader(hb, 0, headerLen)
+        var blobType = ""
+        var dataSize = 0
+        while (hr.hasMore) {
+          val (f, w) = hr.tag()
+          f match {
+            case 1 => val (s, l) = hr.lenDelimited(); blobType = new String(hb, s, l, "UTF-8")
+            case 3 => dataSize = hr.varint().toInt
+            case _ => hr.skip(w)
+          }
         }
+        if (blobType == "OSMData") out += ((file, p + 4 + headerLen, dataSize))
+        p += 4 + headerLen + dataSize
       }
-      if (blobType == "OSMData") out += ((p + 4 + headerLen, dataSize))
-      p += 4 + headerLen + dataSize
-    }
-    out.toSeq
+      out.toSeq
+    } finally raf.close()
   }
 
   /** Decodes one Blob message's bytes into element rows. */
-  private def parseBlobBytes(bytes: Array[Byte]): Iterator[Row] = {
+  private[sources] def parseBlobBytes(bytes: Array[Byte]): Iterator[Row] = {
     val br = new Pbf.Reader(bytes, 0, bytes.length)
     var raw: Array[Byte] = null
     var rawSize = -1
@@ -458,33 +417,5 @@ object OsmPbf {
       else if (zlib != null) inflate(br.sliceBytes(zlib._1, zlib._2), rawSize)
       else return Iterator.empty
     parsePrimitiveBlock(block)
-  }
-
-  /** Splittable read: blob byte ranges are listed with header-only IO, then
-    * decoded in parallel — each zlib Blob is independently decompressible, so
-    * one big file fans out across the cluster instead of pinning one task.
-    * `path` must be visible to executors (local/NFS; an HDFS variant would
-    * use FileSystem ranged reads at the same seam).
-    */
-  def readSplit(spark: SparkSession, path: String, rangesPerPartition: Int = 4): DataFrame = {
-    val files = graft.listFiles(path, ".pbf")
-    val ranges = files.flatMap { f =>
-      val raf = new java.io.RandomAccessFile(f, "r")
-      try blobRanges(raf).map { case (off, len) => (f, off, len) } finally raf.close()
-    }
-    val parallelism = math.max(1, math.min(ranges.size / math.max(1, rangesPerPartition),
-      spark.sparkContext.defaultParallelism * 2))
-    val rdd = spark.sparkContext
-      .parallelize(ranges, math.max(1, parallelism))
-      .flatMap { case (f, off, len) =>
-        val raf = new java.io.RandomAccessFile(f, "r")
-        try {
-          val buf = new Array[Byte](len)
-          raf.seek(off)
-          raf.readFully(buf)
-          parseBlobBytes(buf)
-        } finally raf.close()
-      }
-    spark.createDataFrame(rdd, schema)
   }
 }

@@ -2,11 +2,11 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.types._
 
 import graft.geom._
@@ -17,22 +17,23 @@ import graft.geom._
   * zero-egress image has no GDAL, and a self-contained parser runs on every
   * executor).
   *
-  * Layout: `spark.read.format("binaryFile")` lists `*.shp`, each file parses
-  * in one task (shapefiles cap at 2 GB by spec; many files parallelize
-  * naturally), and the sibling `.dbf` supplies one attribute row per record.
+  * Layout: [[read]] lists `*.shp`, splits each file into record byte ranges
+  * by its `.shx` index, and joins each record to the same-numbered record of
+  * the sibling `.dbf`.
   * Shape types 1/3/5/8 (+ their M/Z variants' 2D prefix) are supported.
   */
 object Shapefile {
 
   // ---- .shp ---------------------------------------------------------------
 
-  private def parseShpRecords(bytes: Array[Byte]): Seq[(Int, Geom)] = {
+  /** (record number, shape) of every non-null record in `bytes`, which
+    * holds whole records (their 8-byte headers included).
+    */
+  private[sources] def parseRecords(bytes: Array[Byte]): Seq[(Int, Geom)] = {
     val buf = ByteBuffer.wrap(bytes)
-    require(buf.order(ByteOrder.BIG_ENDIAN).getInt(0) == 9994, "not a shapefile (.shp magic)")
-    val fileWords = buf.getInt(24) // length in 16-bit words
-    var pos = 100
+    var pos = 0
     val out = ArrayBuffer[(Int, Geom)]()
-    while (pos + 8 <= fileWords * 2) {
+    while (pos + 8 <= bytes.length) {
       buf.order(ByteOrder.BIG_ENDIAN)
       val recNo = buf.getInt(pos)
       val contentWords = buf.getInt(pos + 4)
@@ -74,212 +75,113 @@ object Shapefile {
     out.toSeq
   }
 
+  /** The record byte ranges of one `.shp`, `recordsPerSplit` records each,
+    * from its `.shx` index (8 bytes per record); without an index the whole
+    * record section is one range.
+    */
+  private[sources] def recordRanges(shp: String, recordsPerSplit: Int): Seq[(String, Long, Int)] = {
+    val header = ByteBuffer.wrap(Shards.readRange(shp, 0, 100))
+    require(header.getInt(0) == 9994, s"$shp is not a shapefile (.shp magic)")
+    val shx = Paths.get(shp.stripSuffix(".shp") + ".shx")
+    if (!Files.isRegularFile(shx)) {
+      val len = header.getInt(24) * 2 - 100 // file length in 16-bit words
+      if (len > 0) Seq((shp, 100L, len)) else Nil
+    } else {
+      val idx = ByteBuffer.wrap(Files.readAllBytes(shx)).order(ByteOrder.BIG_ENDIAN)
+      val nRecords = (idx.capacity - 100) / 8
+      def offset(rec: Int): Long = idx.getInt(100 + rec * 8).toLong * 2
+      def end(rec: Int): Long = offset(rec) + idx.getInt(100 + rec * 8 + 4).toLong * 2 + 8
+      (0 until nRecords by recordsPerSplit).map { first =>
+        val last = math.min(first + recordsPerSplit, nRecords) - 1
+        (shp, offset(first), (end(last) - offset(first)).toInt)
+      }
+    }
+  }
+
   // ---- .dbf ---------------------------------------------------------------
 
-  private final case class DbfField(name: String, typ: Char, length: Int)
+  private[sources] final case class DbfField(name: String, typ: Char, length: Int)
 
-  private def parseDbf(bytes: Array[Byte]): (Seq[DbfField], Seq[Seq[String]]) = {
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val numRecords = buf.getInt(4)
-    val headerSize = buf.getShort(8) & 0xffff
-    val recordSize = buf.getShort(10) & 0xffff
-    val fields = ArrayBuffer[DbfField]()
-    var off = 32
-    while (off < headerSize - 1 && bytes(off) != 0x0d) {
-      val name = new String(bytes, off, 11, StandardCharsets.US_ASCII).takeWhile(_ != 0).trim
-      val typ = bytes(off + 11).toChar
-      val len = bytes(off + 16) & 0xff
-      fields += DbfField(name, typ, len)
-      off += 32
+  private[sources] final case class Dbf(file: String, fields: Seq[DbfField], numRecords: Int,
+      headerSize: Int, recordSize: Int)
+
+  /** The header of the `.dbf` beside `shp`, when there is one. */
+  private[sources] def dbfHeader(shp: String): Option[Dbf] = {
+    val file = shp.stripSuffix(".shp") + ".dbf"
+    if (!Files.isRegularFile(Paths.get(file))) None
+    else {
+      val head = ByteBuffer.wrap(Shards.readRange(file, 0, 12)).order(ByteOrder.LITTLE_ENDIAN)
+      val headerSize = head.getShort(8) & 0xffff
+      val bytes = Shards.readRange(file, 0, headerSize)
+      val fields = ArrayBuffer[DbfField]()
+      var off = 32
+      while (off < headerSize - 1 && bytes(off) != 0x0d) {
+        val name = new String(bytes, off, 11, StandardCharsets.US_ASCII).takeWhile(_ != 0).trim
+        fields += DbfField(name, bytes(off + 11).toChar, bytes(off + 16) & 0xff)
+        off += 32
+      }
+      Some(Dbf(file, fields.toSeq, head.getInt(4), headerSize, head.getShort(10) & 0xffff))
     }
-    val rows = ArrayBuffer[Seq[String]]()
-    var r = 0
-    while (r < numRecords) {
-      val base = headerSize + r * recordSize
-      if (bytes(base) != '*') { // '*' = deleted
+  }
+
+  /** Attribute strings of records `first`..`last` (the `.shp` record
+    * numbers, 1-based — record n of the `.shp` is record n of the `.dbf`),
+    * read as one range; deleted records are left out.
+    */
+  private[sources] def dbfRecords(dbf: Dbf, first: Int, last: Int): Map[Int, Seq[String]] = {
+    val from = math.max(first, 1)
+    val to = math.min(last, dbf.numRecords)
+    if (from > to) return Map.empty
+    val bytes = Shards.readRange(dbf.file,
+      dbf.headerSize + (from - 1).toLong * dbf.recordSize, (to - from + 1) * dbf.recordSize)
+    (from to to).flatMap { rec =>
+      val base = (rec - from) * dbf.recordSize
+      if (bytes(base) == '*') None // deleted
+      else {
         var fo = base + 1
-        val vals = fields.map { f =>
+        Some(rec -> dbf.fields.map { f =>
           val v = new String(bytes, fo, f.length, StandardCharsets.US_ASCII).trim
           fo += f.length
           v
-        }
-        rows += vals.toSeq
-      }
-      r += 1
-    }
-    (fields.toSeq, rows.toSeq)
-  }
-
-  /** Reads `*.shp` under `path` (with sibling `.dbf` attributes when present):
-    * columns = dbf fields (N → double, others string) ++ `geometry` WKB.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.shp").load(path)
-      .select("path", "content").as[(String, Array[Byte])]
-
-    // field schema from the first file's dbf (consistent layers by convention)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def dbfBytesFor(shpPath: String): Option[Array[Byte]] = {
-      val p = new org.apache.hadoop.fs.Path(shpPath.stripSuffix(".shp") + ".dbf")
-      val fs = p.getFileSystem(conf)
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val arr = new Array[Byte](len)
-          in.readFully(0, arr)
-          Some(arr)
-        } finally in.close()
-      } else None
-    }
-    val firstShp = files.select("path").as[String].head()
-    val fields = dbfBytesFor(firstShp).map(b => parseDbf(b)._1).getOrElse(Nil)
-
-    val schema = StructType(
-      fields.map(f => StructField(f.name,
-        if (f.typ == 'N' || f.typ == 'F') DoubleType else StringType)) :+
-        StructField("geometry", BinaryType))
-    val enc = RowEncoder.encoderFor(schema)
-    val hadoopConfSer = new org.apache.spark.util.SerializableConfiguration(conf)
-    val fieldTypes = fields.map(f => (f.name, f.typ)).toArray
-
-    files.mapPartitions { it =>
-      it.flatMap { case (shpPath, shpBytes) =>
-        val geoms = parseShpRecords(shpBytes)
-        val attrs: Map[Int, Seq[String]] = {
-          val p = new org.apache.hadoop.fs.Path(shpPath.stripSuffix(".shp") + ".dbf")
-          val fs = p.getFileSystem(hadoopConfSer.value)
-          if (fs.exists(p)) {
-            val len = fs.getFileStatus(p).getLen.toInt
-            val arr = new Array[Byte](len)
-            val in = fs.open(p)
-            try in.readFully(0, arr) finally in.close()
-            parseDbf(arr)._2.zipWithIndex.map { case (v, i) => (i + 1, v) }.toMap
-          } else Map.empty
-        }
-        geoms.map { case (recNo, g) =>
-          val vals = attrs.get(recNo) match {
-            case Some(vs) => fieldTypes.zip(vs).map {
-              // dBase marks nulls/overflow with '*' padding; be lenient
-              case ((_, 'N' | 'F'), v) =>
-                v.toDoubleOption.map(java.lang.Double.valueOf).orNull
-              case (_, v) => v
-            }.toSeq
-            case None => fieldTypes.map(_ => null).toSeq
-          }
-          Row.fromSeq(vals :+ WKB.write(g))
-        }
-      }
-    }(enc)
-  }
-
-  /** Record slice parser: `bytes` holds whole records (headers included),
-    * starting at record number `firstRecNo`'s header.
-    */
-  private def parseRecordSlice(bytes: Array[Byte]): Seq[(Int, Geom)] = {
-    // synthesize a minimal header so parseShpRecords' offsets line up
-    val withHeader = new Array[Byte](100 + bytes.length)
-    val hb = ByteBuffer.wrap(withHeader).order(ByteOrder.BIG_ENDIAN)
-    hb.putInt(0, 9994)
-    hb.putInt(24, (100 + bytes.length) / 2)
-    System.arraycopy(bytes, 0, withHeader, 100, bytes.length)
-    parseShpRecords(withHeader)
-  }
-
-  /** Splittable read: the tiny `.shx` index (8 bytes per record) yields
-    * record byte offsets, so one large `.shp` fans out across the cluster as
-    * byte-range splits — each task seeks and parses only its records. The
-    * scale path for the format's 2 GB-max files; attribute join via `.dbf`
-    * record numbers as in [[read]].
-    */
-  def readSplit(spark: SparkSession, path: String, recordsPerSplit: Int = 65536): DataFrame = {
-    import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
-
-    def readFully(p: org.apache.hadoop.fs.Path): Array[Byte] = {
-      val fs = p.getFileSystem(conf)
-      val len = fs.getFileStatus(p).getLen.toInt
-      val arr = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, arr) finally in.close()
-      arr
-    }
-
-    // driver-side: list files, read their small .shx indexes → split plan
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-    val shpFiles = {
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(path))
-      if (st.isDirectory)
-        fs.listStatus(new org.apache.hadoop.fs.Path(path))
-          .map(_.getPath).filter(_.getName.endsWith(".shp"))
-      else Array(st.getPath)
-    }
-    require(shpFiles.nonEmpty, s"no .shp under $path")
-
-    val splits = shpFiles.toSeq.flatMap { shp =>
-      val shx = readFully(new org.apache.hadoop.fs.Path(shp.toString.stripSuffix(".shp") + ".shx"))
-      val nRecords = (shx.length - 100) / 8
-      val idx = ByteBuffer.wrap(shx).order(ByteOrder.BIG_ENDIAN)
-      def offsetBytes(rec: Int): Long = idx.getInt(100 + rec * 8).toLong * 2
-      def lenBytes(rec: Int): Long = idx.getInt(100 + rec * 8 + 4).toLong * 2 + 8
-      (0 until nRecords by recordsPerSplit).map { start =>
-        val end = math.min(start + recordsPerSplit, nRecords) - 1
-        val from = offsetBytes(start)
-        val until = offsetBytes(end) + lenBytes(end)
-        (shp.toString, start + 1, from, until)
-      }
-    }
-
-    val fields = {
-      val first = shpFiles.head.toString.stripSuffix(".shp") + ".dbf"
-      val p = new org.apache.hadoop.fs.Path(first)
-      if (p.getFileSystem(conf).exists(p)) parseDbf(readFully(p))._1 else Nil
-    }
-    val schema = StructType(
-      fields.map(f => StructField(f.name,
-        if (f.typ == 'N' || f.typ == 'F') DoubleType else StringType)) :+
-        StructField("geometry", BinaryType))
-    val enc = RowEncoder.encoderFor(schema)
-    val hadoopConfSer = new org.apache.spark.util.SerializableConfiguration(conf)
-    val fieldTypes = fields.map(f => (f.name, f.typ)).toArray
-
-    val planned = splits.toDF("path", "firstRec", "from", "until")
-      .repartition(math.min(splits.size, spark.sparkContext.defaultParallelism))
-      .as[(String, Int, Long, Long)]
-
-    planned.mapPartitions { it =>
-      val cache = scala.collection.mutable.Map.empty[String, Map[Int, Seq[String]]]
-      it.flatMap { case (shpPath, _, from, until) =>
-        val p = new org.apache.hadoop.fs.Path(shpPath)
-        val fs2 = p.getFileSystem(hadoopConfSer.value)
-        val in = fs2.open(p)
-        val slice = new Array[Byte]((until - from).toInt)
-        try in.readFully(from, slice) finally in.close()
-        val attrs = cache.getOrElseUpdate(shpPath, {
-          val dp = new org.apache.hadoop.fs.Path(shpPath.stripSuffix(".shp") + ".dbf")
-          if (fs2.exists(dp)) {
-            val len = fs2.getFileStatus(dp).getLen.toInt
-            val arr = new Array[Byte](len)
-            val din = fs2.open(dp)
-            try din.readFully(0, arr) finally din.close()
-            parseDbf(arr)._2.zipWithIndex.map { case (v, i) => (i + 1, v) }.toMap
-          } else Map.empty[Int, Seq[String]]
         })
-        parseRecordSlice(slice).map { case (recNo, g) =>
-          val vals = attrs.get(recNo) match {
-            case Some(vs) => fieldTypes.zip(vs).map {
-              case ((_, 'N' | 'F'), v) =>
-                v.toDoubleOption.map(java.lang.Double.valueOf).orNull
-              case (_, v) => v
-            }.toSeq
-            case None => fieldTypes.map(_ => null).toSeq
-          }
-          Row.fromSeq(vals :+ WKB.write(g))
-        }
       }
-    }(enc)
+    }.toMap
+  }
+
+  /** Reads every `.shp` under `path` as one frame on the [[Shards]] read
+    * path, with the sibling `.dbf` attributes when present: columns = the
+    * first file's dbf fields (N/F → double, others string) ++ `geometry`
+    * WKB. A file's `.shx` plans it as byte ranges of `recordsPerSplit`
+    * records, so one large `.shp` (the format caps files at 2 GB) fans out
+    * across the cluster; a file without one is a single split. Each task
+    * reads only its records' bytes of the `.shp` and the `.dbf`.
+    */
+  def read(spark: SparkSession, path: String, recordsPerSplit: Int = 65536): DataFrame = {
+    val files = Shards.list(path, ".shp")
+    val fields = dbfHeader(files.head).fold(Seq.empty[DbfField])(_.fields)
+    val numeric = fields.map(f => f.typ == 'N' || f.typ == 'F')
+    val schema = StructType(fields.zip(numeric).map { case (f, n) =>
+      StructField(f.name, if (n) DoubleType else StringType)
+    } :+ StructField("geometry", BinaryType))
+    val splits = Shards.plan(spark, files)(recordRanges(_, recordsPerSplit))
+    Shards.read(spark, splits, schema) { case (shp, off, len) =>
+      val geoms = parseRecords(Shards.readRange(shp, off, len))
+      val attrs =
+        if (geoms.isEmpty) Map.empty[Int, Seq[String]]
+        else dbfHeader(shp).fold(Map.empty[Int, Seq[String]])(
+          dbfRecords(_, geoms.map(_._1).min, geoms.map(_._1).max))
+      geoms.iterator.map { case (recNo, g) =>
+        val vals = attrs.get(recNo) match {
+          case Some(vs) => numeric.zip(vs).map {
+            // dBase marks nulls/overflow with '*' padding; be lenient
+            case (true, v) => v.toDoubleOption.map(java.lang.Double.valueOf).orNull
+            case (false, v) => v
+          }
+          case None => numeric.map(_ => null)
+        }
+        Row.fromSeq(vals :+ WKB.write(g))
+      }
+    }
   }
 
   // ---- writer (single .shp/.dbf pair; round-trip + interop) ---------------
@@ -300,7 +202,7 @@ object Shapefile {
   /** Distributed write: one standalone `.shp`/`.shx`/`.dbf` triple per
     * partition under `dir` in the [[Shards]] layout (listed by its `.shp`),
     * each inside the format's 2 GB limit as long as partitions are;
-    * [[read]]/[[readSplit]] read the directory back as one frame.
+    * [[read]] reads the directory back as one frame.
     */
   def writeSharded(df: DataFrame, dir: String, geometryCol: String = "geometry"): Unit = {
     val attrCols = df.columns.filterNot(_ == geometryCol)
@@ -379,8 +281,8 @@ object Shapefile {
       System.arraycopy(r, 0, shp.array(), pos + 8, r.length)
       pos += 8 + r.length
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".shp"), shp.array())
-    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".shx"), shx.array())
+    Files.write(Paths.get(base + ".shp"), shp.array())
+    Files.write(Paths.get(base + ".shx"), shx.array())
 
     // dbf: every attribute as C(32) text — lossless for the round-trip path
     val fieldLen = 32
@@ -411,7 +313,7 @@ object Shapefile {
       }
     }
     dbf.put(headerSize + rows.length * recordSize, 0x1a.toByte)
-    java.nio.file.Files.write(java.nio.file.Paths.get(base + ".dbf"), dbf.array())
+    Files.write(Paths.get(base + ".dbf"), dbf.array())
     rows.length.toLong
   }
 }

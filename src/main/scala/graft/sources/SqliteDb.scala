@@ -54,8 +54,8 @@ object SqliteDb {
   /** The bytes of every file under `path` whose name matches `glob` (every
     * file when None), one row per file, after failing loudly on a file past
     * [[maxFileBytes]] (a metadata-only check: content is never scanned) or
-    * on an empty match. Shared with [[Gpkg]]: a GeoPackage is a SQLite page
-    * graph too.
+    * on an empty match. Shared with [[Gpkg]] (a GeoPackage is a SQLite page
+    * graph too) and [[Xlsx]] (a workbook is one zip).
     */
   private[sources] def binaryFiles(spark: SparkSession, path: String,
       glob: Option[String]): Dataset[Array[Byte]] = {

@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * ONE sample file's values (Spark's first-listed — size-descending — file;
   * try_cast applied distributed, so a value that breaks the inferred type
   * in another file nulls out, csv-permissive style even under ANSI).
-  * Whole file per task; many files parallelize.
+  * Whole file per task, loaded through [[SqliteDb.binaryFiles]] (its
+  * single-file size cap and empty-match error); many files parallelize.
   */
 object Xlsx {
 
@@ -204,10 +205,7 @@ object Xlsx {
     */
   def readOds(spark: SparkSession, path: String, sheet: Option[String] = None,
       inferSchema: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.ods").load(path)
-      .select("content").as[Array[Byte]]
+    val files = SqliteDb.binaryFiles(spark, path, Some("*.ods"))
     val headRows = parseOdsRows(files.head(), sheet)
     require(headRows.nonEmpty, "empty ods table")
     val header = headRows.head
@@ -461,10 +459,7 @@ object Xlsx {
     */
   def read(spark: SparkSession, path: String, sheet: Option[String] = None,
       inferSchema: Boolean = true): DataFrame = {
-    import spark.implicits._
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.xlsx").load(path)
-      .select("content").as[Array[Byte]]
+    val files = SqliteDb.binaryFiles(spark, path, Some("*.xlsx"))
 
     val headRows = parseRows(files.head(), sheet)
     require(headRows.nonEmpty, "empty worksheet")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,7 +32,7 @@ class NormalizeTsSpec extends AnyFunSuite with SparkSpec {
   test("TIMESTAMP_NTZ branch: wall-clock fields reinterpreted in the UTC session") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC",
       "sessionConfigs precondition: the NTZ cast is only zone-faithful under UTC")
-    val dir = Files.createTempDirectory("ntz").toFile.getAbsolutePath
+    val dir = tmpDir("ntz")
     Seq("2024-03-10 07:30:00.123456").toDF("s")
       .select(col("s").cast(TimestampNTZType).as("ts"))
       .write.mode("overwrite").parquet(dir)

@@ -42,7 +42,7 @@ class PipelineIntegrationSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mixed-format pipeline: shapefile zones × geojsonl points → buffer → dissolve → area") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    val dir = tmpDir("graft-pipeline")
 
     // stage inputs in two formats
     val zones = Seq((1, "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"),

@@ -139,7 +139,7 @@ class ReferenceParitySpec extends AnyFunSuite with SparkSpec {
   // --- io (tests/io/data — GDAL-written fixtures) ---------------------------
 
   private def stage(dir: String, base: String): String = {
-    val out = java.nio.file.Files.createTempDirectory(s"graft-parity-$base")
+    val out = java.nio.file.Paths.get(tmpDir(s"graft-parity-$base"))
     Seq("shp", "dbf").foreach { ext =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/$base.$ext"), out.resolve(s"$base.$ext"))

@@ -63,7 +63,7 @@ class ZOrderSpec extends SparkSpec {
       (col("id") % 120 * 0.5 - 30 + 0.25).as("lon"),
       (col("id") % 80 * 0.5 - 20 + 0.25).as("lat"),
       col("id"))
-    val dir = java.nio.file.Files.createTempDirectory("zord").toString + "/pts"
+    val dir = tmpDir("zord") + "/pts"
     GeoOps.writeZOrdered(df, "lon", "lat", dir, bits = 16, partitions = 8)
     val got = GeoOps.readZOrdered(spark, dir, "lon", "lat", -10.0, -10.0, 5.0, 5.0)
     val expected = df.where(col("lon").between(-10.0, 5.0) && col("lat").between(-10.0, 5.0))
@@ -82,7 +82,7 @@ class ZOrderSpec extends SparkSpec {
       (col("id") % 480 * 0.125 - 30 + 0.0625).as("lon"),
       (expr("id div 480") % 320 * 0.125 - 20 + 0.0625).as("lat"),
       col("id"))
-    val dir = java.nio.file.Files.createTempDirectory("zprune").toString + "/pts"
+    val dir = tmpDir("zprune") + "/pts"
     GeoOps.writeZOrdered(df, "lon", "lat", dir, bits = 16, partitions = 16)
     val got = GeoOps.readZOrdered(spark, dir, "lon", "lat", -10.0, -10.0, 0.0, 0.0)
     val qe = got.queryExecution

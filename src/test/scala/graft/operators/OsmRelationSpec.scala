@@ -161,7 +161,7 @@ class OsmRelationSpec extends AnyFunSuite with SparkSpec {
   // ---- pbf roundtrip of the member columns --------------------------------
 
   test("member types/roles survive a pbf write/read roundtrip into assemble") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-relpbf").toString
+    val dir = tmpDir("graft-relpbf")
     OsmPbf.write(relOsm, s"$dir/rel.osm.pbf")
     val back = OsmPbf.read(spark, dir)
     import graft.functions.GeoFunctions._

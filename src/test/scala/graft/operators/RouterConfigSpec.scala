@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-class RouterConfigSpec extends AnyFunSuite {
+class RouterConfigSpec extends AnyFunSuite with graft.SparkSpec {
 
   private def write(dir: Path, name: String, content: String): Path = {
     val p = dir.resolve(name)
@@ -13,7 +13,7 @@ class RouterConfigSpec extends AnyFunSuite {
   }
 
   test("defaults ← user ← project merge, later files win key-by-key") {
-    val dir = Files.createTempDirectory("graft_cfg")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_cfg"))
     val user = write(dir, ".erde.yml",
       """routers:
         |  local: http://user-override:5000
@@ -64,7 +64,7 @@ class RouterConfigSpec extends AnyFunSuite {
   }
 
   test("missing files read as empty; defaults survive") {
-    val dir = Files.createTempDirectory("graft_cfg")
+    val dir = java.nio.file.Paths.get(tmpDir("graft_cfg"))
     val r = RouterConfig.routers(
       userPath = dir.resolve("absent"), projectPath = dir.resolve("also-absent"))
     assert(r == RouterConfig.Defaults)

@@ -315,7 +315,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val queries = corpus.where(col("vec_id") < 8)
     val (assigned, centroids) =
       Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 6)
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
+    val dir = tmpDir("ivfidx")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     val got = Similarity.ivfSearchIndex(
@@ -354,7 +354,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val queries = corpus.where(col("vec_id") < 8)
     val (assigned, centroids) =
       Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 6)
-    val dir = java.nio.file.Files.createTempDirectory("i8ivfidx").toString
+    val dir = tmpDir("i8ivfidx")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     val got = Similarity.int8IvfSearchIndex(
@@ -394,7 +394,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val delta = corpus.where(col("vec_id") % 3 === 2)
     val (assigned, centroids) =
       Similarity.ivfBuildIndex(base, "embedding", "vec_id", nlist = 6)
-    val dir = java.nio.file.Files.createTempDirectory("ivfrefresh").toString
+    val dir = tmpDir("ivfrefresh")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     Similarity.ivfRefreshIndex(spark, dir, delta, "embedding", "vec_id")
@@ -525,7 +525,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val cb = Similarity.pqSampleCodebooks(corpus, "embedding", "vec_id", m = 4, ksub = 8)
     val (assigned, centroids, cbDf) = Similarity.ivfPqBuildIndex(
       corpus, "embedding", "vec_id", nlist = 5, m = 4, ksub = 8, codebooks = Some(cb))
-    val dir = java.nio.file.Files.createTempDirectory("ivfpqidx").toString
+    val dir = tmpDir("ivfpqidx")
     assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
     centroids.write.mode("overwrite").parquet(s"$dir/centroids")
     cbDf.write.mode("overwrite").parquet(s"$dir/codebook")

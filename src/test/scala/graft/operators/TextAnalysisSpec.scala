@@ -391,7 +391,6 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
   }
   private def hits(df: org.apache.spark.sql.DataFrame) =
     df.select("query_id", "doc_id", "score").as[(Long, Long, Double)].collect().toSet
-  private def tmpDir(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
   private def refreshCorpora = (
     (0 until 40).map(i => (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text"),
     (40 until 60).map(i => (i.toLong, s"word$i alpha gamma common${i % 5}")).toDF("doc_id", "text"))

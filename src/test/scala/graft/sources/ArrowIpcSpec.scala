@@ -12,12 +12,6 @@ import graft.SparkSpec
 class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_arrow_$name").toString
-    new java.io.File(d).deleteOnExit()
-    d
-  }
-
   private val flatSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),
     StructField("i8", ByteType, nullable = true),
@@ -48,7 +42,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   for (codec <- Seq("null", "lz4", "zstd"))
     test(s"roundtrip [$codec]: every flat type incl. pre-epoch, nulls, empties") {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(flatRows, 2), flatSchema)
-      val dir = tmp(s"flat_$codec")
+      val dir = tmpDir(s"flat_$codec")
       ArrowIpc.write(df, s"$dir/t.arrow", codec = codec)
       val back = ArrowIpc.read(spark, s"$dir/t.arrow")
       assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -86,7 +80,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
       Row(2L, Seq.empty[Float], Seq.empty[Long], Seq.empty[String], Seq.empty[Seq[Int]]),
       Row(3L, null, null, null, null))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    val dir = tmp("lists")
+    val dir = tmpDir("lists")
     ArrowIpc.write(df, s"$dir/t.arrow")
     val back = ArrowIpc.read(spark, s"$dir/t.arrow")
     assert(back.schema("emb").dataType == ArrayType(FloatType, containsNull = false))
@@ -102,7 +96,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   test("splittable read: footer batches fan one file out without dup/loss") {
     val df = spark.range(20000).select(col("id"),
       concat(lit("row-"), col("id")).as("s"))
-    val dir = tmp("split")
+    val dir = tmpDir("split")
     ArrowIpc.write(df.repartition(1), s"$dir/t.arrow", codec = "lz4", batchRows = 1000)
     val files = new java.io.File(s"$dir/t.arrow").listFiles()
       .filter(_.getName.endsWith(".arrow"))
@@ -116,7 +110,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
 
   test("column projection reads a field subset in writer order") {
     val df = spark.range(100).select(col("id"), lit("x").as("a"), (col("id") * 2).as("b"))
-    val dir = tmp("proj")
+    val dir = tmpDir("proj")
     ArrowIpc.write(df, s"$dir/t.arrow")
     val back = ArrowIpc.read(spark, s"$dir/t.arrow", columns = Seq("b", "id"))
     assert(back.columns.toSeq == Seq("id", "b")) // writer order, not request order
@@ -128,7 +122,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
 
   test("sharded write: one file per partition, read back as one frame") {
     val df = spark.range(5000).select(col("id"), (col("id") % 7).as("g")).repartition(4)
-    val dir = tmp("shard")
+    val dir = tmpDir("shard")
     ArrowIpc.write(df, s"$dir/t.arrow")
     val files = new java.io.File(s"$dir/t.arrow").listFiles()
       .filter(_.getName.endsWith(".arrow"))
@@ -140,7 +134,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
 
   test("empty frame writes a schema-only file that reads back empty") {
     val df = spark.range(0).select(col("id"), lit("s").as("s"))
-    val dir = tmp("empty")
+    val dir = tmpDir("empty")
     ArrowIpc.write(df, s"$dir/t.arrow")
     val back = ArrowIpc.read(spark, s"$dir/t.arrow")
     assert(back.count() == 0)
@@ -151,13 +145,13 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   test("nested-complex writes are rejected loudly, not byte-passed") {
     val los = spark.range(3).select(col("id"),
       array(struct(col("id").as("a"))).as("subs"))
-    intercept[IllegalArgumentException] { ArrowIpc.write(los, tmp("rej3") + "/t.arrow") }
+    intercept[IllegalArgumentException] { ArrowIpc.write(los, tmpDir("rej3") + "/t.arrow") }
     val mos = spark.range(3).select(col("id"),
       map(lit("k"), struct(col("id").as("a"))).as("kv"))
-    intercept[IllegalArgumentException] { ArrowIpc.write(mos, tmp("rej4") + "/t.arrow") }
+    intercept[IllegalArgumentException] { ArrowIpc.write(mos, tmpDir("rej4") + "/t.arrow") }
     val lom = spark.range(3).select(col("id"),
       array(map(lit("k"), col("id"))).as("kvs"))
-    intercept[IllegalArgumentException] { ArrowIpc.write(lom, tmp("rej5") + "/t.arrow") }
+    intercept[IllegalArgumentException] { ArrowIpc.write(lom, tmpDir("rej5") + "/t.arrow") }
   }
 
   for (codec <- Seq("null", "lz4", "zstd"))
@@ -174,7 +168,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
         Row(2L, Map.empty[String, Long], Map.empty[Long, Seq[Double]]),
         Row(3L, null, null))
       val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-      val dir = tmp(s"map_$codec")
+      val dir = tmpDir(s"map_$codec")
       ArrowIpc.write(df, s"$dir/t.arrow", codec = codec)
       val back = ArrowIpc.read(spark, s"$dir/t.arrow")
       assert(back.schema("kv").dataType ==
@@ -215,7 +209,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
     test(s"struct roundtrip [$codec]: nested structs, inner lists, null rows") {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(structRows, 2), structSchema)
-      val dir = tmp(s"struct_$codec")
+      val dir = tmpDir(s"struct_$codec")
       ArrowIpc.write(df, s"$dir/t.arrow", codec = codec)
       val back = ArrowIpc.read(spark, s"$dir/t.arrow")
       assert(back.schema("meta").dataType == structSchema("meta").dataType)
@@ -238,7 +232,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   test("struct columns survive the streaming format and projection") {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(structRows, 1), structSchema)
-    val dir = tmp("struct_arrows")
+    val dir = tmpDir("struct_arrows")
     ArrowIpc.writeArrows(df, s"$dir/t.arrows")
     val back = ArrowIpc.readArrows(spark, s"$dir/t.arrows")
     assert(back.where(col("meta").isNull).count() == 1)
@@ -251,32 +245,32 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("many-file footer census fans out as a job, not a driver loop") {
-    val n = ArrowIpc.DistributedCensusThreshold + 16
+    val n = Shards.DistributedCensusThreshold + 16
     val df = spark.range(n * 10L).select(col("id"), (col("id") % 9).as("g"))
-    val dir = tmp("census")
+    val dir = tmpDir("census")
     ArrowIpc.write(df.repartition(n), s"$dir/t.arrow")
     val files = new java.io.File(s"$dir/t.arrow").listFiles()
       .filter(_.getName.endsWith(".arrow"))
     assert(files.length == n)
-    val before = ArrowIpc.driverFooterOpens.get()
+    val before = Shards.driverPlans.get()
     val back = ArrowIpc.read(spark, s"$dir/t.arrow")
     assert(back.count() == n * 10L)
     assert(back.agg(sum("id")).head().getLong(0) == (0L until n * 10L).sum)
-    val opens = ArrowIpc.driverFooterOpens.get() - before
-    assert(opens <= 1L, s"driver opened $opens footers — census not distributed?")
+    val opens = Shards.driverPlans.get() - before
+    assert(opens == 0L, s"driver planned $opens footers — census not distributed?")
     // under the threshold the driver loop is used (cheaper than a job)
-    val small = tmp("census_small")
+    val small = tmpDir("census_small")
     ArrowIpc.write(df.repartition(3), s"$small/t.arrow")
-    val b2 = ArrowIpc.driverFooterOpens.get()
+    val b2 = Shards.driverPlans.get()
     ArrowIpc.read(spark, s"$small/t.arrow").count()
-    assert(ArrowIpc.driverFooterOpens.get() - b2 == 4L) // schema + 3 files
+    assert(Shards.driverPlans.get() - b2 == 3L) // one per file
   }
 
   test("geometry WKB convention rides as binary through auto dispatch") {
     val pts = Seq((1L, 2.0, 3.0), (2L, -4.5, 0.25)).toDF("id", "x", "y")
       .select(col("id"), graft.functions.GeoFunctions.st_aswkb(
         graft.functions.GeoFunctions.st_point(col("x"), col("y"))).as("geometry"))
-    val dir = tmp("geo")
+    val dir = tmpDir("geo")
     GeoSources.writeAuto(pts, s"$dir/pts.arrow")
     val back = GeoSources.readAuto(spark, s"$dir/pts.arrow")
     val xs = back.select(col("id"),
@@ -288,7 +282,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   for (codec <- Seq("null", "lz4", "zstd"))
     test(s"streaming format [$codec]: flat-lattice roundtrip, schema intact") {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(flatRows, 2), flatSchema)
-      val dir = tmp(s"arrows_$codec")
+      val dir = tmpDir(s"arrows_$codec")
       ArrowIpc.writeArrows(df, s"$dir/t.arrows", codec = codec)
       val back = ArrowIpc.readArrows(spark, s"$dir/t.arrows")
       assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -303,7 +297,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
   test("streaming format: multi-batch files stream without dup/loss; lists survive") {
     val df = spark.range(20000).select(col("id"),
       org.apache.spark.sql.functions.array(col("id"), col("id") * 2).as("xs"))
-    val dir = tmp("arrows_multi")
+    val dir = tmpDir("arrows_multi")
     ArrowIpc.writeArrows(df.repartition(3), s"$dir/t.arrows", batchRows = 1000)
     val files = new java.io.File(s"$dir/t.arrows").listFiles()
       .filter(_.getName.endsWith(".arrows"))
@@ -318,7 +312,7 @@ class ArrowIpcSpec extends AnyFunSuite with SparkSpec {
 
   test("streaming format: projection, empty frame, and auto dispatch") {
     val df = spark.range(100).select(col("id"), lit("x").as("a"), (col("id") * 2).as("b"))
-    val dir = tmp("arrows_proj")
+    val dir = tmpDir("arrows_proj")
     ArrowIpc.writeArrows(df, s"$dir/t.arrows")
     val back = ArrowIpc.readArrows(spark, s"$dir/t.arrows", columns = Seq("b", "id"))
     assert(back.columns.toSeq == Seq("id", "b")) // writer order

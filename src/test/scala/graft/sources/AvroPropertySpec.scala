@@ -91,7 +91,7 @@ class AvroPropertySpec extends AnyFunSuite with SparkSpec {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq, 4), schema)
     Seq("null", "deflate", "snappy").foreach { codec =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_avroprop_$codec").toString
+      val dir = tmpDir(s"graft_avroprop_$codec")
       Avro.write(df, s"$dir/t.avro", codec = codec)
       val back = Avro.read(spark, s"$dir/t.avro", splitBytes = 16 * 1024)
       assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==

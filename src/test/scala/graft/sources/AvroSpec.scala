@@ -12,12 +12,6 @@ import graft.SparkSpec
 class AvroSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_avro_$name").toString
-    new java.io.File(d).deleteOnExit()
-    d
-  }
-
   test("roundtrip: primitives, binary, timestamp micros, nulls") {
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -33,7 +27,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       Row(1L, 7, 1.5f, 2.25, true, "héllo", Array[Byte](1, 2, -3), ts),
       Row(2L, null, null, null, null, null, null, null))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val dir = tmp("prim")
+    val dir = tmpDir("prim")
     Avro.write(df, s"$dir/t.avro")
     val back = Avro.read(spark, s"$dir/t.avro")
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
@@ -61,7 +55,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       Row(1L, Seq(1.0, 2.5), Map("x" -> 1L, "y" -> 2L), Row("in", 9)),
       Row(2L, Seq.empty[Double], Map.empty[String, Long], null))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    val dir = tmp("nested")
+    val dir = tmpDir("nested")
     Avro.write(df, s"$dir/t.avro")
     val back = Avro.read(spark, s"$dir/t.avro").collect().map(r => r.getLong(0) -> r).toMap
     assert(back(1L).getSeq[Double](1) == Seq(1.0, 2.5))
@@ -74,7 +68,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
   test("splittable read: small splitBytes fans one file out without dup/loss") {
     val df = spark.range(20000).select(col("id"),
       concat(lit("row-"), col("id")).as("s"))
-    val dir = tmp("split")
+    val dir = tmpDir("split")
     Avro.write(df.repartition(1), s"$dir/t.avro", codec = "null")
     val one = new java.io.File(s"$dir/t.avro").listFiles().filter(_.getName.endsWith(".avro"))
     assert(one.length == 1, "expected a single container file")
@@ -89,7 +83,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
     val df = spark.range(5000).select(col("id"),
       lit("abcabcabcabcabcabcabcabc").as("pad"))
     def sizeOf(codec: String): Long = {
-      val dir = tmp(s"codec_$codec")
+      val dir = tmpDir(s"codec_$codec")
       Avro.write(df.repartition(1), s"$dir/t.avro", codec = codec)
       assert(Avro.read(spark, s"$dir/t.avro").count() == 5000)
       new java.io.File(s"$dir/t.avro").listFiles()
@@ -102,7 +96,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
 
   test("empty frame writes a header-only shard that reads back with schema") {
     val df = spark.range(0).select(col("id"), lit("x").as("s"))
-    val dir = tmp("empty")
+    val dir = tmpDir("empty")
     Avro.write(df.where(lit(false)), s"$dir/t.avro")
     val back = Avro.read(spark, s"$dir/t.avro")
     assert(back.columns.toSeq == Seq("id", "s"))
@@ -114,7 +108,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       concat(lit("s"), col("id")).as("s"),
       (col("id") * 2).as("twice"),
       lit("padpadpadpadpadpadpadpadpadpad").as("pad"))
-    val dir = tmp("proj")
+    val dir = tmpDir("proj")
     Avro.write(df.repartition(1), s"$dir/t.avro", codec = "null")
     // request out of writer order — output follows WRITER order (deterministic)
     val back = Avro.read(spark, s"$dir/t.avro", splitBytes = 4096,
@@ -142,7 +136,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       .name("weird").`type`(Schema.createUnion(java.util.List.of(
         Schema.create(Schema.Type.INT), Schema.create(Schema.Type.STRING)))).noDefault()
       .endRecord()
-    val dir = tmp("skipdecode")
+    val dir = tmpDir("skipdecode")
     val f = new java.io.File(dir, "t.avro")
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
     w.create(schema, f)
@@ -172,7 +166,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       .name("ts").`type`(tsMillis).noDefault()
       .name("d").`type`(dateT).noDefault()
       .endRecord()
-    val dir = tmp("millis")
+    val dir = tmpDir("millis")
     val f = new java.io.File(dir, "t.avro")
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
     w.create(schema, f)
@@ -202,7 +196,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
       Row(2L, java.sql.Date.valueOf("1969-12-31"), new java.math.BigDecimal("-0.01")),
       Row(3L, null, null))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val dir = tmp("datedec")
+    val dir = tmpDir("datedec")
     Avro.write(df, s"$dir/t.avro")
     val back = Avro.read(spark, s"$dir/t.avro")
     assert(back.schema("d").dataType == DateType)
@@ -227,7 +221,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
   test("split read streams: file handle closes even when a limit drops the iterator") {
     val df = spark.range(50000).select(col("id"),
       lit("padpadpadpadpadpadpadpadpadpadpadpad").as("pad"))
-    val dir = tmp("stream")
+    val dir = tmpDir("stream")
     Avro.write(df.repartition(1), s"$dir/t.avro", codec = "null")
     val file = new java.io.File(s"$dir/t.avro").listFiles()
       .filter(_.getName.endsWith(".avro")).head.getCanonicalPath
@@ -244,7 +238,7 @@ class AvroSpec extends AnyFunSuite with SparkSpec {
     import graft.functions.GeoFunctions._
     val pts = Seq((1L, 2.5, 3.5), (2L, -10.0, 45.0)).toDF("id", "lon", "lat")
       .withColumn("geometry", st_point(col("lon"), col("lat"))).drop("lon", "lat")
-    val dir = tmp("auto")
+    val dir = tmpDir("auto")
     GeoSources.writeAuto(pts, s"$dir/pts.avro")
     val back = GeoSources.readAuto(spark, s"$dir/pts.avro")
       .select(col("id"), st_x(col("geometry")).as("x"), st_y(col("geometry")).as("y"))

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,8 +9,8 @@ class CompactSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
   test("compaction shrinks the file count, preserves content, clusters sort columns") {
-    val dir = Files.createTempDirectory("graft_compact_in").toString
-    val out = Files.createTempDirectory("graft_compact_out").toString
+    val dir = tmpDir("graft_compact_in")
+    val out = tmpDir("graft_compact_out")
     // 40 tiny files of 250 rows each
     spark.range(0, 10000).select($"id", ($"id" * 3 % 101).as("v"))
       .repartition(40).write.mode("overwrite").parquet(dir)

@@ -11,9 +11,6 @@ class FgbSpec extends AnyFunSuite with SparkSpec {
 
   import testImplicits._
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-fgb-$tag").toString
-
   test("fgb round-trip: points with mixed attribute types and nulls") {
     val dir = tmpDir("pts")
     val df = Seq(
@@ -56,8 +53,8 @@ class FgbSpec extends AnyFunSuite with SparkSpec {
     val m = withGeom.collect().map(r =>
       WKB.read(r.getAs[Array[Byte]]("geometry")).asInstanceOf[Point].x -> r).toMap
     assert(m(10.0).getString(0) == "x" && m(20.0).isNullAt(0))
-    // the splittable reader takes the same projection
-    val split = Fgb.readSplit(spark, dir, featuresPerSplit = 2, columns = Seq("id", "name"))
+    // the projection holds across feature ranges
+    val split = Fgb.read(spark, dir, featuresPerSplit = 2, columns = Seq("id", "name"))
     assert(split.schema.fieldNames.toSeq == Seq("id", "name"))
     assert(split.collect().map(r => r.getLong(0) -> r.getString(1)).toMap ==
       Map(1L -> "alpha", 2L -> "beta", 3L -> "gamma"))
@@ -126,16 +123,16 @@ class FgbSpec extends AnyFunSuite with SparkSpec {
     assert(n == 4)
   }
 
-  test("readSplit: feature ranges return exactly what the whole-file read returns") {
+  test("feature ranges: many small splits read exactly what one split reads") {
     val dir = tmpDir("split")
     val df = (1 to 57).map(i => (i.toLong, s"row$i", i * 0.5)).toDF("id", "name", "score")
       .withColumn("geometry", st_point(col("id") * 1.0, col("id") * -0.5))
     Fgb.write(df, s"$dir/many.fgb")
-    val raf = new java.io.RandomAccessFile(s"$dir/many.fgb", "r")
-    val ranges = try Fgb.featureRanges(raf, featuresPerSplit = 10) finally raf.close()
+    val ranges = Fgb.featureRanges(s"$dir/many.fgb", featuresPerSplit = 10)
     assert(ranges.size == 6, s"expected 6 ranges, got ${ranges.size}")
-    val whole = Fgb.read(spark, dir).orderBy("id").collect().toSeq
-    val split = Fgb.readSplit(spark, dir, featuresPerSplit = 10).orderBy("id").collect().toSeq
+    assert(Fgb.featureRanges(s"$dir/many.fgb", featuresPerSplit = Int.MaxValue).size == 1)
+    val whole = Fgb.read(spark, dir, featuresPerSplit = Int.MaxValue).orderBy("id").collect().toSeq
+    val split = Fgb.read(spark, dir, featuresPerSplit = 10).orderBy("id").collect().toSeq
     assert(split == whole && split.size == 57)
   }
 
@@ -166,7 +163,7 @@ class FgbSpec extends AnyFunSuite with SparkSpec {
     val manifest = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifest.json")), "UTF-8")
     assert(manifest.contains("\"file\":\"part-00000.fgb\"") && manifest.contains("\"rows\":"))
-    // both read paths see the union of shards, row-identical with the input
+    // the reader (and its earlier name) sees the union of shards, row-identical with the input
     val in = df.drop("geometry").orderBy("id").collect().toSeq
     assert(Fgb.read(spark, dir).drop("geometry").orderBy("id").collect().toSeq == in)
     assert(Fgb.readSplit(spark, dir).drop("geometry").orderBy("id").collect().toSeq == in)

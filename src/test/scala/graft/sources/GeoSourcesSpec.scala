@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,8 +11,7 @@ class GeoSourcesSpec extends AnyFunSuite with SparkSpec {
 
   import testImplicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").resolve("out").toString
+  private def tmp(name: String): String = s"${tmpDir(name)}/out"
 
   private lazy val df = Seq(
     (1, "alpha", "POINT (1 2)"),
@@ -45,7 +42,7 @@ class GeoSourcesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("readAuto/writeAuto dispatch on extension; readGeom takes the first geometry") {
-    val base = Files.createTempDirectory("graft-auto")
+    val base = java.nio.file.Paths.get(tmpDir("graft-auto"))
     for (ext <- Seq("csv", "geojsonl", "parquet", "fgb")) {
       val p = base.resolve(s"data.$ext").toString
       GeoSources.writeAuto(df, p)
@@ -87,6 +84,18 @@ class GeoSourcesSpec extends AnyFunSuite with SparkSpec {
     val filtered = GeoJSONSeq.read(spark, p,
       filterWkt = Some("POLYGON ((0 0, 5 0, 5 5, 0 5, 0 0))"))
     assert(filtered.count() == 2) // point + line; far polygon dropped
+  }
+
+  test("readAuto filters every format, in the reader or after parsing") {
+    val base = tmpDir("graft-auto-filter")
+    val box = Some("POLYGON ((0 0, 5 0, 5 5, 0 5, 0 0))")
+    for (ext <- Seq("geojsonl", "parquet", "fgb", "orc", "avro", "arrow", "arrows", "gpkg",
+        "sqlite", "xlsx")) {
+      val p = s"$base/data.$ext"
+      GeoSources.writeAuto(df, p)
+      assert(GeoSources.readAuto(spark, p).count() == 3, ext)
+      assert(GeoSources.readAuto(spark, p, filterWkt = box).count() == 2, ext)
+    }
   }
 
   test("cell-partitioned parquet prunes partitions on bbox reads") {

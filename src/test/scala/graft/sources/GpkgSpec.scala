@@ -13,7 +13,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   private val data = "/root/reference/tests/io/data"
 
   private def stage(name: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-gpkg")
+    val dir = java.nio.file.Paths.get(tmpDir(s"graft-gpkg"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$data/$name"), dir.resolve(name))
     dir.toString
@@ -73,7 +73,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-page table with overflow records: 3000 rows, interior b-tree pages") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-big")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-gpkg-big"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("src/test/resources/big.gpkg"), dir.resolve("big.gpkg"))
     val df = Gpkg.read(spark, dir.toString)
@@ -89,7 +89,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("write → read round-trips values, geometry, and layer metadata") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w").toString
+    val dir = tmpDir("graft-gpkg-w")
     val df = Seq(
       (1L, "alpha", 1.5, (2.0, 3.0)),
       (2L, "beta", -0.25, (-10.5, 47.25)),
@@ -112,7 +112,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("column projection: subset in file order, rowid alias kept, geometry skippable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-proj").toString
+    val dir = tmpDir("graft-gpkg-proj")
     val df = Seq(
       (1L, "alpha", 1.5, (2.0, 3.0)),
       (2L, "beta", -0.25, (-10.5, 47.25)))
@@ -141,7 +141,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("write scales: 5000 rows force interior pages; big blobs overflow") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w2").toString
+    val dir = tmpDir("graft-gpkg-w2")
     val big = (1 to 5000).map(i => (i.toLong, "x" * (i % 70), (i * 0.001, -i * 0.002)))
       .toDF("k", "pad", "pt")
       .select(col("k"), col("pad"), st_point(col("pt._1"), col("pt._2")).as("geometry"))
@@ -159,7 +159,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("write supports boolean/float/short/timestamp/date/decimal columns") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w4").toString
+    val dir = tmpDir("graft-gpkg-w4")
     val df = Seq(
       (1L, true, 1.5f, java.sql.Timestamp.valueOf("2026-01-02 03:04:05"),
         java.sql.Date.valueOf("2026-01-02"), BigDecimal("12.75"), (1.0, 2.0)))
@@ -176,7 +176,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("non-standard srid registers in gpkg_spatial_ref_sys; collections named per spec") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w5").toString
+    val dir = tmpDir("graft-gpkg-w5")
     val df = Seq((1L, (3.0, 4.0))).toDF("k", "pt")
       .select(col("k"), st_point(col("pt._1"), col("pt._2")).as("geometry"))
     Gpkg.write(df, s"$dir/m.gpkg", srid = 3857)
@@ -190,7 +190,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   test("write rejects a frame that already carries a fid column") {
     // the writer prepends its own fid rowid alias; a second fid would make
     // CREATE TABLE carry duplicate column names and break read-back
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w6").toString
+    val dir = tmpDir("graft-gpkg-w6")
     val df = Seq((7L, (1.0, 2.0))).toDF("fid", "pt")
       .select(col("fid"), st_point(col("pt._1"), col("pt._2")).as("geometry"))
     val e = intercept[IllegalArgumentException] { Gpkg.write(df, s"$dir/f.gpkg") }
@@ -198,7 +198,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("writeAuto/readAuto dispatch .gpkg; header carries the GPKG tags") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-w3").toString
+    val dir = tmpDir("graft-gpkg-w3")
     val df = Seq((7L, (5.0, 6.0))).toDF("k", "pt")
       .select(col("k"), st_point(col("pt._1"), col("pt._2")).as("geometry"))
     GeoSources.writeAuto(df, s"$dir/auto.gpkg")
@@ -214,7 +214,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("multi-layer file: writeLayers + :layer suffix addressing (erde gpkg.py PATH_REGEXP)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-ml").toString
+    val dir = tmpDir("graft-gpkg-ml")
     val towns = Seq((1L, "a", (1.0, 2.0)), (2L, "b", (3.0, 4.0))).toDF("k", "name", "pt")
       .select(col("k"), col("name"), st_point(col("pt._1"), col("pt._2")).as("geometry"))
     val roads = Seq((10L, 7.5, (5.0, 6.0))).toDF("rk", "len", "pt")
@@ -271,7 +271,7 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("writeSharded: one standalone single-layer gpkg per partition + manifest; reads back as one frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-shard").toString
+    val dir = tmpDir("graft-gpkg-shard")
     val df = (1 to 200).map(i => (i.toLong, s"row$i", i * 0.5)).toDF("k", "name", "score")
       .withColumn("geometry", st_point(col("k") * 1.0, col("k") * -0.5))
       .repartition(7)
@@ -294,20 +294,20 @@ class GpkgSpec extends AnyFunSuite with SparkSpec {
     assert(Gpkg.layers(spark, one) == Seq("towns"))
     assert(Gpkg.read(spark, one).columns.toSet == Set("fid", "k", "name", "score", "geometry"))
     // empty frame still leaves a schema-bearing shard
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-gpkg-shard-empty").toString
+    val dir2 = tmpDir("graft-gpkg-shard-empty")
     Gpkg.writeSharded(df.where(col("k") < 0), dir2, layerName = "towns")
     val back2 = Gpkg.read(spark, dir2)
     assert(back2.count() == 0 && back2.columns.contains("geometry"))
   }
 
   test("read, layers and stats share the SQLite file guard: no match and the size cap fail loud") {
-    val none = java.nio.file.Files.createTempDirectory("graft-gpkg-none").toString
+    val none = tmpDir("graft-gpkg-none")
     Seq[() => Any](() => Gpkg.read(spark, none), () => Gpkg.layers(spark, none),
         () => Gpkg.stats(spark, none)).foreach { call =>
       val e = intercept[IllegalArgumentException](call())
       assert(e.getMessage.contains(none), e.getMessage)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-gpkg-cap").toString
+    val dir = tmpDir("graft-gpkg-cap")
     val df = Seq((1L, 2.0, 3.0)).toDF("k", "x", "y")
       .select(col("k"), st_point(col("x"), col("y")).as("geometry"))
     Gpkg.write(df, s"$dir/t.gpkg")

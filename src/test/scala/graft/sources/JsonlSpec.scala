@@ -9,14 +9,9 @@ import graft.SparkSpec
 class JsonlSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmp(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"jsonl_$name").toFile
-    d.deleteOnExit(); d.getAbsolutePath
-  }
-
   test("non-geo frame round-trips values and sharding fixes the file count") {
     val df = (1L to 100L).map(i => (i, s"text $i", i * 0.5)).toDF("id", "t", "v")
-    val path = tmp("plain") + "/data.jsonl"
+    val path = tmpDir("plain") + "/data.jsonl"
     Jsonl.write(df, path, shards = 4)
     val parts = new java.io.File(path).listFiles().count(_.getName.startsWith("part-"))
     assert(parts == 4)
@@ -32,7 +27,7 @@ class JsonlSpec extends AnyFunSuite with SparkSpec {
     import graft.functions.GeoFunctions._
     val df = Seq((1L, 2.5, 3.5), (2L, -1.0, 0.25)).toDF("id", "x", "y")
       .withColumn("geometry", st_point(col("x"), col("y"))).drop("x", "y")
-    val path = tmp("geo") + "/pts.jsonl"
+    val path = tmpDir("geo") + "/pts.jsonl"
     Jsonl.write(df, path)
     // on disk it is readable text JSON with a WKT geometry field
     val raw = spark.read.json(path)
@@ -46,7 +41,7 @@ class JsonlSpec extends AnyFunSuite with SparkSpec {
 
   test("readAuto/writeAuto dispatch .jsonl (and .geojsonl still wins)") {
     val df = Seq((7L, "a")).toDF("id", "s")
-    val p = tmp("auto") + "/d.jsonl"
+    val p = tmpDir("auto") + "/d.jsonl"
     GeoSources.writeAuto(df, p)
     val back = GeoSources.readAuto(spark, p)
     assert(back.select("id", "s").collect().map(r => (r.getLong(0), r.getString(1))).toSeq

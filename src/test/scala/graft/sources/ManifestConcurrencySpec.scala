@@ -28,18 +28,12 @@ import graft.SparkSpec
 class ManifestConcurrencySpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_mtc_$name").toString
-    new java.io.File(d).deleteOnExit()
-    d
-  }
-
   private def idTable(ids: Range, tag: String) =
     ids.map(i => (i.toLong, tag)).toDF("id", "tag").repartition(1)
 
   for (seed <- Seq(11, 47)) {
     test(s"append/compact/merge race holds every invariant (seed $seed)") {
-      val root = tmp(s"race$seed")
+      val root = tmpDir(s"race$seed")
       ManifestTable.append(idTable(0 until 100, "base"), root) // v1
       val rnd = new java.util.Random(seed)
       val jitter = Array.fill(64)(rnd.nextInt(30)) // per-op sleep schedule, seeded

@@ -13,17 +13,11 @@ import graft.sources.ManifestTable.{And, Between, Eq, Ge, Le, Or}
 class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmp(name: String): String = {
-    val d = Files.createTempDirectory(s"graft_manifest_$name").toString
-    new java.io.File(d).deleteOnExit()
-    d
-  }
-
   private def idTable(ids: Range, tag: String) =
     ids.map(i => (i.toLong, tag, i * 1.5)).toDF("id", "tag", "score").repartition(2)
 
   test("append / read roundtrip; versions and actions recorded") {
-    val root = tmp("rt")
+    val root = tmpDir("rt")
     val v1 = ManifestTable.append(idTable(0 until 50, "a"), root)
     val v2 = ManifestTable.append(idTable(50 until 80, "b"), root)
     assert((v1, v2) == (1L, 2L))
@@ -37,7 +31,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("time travel reads any version; overwrite resets the snapshot") {
-    val root = tmp("tt")
+    val root = tmpDir("tt")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     ManifestTable.append(idTable(10 until 30, "a"), root)
     ManifestTable.overwrite(idTable(100 until 105, "z"), root)
@@ -49,7 +43,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("readSince serves exactly the appended range; refuses overwrites") {
-    val root = tmp("inc")
+    val root = tmpDir("inc")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     ManifestTable.append(idTable(10 until 25, "b"), root)
     ManifestTable.append(idTable(25 until 27, "c"), root)
@@ -66,7 +60,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("append schema mismatch fails loudly; overwrite may change schema") {
-    val root = tmp("schema")
+    val root = tmpDir("schema")
     ManifestTable.append(idTable(0 until 5, "a"), root)
     val widened = Seq((1L, "x", 1.0, true)).toDF("id", "tag", "score", "ok")
     val err = intercept[IllegalArgumentException] {
@@ -79,7 +73,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("stats-based file skipping prunes commits outside the predicate") {
-    val root = tmp("prune")
+    val root = tmpDir("prune")
     ManifestTable.append(idTable(0 until 100, "alpha"), root)
     ManifestTable.append(idTable(1000 until 1100, "mid"), root)
     ManifestTable.append(idTable(5000 until 5100, "zeta"), root)
@@ -108,7 +102,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("pruning is conservative for columns without usable stats") {
-    val root = tmp("cons")
+    val root = tmpDir("cons")
     val df = Seq((1L, Array(1.0, 2.0)), (2L, Array(3.0, 4.0))).toDF("id", "vec")
     ManifestTable.append(df, root)
     // vec (array) carries no stats: predicate on id still works, vec preds
@@ -118,7 +112,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     // a predicate naming a column with no stats keeps every file
     val dec = Seq((1L, BigDecimal("12.34")), (2L, BigDecimal("0.50")))
       .toDF("id", "price")
-    val root2 = tmp("cons2")
+    val root2 = tmpDir("cons2")
     ManifestTable.append(dec, root2)
     // decimal stats are unscaled ints in parquet — must NOT be used to prune
     val cheap = ManifestTable.scan(spark, root2, Le("price", BigDecimal("1.00")))
@@ -126,7 +120,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("racing committers: every version lands exactly once") {
-    val root = tmp("race")
+    val root = tmpDir("race")
     val threads = 4
     val perThread = 3
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
@@ -148,7 +142,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("batchId makes replayed commits idempotent; streaming sink is exactly-once") {
-    val root = tmp("batch")
+    val root = tmpDir("batch")
     val v1 = ManifestTable.commit(idTable(0 until 10, "a"), root,
       overwrite = false, batchId = Some(7L))
     val v2 = ManifestTable.commit(idTable(0 until 10, "a"), root,
@@ -157,7 +151,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     assert(ManifestTable.read(spark, root).count() == 10)
 
     // a real micro-batch stream through the foreachBatch sink
-    val root2 = tmp("stream")
+    val root2 = tmpDir("stream")
     implicit val sqlCtx = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Double)]
     val q = mem.toDF().toDF("id", "tag", "score").writeStream
@@ -171,7 +165,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vacuum drops unreferenced commits and crashed-writer orphans, keeps retained") {
-    val root = tmp("vac")
+    val root = tmpDir("vac")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     ManifestTable.overwrite(idTable(10 until 20, "b"), root)
     ManifestTable.append(idTable(20 until 30, "b"), root)
@@ -191,7 +185,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("compact bin-packs small commits; contents and history unchanged") {
-    val root = tmp("cp")
+    val root = tmpDir("cp")
     (0 until 5).foreach(i => ManifestTable.append(idTable(i * 10 until i * 10 + 10, "a"), root))
     val before = ManifestTable.read(spark, root)
     val nBefore = before.inputFiles.length
@@ -209,7 +203,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sorted compaction clusters files so scan pruning sharpens") {
-    val root = tmp("cps")
+    val root = tmpDir("cps")
     // interleaved appends: every commit spans the whole id range, so BEFORE
     // clustering every file may match any id predicate
     (0 until 4).foreach { i =>
@@ -233,7 +227,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
       (j.toLong, ((j * 389) % 1024).toLong, s"t$i")
     }
     def build(): String = {
-      val root = tmp("cpz")
+      val root = tmpDir("cpz")
       (0 until 4).foreach(i => ManifestTable.append(
         rows(i).toDF("x", "y", "tag").repartition(2), root))
       root
@@ -276,7 +270,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("readSince skips a replace but still refuses an overwrite") {
-    val root = tmp("cpinc")
+    val root = tmpDir("cpinc")
     ManifestTable.append(idTable(0 until 10, "a"), root)   // v1
     ManifestTable.append(idTable(10 until 20, "b"), root)  // v2
     ManifestTable.compact(spark, root)                     // v3 replace
@@ -291,7 +285,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("deleteWhere rewrites only stats-matching files and reports the count") {
-    val root = tmp("del")
+    val root = tmpDir("del")
     ManifestTable.append(idTable(0 until 100, "lo"), root)
     ManifestTable.append(idTable(1000 until 1100, "mid"), root)
     ManifestTable.append(idTable(5000 until 5100, "hi"), root)
@@ -309,7 +303,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     assert(ManifestTable.deleteWhere(spark, root,
       ManifestTable.Between("id", 90000L, 90010L)) == ((4L, 0L)))
     // NULL predicate rows are kept (SQL DELETE WHERE semantics)
-    val root2 = tmp("deln")
+    val root2 = tmpDir("deln")
     ManifestTable.append(Seq((1L, "a"), (2L, null), (3L, "b"))
       .toDF("id", "tag"), root2)
     val (_, d2) = ManifestTable.deleteWhere(spark, root2, ManifestTable.Ge("tag", "b"))
@@ -319,7 +313,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merge upserts by key, prunes non-overlapping files, guards schema and null keys") {
-    val root = tmp("mrg")
+    val root = tmpDir("mrg")
     ManifestTable.append(idTable(0 until 100, "old"), root)
     ManifestTable.append(idTable(5000 until 5100, "far"), root)
     val farFiles = ManifestTable.history(root).last.files.map(_.path).toSet
@@ -349,7 +343,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("rewrites detect conflicts: concurrent overwrite aborts a delete") {
-    val root = tmp("conflict")
+    val root = tmpDir("conflict")
     ManifestTable.append(idTable(0 until 50, "a"), root)
     // a committer lands an overwrite between the rewrite's basis and publish:
     // simulate by publishing the overwrite first, then replaying a rewrite
@@ -364,7 +358,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("empty commits and empty tables read back with schema intact") {
-    val root = tmp("empty")
+    val root = tmpDir("empty")
     val empty = idTable(0 until 0, "a")
     ManifestTable.append(empty, root)
     val back = ManifestTable.read(spark, root)
@@ -379,7 +373,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("mergeSchema append widens the column set; strict append still rejects") {
-    val root = tmp("evolve")
+    val root = tmpDir("evolve")
     ManifestTable.append(idTable(0 until 10, "a").select("id", "tag"), root)
     // strict append with an extra column fails loudly
     intercept[IllegalArgumentException] {
@@ -406,13 +400,13 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("tailStream drains appends, resumes from its checkpoint, skips a replace") {
-    val root = tmp("tail")
+    val root = tmpDir("tail")
     ManifestTable.append(idTable(0 until 40, "a"), root)
     ManifestTable.append(idTable(40 until 60, "b"), root)
     // compaction rewrites both commits into one file; the feed must NOT
     // serve the rewritten copy (no logical change — readSince's contract)
     ManifestTable.compact(spark, root, targetBytes = 256L << 20)
-    val ckpt = tmp("tail_ckpt")
+    val ckpt = tmpDir("tail_ckpt")
     def drain(): Seq[Long] = {
       val acc = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
       def collect(b: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -437,9 +431,9 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("medallion chain: tailStream source into streamingAppend sink, exactly-once") {
-    val bronze = tmp("bronze")
-    val silver = tmp("silver")
-    val ckpt = tmp("med_ckpt")
+    val bronze = tmpDir("bronze")
+    val silver = tmpDir("silver")
+    val ckpt = tmpDir("med_ckpt")
     ManifestTable.append(idTable(0 until 30, "a"), bronze)
     def run(): Unit = {
       val q = ManifestTable.tailStream(spark, bronze)
@@ -462,7 +456,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("maxFilesPerTrigger rate-limits the feed into multiple micro-batches") {
-    val root = tmp("rate")
+    val root = tmpDir("rate")
     ManifestTable.append(idTable(0 until 10, "a"), root)  // repartition(2): 2 files
     ManifestTable.append(idTable(10 until 20, "b"), root)
     val q = ManifestTable.tailStream(spark, root, maxFilesPerTrigger = Some(1))
@@ -475,7 +469,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("describe is a metadata-only commit ledger") {
-    val root = tmp("describe")
+    val root = tmpDir("describe")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     ManifestTable.append(idTable(10 until 30, "b"), root)
     ManifestTable.compact(spark, root, targetBytes = 64L << 20)
@@ -489,7 +483,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("restore republishes an old snapshot without data movement") {
-    val root = tmp("restore")
+    val root = tmpDir("restore")
     ManifestTable.append(idTable(0 until 10, "a"), root)        // v1
     ManifestTable.append(idTable(10 until 30, "b"), root)       // v2
     ManifestTable.overwrite(idTable(100 until 105, "z"), root)  // v3: the bad write
@@ -510,7 +504,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamingAppend auto-compaction bounds the file census") {
-    val root = tmp("autocompact")
+    val root = tmpDir("autocompact")
     val sink = ManifestTable.streamingAppend(root, autoCompactEvery = 4,
       targetBytes = 8L << 20) _
     (0 until 8).foreach(i => sink(idTable(i * 10 until i * 10 + 10, s"b$i"), i.toLong))
@@ -525,7 +519,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("model-based op fuzz: every version time-travels to its model") {
-    val root = tmp("fuzz")
+    val root = tmpDir("fuzz")
     val rnd = new scala.util.Random(42)
     var model = Map.empty[Long, (String, Double)]
     var nextId = 0L
@@ -586,7 +580,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     // parquet footers order binary stats by unsigned UTF-8 bytes; Java's
     // String.compareTo (UTF-16 units) sorts a surrogate pair BELOW
     // U+E000..FFFF, so a UTF-16 comparison would falsely prune this file
-    val root = tmp("utf8")
+    val root = tmpDir("utf8")
     ManifestTable.append(Seq((1L, "alpha"), (2L, "😀")) // 😀 U+1F600
       .toDF("id", "tag"), root)
     val out = ManifestTable.scan(spark, root, Ge("tag", "�"))
@@ -598,7 +592,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("non-finite double stats are dropped, not poisonous") {
-    val root = tmp("inf")
+    val root = tmpDir("inf")
     // append must not throw while merging footer stats, and later scans on
     // the column must keep the file (stats absent ⇒ conservative)
     ManifestTable.append(
@@ -617,7 +611,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("merge rejects duplicate source keys loudly") {
-    val root = tmp("mdup")
+    val root = tmpDir("mdup")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     val dup = Seq((1L, "x", 0.0), (1L, "y", 1.0), (2L, "z", 2.0))
       .toDF("id", "tag", "score")
@@ -630,7 +624,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
 
   test("merge clauses: delete-matched, insert-only, update-without-insert") {
     import graft.sources.ManifestTable.{MatchedDelete, MatchedIgnore, MatchedUpdate}
-    val root = tmp("mcl")
+    val root = tmpDir("mcl")
     ManifestTable.append(idTable(0 until 100, "old"), root)
     // WHEN MATCHED DELETE, no inserts: a keyed delete
     ManifestTable.merge(spark, root, idTable(10 until 20, "x"), Seq("id"),
@@ -673,7 +667,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streaming idempotency is scoped per writer (two queries share a table)") {
-    val root = tmp("writers")
+    val root = tmpDir("writers")
     // two streaming queries both start at batchId 0 — neither suppresses
     // the other
     val va = ManifestTable.commit(idTable(0 until 5, "qa"), root,
@@ -693,7 +687,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("restore to a version the log does not hold fails loudly") {
-    val root = tmp("rsbad")
+    val root = tmpDir("rsbad")
     ManifestTable.append(idTable(0 until 5, "a"), root)
     val err = intercept[IllegalArgumentException] {
       ManifestTable.restore(root, 99L)
@@ -703,7 +697,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("checkpointing bounds manifest reads per op across 200 micro-commits") {
-    val root = tmp("ckpt")
+    val root = tmpDir("ckpt")
     def parsesDuring[T](f: => T): (T, Long) = {
       val before = ManifestTable.manifestParseCount
       val r = f
@@ -746,7 +740,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     assert(cnt2 == 402L && pRead2 == 0L)
     // streaming txn marks survive the checkpoint round-trip: a replayed
     // batch from 100 commits ago is still deduped
-    val root2 = tmp("ckpt_txn")
+    val root2 = tmpDir("ckpt_txn")
     (0 until 45).foreach(i => ManifestTable.commit(two(i), root2,
       overwrite = false, batchId = Some(i.toLong), writerId = "w"))
     assert(ManifestTable.commit(two(3), root2, overwrite = false,
@@ -755,7 +749,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("columnStats is a metadata-only ANALYZE over the census") {
-    val root = tmp("colstats")
+    val root = tmpDir("colstats")
     ManifestTable.append(idTable(0 until 50, "a"), root)
     ManifestTable.append(idTable(50 until 80, "b"), root)
     val st = ManifestTable.columnStats(spark, root).collect()
@@ -764,7 +758,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     assert(st("tag").getString(2) == "a" && st("tag").getString(3) == "b")
     assert(st("id").getLong(4) == 0L && st("id").getLong(5) == 80L)
     // statless columns (arrays) are omitted; the rest still report
-    val root2 = tmp("colstats2")
+    val root2 = tmpDir("colstats2")
     ManifestTable.append(
       Seq((1L, Array(1.0)), (2L, Array(2.0))).toDF("id", "vec"), root2)
     val cols2 = ManifestTable.columnStats(spark, root2)
@@ -776,7 +770,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
     // (root, version) is not a stable checkpoint identity — pipelines wipe
     // and rebuild tables at one path, reusing version numbers; the cache
     // must key on the checkpoint's own id or reads resolve DELETED files
-    val root = tmp("ckptwipe")
+    val root = tmpDir("ckptwipe")
     def build(tag: String): Unit = {
       (0 until 3).foreach(i =>
         ManifestTable.append(idTable(i * 10 until i * 10 + 10, tag), root))
@@ -793,7 +787,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a large full-set manifest triggers an eager checkpoint") {
-    val root = tmp("bigcensus")
+    val root = tmpDir("bigcensus")
     val saved = ManifestTable.checkpointFilesMin
     ManifestTable.checkpointFilesMin = 8
     try {
@@ -813,7 +807,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("feed publication falls back to copy when hard links are unavailable") {
-    val root = tmp("feedcopy")
+    val root = tmpDir("feedcopy")
     ManifestTable.disableFeedLinks = true
     try {
       ManifestTable.append(idTable(0 until 12, "a"), root)
@@ -831,7 +825,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("changes: row-level CDF across rewrites; schema evolution compares as null") {
-    val root = tmp("cdf")
+    val root = tmpDir("cdf")
     ManifestTable.append(idTable(0 until 20, "a"), root)          // v1
     ManifestTable.append(idTable(20 until 30, "b"), root)         // v2
     // v3: merge — update ids 25..29 (score shifted), insert 30..34
@@ -866,7 +860,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("vacuum unlinks reclaimed commits' feed entries; retained links survive") {
-    val root = tmp("feedvac")
+    val root = tmpDir("feedvac")
     ManifestTable.append(idTable(0 until 10, "a"), root)
     ManifestTable.append(idTable(10 until 20, "b"), root)
     val feed = Paths.get(root).resolve("_graft_feed")
@@ -884,7 +878,7 @@ class ManifestTableSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("appends and vacuum close every directory handle they open under the root") {
-    val root = tmp("fds")
+    val root = tmpDir("fds")
     val real = Paths.get(root).toRealPath().toString
     def openUnderRoot: Seq[String] = {
       val s = Files.list(Paths.get("/proc/self/fd"))

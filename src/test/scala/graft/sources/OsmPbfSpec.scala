@@ -10,9 +10,6 @@ class OsmPbfSpec extends AnyFunSuite with SparkSpec {
 
   import testImplicits._
 
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-pbf-$tag").toString
-
   private def elementsDf(rows: Seq[Row]) =
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), OsmPbf.schema)
@@ -88,19 +85,21 @@ class OsmPbfSpec extends AnyFunSuite with SparkSpec {
     assert(nodesWithTags == Set(1L))
   }
 
-  test("readSplit: per-blob ranges return exactly what the whole-file read returns") {
+  test("per-blob ranges: a many-blob file reads what a one-blob file reads") {
     val many = (1 to 57).map(i =>
       Row("n", i.toLong, Map("k" -> s"v$i"), i * 0.01, -i * 0.01, null, null, null)) ++ Seq(
       Row("w", 100L, Map("highway" -> "x"), null, null, Seq(1L, 2L), null, null),
       Row("r", 200L, Map.empty[String, String], null, null, Seq(100L), Seq("w"), Seq("outer")))
     val dir = tmpDir("split")
+    val one = tmpDir("one")
     OsmPbf.write(elementsDf(many), s"$dir/big.osm.pbf", elementsPerBlock = 10)
+    OsmPbf.write(elementsDf(many), s"$one/big.osm.pbf")
     // multiple genuine blob ranges
-    val raf = new java.io.RandomAccessFile(s"$dir/big.osm.pbf", "r")
-    val ranges = try OsmPbf.blobRanges(raf) finally raf.close()
+    val ranges = OsmPbf.blobRanges(s"$dir/big.osm.pbf")
     assert(ranges.size == 6, s"expected 6 data blobs, got ${ranges.size}")
-    val whole = OsmPbf.read(spark, dir).orderBy("type", "id").collect().toSeq
-    val split = OsmPbf.readSplit(spark, dir).orderBy("type", "id").collect().toSeq
+    assert(OsmPbf.blobRanges(s"$one/big.osm.pbf").size == 1)
+    val whole = OsmPbf.read(spark, one).orderBy("type", "id").collect().toSeq
+    val split = OsmPbf.read(spark, dir).orderBy("type", "id").collect().toSeq
     assert(split == whole && split.size == 59)
   }
 
@@ -119,8 +118,9 @@ class OsmPbfSpec extends AnyFunSuite with SparkSpec {
     val back = OsmPbf.read(spark, dir)
     assert(back.count() == 120)
     assert(back.select("id").as[Long].collect().toSet == (1L to 120L).toSet)
-    // splittable read sees the same union
-    assert(OsmPbf.readSplit(spark, dir).count() == 120)
+    // one range per shard
+    assert(new java.io.File(dir).listFiles().filter(_.getName.endsWith(".pbf"))
+      .map(f => OsmPbf.blobRanges(f.getPath).size).toSeq == Seq.fill(5)(1))
   }
 
   test("write cap fails fast") {

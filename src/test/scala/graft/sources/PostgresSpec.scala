@@ -276,7 +276,7 @@ class PostgresSpec extends SparkSpec {
     try {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
       val mem = MemoryStream[(Long, String)]
-      val dir = java.nio.file.Files.createTempDirectory("graft_pgstream").toString
+      val dir = tmpDir("graft_pgstream")
       val query = Postgres.writeStream(
           mem.toDF().toDF("id", "s"), url(server, "/stream_t"))
         .option("checkpointLocation", dir)

@@ -13,9 +13,6 @@ class ShapefileSpec extends AnyFunSuite with SparkSpec {
 
   import testImplicits._
 
-  private def tmpDir(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   test("reads a hand-built minimal point shapefile (spec bytes, no writer involved)") {
     val dir = tmpDir("shp-raw")
     // one Point(3.5, -2.25) record, built byte-by-byte from the ESRI spec
@@ -74,22 +71,40 @@ class ShapefileSpec extends AnyFunSuite with SparkSpec {
     assert(math.abs(area - 96.0) < 1e-9) // 100 - 4 hole
   }
 
-  test("readSplit: shx-based byte-range splits return the same rows as read") {
+  test("shx byte ranges: many small splits read the same rows as one split") {
     val dir = tmpDir("shp-split")
     val df = (1 to 23).map(i => (i.toString, i * 1.0, i * 0.5)).toDF("fid", "lon", "lat")
       .select(col("fid"), st_point(col("lon"), col("lat")).as("geometry"))
     Shapefile.write(df, s"$dir/many")
+    assert(Shapefile.recordRanges(s"$dir/many.shp", recordsPerSplit = 5).size == 5)
+    assert(Shapefile.recordRanges(s"$dir/many.shp", recordsPerSplit = 65536).size == 1)
     val whole = Shapefile.read(spark, dir)
       .select(col("fid"), st_x(col("geometry"))).as[(String, Double)].collect().toSet
-    val split = Shapefile.readSplit(spark, dir, recordsPerSplit = 5)
+    val split = Shapefile.read(spark, dir, recordsPerSplit = 5)
       .select(col("fid"), st_x(col("geometry"))).as[(String, Double)].collect().toSet
     assert(split == whole && split.size == 23)
     // multiple genuine splits
-    assert(Shapefile.readSplit(spark, dir, recordsPerSplit = 5).rdd.getNumPartitions >= 1)
+    assert(Shapefile.read(spark, dir, recordsPerSplit = 5).rdd.getNumPartitions >= 1)
   }
 
-  test("readSplit agrees with read on the reference's GDAL fixture") {
-    val refDir = java.nio.file.Files.createTempDirectory("graft-shp-ref").toString
+  test("record n of the .shp takes record n of the .dbf; a deleted .dbf record leaves nulls") {
+    val dir = tmpDir("shp-deleted")
+    val df = (1 to 3).map(i => (i.toString, i * 1.0)).toDF("fid", "lon")
+      .select(col("fid"), st_point(col("lon"), lit(0.0)).as("geometry"))
+    Shapefile.write(df, s"$dir/pts")
+    val dbf = Paths.get(dir, "pts.dbf")
+    val bytes = Files.readAllBytes(dbf)
+    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    bytes((bb.getShort(8) & 0xffff) + (bb.getShort(10) & 0xffff)) = '*' // record 2 deleted
+    Files.write(dbf, bytes)
+    val back = Shapefile.read(spark, dir, recordsPerSplit = 1)
+      .select(st_x(col("geometry")), col("fid")).collect()
+      .map(r => r.getDouble(0) -> Option(r.getString(1))).toMap
+    assert(back == Map(1.0 -> Some("1"), 2.0 -> None, 3.0 -> Some("3")))
+  }
+
+  test("small splits agree with one split on the reference's GDAL fixture") {
+    val refDir = tmpDir("graft-shp-ref")
     Seq("shp", "dbf", "shx").foreach { ext =>
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"/root/reference/tests/io/data/points.$ext"),
@@ -97,7 +112,7 @@ class ShapefileSpec extends AnyFunSuite with SparkSpec {
     }
     val whole = Shapefile.read(spark, refDir)
       .select(st_x(col("geometry"))).as[Double].collect().sorted.toSeq
-    val split = Shapefile.readSplit(spark, refDir, recordsPerSplit = 3)
+    val split = Shapefile.read(spark, refDir, recordsPerSplit = 3)
       .select(st_x(col("geometry"))).as[Double].collect().sorted.toSeq
     assert(split == whole && whole.nonEmpty)
   }
@@ -124,10 +139,11 @@ class ShapefileSpec extends AnyFunSuite with SparkSpec {
     assert(names.contains("_manifest.json"))
     val manifest = new String(Files.readAllBytes(Paths.get(dir, "_manifest.json")), "UTF-8")
     assert(manifest.contains("\"file\":\"part-00000.shp\"") && manifest.contains("\"rows\":"))
-    // both read paths see the union of shards, row-identical with the input
+    // one split per shard and many per shard both see the union, row-identical with the input
     val in = df.select("id", "name").orderBy("id").collect().toSeq
     assert(Shapefile.read(spark, dir).select("id", "name").orderBy("id").collect().toSeq == in)
-    assert(Shapefile.readSplit(spark, dir).select("id", "name").orderBy("id").collect().toSeq == in)
+    assert(Shapefile.read(spark, dir, recordsPerSplit = 4)
+      .select("id", "name").orderBy("id").collect().toSeq == in)
     // no driver cap: geometry x-values survive across all shards
     val xs = Shapefile.read(spark, dir)
       .select(st_x(col("geometry"))).as[Double].collect().sorted

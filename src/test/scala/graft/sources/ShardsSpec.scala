@@ -13,7 +13,7 @@ import graft.functions.GeoFunctions._
 /** One spec over every sharded writer: they all share the [[Shards]]
   * layout (one shard per non-empty partition, a manifest, a schema-bearing
   * shard for an empty frame) and refuse a directory holding an earlier
-  * write.
+  * write; their readers fail loud on a directory with no file of theirs.
   */
 class ShardsSpec extends AnyFunSuite with SparkSpec {
 
@@ -22,9 +22,9 @@ class ShardsSpec extends AnyFunSuite with SparkSpec {
       osm: Boolean = false)
 
   private val writers = Seq(
-    Writer("fgb", "fgb", geo = true, Fgb.writeSharded(_, _), Fgb.readSplit(_, _)),
+    Writer("fgb", "fgb", geo = true, Fgb.writeSharded(_, _), Fgb.read(_, _)),
     Writer("gpkg", "gpkg", geo = true, Gpkg.writeSharded(_, _), Gpkg.read(_, _)),
-    Writer("shp", "shp", geo = true, Shapefile.writeSharded(_, _), Shapefile.read),
+    Writer("shp", "shp", geo = true, Shapefile.writeSharded(_, _), Shapefile.read(_, _)),
     Writer("osm.pbf", "osm.pbf", geo = false, OsmPbf.writeSharded(_, _), OsmPbf.read,
       osm = true),
     Writer("sqlite", "sqlite", geo = false, SqliteDb.writeSharded(_, _), SqliteDb.read(_, _)),
@@ -34,12 +34,6 @@ class ShardsSpec extends AnyFunSuite with SparkSpec {
     Writer("arrow", "arrow", geo = false, ArrowIpc.write(_, _), ArrowIpc.read(_, _)),
     Writer("arrows", "arrows", geo = false, ArrowIpc.writeArrows(_, _),
       ArrowIpc.readArrows(_, _)))
-
-  private lazy val root = Files.createTempDirectory("graft-shards")
-
-  override def afterAll(): Unit = try graft.deleteRecursively(root) finally super.afterAll()
-
-  private def tmpDir(tag: String): String = Files.createTempDirectory(root, tag).toString
 
   /** 50 rows over 7 partitions, partitions 2 and 5 empty. */
   private def frame(w: Writer): DataFrame = {
@@ -109,6 +103,13 @@ class ShardsSpec extends AnyFunSuite with SparkSpec {
       assert(e.getMessage.contains(dir), e.getMessage)
       assert(new java.io.File(dir).listFiles().map(f => f.getName -> f.length).toMap == before)
       assert(rowsOf(w, w.read(spark, dir)) == rowsOf(w, df))
+    }
+
+    test(s"${w.name}: a directory with no .${w.ext} file fails with IllegalArgumentException naming it") {
+      val dir = tmpDir(s"${w.name}-none")
+      Files.write(Paths.get(dir, "other.txt"), "not a shard".getBytes("UTF-8"))
+      val e = intercept[IllegalArgumentException] { w.read(spark, dir).collect() }
+      assert(e.getMessage.contains(dir), e.getMessage)
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +8,7 @@ import graft.SparkSpec
 class SqliteDbSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
-  private def tmpFile(name: String): String = {
-    val d = Files.createTempDirectory("graft_sqlite").toString
-    new java.io.File(d).deleteOnExit()
-    s"$d/$name"
-  }
+  private def tmpFile(name: String): String = s"${tmpDir("graft_sqlite")}/$name"
 
   private lazy val fixture =
     getClass.getResource("/sqlite/interop.sqlite").getPath
@@ -85,7 +79,7 @@ class SqliteDbSpec extends AnyFunSuite with SparkSpec {
   test("writeSharded: one standalone sqlite per partition, directory reads back as one frame") {
     val df = spark.range(100).select(col("id").as("k"),
       concat(lit("row"), col("id")).as("v")).repartition(4)
-    val dir = Files.createTempDirectory("graft_sqlite_sh").toString
+    val dir = tmpDir("graft_sqlite_sh")
     SqliteDb.writeSharded(df, dir, table = "t")
     val shards = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".sqlite"))
     assert(shards.length == 4)

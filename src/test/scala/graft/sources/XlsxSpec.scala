@@ -11,7 +11,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   import testImplicits._
 
   test("reads the reference points.ods and agrees with the CSV twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ods")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-ods"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/reference/tests/io/data/points.ods"),
       dir.resolve("points.ods"))
@@ -25,7 +25,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("reads the reference points.xlsx and agrees with the CSV twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsx")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-xlsx"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/reference/tests/io/data/points.xlsx"),
       dir.resolve("points.xlsx"))
@@ -42,7 +42,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("typed columns: numeric xlsx/ods columns come back long/double like the CSV twin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsx-t")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-xlsx-t"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/reference/tests/io/data/points.xlsx"),
       dir.resolve("points.xlsx"))
@@ -68,7 +68,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("sheet addressed by user-visible name through workbook.xml") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsx-s")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-xlsx-s"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/reference/tests/io/data/points.xlsx"),
       dir.resolve("points.xlsx"))
@@ -104,7 +104,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
       zos.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       zos.closeEntry(); zos.close()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsx-ansi")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-xlsx-ansi"))
     // a.xlsx strictly larger: the sample file is Spark's first-listed
     // (size-descending bin packing), so size decides which file infers
     mkXlsx(dir, "a.xlsx", Seq("x") +: (1 to 12).map(i => Seq(i.toString)))
@@ -127,7 +127,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
         table("first", row("x") + row("1") + row("2")) +
         table("second", row("y") + row("9")) +
       "</office:document-content>"
-    val dir = java.nio.file.Files.createTempDirectory("graft-ods-multi")
+    val dir = java.nio.file.Paths.get(tmpDir("graft-ods-multi"))
     val zos = new java.util.zip.ZipOutputStream(
       new java.io.FileOutputStream(dir.resolve("m.ods").toFile))
     zos.putNextEntry(new java.util.zip.ZipEntry("content.xml"))
@@ -168,7 +168,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
       (2L, -0.25, false, "line1\nline2"),
       (3L, 1.0e7, true, null.asInstanceOf[String]))
       .toDF("id", "x", "flag", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsxw").toString
+    val dir = tmpDir("graft-xlsxw")
     Xlsx.write(df, s"$dir/t.xlsx")
     val back = Xlsx.read(spark, s"$dir/t.xlsx")
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq == Seq(
@@ -188,7 +188,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   test("sharded write: one workbook per partition, read back as one frame") {
     val df = spark.range(500)
       .select(col("id"), (col("id") % 7).cast("double").as("v")).repartition(4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsxs").toString
+    val dir = tmpDir("graft-xlsxs")
     Xlsx.writeSharded(df, dir)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".xlsx"))
     assert(files.length == 4)
@@ -196,14 +196,14 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
     assert(back.count() == 500)
     assert(back.agg(sum("id")).head().getLong(0) == (0L until 500L).sum)
     // an all-empty frame keeps the header-only schema
-    val empty = java.nio.file.Files.createTempDirectory("graft-xlsxe").toString
+    val empty = tmpDir("graft-xlsxe")
     Xlsx.writeSharded(df.limit(0), empty)
     val eb = Xlsx.read(spark, empty)
     assert(eb.count() == 0 && eb.schema.fieldNames.toSeq == Seq("id", "v"))
   }
 
   test("write guards: row cap fails fast, complex types reject") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsxg").toString
+    val dir = tmpDir("graft-xlsxg")
     val df = spark.range(20).toDF("id")
     intercept[IllegalArgumentException] {
       Xlsx.write(df, s"$dir/cap.xlsx", maxRows = 10)
@@ -220,7 +220,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
       (1L, 2.5, true, "héllo <&> ods"),
       (2L, -0.25, false, null.asInstanceOf[String]))
       .toDF("id", "x", "flag", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft-odsw").toString
+    val dir = tmpDir("graft-odsw")
     Xlsx.writeOds(df, s"$dir/t.ods")
     val back = Xlsx.readOds(spark, s"$dir/t.ods")
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq == Seq(
@@ -237,7 +237,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
         first.getMethod == java.util.zip.ZipEntry.STORED)
     } finally zf.close()
     // sharded twin reads back as one frame
-    val sdir = java.nio.file.Files.createTempDirectory("graft-odss").toString
+    val sdir = tmpDir("graft-odss")
     Xlsx.writeShardedOds(spark.range(100).toDF("id").repartition(3), sdir)
     assert(Xlsx.readOds(spark, sdir).count() == 100)
     // auto dispatch with WKT geometry
@@ -251,7 +251,7 @@ class XlsxSpec extends AnyFunSuite with SparkSpec {
   test("writeAuto xlsx: geometry rides as WKT and parses back") {
     val pts = Seq((1L, 2.0, 3.0), (2L, -4.5, 0.25)).toDF("id", "x", "y")
       .select(col("id"), st_aswkb(st_point(col("x"), col("y"))).as("geometry"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-xlsxgeo").toString
+    val dir = tmpDir("graft-xlsxgeo")
     GeoSources.writeAuto(pts, s"$dir/pts.xlsx")
     val back = GeoSources.readAuto(spark, s"$dir/pts.xlsx")
     val xs = back.select(col("id"), st_x(col("geometry")).as("px")).collect()

@@ -401,7 +401,7 @@ class EventStreamSpec extends AnyFunSuite with SparkSpec {
 
   test("readStream over the events table produces the same windowed counts") {
     // file source needs a directory; stage the single-file table into one
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = tmpDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       java.nio.file.Paths.get(dir, "events.parquet"))
