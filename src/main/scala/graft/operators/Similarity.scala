@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.functions.TextFunctions._
 
@@ -41,19 +43,24 @@ object Similarity {
     when(na * nb > 0, dot / (na * nb))
   }
 
-  /** Bounded top-k buffer: (id, score) pairs, kept sorted by (-score, id) —
-    * deterministic under ties. Map-side partials merge in O(k).
+  /** The top-k order of (id, score) pairs: score descending, then id
+    * ascending — deterministic under ties.
+    */
+  private[operators] val topKOrder: Ordering[(Long, Double)] =
+    Ordering.by[(Long, Double), (Double, Long)](x => (-x._2, x._1))(
+      Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
+
+  /** Bounded top-k buffer: (id, score) pairs, kept sorted by [[topKOrder]].
+    * Map-side partials merge in O(k).
     */
   class TopKAggregator(k: Int)
       extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
-    private def order(x: (Long, Double)): (Double, Long) = (-x._2, x._1)
-    private val ord = implicitly[Ordering[(Double, Long)]]
     override def zero: Seq[(Long, Double)] = Nil
     override def reduce(buf: Seq[(Long, Double)], x: (Long, Double)): Seq[(Long, Double)] =
-      if (buf.size >= k && ord.gteq(order(x), order(buf.last))) buf
-      else ((x +: buf).sortBy(order)).take(k)
+      if (buf.size >= k && topKOrder.gteq(x, buf.last)) buf
+      else (x +: buf).sorted(topKOrder).take(k)
     override def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)]): Seq[(Long, Double)] =
-      (a ++ b).sortBy(order).take(k)
+      (a ++ b).sorted(topKOrder).take(k)
     override def finish(buf: Seq[(Long, Double)]): Seq[(Long, Double)] = buf
     override def bufferEncoder: Encoder[Seq[(Long, Double)]] = ExpressionEncoder()
     override def outputEncoder: Encoder[Seq[(Long, Double)]] = ExpressionEncoder()
@@ -345,6 +352,14 @@ object Similarity {
     (assigned, centroidTable)
   }
 
+  /** The IVF entry points' argument check, made before any job runs: `k = 0`
+    * would otherwise die inside a task and `nprobe = 0` return no rows.
+    */
+  private def requireTopK(k: Int, nprobe: Int): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+  }
+
   /** Query-side probe set: each query's `nprobe` nearest centroids by
     * cosine, deterministic tie-break on cell id. The window runs over the
     * query×nlist pair table — model-sized, never the corpus.
@@ -373,6 +388,7 @@ object Similarity {
       seed: Long = 42L,
       fitSampleBytes: Long = 64L << 20,
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
+    requireTopK(k, nprobe)
     val (assigned, centroidTable) =
       fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, centroids)
     val probes = probeCells(queries, centroidTable, vecCol, idCol, nprobe)
@@ -488,9 +504,23 @@ object Similarity {
   /** Serves a query batch from a persisted [[ivfBuildIndex]] layout: probe
     * the `nprobe` nearest centroids per query, score only the probed cells'
     * rows, O(k) partial-merge top-k. With a `cell`-partitioned parquet
-    * `assigned`, the cell equi-join prunes unprobed partitions at the scan.
+    * `assigned`, only the probed cells' partitions are scanned.
     * `nprobe = nlist` probes everything — exact brute-force equivalence,
     * which is how the oracle gates this path.
+    *
+    * A local query frame (one that optimizes to a local relation) of at
+    * most 1,024 rows, with no null id or vector, is served from the driver
+    * in two Spark jobs: the query rows are collected (no job), the centroid
+    * table is collected (one job), each query's probes are ranked on the
+    * driver with the same cosine kernel and cell-id tie rule, and one scan
+    * of the probed cells (`cell IN (…)`) keeps a bounded top-k per query in
+    * each task, which the driver merges in [[TopKAggregator]]'s order. That
+    * result is materialized at call time and returned as a local frame with
+    * the distributed plan's schema; driver memory is O(tasks × queries × k).
+    * Other batches (larger, computed by a plan, or streaming) run the
+    * distributed plan: a broadcast probe join and the cell equi-join. The
+    * cap is the largest batch measured, not a crossover: on 4 cores the
+    * driver path won at every size from 1 to 1,024 queries.
     */
   def ivfSearchIndex(
       assigned: DataFrame,
@@ -499,14 +529,105 @@ object Similarity {
       vecCol: String,
       idCol: String,
       k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val a = assigned.select(col("neighbor_id"), col("vec").as("__cv"),
-      col("cell").as("__cell"))
-    val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
-    val probes = probeCells(queries, c, vecCol, idCol, nprobe)
-    val scored = a.join(probes, Seq("__cell"))
-      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
-    topkColumns(scored, k)
+      nprobe: Int = 4): DataFrame =
+    ivfSearchIndex(assigned, centroids, queries, vecCol, idCol, k, nprobe, DriverQueries)
+
+  /** Query rows up to which [[ivfSearchIndex]] serves a batch on the driver. */
+  private val DriverQueries = 1024
+
+  /** [[ivfSearchIndex]] with its driver-path cap on query rows; a cap of 0
+    * forces the distributed plan.
+    */
+  private[graft] def ivfSearchIndex(
+      assigned: DataFrame,
+      centroids: DataFrame,
+      queries: DataFrame,
+      vecCol: String,
+      idCol: String,
+      k: Int,
+      nprobe: Int,
+      driverQueries: Int): DataFrame = {
+    requireTopK(k, nprobe)
+    val q = queries.select(col(idCol).cast("long").as("query_id"),
+      col(vecCol).cast("array<double>").as("__qv"))
+    // only a local query frame is served on the driver: collecting it runs no job
+    val batch =
+      if (queries.isStreaming || driverQueries < 1) None
+      else q.queryExecution.optimizedPlan match {
+        case l: LocalRelation if l.data.length <= driverQueries =>
+          Some(q.collect()).filter(_.forall(r => !r.anyNull))
+        case _ => None
+      }
+    batch match {
+      case Some(rows) =>
+        val spark = queries.sparkSession
+        val scored = StructType(Seq(q.schema("query_id"),
+          StructField("neighbor_id", LongType), StructField("cosine", DoubleType)))
+        val schema = topkColumns(spark.createDataFrame(java.util.List.of[Row](), scored), k).schema
+        spark.createDataFrame(
+          java.util.Arrays.asList(searchOnDriver(assigned, centroids, rows, k, nprobe): _*), schema)
+      case None =>
+        val a = assigned.select(col("neighbor_id"), col("vec").as("__cv"),
+          col("cell").as("__cell"))
+        val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
+        val probes = probeCells(queries, c, vecCol, idCol, nprobe)
+        val scored = a.join(probes, Seq("__cell"))
+          .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
+        topkColumns(scored, k)
+    }
+  }
+
+  /** [[ivfSearchIndex]]'s driver path over collected (query_id, __qv) rows:
+    * (query_id, neighbor_id, cosine) rows, top `k` per query id.
+    */
+  private def searchOnDriver(assigned: DataFrame, centroids: DataFrame, queries: Array[Row],
+      k: Int, nprobe: Int): Array[Row] = {
+    import graft.functions.TextKernel.vecCosine
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    def vector(r: Row, i: Int) = r.getSeq[Double](i).toArray
+    // the ≤ nlist-row quantizer model, one job
+    val cents = centroids.select(col("cell").cast("int"), col("centroid").cast("array<double>"))
+      .collect().map(r => (r.getInt(0), UnsafeArrayData.fromPrimitiveArray(vector(r, 1))))
+    val qvs = queries.map(r => UnsafeArrayData.fromPrimitiveArray(vector(r, 1)))
+    // probeCells' window: per query id (a repeated id shares one window), the
+    // nprobe best (vector, cell) pairs by cosine descending in SQL order,
+    // then cell id
+    val byQuery = queries.indices.groupBy(queries(_).getLong(0))
+    val byCell = byQuery.values.toSeq.flatMap { qis =>
+      qis.flatMap(qi => cents.map { case (cell, c) => (vecCosine(qvs(qi), c), cell, qi) })
+        .sortWith { (a, b) =>
+          val o = compareDoubles(b._1, a._1)
+          o < 0 || (o == 0 && a._2 < b._2)
+        }
+        .take(nprobe).map(p => p._2 -> p._3)
+    }.groupMap(_._1)(_._2)
+    if (byCell.isEmpty) return Array.empty
+    val scan = assigned.where(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+      .select(col("neighbor_id").cast("long"), col("vec").cast("array<double>"),
+        col("cell").cast("int"))
+    val qe = scan.queryExecution
+    // one job: each task keeps a bounded top-k per query over its rows
+    val partials: Array[Array[Array[(Long, Double)]]] =
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("collect")) {
+        qe.toRdd.mapPartitions { rows =>
+          val tops = Array.fill(qvs.length)(
+            scala.collection.mutable.PriorityQueue.empty[(Long, Double)](topKOrder))
+          rows.foreach { r =>
+            if (!r.isNullAt(1)) byCell.get(r.getInt(2)).foreach(_.foreach { qi =>
+              val x = (r.getLong(0), vecCosine(qvs(qi), r.getArray(1)))
+              val top = tops(qi)
+              if (top.size < k) top.enqueue(x)
+              else if (topKOrder.lt(x, top.head)) { top.dequeue(); top.enqueue(x) }
+            })
+          }
+          Iterator(tops.map(_.toArray))
+        }.collect()
+      }
+    byQuery.toArray.flatMap { case (qid, qis) =>
+      val hits = for (qi <- qis; part <- partials.toSeq; x <- part(qi).toSeq) yield x
+      hits.sorted(topKOrder).take(k).map { case (id, cos) => Row(qid, id, cos) }
+    }
   }
 
   /** Serves a query batch from a persisted [[ivfBuildIndex]] layout with the
@@ -534,6 +655,7 @@ object Similarity {
       k: Int,
       nprobe: Int = 4,
       rescore: Int = 4): DataFrame = {
+    requireTopK(k, nprobe)
     val narrow = assigned.select(col("neighbor_id"), col("cell").as("__cell"),
       col("q8").as("__cq"), col("q8_scale").as("__cs"))
     val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
@@ -594,6 +716,7 @@ object Similarity {
       seed: Long = 42L,
       fitSampleBytes: Long = 64L << 20,
       quantizer: Option[Array[Array[Double]]] = None): DataFrame = {
+    requireTopK(k, nprobe)
     val (assigned, centroids) =
       fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, quantizer)
     // narrow candidate-stage projection: quantize, then DROP the float column

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -826,15 +826,31 @@ object TextAnalysis {
     } finally newPost.unpersist()
   }
 
-  /** Serves a query batch against a [[buildBM25Index]] layout. The query
-    * side's (query, term, bucket) rows are collected to the driver once;
-    * the postings read covers only the bucket directories those terms hash
-    * into, so the corpus-side read is proportional to the query vocabulary,
-    * not the index. Each query term's df is counted from those postings in
-    * one map-side-combined aggregate — exact, because every posting of a
-    * term sits in its bucket. A batch whose terms hit no bucket directory
-    * returns an empty frame with the usual (queryIdCol, idCol, score)
-    * schema; doc ids come back as BIGINT.
+  /** Serves a query batch against a [[buildBM25Index]] layout. Each query's
+    * distinct terms and their buckets are collected to the driver once (a
+    * projection, so no job runs for a local query frame); the postings read
+    * covers only the bucket directories those terms hash into, so the
+    * corpus-side read is proportional to the query vocabulary, not the
+    * index. Each query term's df is counted from those postings — exact,
+    * because every posting of a term sits in its bucket. A batch whose terms
+    * hit no bucket directory returns an empty frame with the usual
+    * (queryIdCol, idCol, score) schema; doc ids come back as BIGINT.
+    *
+    * When the query terms match at most 49,152 postings, the batch is
+    * scored on the driver in two Spark jobs, submitted together. One
+    * collects the term-filtered postings, each task returning at most
+    * cap + 1 rows, so the driver never holds more than tasks × (cap + 1) of
+    * them; the other reads `stats/`. df, the BM25 term weights (the
+    * distributed plan's own column expression, evaluated over local rows),
+    * the per-(query, doc) sums, rounding (BigDecimal HALF_UP, as Spark's
+    * `round`) and the top-k (score desc, doc asc) run on the driver. That
+    * result is materialized at call time and returned as a local frame with
+    * the distributed plan's schema. A batch past the cap pays those two jobs
+    * and then runs the distributed plan: a map-side-combined df aggregate
+    * and broadcast joins feed the shared scoring tail. The cap sits at the
+    * measured crossover of the two paths on 4 cores: the driver path won at
+    * 43k postings and lost at 66k, where its per-posting cost overtakes the
+    * distributed plan's fixed job overhead.
     */
   def searchBM25Index(
       spark: SparkSession,
@@ -845,29 +861,111 @@ object TextAnalysis {
       idCol: String = "doc_id",
       k1: Double = 1.2,
       b: Double = 0.75,
-      topK: Int = 10): DataFrame = {
-    val qterms = queries.select(col(queryIdCol).as("__qid"),
-        explode(array_distinct(wordTokens(col(queryTextCol)))).as("__term"))
-      .withColumn("__bucket", termBucket(col("__term")))
-    val qrows = qterms.collect().toSeq
-    val local = spark.createDataFrame(java.util.List.of(qrows: _*), qterms.schema)
-      .drop("__bucket")
+      topK: Int = 10): DataFrame =
+    searchBM25Index(spark, path, queries, queryIdCol, queryTextCol, idCol, k1, b, topK,
+      DriverPostings)
+
+  /** Matched postings up to which [[searchBM25Index]] scores on the driver. */
+  private val DriverPostings = 48 << 10
+
+  /** [[searchBM25Index]] with its driver-path cap on matched postings; a cap
+    * below 1 forces the distributed plan.
+    */
+  private[graft] def searchBM25Index(
+      spark: SparkSession,
+      path: String,
+      queries: DataFrame,
+      queryIdCol: String,
+      queryTextCol: String,
+      idCol: String,
+      k1: Double,
+      b: Double,
+      topK: Int,
+      driverPostings: Int): DataFrame = {
+    require(topK >= 1, "topK must be >= 1")
+    val qcols = queries.select(col(queryIdCol).as("__qid"),
+        array_distinct(wordTokens(col(queryTextCol))).as("__terms"))
+      .withColumn("__buckets", transform(col("__terms"), termBucket(_)))
+    val qrows = qcols.collect()
+    val qterms = qrows.toSeq.filterNot(_.isNullAt(1))
+      .flatMap(r => r.getSeq[String](1).zip(r.getSeq[Long](2)).map((r.get(0), _)))
     val root = new org.apache.hadoop.fs.Path(s"$path/postings")
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = qrows.map(_.getLong(2)).distinct.sorted
+    val dirs = qterms.map(_._2._2).distinct.sorted
       .map(bkt => new org.apache.hadoop.fs.Path(root, s"__bucket=$bkt"))
       .filter(fs.exists).map(_.toString)
     val postings =
       if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), postingsSchema)
       else spark.read.schema(postingsSchema).option("basePath", root.toString)
         .parquet(dirs: _*)
-        .where(col("__term").isin(qrows.map(_.getString(1)).distinct: _*))
-    // one row per distinct query term — small enough to broadcast
-    val dfreq = postings.groupBy("__term").agg(count(lit(1)).as("__df"))
-    val matched = local.join(postings, "__term")
-      .join(broadcast(dfreq), "__term")
-      .crossJoin(broadcast(spark.read.schema(statsSchema).parquet(s"$path/stats")))
-    scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
+        .where(col("__term").isin(qterms.map(_._2._1).distinct: _*))
+    val stats = spark.read.schema(statsSchema).parquet(s"$path/stats")
+    val qid = qcols.schema("__qid")
+    // the driver path's (postings, stats) rows: two jobs submitted together,
+    // each postings task returning at most cap + 1 rows
+    val collected =
+      if (driverPostings < 1) None
+      else if (dirs.isEmpty) Some((Array.empty[Row], Array.empty[Row]))
+      else {
+        val hits = postings.select("__term", "__doc", "__tf", "__dl")
+        var post = Array.empty[Row]
+        var st = Array.empty[Row]
+        Concurrent.awaitAll(
+          () => post = hits.mapPartitions(_.take(driverPostings + 1))(Encoders.row(hits.schema))
+            .collect(),
+          () => st = stats.collect())
+        Some((post, st)).filter(_._1.length <= driverPostings)
+      }
+    collected match {
+      case Some((post, st)) =>
+        val out = StructType(Seq(qid, StructField("__doc", LongType),
+          StructField("score", DoubleType)))
+        val rows = scoreOnDriver(spark, qrows, post, st, k1, b, topK)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), out)
+          .select(col("__qid").as(queryIdCol), col("__doc").as(idCol), col("score"))
+      case None =>
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(qterms.map { case (q, (t, _)) => Row(q, t) }: _*),
+          StructType(Seq(qid, StructField("__term", StringType))))
+        // one row per distinct query term — small enough to broadcast
+        val dfreq = postings.groupBy("__term").agg(count(lit(1)).as("__df"))
+        val matched = local.join(postings, "__term")
+          .join(broadcast(dfreq), "__term")
+          .crossJoin(broadcast(stats))
+        scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
+    }
+  }
+
+  /** [[searchBM25Index]]'s driver path over collected (__qid, __terms) rows,
+    * their (__term, __doc, __tf, __dl) postings and the `stats/` row:
+    * (__qid, __doc, score) rows, top `topK` per query id.
+    */
+  private def scoreOnDriver(spark: SparkSession, queries: Array[Row], post: Array[Row],
+      st: Array[Row], k1: Double, b: Double, topK: Int): Seq[Row] = {
+    if (post.isEmpty || st.isEmpty) return Nil
+    val df = post.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
+    // each posting's term weight from scoreBM25's own expression: a
+    // projection of local rows is evaluated on the driver, with no job
+    val matched = post.toSeq.map(r =>
+      Row.fromSeq(r.toSeq ++ (df(r.getString(0)) +: st.head.toSeq)))
+    val weights = spark.createDataFrame(java.util.Arrays.asList(matched: _*), StructType(
+        postingsSchema.fields.init ++ (StructField("__df", LongType) +: statsSchema.fields)))
+      .select(col("__term"), col("__doc"), bm25Term(k1, b)).collect()
+      .groupMap(_.getString(0))(r => (r.getLong(1), r.getDouble(2)))
+    val sums = scala.collection.mutable.LinkedHashMap[(Any, Long), Double]()
+    for (q <- queries if !q.isNullAt(1); t <- q.getSeq[String](1);
+         (doc, w) <- weights.getOrElse(t, Array.empty[(Long, Double)])) {
+      val key = (q.get(0), doc)
+      sums(key) = sums.getOrElse(key, 0.0) + w
+    }
+    // Spark's round(.., 4) of a double: BigDecimal HALF_UP
+    def round4(x: Double) =
+      if (x.isNaN || x.isInfinite) x
+      else BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // the distributed plan's window order: score descending, then doc
+    sums.toSeq.map { case ((q, doc), w) => (q, doc, round4(w)) }
+      .groupBy(_._1).values.toSeq
+      .flatMap(_.sortBy(r => (-r._3, r._2)).take(topK).map(r => Row(r._1, r._2, r._3)))
   }
 
   private def searchPostings(
@@ -888,6 +986,18 @@ object TextAnalysis {
     scoreBM25(matched, queryIdCol, idCol, k1, b, topK)
   }
 
+  /** One matched (term, posting) row's BM25 term weight, idf × saturated
+    * tf, from its (__tf, __dl, __df, __n, __tt) columns.
+    */
+  private def bm25Term(k1: Double, b: Double): Column = {
+    val avgdl = col("__tt").cast("double") / col("__n").cast("double")
+    val idf = log(lit(1.0) +
+      (col("__n") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)))
+    val tfNorm = col("__tf") * lit(k1 + 1.0) /
+      (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / avgdl))
+    idf * tfNorm
+  }
+
   /** Shared scoring tail: matched = (__qid, __doc, __tf, __dl, __df, __n,
     * __tt) rows, one per (query term × posting) hit.
     */
@@ -899,14 +1009,9 @@ object TextAnalysis {
       b: Double,
       topK: Int): DataFrame = {
     require(topK >= 1, "topK must be >= 1")
-    val avgdl = col("__tt").cast("double") / col("__n").cast("double")
-    val idf = log(lit(1.0) +
-      (col("__n") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)))
-    val tfNorm = col("__tf") * lit(k1 + 1.0) /
-      (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / avgdl))
     val scored = matched
       .groupBy(col("__qid"), col("__doc"))
-      .agg(round(sum(idf * tfNorm), 4).as("score"))
+      .agg(round(sum(bm25Term(k1, b)), 4).as("score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__qid").orderBy(col("score").desc, col("__doc"))
     scored.withColumn("__rn", row_number().over(w))

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 /** Generic SQLite table driver — the non-spatial twin of the GeoPackage
@@ -53,26 +53,29 @@ object SqliteDb {
 
   /** The bytes of every file under `path` whose name matches `glob` (every
     * file when None), one row per file, after failing loudly on a file past
-    * [[maxFileBytes]] (a metadata-only check: content is never scanned) or
-    * on an empty match. Shared with [[Gpkg]] (a GeoPackage is a SQLite page
-    * graph too) and [[Xlsx]] (a workbook is one zip).
+    * [[maxFileBytes]] or on an empty match. Both checks read the relation's
+    * file listing on the driver: no job runs and no content is scanned.
+    * Shared with [[Gpkg]] (a GeoPackage is a SQLite page graph too) and
+    * [[Xlsx]] (a workbook is one zip).
     */
   private[sources] def binaryFiles(spark: SparkSession, path: String,
       glob: Option[String]): Dataset[Array[Byte]] = {
     import spark.implicits._
     val r = spark.read.format("binaryFile")
     val files = glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
-    files.select("path", "length").where(col("length") > maxFileBytes).limit(1).collect()
-      .headOption.foreach { row =>
-        throw new IllegalArgumentException(
-          s"${row.getString(0)} is ${row.getLong(1)} bytes, past the $maxFileBytes-byte " +
-            "single-file cap — whole-file formats decode one file per task; shard the " +
-            "data (writeSharded) or raise the cap (SqliteDb.maxFileBytes) if the " +
-            "executors have the heap for it")
-      }
-    val ds = files.select("content").as[Array[Byte]]
-    require(!ds.isEmpty, s"no files matching ${glob.getOrElse("*")} under $path")
-    ds
+    val listed = files.queryExecution.analyzed
+      .collect { case l: LogicalRelation => l.relation }
+      .collect { case h: HadoopFsRelation => h.location.listFiles(Nil, Nil).flatMap(_.files) }
+      .flatten
+    listed.find(_.getLen > maxFileBytes).foreach { f =>
+      throw new IllegalArgumentException(
+        s"${f.getPath} is ${f.getLen} bytes, past the $maxFileBytes-byte " +
+          "single-file cap — whole-file formats decode one file per task; shard the " +
+          "data (writeSharded) or raise the cap (SqliteDb.maxFileBytes) if the " +
+          "executors have the heap for it")
+    }
+    require(listed.nonEmpty, s"no files matching ${glob.getOrElse("*")} under $path")
+    files.select("content").as[Array[Byte]]
   }
 
   /** `*.{sqlite,sqlite3,db}` unless `path` names one such file. */

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Physical-plan audits for the scale claims in SURVEY §4/§6: the grid
   * spatial join must never degenerate into a cartesian product, dimension
@@ -190,10 +191,32 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("persisted-index search joins assigned cells as a hash join") {
+    // the registry query's batch is a parquet frame: the distributed plan
     val plan = physical(q("sim_ivf_index"))
     assert(!plan.contains("CartesianProduct"), s"sim_ivf_index cartesian:\n$plan")
     assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
       s"cell join not an equi-join:\n$plan")
+    // the same batch as a local frame is served on the driver: the plans it
+    // ran include a cell-partitioned scan filtered on `cell`, and no cartesian
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val emb = graft.readTable(spark, sfDir, "embeddings")
+    val (assigned, centroids) =
+      graft.operators.Similarity.ivfBuildIndex(emb, "embedding", "vec_id", nlist = 8)
+    val dir = tmpDir("ivfplan")
+    assigned.write.partitionBy("cell").parquet(s"$dir/assigned")
+    centroids.write.parquet(s"$dir/centroids")
+    val batch = emb.where(col("vec_id") < 8)
+    val local = spark.createDataFrame(java.util.Arrays.asList(batch.collect(): _*), batch.schema)
+    val (served, _, plans) = traced(graft.operators.Similarity.ivfSearchIndex(
+      spark.read.parquet(s"$dir/assigned"), spark.read.parquet(s"$dir/centroids"),
+      local, "embedding", "vec_id", 5, 8))
+    assert(servedOnDriver(served))
+    val executed = plans.map(_.executedPlan)
+    executed.foreach(p => assert(!p.toString.contains("CartesianProduct"), s"cartesian:\n$p"))
+    val cellScans = executed.flatMap(_.collect { case s: FileSourceScanExec => s })
+      .filter(_.partitionFilters.exists(_.references.exists(_.name == "cell")))
+    assert(cellScans.nonEmpty,
+      s"no scan with a partition filter on cell:\n${executed.mkString("\n")}")
   }
 
   test("persisted int8 index: hash joins only, candidate scan prunes the float column") {

@@ -2,7 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,6 +31,50 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     }
     Files.createTempDirectory(root, tag).toString
+  }
+
+  /** Whether `df` optimizes to a local relation: its rows were computed
+    * before any action on it.
+    */
+  protected def servedOnDriver(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** `df`'s rows in one fixed order, for exact comparisons. */
+  protected def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+
+  /** Runs `body` and returns its value with the Spark jobs it started and
+    * the query executions that completed while it ran. Jobs are told apart
+    * by a job group set on this thread, which the threads it starts
+    * inherit; both lists are read after the listener bus has drained.
+    */
+  protected def traced[T](body: => T): (T, Int, Seq[QueryExecution]) = {
+    val sc = spark.sparkContext
+    val group = s"traced-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get, plans.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
   }
 
   override def afterAll(): Unit =

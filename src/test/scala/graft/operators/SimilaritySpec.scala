@@ -333,6 +333,103 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(cellDirs > 1, "assigned corpus not partitioned by cell")
   }
 
+  // a persisted index read back with its fixed schemas (no inference job)
+  private def persistedIvf(dir: String) = (
+    spark.read.schema("neighbor_id BIGINT, vec ARRAY<FLOAT>, q8 ARRAY<TINYINT>, " +
+      "q8_scale DOUBLE, cell INT").parquet(s"$dir/assigned"),
+    spark.read.schema("cell INT, centroid ARRAY<FLOAT>").parquet(s"$dir/centroids"))
+  private def writeIvf(index: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      dir: String): Unit = {
+    index._1.write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
+    index._2.write.mode("overwrite").parquet(s"$dir/centroids")
+  }
+
+  test("persisted IVF index: a warm single-query search runs at most 2 Spark jobs") {
+    val dir = tmpDir("ivfjobs")
+    writeIvf(Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 6), dir)
+    val (assigned, centroids) = persistedIvf(dir)
+    val q = corpus.where(col("vec_id") === 5L).collect().toSeq
+    val one = spark.createDataFrame(java.util.List.of(q: _*), corpus.schema)
+    Similarity.ivfSearchIndex(assigned, centroids, one, "embedding", "vec_id", k = 5, nprobe = 2)
+      .collect()
+    val (out, jobs, _) = traced(Similarity.ivfSearchIndex(assigned, centroids, one,
+      "embedding", "vec_id", k = 5, nprobe = 2).collect())
+    assert(out.length == 5 && out.exists(_.getLong(1) == 5L))
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("persisted IVF index: the driver path equals the distributed plan, schema included") {
+    val dir = tmpDir("ivfpaths")
+    writeIvf(Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 6), dir)
+    val (assigned, centroids) = persistedIvf(dir)
+    // a repeated query id pools both vectors' candidates, as the aggregate
+    // does; the batch is a local frame, which is what the driver path serves
+    val queries = {
+      val u = corpus.where(col("vec_id") < 8).unionByName(
+        corpus.where(col("vec_id") === 20L).withColumn("vec_id", lit(3L)))
+      spark.createDataFrame(java.util.Arrays.asList(u.collect(): _*), u.schema)
+    }
+    Seq(1 -> 3, 3 -> 5, 6 -> 5, 6 -> 40).foreach { case (nprobe, k) =>
+      val driver = Similarity.ivfSearchIndex(assigned, centroids, queries,
+        "embedding", "vec_id", k, nprobe)
+      val plan = Similarity.ivfSearchIndex(assigned, centroids, queries,
+        "embedding", "vec_id", k, nprobe, 0)
+      assert(servedOnDriver(driver) && !servedOnDriver(plan))
+      assert(driver.schema == plan.schema, s"${driver.schema} vs ${plan.schema}")
+      assert(sortedRows(driver) == sortedRows(plan), s"nprobe $nprobe, k $k")
+    }
+    // probing every cell is brute force, scores included
+    val full = Similarity.ivfSearchIndex(assigned, centroids, corpus.where(col("vec_id") < 8),
+      "embedding", "vec_id", k = 5, nprobe = 6)
+    val exact = Similarity.bruteForceTopK(corpus, corpus.where(col("vec_id") < 8),
+      "embedding", "vec_id", k = 5)
+    assert(servedOnDriver(full) && sortedRows(full) == sortedRows(exact))
+  }
+
+  test("persisted IVF index: a search after refresh equals a full rebuild's, on the driver") {
+    val base = corpus.where(col("vec_id") % 3 =!= 2)
+    val refreshed = tmpDir("ivfrfd1")
+    writeIvf(Similarity.ivfBuildIndex(base, "embedding", "vec_id", nlist = 6), refreshed)
+    Similarity.ivfRefreshIndex(spark, refreshed, corpus.where(col("vec_id") % 3 === 2),
+      "embedding", "vec_id")
+    val quant = persistedIvf(refreshed)._2.collect().sortBy(_.getInt(0))
+      .map(_.getSeq[Float](1).map(_.toDouble).toArray)
+    val rebuilt = tmpDir("ivfrfd2")
+    writeIvf(Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", quantizer = Some(quant)),
+      rebuilt)
+    val queries = corpus.where(col("vec_id") < 8)
+    def search(dir: String) = {
+      val (a, c) = persistedIvf(dir)
+      Similarity.ivfSearchIndex(a, c, queries, "embedding", "vec_id", k = 5, nprobe = 2)
+    }
+    val (got, want) = (search(refreshed), search(rebuilt))
+    assert(servedOnDriver(got) && servedOnDriver(want))
+    assert(got.schema == want.schema && sortedRows(got) == sortedRows(want))
+  }
+
+  test("IVF entry points reject k < 1 and nprobe < 1 before any job runs") {
+    val dir = tmpDir("ivfargs")
+    writeIvf(Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 4), dir)
+    val (assigned, centroids) = persistedIvf(dir)
+    val queries = corpus.where(col("vec_id") < 2)
+    Seq((0, 2), (3, 0)).foreach { case (k, nprobe) =>
+      val calls = Seq[() => org.apache.spark.sql.DataFrame](
+        () => Similarity.ivfTopK(corpus, queries, "embedding", "vec_id", k,
+          nlist = 4, nprobe = nprobe),
+        () => Similarity.ivfSearchIndex(assigned, centroids, queries,
+          "embedding", "vec_id", k, nprobe),
+        () => Similarity.int8IvfTopK(corpus, queries, "embedding", "vec_id", k,
+          nlist = 4, nprobe = nprobe),
+        () => Similarity.int8IvfSearchIndex(assigned, centroids, queries,
+          "embedding", "vec_id", k, nprobe))
+      calls.foreach { call =>
+        val (e, jobs, _) = traced(intercept[IllegalArgumentException](call().collect()))
+        assert(e.getMessage.contains(if (k < 1) "k must be >= 1" else "nprobe must be >= 1"))
+        assert(jobs == 0, s"$jobs jobs before the argument check")
+      }
+    }
+  }
+
   test("persisted IVF index: partial probe keeps recall on clustered data") {
     val queries = corpus.where(col("vec_id") < 8)
     val (assigned, centroids) =

@@ -402,19 +402,60 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
     val dir = tmpDir("bm25idx")
     TextAnalysis.buildBM25Index(corpus, dir)
     val direct = hits(TextAnalysis.searchBM25(corpus, qs, topK = 5))
-    val served = TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5)
+    val (served, _, plans) = traced(TextAnalysis.searchBM25Index(spark, dir, qs, topK = 5))
     assert(hits(served) == direct && direct.nonEmpty)
-    // the postings scan's root paths are exactly the query terms' bucket
+    // the postings scan the search ran reads exactly the query terms' bucket
     // directories — directory-level pruning is the whole point of the layout
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val roots = served.queryExecution.optimizedPlan
-      .collect { case l: LogicalRelation => l.relation }
+    val roots = plans.flatMap(_.optimizedPlan.collect { case l: LogicalRelation => l.relation })
       .collect { case r: HadoopFsRelation => r.location.rootPaths }
       .filter(_.exists(_.getParent.getName == "postings"))
     assert(roots.nonEmpty)
     roots.foreach { ps =>
       assert(ps.map(_.getName).toSet == bucketDirs(qs, "query") && ps.size == ps.toSet.size, ps)
     }
+  }
+
+  // the distributed plan, which a driver cap of 0 forces
+  private def fallbackBM25(dir: String, qs: org.apache.spark.sql.DataFrame, topK: Int) =
+    TextAnalysis.searchBM25Index(spark, dir, qs, "query_id", "query", "doc_id",
+      1.2, 0.75, topK, 0)
+
+  test("BM25 index: a warm single-query search runs at most 2 Spark jobs") {
+    val corpus = (0 until 60).map(i =>
+      (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text")
+    val dir = tmpDir("bm25jobs")
+    TextAnalysis.buildBM25Index(corpus, dir)
+    val q = Seq((1L, "alpha common2 word7")).toDF("query_id", "query")
+    TextAnalysis.searchBM25Index(spark, dir, q, topK = 5).collect()
+    val (out, jobs, _) = traced(TextAnalysis.searchBM25Index(spark, dir, q, topK = 5).collect())
+    assert(out.nonEmpty)
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("BM25 index: the driver path equals the distributed plan, schema included") {
+    val corpus = (0 until 60).map(i =>
+      (i.toLong, s"word$i alpha beta common${i % 5} tail")).toDF("doc_id", "text")
+    val dir = tmpDir("bm25paths")
+    TextAnalysis.buildBM25Index(corpus, dir)
+    val present = bucketDirs(corpus, "text")
+    val miss = (0 until 100).map(i => s"zz$i")
+      .find(t => bucketDirs(Seq(t).toDF("t"), "t").intersect(present).isEmpty).get
+    // ties at the top-k cut, repeated terms, a repeated query id, an empty
+    // and a null query
+    val batch = Seq[(Long, String)]((1L, "alpha common2"), (2L, "Tail tail word7"),
+        (3L, "common3 beta"), (3L, "word9"), (4L, ""), (5L, null), (6L, s"alpha $miss"))
+      .toDF("query_id", "query")
+    val misses = Seq((1L, miss), (2L, "")).toDF("query_id", "query")
+    Seq((batch, 3, true), (batch, 10, true), (misses, 5, false)).foreach { case (qs, k, hit) =>
+      val driver = TextAnalysis.searchBM25Index(spark, dir, qs, topK = k)
+      val plan = fallbackBM25(dir, qs, k)
+      // a batch that hits no bucket optimizes to an empty local frame either way
+      assert(servedOnDriver(driver) && servedOnDriver(plan) != hit)
+      assert(driver.schema == plan.schema)
+      assert(sortedRows(driver) == sortedRows(plan))
+    }
+    assert(sortedRows(TextAnalysis.searchBM25Index(spark, dir, batch, topK = 3)).nonEmpty)
   }
 
   test("BM25 index: a query whose terms hit no bucket returns an empty frame") {
@@ -468,6 +509,23 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
     }
     TextAnalysis.refreshBM25Index(spark, dir1, b.limit(0))
     assert(postings(dir1) == postings(dir2))
+  }
+
+  test("BM25 index: a search after refresh equals a search of a full rebuild, on the driver") {
+    val (a, b) = refreshCorpora
+    val refreshed = tmpDir("bm25rfd1")
+    TextAnalysis.buildBM25Index(a, refreshed)
+    val qs = Seq((1L, "alpha common2"), (2L, "word45 gamma"), (3L, "tail word3"))
+      .toDF("query_id", "query")
+    val before = sortedRows(TextAnalysis.searchBM25Index(spark, refreshed, qs, topK = 5))
+    TextAnalysis.refreshBM25Index(spark, refreshed, b)
+    val rebuilt = tmpDir("bm25rfd2")
+    TextAnalysis.buildBM25Index(a.unionByName(b), rebuilt)
+    val got = TextAnalysis.searchBM25Index(spark, refreshed, qs, topK = 5)
+    val want = TextAnalysis.searchBM25Index(spark, rebuilt, qs, topK = 5)
+    assert(servedOnDriver(got) && servedOnDriver(want))
+    assert(got.schema == want.schema && sortedRows(got) == sortedRows(want))
+    assert(sortedRows(got) != before)
   }
 
   test("BM25 refresh commits stats and docs only after the postings append") {
