@@ -2,74 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Cluster install path: `--conf spark.sql.extensions=graft.GraftExtensions`
   * makes every graft SQL function available in all sessions (including
-  * pure-SQL clients), no per-session registration call needed.
+  * pure-SQL clients), no per-session registration call needed. It injects
+  * the same list as `graft.functions.registerAll`,
+  * `graft.functions.sqlFunctions`, so both paths build the same expressions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def fn(name: String, builder: Seq[Expression] => Expression) =
-    (FunctionIdentifier(name), new ExpressionInfo("graft", name), builder)
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-      "st_point" -> (a => StPoint(a(0), a(1))),
-      "st_geomfromtext" -> (a => StGeomFromText(a.head)),
-      "st_try_geomfromtext" -> (a => StTryGeomFromText(a.head)),
-      "st_astext" -> (a => StAsText(a.head)),
-      "st_x" -> (a => StX(a.head)),
-      "st_y" -> (a => StY(a.head)),
-      "st_geomtype" -> (a => StGeomType(a.head)),
-      "st_npoints" -> (a => StNumPoints(a.head)),
-      "st_isempty" -> (a => StIsEmpty(a.head)),
-      "st_geomfromgeojson" -> (a => StGeomFromGeoJson(a.head)),
-      "st_try_geomfromgeojson" -> (a => StTryGeomFromGeoJson(a.head)),
-      "st_asgeojson" -> (a => StAsGeoJson(a.head)),
-      "st_centroid" -> (a => StCentroid(a.head)),
-      "st_envelope" -> (a => StEnvelope(a.head)),
-      "st_bbox" -> (a => StBBox(a.head)),
-      "st_area" -> (a => StAreaPlanar(a.head)),
-      "st_aream" -> (a => StAreaM(a.head)),
-      "st_length" -> (a => StLengthPlanar(a.head)),
-      "st_lengthm" -> (a => StLengthM(a.head)),
-      "st_coslat" -> (a => StCosLat(a.head)),
-      "st_tomercator" -> (a => StToMercator(a.head)),
-      "st_tolonlat" -> (a => StToLonLat(a.head)),
-      "st_haversine_length" -> (a => StHaversineLength(a.head)),
-      "st_simplify" -> (a => StSimplify(a(0), a(1))),
-      "st_polyline_encode" -> (a => StPolylineEncode(a.head)),
-      "st_polyline_decode" -> (a => StPolylineDecode(a.head)),
-      "st_distance" -> (a => StDistance(a(0), a(1))),
-      "st_makeline" -> (a => StMakeLine(a(0), a(1))),
-      "st_intersects" -> (a => StIntersects(a(0), a(1))),
-      "st_within" -> (a => StWithin(a(0), a(1))),
-      "st_contains" -> (a => StContains(a(0), a(1))),
-      "st_intersection" -> (a => StIntersection(a(0), a(1))),
-      "st_difference" -> (a => StDifference(a(0), a(1))),
-      "st_union" -> (a => StUnionPair(a(0), a(1))),
-      "st_buffer" -> (a => StBuffer(a(0), a(1), a(2))),
-      "st_bufferm" -> (a => StBufferM(a(0), a(1), a(2))),
-      "st_cellcover" -> (a => StCellCover(a(0), a(1))),
-      "st_subdivide" -> (a => StSubdivide(a(0), a(1))),
-      "st_snaptogrid" -> (a => StSnapToGrid(a(0), a(1))),
-      "st_cellof" -> (a => StCellOf(a(0), a(1), a(2))),
-      "st_to_utm" -> (a => GeoFunctions.utmExpr(a(0), a(1), invert = false)),
-      "st_from_utm" -> (a => GeoFunctions.utmExpr(a(0), a(1), invert = true)),
-      "st_transform" -> (a => GeoFunctions.transformFromLiterals(a(0), a(1), a(2))),
-      "st_zorder" -> (a => GeoFunctions.curveFromLiterals(StZOrder.apply)(a(0), a(1), a(2))),
-      "st_hilbert" -> (a => GeoFunctions.curveFromLiterals(StHilbert.apply)(a(0), a(1), a(2))),
-      "st_geohash" -> (a => GeoFunctions.curveFromLiterals(StGeohash.apply)(a(0), a(1), a(2))),
-      "st_geohash_decode" -> (a => StGeohashDecode(a.head)),
-    )
-    fns.foreach { case (name, b) => ext.injectFunction(fn(name, b)) }
-    // the text/vector sketch family shares its builder list with
-    // TextFunctions.registerAll — one source of truth for both paths
-    TextFunctions.sqlBuilders.foreach { case (name, b) =>
-      ext.injectFunction(fn(name, b))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft", name), builder))
     }
-  }
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
+import org.apache.spark.sql.types.DoubleType
+
+import graft.functions.{KernelFns => k}
 
 /** graft's SQL surface: geometry functions as `Column`s (native Catalyst
   * expressions over WKB) plus numeric geo math composed purely from Spark
@@ -18,42 +20,38 @@ object GeoFunctions {
 
   private def e(c: Column): Expression = ColumnBridge.expression(c)
   private def c(x: Expression): Column = ColumnBridge.column(x)
-  /** Numeric args are cast explicitly (the expressions skip Catalyst's
-    * implicit-cast machinery, whose types are `private[sql]`).
-    */
   private def ed(c: Column): Expression = Cast(e(c), DoubleType)
-  private def ei(c: Column): Expression = Cast(e(c), IntegerType)
 
   // ---- constructors / accessors -------------------------------------------
-  def st_point(x: Column, y: Column): Column = c(StPoint(ed(x), ed(y)))
-  def st_geomfromtext(wkt: Column): Column = c(StGeomFromText(e(wkt)))
+  def st_point(x: Column, y: Column): Column = k.st_point(x, y)
+  def st_geomfromtext(wkt: Column): Column = k.st_geomfromtext(wkt)
   /** Null on malformed WKT — the ingest-safe parse for dirty data. */
-  def st_try_geomfromtext(wkt: Column): Column = c(StTryGeomFromText(e(wkt)))
-  def st_astext(g: Column): Column = c(StAsText(e(g)))
+  def st_try_geomfromtext(wkt: Column): Column = k.st_try_geomfromtext(wkt)
+  def st_astext(g: Column): Column = k.st_astext(g)
   /** WKB is graft's native representation: these are identity casts, present
     * for API parity with reference IO (parquet/WKB boundary).
     */
   def st_geomfromwkb(b: Column): Column = b.cast("binary")
   def st_aswkb(g: Column): Column = g.cast("binary")
-  def st_x(g: Column): Column = c(StX(e(g)))
-  def st_y(g: Column): Column = c(StY(e(g)))
-  def st_geomtype(g: Column): Column = c(StGeomType(e(g)))
-  def st_npoints(g: Column): Column = c(StNumPoints(e(g)))
-  def st_isempty(g: Column): Column = c(StIsEmpty(e(g)))
-  def st_centroid(g: Column): Column = c(StCentroid(e(g)))
-  def st_envelope(g: Column): Column = c(StEnvelope(e(g)))
-  def st_bbox(g: Column): Column = c(StBBox(e(g)))
-  def st_makeline(a: Column, b: Column): Column = c(StMakeLine(e(a), e(b)))
+  def st_x(g: Column): Column = k.st_x(g)
+  def st_y(g: Column): Column = k.st_y(g)
+  def st_geomtype(g: Column): Column = k.st_geomtype(g)
+  def st_npoints(g: Column): Column = k.st_npoints(g)
+  def st_isempty(g: Column): Column = k.st_isempty(g)
+  def st_centroid(g: Column): Column = k.st_centroid(g)
+  def st_envelope(g: Column): Column = k.st_envelope(g)
+  def st_bbox(g: Column): Column = k.st_bbox(g)
+  def st_makeline(a: Column, b: Column): Column = k.st_makeline(a, b)
 
   // ---- measures -----------------------------------------------------------
-  def st_area(g: Column): Column = c(StAreaPlanar(e(g)))
+  def st_area(g: Column): Column = k.st_area(g)
   /** erde m² semantics (reference: erde/op/area.py). */
-  def st_aream(g: Column): Column = c(StAreaM(e(g)))
-  def st_length(g: Column): Column = c(StLengthPlanar(e(g)))
+  def st_aream(g: Column): Column = k.st_aream(g)
+  def st_length(g: Column): Column = k.st_length(g)
   /** erde m semantics (reference: erde/op/length.py). */
-  def st_lengthm(g: Column): Column = c(StLengthM(e(g)))
-  def st_coslat(g: Column): Column = c(StCosLat(e(g)))
-  def st_distance(a: Column, b: Column): Column = c(StDistance(e(a), e(b)))
+  def st_lengthm(g: Column): Column = k.st_lengthm(g)
+  def st_coslat(g: Column): Column = k.st_coslat(g)
+  def st_distance(a: Column, b: Column): Column = k.st_distance(a, b)
   /** Morton (Z-order) key of a lon/lat pair — see [[graft.geom.ZOrder]]. */
   def st_zorder(lon: Column, lat: Column, bits: Int = 16): Column =
     c(StZOrder(ed(lon), ed(lat), bits))
@@ -64,7 +62,7 @@ object GeoFunctions {
   def st_geohash(lon: Column, lat: Column, chars: Int = 9): Column =
     c(StGeohash(ed(lon), ed(lat), chars))
   /** Geohash cell-center point (WKB). */
-  def st_geohash_decode(h: Column): Column = c(StGeohashDecode(e(h)))
+  def st_geohash_decode(h: Column): Column = k.st_geohash_decode(h)
 
   // ---- CRS ----------------------------------------------------------------
   private def epsgOf(crs: String): Int = {
@@ -92,7 +90,7 @@ object GeoFunctions {
     import graft.geom.TransverseMercator.utmZoneOf
     def to4326(code: Int, g0: Expression): Option[Expression] = code match {
       case 4326 => Some(g0)
-      case 3857 => Some(StToLonLat(g0))
+      case 3857 => Some(k.st_tolonlat.build(Seq(g0)))
       case t if utmZoneOf(t).isDefined =>
         val (z, s) = utmZoneOf(t).get; Some(StUtm(g0, z, s, invert = true))
       case t if proj(t) => Some(StCrsProj(g0, t, invert = true))
@@ -100,7 +98,7 @@ object GeoFunctions {
     }
     def from4326(code: Int, g0: Expression): Option[Expression] = code match {
       case 4326 => Some(g0)
-      case 3857 => Some(StToMercator(g0))
+      case 3857 => Some(k.st_tomercator.build(Seq(g0)))
       case t if utmZoneOf(t).isDefined =>
         val (z, s) = utmZoneOf(t).get; Some(StUtm(g0, z, s, invert = false))
       case t if proj(t) => Some(StCrsProj(g0, t, invert = false))
@@ -114,59 +112,55 @@ object GeoFunctions {
   }
 
   // ---- predicates ---------------------------------------------------------
-  def st_intersects(a: Column, b: Column): Column = c(StIntersects(e(a), e(b)))
-  def st_within(a: Column, b: Column): Column = c(StWithin(e(a), e(b)))
-  def st_contains(a: Column, b: Column): Column = c(StContains(e(a), e(b)))
+  def st_intersects(a: Column, b: Column): Column = k.st_intersects(a, b)
+  def st_within(a: Column, b: Column): Column = k.st_within(a, b)
+  def st_contains(a: Column, b: Column): Column = k.st_contains(a, b)
 
   // ---- boolean ops (areal, slab-exact) -------------------------------------
-  def st_intersection(a: Column, b: Column): Column = c(StIntersection(e(a), e(b)))
-  def st_difference(a: Column, b: Column): Column = c(StDifference(e(a), e(b)))
-  def st_union(a: Column, b: Column): Column = c(StUnionPair(e(a), e(b)))
+  def st_intersection(a: Column, b: Column): Column = k.st_intersection(a, b)
+  def st_difference(a: Column, b: Column): Column = k.st_difference(a, b)
+  def st_union(a: Column, b: Column): Column = k.st_union(a, b)
 
   // ---- buffer -------------------------------------------------------------
   def st_buffer(g: Column, radius: Column, resolution: Column): Column =
-    c(StBuffer(e(g), ed(radius), ei(resolution)))
+    k.st_buffer(g, radius, resolution)
   /** erde metre semantics (reference: erde/op/buffer.py:44). */
   def st_bufferm(g: Column, radiusMetres: Column, resolution: Column): Column =
-    c(StBufferM(e(g), ed(radiusMetres), ei(resolution)))
+    k.st_bufferm(g, radiusMetres, resolution)
   def st_bufferm(g: Column, radiusMetres: Column, resolution: Column, capStyle: Column): Column =
-    c(StBufferMStyled(e(g), ed(radiusMetres), ei(resolution), e(capStyle)))
+    k.st_bufferm_styled(g, radiusMetres, resolution, capStyle)
 
   /** Douglas–Peucker simplification (tolerance in coordinate units). */
-  def st_simplify(g: Column, tolerance: Column): Column = c(StSimplify(e(g), ed(tolerance)))
+  def st_simplify(g: Column, tolerance: Column): Column = k.st_simplify(g, tolerance)
 
   /** Great-circle metres along a LineString's waypoints. */
-  def st_haversine_length(g: Column): Column = c(StHaversineLength(e(g)))
+  def st_haversine_length(g: Column): Column = k.st_haversine_length(g)
 
   /** Google encoded-polyline codec (reference: erde/utils.py). */
-  def st_polyline_encode(g: Column): Column = c(StPolylineEncode(e(g)))
-  def st_polyline_decode(s: Column): Column = c(StPolylineDecode(e(s)))
+  def st_polyline_encode(g: Column): Column = k.st_polyline_encode(g)
+  def st_polyline_decode(s: Column): Column = k.st_polyline_decode(s)
 
   /** Geometry constructors from flat [x0,y0,x1,y1,…] coordinate arrays —
     * the OSM way-assembly path (reference pipeline's ogr2ogr stage).
-    * The polygon ring closes automatically.
+    * The polygon ring closes automatically; an int array is cast
+    * elementwise, and a null ordinate gives a NULL geometry.
     */
-  def st_line_from_coords(a: Column): Column =
-    c(StLineFromCoords(e(a.cast("array<double>"))))
-  def st_polygon_from_coords(a: Column): Column =
-    c(StPolygonFromCoords(e(a.cast("array<double>"))))
+  def st_line_from_coords(a: Column): Column = k.st_line_from_coords(a)
+  def st_polygon_from_coords(a: Column): Column = k.st_polygon_from_coords(a)
 
   /** Relation-layer constructors (OSM multipolygon / route relations):
     * member roles × member coord paths → MultiPolygon; member coord paths →
     * MultiLineString. Null (dropped feature) on incomplete members.
     */
   def st_relation_multipolygon(roles: Column, lines: Column): Column =
-    c(StRelationMultipolygon(e(roles.cast("array<string>")), e(lines.cast("array<array<double>>"))))
-  def st_multiline_from_lines(lines: Column): Column =
-    c(StMultilineFromLines(e(lines.cast("array<array<double>>"))))
+    k.st_relation_multipolygon(roles, lines)
+  def st_multiline_from_lines(lines: Column): Column = k.st_multiline_from_lines(lines)
 
   // ---- grid (spatial-join partitioning) -----------------------------------
-  def st_cellcover(g: Column, cellDeg: Column): Column = c(StCellCover(e(g), ed(cellDeg)))
-  def st_snaptogrid(g: Column, size: Column): Column = c(StSnapToGrid(e(g), ed(size)))
-  def st_subdivide(g: Column, maxVertices: Column): Column =
-    c(StSubdivide(e(g), Cast(e(maxVertices), IntegerType)))
-  def st_cellof(lon: Column, lat: Column, cellDeg: Column): Column =
-    c(StCellOf(ed(lon), ed(lat), ed(cellDeg)))
+  def st_cellcover(g: Column, cellDeg: Column): Column = k.st_cellcover(g, cellDeg)
+  def st_snaptogrid(g: Column, size: Column): Column = k.st_snaptogrid(g, size)
+  def st_subdivide(g: Column, maxVertices: Column): Column = k.st_subdivide(g, maxVertices)
+  def st_cellof(lon: Column, lat: Column, cellDeg: Column): Column = k.st_cellof(lon, lat, cellDeg)
 
   // ---- numeric geo math: pure built-in compositions (full codegen) --------
 
@@ -188,72 +182,8 @@ object GeoFunctions {
     lit(graft.geom.Mercator.R) * log(tan(lit(math.Pi / 4) + radians(clamped) / 2))
   }
 
-  /** Registers every function for `spark.sql` use (temp functions, session
-    * scope) — the zero-config path; cluster deployments can instead install
-    * [[graft.GraftExtensions]] via `spark.sql.extensions`.
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    def r1(name: String, b: Expression => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, { args => b(args.head) }, "scala_udf")
-    def r2(name: String, b: (Expression, Expression) => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, { args => b(args(0), args(1)) }, "scala_udf")
-    def r3(name: String, b: (Expression, Expression, Expression) => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, { args => b(args(0), args(1), args(2)) }, "scala_udf")
-
-    r2("st_point", (x, y) => StPoint(Cast(x, DoubleType), Cast(y, DoubleType)))
-    r1("st_geomfromtext", StGeomFromText.apply)
-    r1("st_try_geomfromtext", StTryGeomFromText.apply)
-    r1("st_astext", StAsText.apply)
-    r1("st_x", StX.apply)
-    r1("st_y", StY.apply)
-    r1("st_geomtype", StGeomType.apply)
-    r1("st_npoints", StNumPoints.apply)
-    r1("st_isempty", StIsEmpty.apply)
-    r1("st_geomfromgeojson", StGeomFromGeoJson.apply)
-    r1("st_try_geomfromgeojson", StTryGeomFromGeoJson.apply)
-    r1("st_asgeojson", StAsGeoJson.apply)
-    r1("st_centroid", StCentroid.apply)
-    r1("st_envelope", StEnvelope.apply)
-    r1("st_bbox", StBBox.apply)
-    r1("st_area", StAreaPlanar.apply)
-    r1("st_aream", StAreaM.apply)
-    r1("st_length", StLengthPlanar.apply)
-    r1("st_lengthm", StLengthM.apply)
-    r1("st_coslat", StCosLat.apply)
-    r1("st_tomercator", StToMercator.apply)
-    r1("st_tolonlat", StToLonLat.apply)
-    r1("st_haversine_length", StHaversineLength.apply)
-    r2("st_simplify", (g, t) => StSimplify(g, Cast(t, DoubleType)))
-    r1("st_polyline_encode", StPolylineEncode.apply)
-    r1("st_polyline_decode", StPolylineDecode.apply)
-    r1("st_line_from_coords", a => StLineFromCoords(Cast(a, ArrayType(DoubleType))))
-    r1("st_polygon_from_coords", a => StPolygonFromCoords(Cast(a, ArrayType(DoubleType))))
-    r2("st_relation_multipolygon", (r, l) => StRelationMultipolygon(
-      Cast(r, ArrayType(StringType)), Cast(l, ArrayType(ArrayType(DoubleType)))))
-    r1("st_multiline_from_lines", l => StMultilineFromLines(Cast(l, ArrayType(ArrayType(DoubleType)))))
-    r2("st_distance", StDistance.apply)
-    r2("st_makeline", StMakeLine.apply)
-    r2("st_intersects", StIntersects.apply)
-    r2("st_within", StWithin.apply)
-    r2("st_contains", StContains.apply)
-    r2("st_intersection", StIntersection.apply)
-    r2("st_difference", StDifference.apply)
-    r2("st_union", StUnionPair.apply)
-    r3("st_buffer", (g, r, n) => StBuffer(g, Cast(r, DoubleType), Cast(n, IntegerType)))
-    r3("st_bufferm", (g, r, n) => StBufferM(g, Cast(r, DoubleType), Cast(n, IntegerType)))
-    r2("st_cellcover", (g, cd) => StCellCover(g, Cast(cd, DoubleType)))
-    r2("st_subdivide", (g, mv) => StSubdivide(g, Cast(mv, IntegerType)))
-    r2("st_snaptogrid", (g, sz) => StSnapToGrid(g, Cast(sz, DoubleType)))
-    r3("st_cellof", (x, y, cd) => StCellOf(Cast(x, DoubleType), Cast(y, DoubleType), Cast(cd, DoubleType)))
-    r2("st_to_utm", (g, epsg) => GeoFunctions.utmExpr(g, epsg, invert = false))
-    r2("st_from_utm", (g, epsg) => GeoFunctions.utmExpr(g, epsg, invert = true))
-    r3("st_transform", GeoFunctions.transformFromLiterals)
-    r3("st_zorder", GeoFunctions.curveFromLiterals(StZOrder.apply))
-    r3("st_hilbert", GeoFunctions.curveFromLiterals(StHilbert.apply))
-    r3("st_geohash", GeoFunctions.curveFromLiterals(StGeohash.apply))
-    r1("st_geohash_decode", StGeohashDecode.apply)
-  }
+  /** Registers every graft SQL function; see [[graft.functions.registerAll]]. */
+  def registerAll(spark: SparkSession): Unit = graft.functions.registerAll(spark)
 
   /** SQL builder for the curve keys: bits must be a literal (baked into
     * codegen).
@@ -269,34 +199,27 @@ object GeoFunctions {
     make(Cast(lon, DoubleType), Cast(lat, DoubleType), b)
   }
 
-  /** SQL builder for st_transform: CRS codes must be literal ints or
-    * 'EPSG:nnnn' strings (the dispatch is baked in at plan time).
-    */
-  private[graft] def transformFromLiterals(g: Expression, from: Expression,
-      to: Expression): Expression = {
-    require(from.foldable && to.foldable, "st_transform: CRS codes must be literals")
-    def code(x: Expression): Int = x.eval(null) match {
+  /** A plan-time EPSG code argument: a literal int or 'EPSG:nnnn' string. */
+  private def epsgLiteral(fn: String, x: Expression): Int = {
+    require(x.foldable, s"$fn: CRS codes must be literals")
+    x.eval(null) match {
       case i: Int => i
       case l: Long => l.toInt
-      case s: org.apache.spark.unsafe.types.UTF8String =>
-        s.toString.toUpperCase(java.util.Locale.ROOT).stripPrefix("EPSG:").toInt
-      case other => throw new IllegalArgumentException(s"st_transform: bad CRS argument $other")
+      case s: org.apache.spark.unsafe.types.UTF8String => epsgOf(s.toString)
+      case other => throw new IllegalArgumentException(s"$fn: bad CRS argument $other")
     }
-    transformExpr(g, code(from), code(to))
   }
 
-  /** SQL builder for the UTM expressions: the EPSG code must be a literal
-    * (the zone is baked into the generated code).
+  /** SQL builder for st_transform: the dispatch is baked in at plan time. */
+  private[graft] def transformFromLiterals(g: Expression, from: Expression,
+      to: Expression): Expression =
+    transformExpr(g, epsgLiteral("st_transform", from), epsgLiteral("st_transform", to))
+
+  /** SQL builder for the UTM expressions: the zone is baked into the
+    * generated code.
     */
   private[graft] def utmExpr(g: Expression, epsg: Expression, invert: Boolean): Expression = {
-    require(epsg.foldable, "st_to_utm/st_from_utm: the EPSG code must be a literal")
-    val code = epsg.eval(null) match {
-      case i: Int => i
-      case l: Long => l.toInt
-      case s: org.apache.spark.unsafe.types.UTF8String =>
-        s.toString.toUpperCase(java.util.Locale.ROOT).stripPrefix("EPSG:").toInt
-      case other => throw new IllegalArgumentException(s"st_*_utm: bad EPSG argument $other")
-    }
+    val code = epsgLiteral(if (invert) "st_from_utm" else "st_to_utm", epsg)
     val (zone, south) = graft.geom.TransverseMercator.utmZoneOf(code).getOrElse(
       throw new IllegalArgumentException(s"EPSG:$code is not a UTM zone (32601-60 / 32701-60)"))
     StUtm(g, zone, south, invert)

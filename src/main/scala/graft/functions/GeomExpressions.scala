@@ -3,191 +3,28 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Native Catalyst expressions over WKB `BinaryType` geometry columns.
-  *
-  * Each expression both interprets (`nullSafeEval`) and generates code
-  * (`doGenCode` → a static call into [[GeomKernel]]), so geometry math runs
-  * inside WholeStageCodegen alongside the surrounding relational operators —
-  * no UDF serialization boundary, no codegen fallback in the hot path.
+/** The geometry expressions with plan-time constants: each bakes its
+  * constants into the generated static call into [[GeomKernel]]. Every
+  * other geometry function is a [[KernelFns]] row.
   */
 private[graft] object GeomExpressions {
   final val K = "graft.functions.GeomKernel"
 }
 import GeomExpressions.K
 
-abstract class GeomUnary extends UnaryExpression with Serializable {
-  /** Static method on [[GeomKernel]] implementing this expression. */
-  def method: String
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"$K.$method($c)")
-  override def prettyName: String = nodeName.toLowerCase(java.util.Locale.ROOT)
-}
-
-abstract class GeomBinaryPredicate extends BinaryExpression with Serializable {
-  def method: String
-  override def dataType: DataType = BooleanType
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$K.$method($a, $b)")
-  override def prettyName: String = nodeName.toLowerCase(java.util.Locale.ROOT)
-}
-
-case class StGeomFromText(child: Expression) extends GeomUnary {
-  override def method: String = "fromText"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(s: Any): Any = GeomKernel.fromText(s.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): StGeomFromText = copy(child = c)
-}
-
-case class StTryGeomFromText(child: Expression) extends UnaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(s: Any): Any =
-    GeomKernel.tryFromText(s.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $K.tryFromText($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override def prettyName: String = "st_try_geomfromtext"
-  override protected def withNewChildInternal(c: Expression): StTryGeomFromText = copy(child = c)
-}
-
-case class StAsText(child: Expression) extends GeomUnary {
-  override def method: String = "asText"
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.asText(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StAsText = copy(child = c)
-}
-
-case class StPoint(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(x: Any, y: Any): Any =
-    GeomKernel.point(x.asInstanceOf[Double], y.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, y) => s"$K.point($x, $y)")
-  override def prettyName: String = "st_point"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StPoint = copy(l, r)
-}
-
-case class StX(child: Expression) extends GeomUnary {
-  override def method: String = "pointX"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.pointX(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StX = copy(child = c)
-}
-
-case class StY(child: Expression) extends GeomUnary {
-  override def method: String = "pointY"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.pointY(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StY = copy(child = c)
-}
-
-case class StGeomType(child: Expression) extends GeomUnary {
-  override def method: String = "geomType"
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.geomType(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StGeomType = copy(child = c)
-}
-
-case class StNumPoints(child: Expression) extends GeomUnary {
-  override def method: String = "numPoints"
-  override def dataType: DataType = IntegerType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.numPoints(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StNumPoints = copy(child = c)
-}
-
-case class StIsEmpty(child: Expression) extends GeomUnary {
-  override def method: String = "isEmpty"
-  override def dataType: DataType = BooleanType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.isEmpty(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StIsEmpty = copy(child = c)
-}
-
-case class StCentroid(child: Expression) extends GeomUnary {
-  override def method: String = "centroid"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.centroid(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StCentroid = copy(child = c)
-}
-
-case class StEnvelope(child: Expression) extends GeomUnary {
-  override def method: String = "envelope"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.envelope(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StEnvelope = copy(child = c)
-}
-
-case class StBBox(child: Expression) extends GeomUnary {
-  override def method: String = "bbox"
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.bbox(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StBBox = copy(child = c)
-}
-
-case class StAreaPlanar(child: Expression) extends GeomUnary {
-  override def method: String = "areaPlanar"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.areaPlanar(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StAreaPlanar = copy(child = c)
-}
-
-case class StAreaM(child: Expression) extends GeomUnary {
-  override def method: String = "areaM"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.areaM(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StAreaM = copy(child = c)
-}
-
-case class StLengthPlanar(child: Expression) extends GeomUnary {
-  override def method: String = "lengthPlanar"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.lengthPlanar(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StLengthPlanar = copy(child = c)
-}
-
-case class StLengthM(child: Expression) extends GeomUnary {
-  override def method: String = "lengthM"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.lengthM(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StLengthM = copy(child = c)
-}
-
-case class StCosLat(child: Expression) extends GeomUnary {
-  override def method: String = "coslat"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.coslat(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StCosLat = copy(child = c)
-}
-
-case class StToMercator(child: Expression) extends GeomUnary {
-  override def method: String = "toMercator"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.toMercator(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StToMercator = copy(child = c)
-}
-
-case class StToLonLat(child: Expression) extends GeomUnary {
-  override def method: String = "toLonLat"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any): Any = GeomKernel.toLonLat(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StToLonLat = copy(child = c)
-}
-
 /** UTM transform (EPSG 326xx/327xx ⇄ 4326); zone/hemisphere/direction are
   * plan-time constants, baked into the generated static call.
   */
-case class StUtm(child: Expression, zone: Int, south: Boolean, invert: Boolean) extends GeomUnary {
+case class StUtm(child: Expression, zone: Int, south: Boolean, invert: Boolean)
+    extends UnaryExpression with Serializable {
   require(zone >= 1 && zone <= 60, s"UTM zone $zone out of range 1-60")
-  override def method: String = "utm"
   override def dataType: DataType = BinaryType
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"$K.utm($c, $zone, $south, $invert)")
   override protected def nullSafeEval(b: Any): Any =
     GeomKernel.utm(b.asInstanceOf[Array[Byte]], zone, south, invert)
+  override def prettyName: String = if (invert) "st_from_utm" else "st_to_utm"
   override protected def withNewChildInternal(c: Expression): StUtm = copy(child = c)
 }
 
@@ -195,14 +32,15 @@ case class StUtm(child: Expression, zone: Int, south: Boolean, invert: Boolean) 
   * 4326 via [[graft.geom.Projections]]); the code and direction are
   * plan-time constants baked into the generated static call.
   */
-case class StCrsProj(child: Expression, epsg: Int, invert: Boolean) extends GeomUnary {
+case class StCrsProj(child: Expression, epsg: Int, invert: Boolean)
+    extends UnaryExpression with Serializable {
   require(graft.geom.Projections.supported(epsg), s"EPSG:$epsg not in the projection registry")
-  override def method: String = "crs"
   override def dataType: DataType = BinaryType
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"$K.crs($c, $epsg, $invert)")
   override protected def nullSafeEval(b: Any): Any =
     GeomKernel.crs(b.asInstanceOf[Array[Byte]], epsg, invert)
+  override def prettyName: String = "st_transform"
   override protected def withNewChildInternal(c: Expression): StCrsProj = copy(child = c)
 }
 
@@ -250,273 +88,4 @@ case class StGeohash(left: Expression, right: Expression, chars: Int)
   override def prettyName: String = "st_geohash"
   override protected def withNewChildrenInternal(l: Expression, r: Expression): StGeohash =
     copy(left = l, right = r)
-}
-
-/** Geohash cell-center decode → WKB point. */
-case class StGeohashDecode(child: Expression) extends GeomUnary {
-  override def method: String = "geohashDecode"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(s: Any): Any =
-    GeomKernel.geohashDecode(s.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): StGeohashDecode = copy(child = c)
-}
-
-case class StDistance(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.distance(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$K.distance($a, $b)")
-  override def prettyName: String = "st_distance"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StDistance = copy(l, r)
-}
-
-case class StMakeLine(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.makeLine(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$K.makeLine($a, $b)")
-  override def prettyName: String = "st_makeline"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StMakeLine = copy(l, r)
-}
-
-case class StIntersects(left: Expression, right: Expression) extends GeomBinaryPredicate {
-  override def method: String = "intersects"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.intersects(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersects = copy(l, r)
-}
-
-case class StWithin(left: Expression, right: Expression) extends GeomBinaryPredicate {
-  override def method: String = "within"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.within(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StWithin = copy(l, r)
-}
-
-case class StContains(left: Expression, right: Expression) extends GeomBinaryPredicate {
-  override def method: String = "contains"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.contains(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StContains = copy(l, r)
-}
-
-case class StBuffer(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any, r: Any, res: Any): Any =
-    GeomKernel.buffer(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Double], res.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r, res) => s"$K.buffer($b, $r, $res)")
-  override def prettyName: String = "st_buffer"
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): StBuffer =
-    copy(f, s, t)
-}
-
-case class StBufferM(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any, r: Any, res: Any): Any =
-    GeomKernel.bufferM(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Double], res.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r, res) => s"$K.bufferM($b, $r, $res)")
-  override def prettyName: String = "st_bufferm"
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): StBufferM =
-    copy(f, s, t)
-}
-
-abstract class GeomBinaryGeom extends BinaryExpression with Serializable {
-  def method: String
-  override def dataType: DataType = BinaryType
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"$K.$method($a, $b)")
-  override def prettyName: String = nodeName.toLowerCase(java.util.Locale.ROOT)
-}
-
-case class StIntersection(left: Expression, right: Expression) extends GeomBinaryGeom {
-  override def method: String = "intersection"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.intersection(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StIntersection = copy(l, r)
-}
-
-case class StDifference(left: Expression, right: Expression) extends GeomBinaryGeom {
-  override def method: String = "difference"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.difference(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StDifference = copy(l, r)
-}
-
-case class StUnionPair(left: Expression, right: Expression) extends GeomBinaryGeom {
-  override def method: String = "unionPair"
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    GeomKernel.unionPair(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StUnionPair = copy(l, r)
-}
-
-case class StHaversineLength(child: Expression) extends GeomUnary {
-  override def method: String = "haversineLength"
-  override def dataType: DataType = DoubleType
-  override protected def nullSafeEval(b: Any): Any =
-    GeomKernel.haversineLength(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StHaversineLength = copy(child = c)
-}
-
-case class StPolylineEncode(child: Expression) extends GeomUnary {
-  override def method: String = "polylineEncode"
-  override def dataType: DataType = StringType
-  override protected def nullSafeEval(b: Any): Any =
-    GeomKernel.polylineEncode(b.asInstanceOf[Array[Byte]])
-  override protected def withNewChildInternal(c: Expression): StPolylineEncode = copy(child = c)
-}
-
-case class StPolylineDecode(child: Expression) extends GeomUnary {
-  override def method: String = "polylineDecode"
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(s: Any): Any =
-    GeomKernel.polylineDecode(s.asInstanceOf[UTF8String])
-  override protected def withNewChildInternal(c: Expression): StPolylineDecode = copy(child = c)
-}
-
-/** Coords→WKB constructors: callers must feed array<double> — the
-  * GeoFunctions wrappers and the SQL registry insert an explicit element
-  * Cast (an int array must convert, not be reinterpreted bitwise); a null
-  * ordinate yields a NULL geometry, propagated through codegen.
-  */
-abstract class CoordsConstructor extends UnaryExpression with Serializable {
-  def method: String
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $K.$method($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override def prettyName: String = nodeName.toLowerCase(java.util.Locale.ROOT)
-}
-
-case class StLineFromCoords(child: Expression) extends CoordsConstructor {
-  override def method: String = "lineFromCoords"
-  override protected def nullSafeEval(a: Any): Any =
-    GeomKernel.lineFromCoords(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): StLineFromCoords = copy(child = c)
-}
-
-case class StPolygonFromCoords(child: Expression) extends CoordsConstructor {
-  override def method: String = "polygonFromCoords"
-  override protected def nullSafeEval(a: Any): Any =
-    GeomKernel.polygonFromCoords(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def withNewChildInternal(c: Expression): StPolygonFromCoords = copy(child = c)
-}
-
-/** MultiPolygon from OSM relation members: roles array<string> ×
-  * lines array<array<double>> — see [[GeomKernel.relationMultipolygon]].
-  * Null (row drops) on incomplete/unstitchable members.
-  */
-case class StRelationMultipolygon(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(roles: Any, lines: Any): Any =
-    GeomKernel.relationMultipolygon(
-      roles.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      lines.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (r, l) => s"""
-      ${ev.value} = $K.relationMultipolygon($r, $l);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override def prettyName: String = "st_relation_multipolygon"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StRelationMultipolygon =
-    copy(left = l, right = r)
-}
-
-/** MultiLineString from member coord paths (array<array<double>>) — the
-  * `multilinestrings` relation layer; null on any incomplete member.
-  */
-case class StMultilineFromLines(child: Expression) extends UnaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override protected def nullSafeEval(a: Any): Any =
-    GeomKernel.multilineFromLines(a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = $K.multilineFromLines($c);
-      ${ev.isNull} = ${ev.value} == null;
-    """)
-  override def prettyName: String = "st_multiline_from_lines"
-  override protected def withNewChildInternal(c: Expression): StMultilineFromLines = copy(child = c)
-}
-
-case class StBufferMStyled(first: Expression, second: Expression, third: Expression, fourth: Expression)
-    extends QuaternaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any, r: Any, res: Any, cap: Any): Any =
-    GeomKernel.bufferMStyled(b.asInstanceOf[Array[Byte]], r.asInstanceOf[Double],
-      res.asInstanceOf[Int], cap.asInstanceOf[UTF8String])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, r, res, cap) => s"$K.bufferMStyled($b, $r, $res, $cap)")
-  override def prettyName: String = "st_bufferm_styled"
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression, q: Expression): StBufferMStyled =
-    copy(f, s, t, q)
-}
-
-case class StSimplify(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any, t: Any): Any =
-    GeomKernel.simplify(b.asInstanceOf[Array[Byte]], t.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, t) => s"$K.simplify($b, $t)")
-  override def prettyName: String = "st_simplify"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StSimplify = copy(l, r)
-}
-
-case class StCellCover(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(b: Any, cell: Any): Any =
-    GeomKernel.cellCover(b.asInstanceOf[Array[Byte]], cell.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, cell) => s"$K.cellCover($b, $cell)")
-  override def prettyName: String = "st_cellcover"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StCellCover = copy(l, r)
-}
-
-case class StSnapToGrid(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = BinaryType
-  override protected def nullSafeEval(b: Any, size: Any): Any =
-    GeomKernel.snapToGrid(b.asInstanceOf[Array[Byte]], size.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, size) => s"$K.snapToGrid($b, $size)")
-  override def prettyName: String = "st_snaptogrid"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StSnapToGrid = copy(l, r)
-}
-
-case class StSubdivide(left: Expression, right: Expression)
-    extends BinaryExpression with Serializable {
-  override def dataType: DataType = ArrayType(BinaryType, containsNull = false)
-  override protected def nullSafeEval(b: Any, maxV: Any): Any =
-    GeomKernel.subdivide(b.asInstanceOf[Array[Byte]], maxV.asInstanceOf[Int])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (b, maxV) => s"$K.subdivide($b, $maxV)")
-  override def prettyName: String = "st_subdivide"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): StSubdivide = copy(l, r)
-}
-
-case class StCellOf(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression with Serializable {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(lon: Any, lat: Any, cell: Any): Any =
-    GeomKernel.cellOf(lon.asInstanceOf[Double], lat.asInstanceOf[Double], cell.asInstanceOf[Double])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (lon, lat, cell) => s"$K.cellOf($lon, $lat, $cell)")
-  override def prettyName: String = "st_cellof"
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): StCellOf =
-    copy(f, s, t)
 }

@@ -50,8 +50,12 @@ private[graft] object Caches {
       anchor.sparkSession.listenerManager.unregister(this)
       live.remove(this)
     }
+    /** A query whose analysis failed cannot contain the anchor, and reading
+      * its `analyzed` would rethrow that failure on the listener bus.
+      */
     private def maybeRelease(qe: QueryExecution): Unit =
-      if (qe.analyzed.find(_.sameResult(target)).isDefined) fire()
+      if (scala.util.Try(qe.analyzed).toOption.exists(_.find(_.sameResult(target)).isDefined))
+        fire()
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       maybeRelease(qe)
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =

@@ -117,15 +117,6 @@ object Similarity {
     aggregate(zip_with(qa.cast("array<long>"), qb.cast("array<long>"), (x, y) => x * y),
       lit(0L), (acc, x) => acc + x).cast("double") * sa * sb
 
-  /** Brute-force top-k over the int8-quantized corpus: same broadcast-query
-    * / per-partition-heap shape as [[bruteForceTopK]], but each pair costs
-    * an integer dot over tinyints instead of a double fold over floats, and
-    * the scanned corpus column is 4× narrower. Vectors are L2-NORMALIZED
-    * before quantization, so the rescaled integer dot approximates cosine
-    * (error ~1% of full scale) and the ranking tracks [[bruteForceTopK]] —
-    * at 100 TB this is the first-stage retriever, with the float rescore
-    * reserved for the k survivors.
-    */
   /** Normalize-then-quantize prep shared by the int8 paths: L2-normalize the
     * vector (so the rescaled integer dot approximates cosine), then
     * symmetric int8 quantization. The norm materializes as a column BEFORE
@@ -145,6 +136,15 @@ object Similarity {
       keep: Seq[String] = Nil): DataFrame =
     quantizeInt8(l2Prep(df, vecCol, idCol, idOut, keep), "__nv")
 
+  /** Brute-force top-k over the int8-quantized corpus: same broadcast-query
+    * / per-partition-heap shape as [[bruteForceTopK]], but each pair costs
+    * an integer dot over tinyints instead of a double fold over floats, and
+    * the scanned corpus column is 4× narrower. Vectors are L2-NORMALIZED
+    * before quantization, so the rescaled integer dot approximates cosine
+    * (error ~1% of full scale) and the ranking tracks [[bruteForceTopK]] —
+    * at 100 TB this is the first-stage retriever, with the float rescore
+    * reserved for the k survivors.
+    */
   def int8TopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -670,12 +670,7 @@ object Similarity {
       .select("query_id", "neighbor_id")
     // exact rescore against the index's own float column — only survivor
     // rows (model-sized broadcast) touch the wide vec read
-    val qFloat = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
-    val rescored = assigned.select(col("neighbor_id"), col("vec").as("__cv"))
-      .join(broadcast(survivors), Seq("neighbor_id"))
-      .join(broadcast(qFloat), Seq("query_id"))
-      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
-    topkColumns(rescored, k)
+    rescoreExact(indexCorpus(assigned, vecCol, idCol), queries, vecCol, idCol, survivors, k)
   }
 
   /** The composed 100 TB retrieval path: IVF cell pruning × int8 candidate
@@ -767,6 +762,10 @@ object Similarity {
       .select("query_id", "neighbor_id")
     rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
   }
+
+  /** A persisted index's float column as a corpus for [[rescoreExact]]. */
+  private def indexCorpus(assigned: DataFrame, vecCol: String, idCol: String): DataFrame =
+    assigned.select(col("neighbor_id").as(idCol), col("vec").as(vecCol))
 
   /** Exact float rescore of a survivor list: the (query, neighbor) pairs are
     * model-sized — broadcast them onto the corpus so the wide float column
@@ -1203,12 +1202,7 @@ object Similarity {
       .withColumn("cosine", pq_adc(col("__lut"), col("__code"), ksub))
     val survivors = topkColumns(candScored, math.max(k, rescore * k))
       .select("query_id", "neighbor_id")
-    val qFloat = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
-    val rescored = assigned.select(col("neighbor_id"), col("vec").as("__cv"))
-      .join(broadcast(survivors), Seq("neighbor_id"))
-      .join(broadcast(qFloat), Seq("query_id"))
-      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
-    topkColumns(rescored, k)
+    rescoreExact(indexCorpus(assigned, vecCol, idCol), queries, vecCol, idCol, survivors, k)
   }
 
   /** Per-group mean-pooled embeddings — the standard long-document /

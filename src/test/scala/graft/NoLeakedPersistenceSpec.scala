@@ -123,4 +123,38 @@ class NoLeakedPersistenceSpec extends AnyFunSuite with SparkSpec {
     assert(!cached && residual.isEmpty, "releaseAll left the SJoin fallback " +
       s"cached: $cached, persistent RDDs: ${residual.mkString(",")}")
   }
+
+  test("a failed read leaves live registrations quiet, and they still fire on their anchor") {
+    import testImplicits._
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.storage.StorageLevel
+    val sc = spark.sparkContext
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("listener-bus-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = errors.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val bus = LogManager.getLogger("org.apache.spark.sql.util.ExecutionListenerBus").asInstanceOf[Logger]
+    bus.addAppender(appender)
+    try {
+      val df = graft.operators.Caches.cachedUntilAction(
+        Seq(50L, 60L).toDF("v").groupBy("v").count())
+      val missing = s"${tmpDir("missing")}/absent"
+      intercept[org.apache.spark.sql.AnalysisException](
+        spark.sql(s"SELECT * FROM parquet.`$missing`"))
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(errors.isEmpty, errors.toArray.mkString("\n"))
+      assert(df.storageLevel != StorageLevel.NONE, "the failed read released the registration")
+      assert(df.count() == 2)
+      org.apache.spark.ListenerBusDrain(sc)
+      assert(df.storageLevel == StorageLevel.NONE, "the anchor's action did not fire the release")
+      assert(errors.isEmpty, errors.toArray.mkString("\n"))
+    } finally {
+      bus.removeAppender(appender)
+      appender.stop()
+    }
+  }
 }

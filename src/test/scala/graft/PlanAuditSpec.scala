@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Physical-plan audits for the scale claims in SURVEY §4/§6: the grid
   * spatial join must never degenerate into a cartesian product, dimension
@@ -324,5 +325,31 @@ class PlanAuditSpec extends SparkSpec {
     // the compact plan renders a whole-stage-codegen span as a `*(id)` prefix
     assert(executed.contains("WholeStageCodegen") || executed.contains("*(1)"),
       s"no codegen span:\n$executed")
+  }
+
+  test("benchmarked geometry kernels are direct static calls in whole-stage generated code") {
+    import graft.functions.GeomKernel
+    import graft.operators.{GeoOps, SJoin}
+    // inputs from an RDD: no kernel call upstream, and nothing the optimizer
+    // could fold into a local relation
+    def geoms(idCol: String, n: Int)(g: Int => Array[Byte]): DataFrame =
+      spark.createDataFrame(spark.sparkContext.parallelize(0 until n, 2).map(i => Row(i.toLong, g(i))),
+        StructType(Seq(StructField(idCol, LongType), StructField("geometry", BinaryType))))
+    val zones = geoms("zone_id", 20)(i => GeomKernel.bufferM(GeomKernel.point(i * 0.01, 0.0), 500.0, 4))
+    val pts = geoms("point_id", 200)(i => GeomKernel.point(i * 0.001, 0.0))
+    Seq(
+      GeoOps.lengthM(GeoOps.areaM(zones)) -> Seq("areaM", "lengthM"),
+      SJoin.sagg(zones, pts, Seq(count(lit(1)).as("n")), predicate = "contains") ->
+        Seq("contains", "cellCover", "cellOf", "bbox"),
+      GeoOps.convert(zones, "EPSG:4326", "EPSG:3857") -> Seq("toMercator"),
+      GeoOps.bufferM(pts, 100.0) -> Seq("bufferM")
+    ).foreach { case (df, methods) =>
+      df.collect() // the final adaptive plan holds the generated code that ran
+      val code = df.queryExecution.debug.codegenToSeq().map(_._2).mkString("\n")
+      methods.foreach { m =>
+        assert(code.contains(s"graft.functions.GeomKernel.$m("),
+          s"no generated GeomKernel.$m call:\n${df.queryExecution.executedPlan}")
+      }
+    }
   }
 }
