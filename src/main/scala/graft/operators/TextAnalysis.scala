@@ -707,10 +707,14 @@ object TextAnalysis {
     * arrays, so that consumer never pays the explode + groupBy.
     */
   private def postingsOf(tokenized: DataFrame): DataFrame =
-    tokenized
-      .select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
-        explode(col("__toks")).as("__term"))
-      .groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
+    occurrences(tokenized).groupBy("__doc", "__dl", "__term").agg(count(lit(1)).as("__tf"))
+
+  /** (__doc, __dl, __term) rows, one per token: [[postingsOf]] before its
+    * groupBy.
+    */
+  private def occurrences(tokenized: DataFrame): DataFrame =
+    tokenized.select(col("__doc"), size(col("__toks")).cast("long").as("__dl"),
+      explode(col("__toks")).as("__term"))
 
   /** Number of term-hash buckets a persisted BM25 index is partitioned by. */
   val bm25Buckets = 64
@@ -726,14 +730,19 @@ object TextAnalysis {
   private val statsSchema = StructType.fromDDL("__n BIGINT, __tt BIGINT")
   private val docsSchema = StructType.fromDDL("__doc BIGINT")
 
-  /** The postings of `docs` in the persisted layout, with their bucket. */
-  private def indexPostings(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
+  /** [[tokenized]] `docs` with BIGINT doc ids; a non-integral id column
+    * fails here, before any job runs.
+    */
+  private def indexTokens(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
     val idType = docs.schema(idCol).dataType
     require(Seq(LongType, IntegerType, ShortType, ByteType).contains(idType),
       s"a persisted BM25 index stores integral doc ids as BIGINT; $idCol is $idType")
-    postingsOf(tokenized(docs, textCol, col(idCol).cast("long")))
-      .withColumn("__bucket", termBucket(col("__term")))
+    tokenized(docs, textCol, col(idCol).cast("long"))
   }
+
+  /** The postings of [[indexTokens]] in the persisted layout, with their bucket. */
+  private def indexPostings(tokens: DataFrame): DataFrame =
+    postingsOf(tokens).withColumn("__bucket", termBucket(col("__term")))
 
   /** Persists the BM25 index of `corpus` under `path`: `postings/` —
     * (__term, __doc, __tf, __dl) parquet PARTITIONED BY a 64-way term-hash
@@ -758,7 +767,7 @@ object TextAnalysis {
     // one tokenize + groupBy pass, persisted across the three writes; stats
     // and the docs sidecar read the cached postings instead of re-tokenizing
     // the corpus (guide §2.3/§2.4: three corpus passes → one)
-    val postings = indexPostings(corpus, textCol, idCol)
+    val postings = indexPostings(indexTokens(corpus, textCol, idCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the three writes are independent (distinct output dirs, all reading
@@ -788,43 +797,126 @@ object TextAnalysis {
     * `docs/` are written only after the postings append has committed, so a
     * failed append leaves the index as it was and the same delta can be
     * retried. (A failure after that commit, in the stats or docs write, is
-    * not rolled back.)
+    * not rolled back.) A non-integral id column fails before any job runs.
+    *
+    * A delta of at most 131,072 tokens is refreshed in six Spark jobs with
+    * no shuffle. One job collects its (doc, doc length, term, bucket) token
+    * rows, each task returning at most cap + 1 of them; the driver counts
+    * the term frequencies, N and the token total from those rows. The
+    * duplicate-id guard (a `docs/` read filtered to the delta's ids, each
+    * task stopping at its first row) and the `stats/` read run together.
+    * The postings append is one job over a local frame whose partitions
+    * each hold whole buckets, so every touched bucket still gets exactly
+    * one new file; the `stats/` overwrite and the `docs/` append of the
+    * local ids follow it, together. A larger delta pays the collect job and
+    * then the distributed plan: the postings are tokenized and grouped in a
+    * persisted plan and repartitioned by bucket for the append. Both paths
+    * share the guards, the empty-delta no-op, the commit order and the
+    * three writes. The cap sits at the measured crossover of the two paths
+    * on 4 cores (sf0.1 documents into their own index): the driver path won
+    * at 66k tokens (0.79 against 1.10 s), still led at 135k (1.19 against
+    * 1.26 s) and lost at 271k (1.54 against 1.39 s), where its per-token
+    * collect and local-frame cost overtakes the distributed plan's fixed
+    * job overhead.
     */
   def refreshBM25Index(
       spark: SparkSession,
       path: String,
       newDocs: DataFrame,
       textCol: String = "text",
-      idCol: String = "doc_id"): Unit = {
-    val newPost = indexPostings(newDocs, textCol, idCol).persist()
+      idCol: String = "doc_id"): Unit =
+    refreshBM25Index(spark, path, newDocs, textCol, idCol, DriverTokens)
+
+  /** Delta tokens up to which [[refreshBM25Index]] counts postings on the driver. */
+  private val DriverTokens = 128 << 10
+
+  /** [[refreshBM25Index]] with its driver-path cap on delta tokens; a cap
+    * below 1 forces the distributed plan.
+    */
+  private[graft] def refreshBM25Index(
+      spark: SparkSession,
+      path: String,
+      newDocs: DataFrame,
+      textCol: String,
+      idCol: String,
+      driverTokens: Int): Unit = {
+    val tokens = indexTokens(newDocs, textCol, idCol)
+    val local =
+      if (driverTokens < 1) None
+      else collectUpTo(occurrences(tokens).withColumn("__bucket", termBucket(col("__term"))),
+        driverTokens)
+    val planned = if (local.isEmpty) Some(indexPostings(tokens).persist()) else None
     try {
+      val docs = spark.read.schema(docsSchema).parquet(s"$path/docs")
+      val delta = local.fold(plannedDelta(planned.get, docs))(driverDelta(spark, _, docs))
       // the delta's (doc count, token count), the dup-id guard and the old
       // stats row are independent bounded reads, run as concurrent jobs
       // (guide §2.6) — all settle before any write below starts
-      var agg: Row = null
-      var clash = 0L
+      var counts = (0L, 0L)
+      var clash = false
       var oldStats: Row = null
       Concurrent.awaitAll(
-        () => agg = newPost.agg(countDistinct(col("__doc")), sum(col("__tf"))).head(),
-        () => clash = newPost.select("__doc").distinct()
-          .join(spark.read.schema(docsSchema).parquet(s"$path/docs"), Seq("__doc"), "left_semi")
-          .limit(1).count(),
+        () => counts = delta.counts(),
+        () => clash = collectUpTo(delta.overlap, 0).isEmpty,
         () => oldStats = spark.read.schema(statsSchema).parquet(s"$path/stats").head())
-      if (agg.isNullAt(0) || agg.getLong(0) == 0L) return // nothing to add
-      require(clash == 0L,
+      if (counts._1 == 0L) return // nothing to add
+      require(!clash,
         s"refreshBM25Index: new doc ids overlap the index at $path — a " +
           "repeated id would double-count its terms; merge upstream first")
-      newPost.repartition(col("__bucket"))
-        .write.mode("append").partitionBy("__bucket").parquet(s"$path/postings")
+      delta.postings.write.mode("append").partitionBy("__bucket").parquet(s"$path/postings")
       Concurrent.awaitAll(
         () => spark.createDataFrame(java.util.List.of(Row(
-            oldStats.getLong(0) + agg.getLong(0), oldStats.getLong(1) + agg.getLong(1))),
-            statsSchema)
+            oldStats.getLong(0) + counts._1, oldStats.getLong(1) + counts._2)), statsSchema)
           .write.mode("overwrite").parquet(s"$path/stats"),
-        () => newPost.select("__doc").distinct()
-          .write.mode("append").parquet(s"$path/docs"))
-    } finally newPost.unpersist()
+        () => delta.ids.write.mode("append").parquet(s"$path/docs"))
+    } finally planned.foreach(_.unpersist())
   }
+
+  /** A refresh delta as [[refreshBM25Index]]'s one commit sequence takes it:
+    * its postings in the persisted layout, each bucket's rows within one
+    * partition; its distinct doc ids; those of its ids already in `docs/`;
+    * and its (N, total tokens).
+    */
+  private final case class Delta(postings: DataFrame, ids: DataFrame, overlap: DataFrame,
+      counts: () => (Long, Long))
+
+  /** The driver path's delta from its (__doc, __dl, __term, __bucket) token
+    * rows: [[postingsOf]]'s groupBy, counted in Scala, and the doc ids as
+    * local frames.
+    */
+  private def driverDelta(spark: SparkSession, tokens: Array[Row], docs: DataFrame): Delta = {
+    val tf = tokens.groupMapReduce(r => (r.get(0), r.getLong(1), r.getString(2), r.getLong(3)))(
+      _ => 1L)(_ + _)
+    val buckets = tf.toSeq.map { case ((doc, dl, term, bkt), n) => Row(term, doc, n, dl, bkt) }
+      .groupBy(_.getLong(4)).toSeq.sortBy(_._1).map(_._2)
+    val sc = spark.sparkContext
+    val postings = sc.parallelize(buckets, buckets.size.min(sc.defaultParallelism).max(1))
+      .flatMap(identity)
+    val ids = tokens.map(_.get(0)).distinct
+    val known = ids.filter(_ != null)
+    Delta(spark.createDataFrame(postings, postingsSchema),
+      spark.createDataFrame(java.util.Arrays.asList(ids.map(Row(_)): _*), docsSchema).coalesce(1),
+      docs.where(col("__doc").isin(known: _*)),
+      () => (known.length.toLong, tokens.length.toLong))
+  }
+
+  /** The distributed plan's delta over its persisted postings. */
+  private def plannedDelta(post: DataFrame, docs: DataFrame): Delta = {
+    val ids = post.select("__doc").distinct()
+    Delta(post.repartition(col("__bucket")), ids, ids.join(docs, Seq("__doc"), "left_semi"),
+      () => {
+        val r = post.agg(countDistinct(col("__doc")), sum(col("__tf"))).head()
+        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      })
+  }
+
+  /** `df`'s rows if it has at most `cap` of them, else None: one job whose
+    * tasks each return at most cap + 1 rows, so the driver never holds more
+    * than tasks × (cap + 1).
+    */
+  private def collectUpTo(df: DataFrame, cap: Int): Option[Array[Row]] =
+    Some(df.mapPartitions(_.take(cap + 1))(Encoders.row(df.schema)).collect())
+      .filter(_.length <= cap)
 
   /** Serves a query batch against a [[buildBM25Index]] layout. Each query's
     * distinct terms and their buckets are collected to the driver once (a
@@ -840,17 +932,17 @@ object TextAnalysis {
     * scored on the driver in two Spark jobs, submitted together. One
     * collects the term-filtered postings, each task returning at most
     * cap + 1 rows, so the driver never holds more than tasks × (cap + 1) of
-    * them; the other reads `stats/`. df, the BM25 term weights (the
-    * distributed plan's own column expression, evaluated over local rows),
-    * the per-(query, doc) sums, rounding (BigDecimal HALF_UP, as Spark's
+    * them; the other reads `stats/`. df, the BM25 term weights (in Scala,
+    * bit for bit the distributed plan's column expression), the
+    * per-(query, doc) sums, rounding (BigDecimal HALF_UP, as Spark's
     * `round`) and the top-k (score desc, doc asc) run on the driver. That
     * result is materialized at call time and returned as a local frame with
     * the distributed plan's schema. A batch past the cap pays those two jobs
     * and then runs the distributed plan: a map-side-combined df aggregate
-    * and broadcast joins feed the shared scoring tail. The cap sits at the
-    * measured crossover of the two paths on 4 cores: the driver path won at
-    * 43k postings and lost at 66k, where its per-posting cost overtakes the
-    * distributed plan's fixed job overhead.
+    * and broadcast joins feed the shared scoring tail. The cap bounds what
+    * the driver holds and is conservative: on 4 cores the driver path won at
+    * every size measured, 4k to 116k matched postings (0.24-0.34 s against
+    * 0.58-0.73 s for the distributed plan).
     */
   def searchBM25Index(
       spark: SparkSession,
@@ -907,20 +999,19 @@ object TextAnalysis {
       if (driverPostings < 1) None
       else if (dirs.isEmpty) Some((Array.empty[Row], Array.empty[Row]))
       else {
-        val hits = postings.select("__term", "__doc", "__tf", "__dl")
-        var post = Array.empty[Row]
+        var post = Option.empty[Array[Row]]
         var st = Array.empty[Row]
         Concurrent.awaitAll(
-          () => post = hits.mapPartitions(_.take(driverPostings + 1))(Encoders.row(hits.schema))
-            .collect(),
+          () => post = collectUpTo(postings.select("__term", "__doc", "__tf", "__dl"),
+            driverPostings),
           () => st = stats.collect())
-        Some((post, st)).filter(_._1.length <= driverPostings)
+        post.map((_, st))
       }
     collected match {
       case Some((post, st)) =>
         val out = StructType(Seq(qid, StructField("__doc", LongType),
           StructField("score", DoubleType)))
-        val rows = scoreOnDriver(spark, qrows, post, st, k1, b, topK)
+        val rows = scoreOnDriver(qrows, post, st, k1, b, topK)
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), out)
           .select(col("__qid").as(queryIdCol), col("__doc").as(idCol), col("score"))
       case None =>
@@ -940,18 +1031,13 @@ object TextAnalysis {
     * their (__term, __doc, __tf, __dl) postings and the `stats/` row:
     * (__qid, __doc, score) rows, top `topK` per query id.
     */
-  private def scoreOnDriver(spark: SparkSession, queries: Array[Row], post: Array[Row],
-      st: Array[Row], k1: Double, b: Double, topK: Int): Seq[Row] = {
+  private def scoreOnDriver(queries: Array[Row], post: Array[Row], st: Array[Row],
+      k1: Double, b: Double, topK: Int): Seq[Row] = {
     if (post.isEmpty || st.isEmpty) return Nil
     val df = post.groupMapReduce(_.getString(0))(_ => 1L)(_ + _)
-    // each posting's term weight from scoreBM25's own expression: a
-    // projection of local rows is evaluated on the driver, with no job
-    val matched = post.toSeq.map(r =>
-      Row.fromSeq(r.toSeq ++ (df(r.getString(0)) +: st.head.toSeq)))
-    val weights = spark.createDataFrame(java.util.Arrays.asList(matched: _*), StructType(
-        postingsSchema.fields.init ++ (StructField("__df", LongType) +: statsSchema.fields)))
-      .select(col("__term"), col("__doc"), bm25Term(k1, b)).collect()
-      .groupMap(_.getString(0))(r => (r.getLong(1), r.getDouble(2)))
+    val (n, tt) = (st.head.getLong(0), st.head.getLong(1))
+    val weights = post.groupMap(_.getString(0))(r => (r.getLong(1),
+      bm25Weight(r.getLong(2), r.getLong(3), df(r.getString(0)), n, tt, k1, b)))
     val sums = scala.collection.mutable.LinkedHashMap[(Any, Long), Double]()
     for (q <- queries if !q.isNullAt(1); t <- q.getSeq[String](1);
          (doc, w) <- weights.getOrElse(t, Array.empty[(Long, Double)])) {
@@ -989,12 +1075,25 @@ object TextAnalysis {
   /** One matched (term, posting) row's BM25 term weight, idf × saturated
     * tf, from its (__tf, __dl, __df, __n, __tt) columns.
     */
-  private def bm25Term(k1: Double, b: Double): Column = {
+  private[graft] def bm25Term(k1: Double, b: Double): Column = {
     val avgdl = col("__tt").cast("double") / col("__n").cast("double")
     val idf = log(lit(1.0) +
       (col("__n") - col("__df") + lit(0.5)) / (col("__df") + lit(0.5)))
     val tfNorm = col("__tf") * lit(k1 + 1.0) /
       (col("__tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("__dl") / avgdl))
+    idf * tfNorm
+  }
+
+  /** [[bm25Term]] of one posting, evaluated in Scala bit for bit: the same
+    * operations in the same order, and `StrictMath.log`, which Spark's
+    * `log` evaluates.
+    */
+  private[graft] def bm25Weight(tf: Long, dl: Long, df: Long, n: Long, tt: Long,
+      k1: Double, b: Double): Double = {
+    val avgdl = tt.toDouble / n.toDouble
+    val idf = StrictMath.log(1.0 + ((n - df).toDouble + 0.5) / (df.toDouble + 0.5))
+    val tfNorm =
+      tf.toDouble * (k1 + 1.0) / (tf.toDouble + k1 * ((1.0 - b) + b * dl.toDouble / avgdl))
     idf * tfNorm
   }
 

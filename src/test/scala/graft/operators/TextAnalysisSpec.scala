@@ -576,6 +576,104 @@ class TextAnalysisSpec extends AnyFunSuite with SparkSpec {
       hits(TextAnalysis.searchBM25(a.unionByName(b), qs, topK = 5)))
   }
 
+  // a refresh with an explicit driver-path cap on delta tokens; 0 forces
+  // the distributed plan
+  private def refreshVia(dir: String, delta: org.apache.spark.sql.DataFrame, cap: Int): Unit =
+    TextAnalysis.refreshBM25Index(spark, dir, delta, "text", "doc_id", cap)
+  private def shuffles(plans: Seq[org.apache.spark.sql.execution.QueryExecution]) =
+    plans.map(_.executedPlan.toString).filter(_.contains("Exchange"))
+
+  test("BM25 refresh: a warm small delta runs at most 6 Spark jobs and no shuffle") {
+    val (a, b) = refreshCorpora
+    val dir = tmpDir("bm25rfjobs")
+    TextAnalysis.buildBM25Index(a, dir)
+    TextAnalysis.refreshBM25Index(spark, dir, b.where(col("doc_id") < 50))
+    val (_, jobs, plans) =
+      traced(TextAnalysis.refreshBM25Index(spark, dir, b.where(col("doc_id") >= 50)))
+    assert(jobs <= 6, s"$jobs jobs")
+    assert(plans.nonEmpty && shuffles(plans).isEmpty, shuffles(plans).mkString("\n"))
+    // the check sees the distributed plan's bucket repartition
+    val dir2 = tmpDir("bm25rfjobs2")
+    TextAnalysis.buildBM25Index(a, dir2)
+    val (_, _, planned) = traced(refreshVia(dir2, b, 0))
+    assert(shuffles(planned).nonEmpty)
+  }
+
+  test("BM25 refresh: the driver path and the distributed plan write the same index") {
+    val (a, b) = refreshCorpora
+    // a null text and an empty one add no postings on either path
+    val delta = b.unionByName(Seq((60L, null: String), (61L, " ")).toDF("doc_id", "text"))
+    def refreshed(cap: Int) = {
+      val dir = tmpDir(s"bm25rfcap$cap")
+      TextAnalysis.buildBM25Index(a, dir)
+      val before = files(s"$dir/postings").keySet
+      refreshVia(dir, delta, cap)
+      val added = files(s"$dir/postings").keySet.diff(before)
+        .filter(_.endsWith(".parquet")).toSeq.map(_.takeWhile(_ != '/'))
+      assert(added.sorted == bucketDirs(b, "text").toSeq.sorted, s"cap $cap")
+      def read(d: String) = sortedRows(spark.read.parquet(s"$dir/$d"))
+      (sortedRows(spark.read.parquet(s"$dir/postings")
+        .select("__term", "__doc", "__tf", "__dl", "__bucket")), read("stats"), read("docs"))
+    }
+    val driver = refreshed(1 << 20)
+    assert(driver == refreshed(0))
+    val rebuilt = tmpDir("bm25rfcapall")
+    TextAnalysis.buildBM25Index(a.unionByName(b), rebuilt)
+    assert(driver._1 == sortedRows(spark.read.parquet(s"$rebuilt/postings")
+      .select("__term", "__doc", "__tf", "__dl", "__bucket")))
+  }
+
+  test("BM25 refresh: the duplicate-id guard fires before any write, on both paths") {
+    val (a, b) = refreshCorpora
+    Seq(1 << 20, 0).foreach { cap =>
+      val dir = tmpDir(s"bm25rfdup$cap")
+      TextAnalysis.buildBM25Index(a, dir)
+      val before = files(dir)
+      val err = intercept[IllegalArgumentException](refreshVia(dir, b.unionByName(a.limit(1)), cap))
+      assert(err.getMessage.contains("overlap"), err.getMessage)
+      assert(files(dir) == before, s"cap $cap")
+    }
+  }
+
+  test("BM25 refresh: a non-integral id column is rejected before any job runs") {
+    val (a, _) = refreshCorpora
+    val dir = tmpDir("bm25rfid")
+    TextAnalysis.buildBM25Index(a, dir)
+    val before = files(dir)
+    val delta = Seq((1.5, "alpha beta")).toDF("doc_id", "text")
+    val (err, jobs, _) =
+      traced(intercept[IllegalArgumentException](TextAnalysis.refreshBM25Index(spark, dir, delta)))
+    assert(err.getMessage.contains("integral"), err.getMessage)
+    assert(jobs == 0 && files(dir) == before)
+  }
+
+  test("BM25 term weight in Scala equals the bm25Term column bit for bit") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // (tf, dl, df, n, tt), df = n and dl far above avgdl included
+    val grid = for {
+      n <- Seq(1L, 7L, 1000L, 123457L)
+      df <- Seq(1L, 2L, n / 3 + 1, n).distinct.filter(_ <= n)
+      tt <- Seq(n, n * 37 + 11)
+      dl <- Seq(1L, 3L, 97L, 1000000L)
+      tf <- Seq(1L, 2L, dl).distinct.filter(_ <= dl)
+    } yield Row(tf, dl, df, n, tt)
+    val schema = StructType("__tf __dl __df __n __tt".split(" ").map(StructField(_, LongType)))
+    // a local frame folds the projection on the driver (interpreted); an RDD
+    // scan runs it in a codegen'd task
+    val frames = Seq(spark.createDataFrame(java.util.Arrays.asList(grid: _*), schema),
+      spark.createDataFrame(spark.sparkContext.parallelize(grid, 2), schema))
+    for ((k1, b) <- Seq((1.2, 0.75), (0.9, 0.4), (2.0, 1.0), (1.5, 0.0)); frame <- frames) {
+      val cols = "__tf __dl __df __n __tt".split(" ").map(col)
+      frame.select(cols :+ TextAnalysis.bm25Term(k1, b): _*).collect().foreach { r =>
+        val w = TextAnalysis.bm25Weight(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), k1, b)
+        assert(java.lang.Double.doubleToRawLongBits(w) ==
+          java.lang.Double.doubleToRawLongBits(r.getDouble(5)), s"$r k1=$k1 b=$b: $w")
+      }
+    }
+  }
+
   test("BM25: per-query window is pre-shuffle pruned (WindowGroupLimit)") {
     val corpus = Seq((1L, "a b"), (2L, "b c"), (3L, "c a")).toDF("doc_id", "text")
     val qs = Seq((1L, "a c")).toDF("query_id", "query")

@@ -1,10 +1,18 @@
 import duckdb, json, glob, sys, math
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+# optional third arg: the comma-separated query list graft.Verify took, so a
+# partial Verify run is checked for exactly the queries it wrote; with none,
+# every oracle is checked
+only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 oracles = json.load(open(f"{out}/oracle_sql.json"))
+if only is not None:
+    for name in sorted(only - oracles.keys()):
+        print(f"{name}: ERROR no oracle SQL for this query")
+    oracles = {k: v for k, v in oracles.items() if k in only}
 
 # Sketch queries whose contract is an epsilon band, not value equality: the
 # KLL sketch is value-exact until its first compaction (all of sf0.001/sf0.01),
