@@ -14,28 +14,31 @@ import org.apache.spark.sql.SparkSession
   * itself moved) without a re-run. Queries whose min is still ≥ 2 s after
   * the regular passes — the multi-job iterative tier that inflates 2–4×
   * under load — get one extra timed pass to firm up their min. A query
-  * that throws in any timed pass is named on stderr, left out of every
-  * reported map and the total, and makes the main exit 1 once both stdout
-  * lines are out.
+  * that throws in the warm pass or any timed pass is named on stderr, left
+  * out of every reported map and the total, and makes the main exit 1 once
+  * both stdout lines are out; so does a failure to write BENCH.json or
+  * BENCH_c<cpus>.json.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = tools.Harness.defaultCores
     val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt)
-    val spark = tools.Harness.localSession(cpus)
     // SPARK_GRAFT_BENCH_ONLY=a,b,c isolates named queries (quiet-box
     // re-measures of a drifted min without the other 180 queries' JVM churn)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(SparkEntry.resolveQueries(_).toSet)
+    val spark = tools.Harness.localSession(cpus)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    ordered.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    ordered.foreach { case (name, fn) =>
+      try fn(spark, sfDir).count() catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed in the warm pass: ${e.getMessage}")
+        failed += name
+      }
     }
     // whole-suite passes (not back-to-back per query): spacing the repeats
     // decorrelates a burst of box-level noise from any single query
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Option[(String, Double)] = {
       val t0 = System.nanoTime()
@@ -90,16 +93,18 @@ object Bench {
     val compact =
       s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"sf":"$sfDir","detail":"BENCH.json"}"""
     println(compact)
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
-        (full + "\n").getBytes("UTF-8"))
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"BENCH_c$cpus.json"),
-        (full + "\n").getBytes("UTF-8"))
-    } catch { case _: Exception => () }
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
-      sys.exit(1)
+    val unwritten = Seq("BENCH.json", s"BENCH_c$cpus.json").filterNot { f =>
+      try {
+        java.nio.file.Files.write(java.nio.file.Paths.get(f), (full + "\n").getBytes("UTF-8"))
+        true
+      } catch { case e: Exception =>
+        System.err.println(s"[bench] cannot write $f: $e")
+        false
+      }
     }
+    spark.stop()
+    if (failed.nonEmpty)
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+    if (failed.nonEmpty || unwritten.nonEmpty) sys.exit(1)
   }
 }

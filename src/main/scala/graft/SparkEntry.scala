@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GeoFunctions._
 import graft.operators._
-import graft.sources.ManifestTable
+import graft.sources.{GeoSources, ManifestTable, PgMiniServer, Postgres, SqliteDb}
 
 /** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §7 (plan).
   *
@@ -16,13 +16,17 @@ import graft.sources.ManifestTable
   */
 object SparkEntry {
 
+  /** A registry query: session and sf dir in, result frame out. */
+  private type Query = (SparkSession, String) => DataFrame
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     readTable(s, dir, name)
 
-  /** Deterministic per-SF scratch dir, wiped before use — manifest-table
-    * queries must start from version 0 on every Verify/Bench run (the log
-    * is append-only by design, so a reused root would keep growing), and a
-    * sharded write refuses a directory holding an earlier write's shards.
+  /** Deterministic per-SF scratch dir, wiped before use — the only place a
+    * query writes files, under a tag of its own. Manifest-table queries must
+    * start from version 0 on every Verify/Bench run (the log is append-only
+    * by design, so a reused root would keep growing), and a sharded write
+    * refuses a directory holding an earlier write's shards.
     */
   private def freshRoot(tag: String, dir: String): String = {
     val p = java.nio.file.Paths.get(s"/tmp/graft_${tag}_${new java.io.File(dir).getName}")
@@ -112,12 +116,293 @@ object SparkEntry {
     s"""2*6371008.8*asin(least(1.0, sqrt(pow(sin((radians($lat2)-radians($lat1))/2),2)
        | + cos(radians($lat1))*cos(radians($lat2))*pow(sin((radians($lon2)-radians($lon1))/2),2))))""".stripMargin
 
+  /** Customer points reprojected from WGS84 to `epsg`, rounded to the
+    * millimetre (the geo_convert_<crs> queries).
+    */
+  private def projectTo(epsg: String): Query = (s, dir) =>
+    t(s, dir, "customer")
+      .withColumn("geometry",
+        st_point(expr("(c_custkey % 60) * 0.1 + 0.05"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
+      .withColumn("geometry", st_transform(col("geometry"), "EPSG:4326", epsg))
+      .select(col("c_custkey"),
+        round(st_x(col("geometry")), 3).as("easting"),
+        round(st_y(col("geometry")), 3).as("northing"))
+
+  /** Customer points written clustered along `curve` (morton or hilbert),
+    * then read back through the curve's bbox range scan.
+    */
+  private def curveRead(curve: String): Query = (s, dir) => {
+    val pts = t(s, dir, "customer")
+      .withColumn("lon", expr("(c_custkey % 120) * 0.5 - 30 + 0.25"))
+      .withColumn("lat", expr("(c_custkey % 80) * 0.5 - 20 + 0.25"))
+      .select("c_custkey", "lon", "lat")
+    val out = freshRoot(s"${curve}_read", dir)
+    GeoOps.writeZOrdered(pts, "lon", "lat", out, bits = 16, partitions = 8, curve = curve)
+    GeoOps.readZOrdered(s, out, "lon", "lat", -10.0, -10.0, 5.0, 5.0, curve = curve)
+      .select(col("c_custkey"),
+        round(col("lon"), 6).as("lon6"), round(col("lat"), 6).as("lat6"))
+  }
+
+  /** Each purchase joined as-of to the same user's latest earlier click;
+    * `timeBucket` is asofJoin's hot-key split.
+    */
+  private def purchaseAsofClick(timeBucket: Option[Double]): Query =
+    (s, dir) => {
+      val e = t(s, dir, "events")
+      val purchases = e.where(col("event_type") === "purchase")
+        .select("event_id", "user_id", "ts", "value")
+      val clicks = e.where(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts"), col("value"))
+      // unmatched-left payload nulls become sentinels: the gate's tuple
+      // compare (and possibly the driver's hash) treats NaN != NaN, so a
+      // genuinely-null double column can never MATCH
+      Ops.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
+          rightCols = Seq("click_id", "value", "ts"), rightTieCol = Some("click_id"),
+          timeBucket = timeBucket)
+        .select(col("event_id"), col("user_id"),
+          round(col("value"), 4).as("purchase_value"),
+          coalesce(col("click_id"), lit(-1L)).as("click_id"),
+          coalesce(round(col("value_right"), 4), lit(-1.0)).as("click_value"),
+          coalesce(unix_micros(col("ts")) - unix_micros(col("ts_right")), lit(-1L))
+            .as("lag_us"))
+    }
+
+  /** Lineitem ship intervals (ship date + quantity days) self-joined per
+    * supplier: each item's overlap count and overlapping quantity.
+    * `maxReplication` is intervalJoin's level-ladder guard.
+    */
+  private def lineitemIntervalJoin(maxReplication: Option[Int]): Query =
+    (s, dir) => {
+      val f = t(s, dir, "lineitem").select(
+        col("l_suppkey").as("k"),
+        (col("l_orderkey") * 10 + col("l_linenumber")).as("iid"),
+        datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01"))).as("s0"),
+        (datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01")))
+          + floor(col("l_quantity")).cast("int")).as("e0"),
+        col("l_quantity").as("q"))
+      Joins.intervalJoin(f, f, Seq("k"), "s0", "e0", "s0", "e0", bucketWidth = 32.0,
+          maxReplication = maxReplication)
+        .where(col("iid") =!= col("iid_right"))
+        .groupBy("iid")
+        .agg(count(lit(1)).as("n_overlap"),
+          round(sum(col("q_right")), 4).as("qty_overlap_sum"))
+    }
+
+  /** Four interleaved order appends to a manifest table, a `curve`-ordered
+    * compaction (zorder or hilbert) on (custkey, orderkey), then a
+    * stats-pruned scan on custkey — results must equal plain SQL exactly.
+    */
+  private def manifestCurveScan(curve: String): Query = (s, dir) => {
+    val root = freshRoot(s"manifest_$curve", dir)
+    val orders = t(s, dir, "orders")
+    (0 until 4).foreach(i =>
+      ManifestTable.append(orders.where(col("o_orderkey") % 4 === i)
+        .select("o_orderkey", "o_custkey", "o_orderstatus"), root))
+    val mx = orders.agg(max("o_custkey")).head().getLong(0) // bounded: 1 row
+    val by = Seq("o_custkey", "o_orderkey")
+    ManifestTable.compact(s, root, targetBytes = 64L << 10,
+      zorderBy = if (curve == "zorder") by else Nil,
+      hilbertBy = if (curve == "hilbert") by else Nil)
+    ManifestTable.scan(s, root,
+        ManifestTable.Between("o_custkey", mx / 4, mx / 2))
+      .groupBy("o_orderstatus")
+      .agg(count(lit(1)).as("cnt"), sum("o_orderkey").cast("long").as("sum_key"))
+  }
+
+  /** BM25 query probes: the first four word tokens of every 100th document
+    * (mirrors the `q` CTE of [[bm25ScoreCtes]]).
+    */
+  private def bm25Probes(docs: DataFrame): DataFrame =
+    docs.where(col("doc_id") % 100 === 7)
+      .select(col("doc_id").as("query_id"),
+        array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
+
+  /** Persists a built IVF index under `out`: `assigned` partitioned by cell,
+    * each other named table beside it, all in one submit (independent dirs,
+    * guide §2.6).
+    */
+  private def writeIndex(out: String, assigned: DataFrame, tables: (String, DataFrame)*): Unit =
+    Concurrent.awaitAll(
+      (() => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned")) +:
+        tables.map { case (name, df) => () => df.write.mode("overwrite").parquet(s"$out/$name") }: _*)
+
+  /** A query's output columns and the DuckDB SQL that computes the same. */
+  private final case class Shape(project: DataFrame => DataFrame, oracle: String)
+
+  private val pointXY = Seq(
+    round(st_x(col("geometry")), 6).as("px"), round(st_y(col("geometry")), 6).as("py"))
+
+  private def custXYOracle(balance: String): String =
+    s"""SELECT c_custkey, $balance,
+       |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
+       |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
+       |FROM customer""".stripMargin
+
+  /** custPoints read back with their written column types. */
+  private val custTyped = Shape(
+    _.select(col("c_custkey") +: col("c_acctbal") +: pointXY: _*),
+    custXYOracle("c_acctbal"))
+
+  /** custPoints read back from a format that infers its column types
+    * (text cells, dBase fields): the key cast back, the balance rounded.
+    */
+  private val custInferred = Shape(
+    _.select(col("c_custkey").cast("long").as("c_custkey") +:
+      round(col("c_acctbal").cast("double"), 2).as("acctbal2") +: pointXY: _*),
+    custXYOracle("round(c_acctbal, 2) AS acctbal2"))
+
+  /** Embeddings read back: the LIST column's length and end elements
+    * (element probes compare exactly — no float summation).
+    */
+  private val embeddingProbes = Shape(
+    _.select(col("vec_id"), col("label"), size(col("embedding")).as("dim"),
+      round(element_at(col("embedding"), 1).cast("double"), 6).as("c_first"),
+      round(element_at(col("embedding"), -1).cast("double"), 6).as("c_last")),
+    """SELECT vec_id, label, len(embedding) AS dim,
+      |  round(CAST(embedding[1] AS DOUBLE), 6) AS c_first,
+      |  round(CAST(embedding[-1] AS DOUBLE), 6) AS c_last
+      |FROM embeddings""".stripMargin)
+
+  /** One file-driver roundtrip query: `source` goes through `io` at `file`
+    * under the query's fresh scratch dir, and `shape` projects what came
+    * back. The default `io` is the suffix-dispatched writeAuto → readAuto
+    * (erde read_df/write_df).
+    */
+  private final case class Roundtrip(name: String,
+      source: Query, file: String, shape: Shape,
+      io: (SparkSession, DataFrame, String) => DataFrame = autoIo) {
+    def query(s: SparkSession, dir: String): DataFrame =
+      shape.project(io(s, source(s, dir), s"${freshRoot(name, dir)}/$file"))
+  }
+
+  private def autoIo(s: SparkSession, df: DataFrame, path: String): DataFrame = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path).getParent)
+    GeoSources.writeAuto(df, path)
+    GeoSources.readAuto(s, path)
+  }
+
+  private def custRows(s: SparkSession, dir: String): DataFrame =
+    custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
+
+  private def embeddingRows(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")
+
+  private val roundtrips: Seq[Roundtrip] = Seq(
+    // fgb (erde/io/fgb.py): own writer + ranged reader
+    Roundtrip("fgb_roundtrip", custRows, "customer.fgb", custTyped),
+    // shp: own ESRI writer + shx-indexed ranged reader
+    Roundtrip("shp_roundtrip", custRows, "customer.shp", custInferred),
+    // GeoJSONSeq: attributes come back as one `properties` map
+    Roundtrip("auto_roundtrip", custRows, "customer.geojsonl", custTyped.copy(project = df =>
+      custTyped.project(df.select(
+        element_at(col("properties"), "c_custkey").cast("long").as("c_custkey"),
+        element_at(col("properties"), "c_acctbal").cast("double").as("c_acctbal"),
+        col("geometry"))))),
+    // the reference's xlsx driver is read-only (write_df raises
+    // NotImplementedError); graft's sharded OOXML export must round-trip its
+    // own typed reader, geometry as WKT like the read side
+    Roundtrip("xlsx_roundtrip", custRows, "customer.xlsx", custInferred),
+    // JSONL (LLM-corpus interchange; WKT geometry)
+    Roundtrip("jsonl_roundtrip", custRows, "customer.jsonl", custInferred),
+    // ORC: Spark-native columnar sibling
+    Roundtrip("orc_roundtrip", custRows, "customer.orc", custTyped),
+    // avro: own container writer + splittable reader
+    Roundtrip("avro_roundtrip", custRows, "customer.avro", custTyped),
+    // arrow IPC: footer-indexed splittable reads; the embeddings table
+    // exercises the LIST column path (the format's differentiator)
+    Roundtrip("arrow_roundtrip", embeddingRows, "embeddings.arrow", embeddingProbes),
+    // arrow STREAMING format (.arrows: footerless, per-file tasks)
+    Roundtrip("arrows_roundtrip", embeddingRows, "embeddings.arrows", embeddingProbes),
+    // gpkg: own SQLite writer + b-tree reader
+    Roundtrip("gpkg_roundtrip", custRows, "customer.gpkg", custTyped),
+    // generic SQLite: writeSharded emits one standalone database per
+    // partition (the page graph is not splittable; parallelism = many
+    // files), and the directory reads back as one frame through the same
+    // pager/B-tree codec the GeoPackage driver uses
+    Roundtrip("sqlite_roundtrip",
+      (s, dir) => t(s, dir, "supplier")
+        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("s_nationkey")),
+      "supplier.sqlite",
+      Shape(
+        _.select(col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
+          round(col("s_acctbal").cast("double"), 2).as("bal2"),
+          col("s_nationkey").cast("long").as("s_nationkey")),
+        """SELECT s_suppkey, s_name, round(s_acctbal, 2) AS bal2, s_nationkey
+          |FROM supplier""".stripMargin),
+      io = (s, df, path) => {
+        SqliteDb.writeSharded(df.repartition(4), path, table = "supplier")
+        GeoSources.readAuto(s, path)
+      }),
+    // postgres: wire-protocol write + partitioned read against the
+    // in-process PgMiniServer (loopback; hermetic). The server holds the
+    // table, so the scratch path goes unused.
+    Roundtrip("pg_roundtrip", custRows, "customer_pts", custTyped,
+      io = (s, df, _) => {
+        val server = new PgMiniServer()
+        try {
+          val url = s"postgresql://graft@127.0.0.1:${server.port}/graftdb/customer_pts@geometry"
+          GeoSources.writeAuto(df, url)
+          Postgres.read(s, url, partitionColumn = Some("c_custkey"), numPartitions = 4)
+            .localCheckpoint(true) // materialize before the server dies
+        } finally server.close()
+      }),
+    // osm.pbf: write + read + tag filter. NULL doubles become NaN in the
+    // driver's pandas compare and NaN never equals NaN — sentinel the
+    // way/relation rows instead (both sides)
+    Roundtrip("osm_pbf_roundtrip",
+      (s, dir) => t(s, dir, "part").select(
+        element_at(array(lit("n"), lit("w"), lit("r")), (col("p_partkey") % 3 + 1).cast("int")).as("type"),
+        col("p_partkey").as("id"),
+        map(lit("brand"), col("p_brand"), lit("container"), col("p_type")).as("tags"),
+        when(col("p_partkey") % 3 === 0, expr("(p_partkey % 60) * 0.1 + 0.05").cast("double")).as("lon"),
+        when(col("p_partkey") % 3 === 0, expr("(p_partkey % 35) * 0.1 - 1.05").cast("double")).as("lat"),
+        when(col("p_partkey") % 3 === 1, array(col("p_partkey") - 1, col("p_partkey") + 2))
+          .when(col("p_partkey") % 3 === 2, array(col("p_partkey") - 1, col("p_partkey") + 1))
+          .as("refs"),
+        when(col("p_partkey") % 3 === 2, array(lit("w"), lit("n"))).as("member_types"),
+        when(col("p_partkey") % 3 === 2, array(lit("outer"), lit(""))).as("member_roles")),
+      "elements.osm.pbf",
+      Shape(
+        OsmFilter.tagFilter(_, Seq("wr/brand=Brand#13,Brand#23", "n/container"))
+          .select(col("id").as("osm_id"), col("type"),
+            coalesce(round(col("lon"), 5), lit(-999.0)).as("lon5"),
+            coalesce(round(col("lat"), 5), lit(-999.0)).as("lat5"),
+            when(col("type") === "n", lit(-1)).otherwise(size(col("refs"))).as("nrefs"),
+            when(col("type") === "r", concat_ws("|", col("member_types"))).otherwise(lit("-")).as("mtypes"),
+            when(col("type") === "r", concat_ws("|", col("member_roles"))).otherwise(lit("-")).as("mroles")),
+        """WITH e AS (SELECT p_partkey AS osm_id, p_brand, p_type,
+          |  CASE (p_partkey % 3) WHEN 0 THEN 'n' WHEN 1 THEN 'w' ELSE 'r' END AS type,
+          |  CASE WHEN p_partkey % 3 = 0 THEN CAST(round((p_partkey % 60) * 0.1 + 0.05, 5) AS DOUBLE)
+          |       ELSE -999.0 END AS lon5,
+          |  CASE WHEN p_partkey % 3 = 0 THEN CAST(round((p_partkey % 35) * 0.1 - 1.05, 5) AS DOUBLE)
+          |       ELSE -999.0 END AS lat5,
+          |  CASE WHEN p_partkey % 3 = 0 THEN -1 ELSE 2 END AS nrefs,
+          |  CASE WHEN p_partkey % 3 = 2 THEN 'w|n' ELSE '-' END AS mtypes,
+          |  CASE WHEN p_partkey % 3 = 2 THEN 'outer|' ELSE '-' END AS mroles
+          |  FROM part)
+          |SELECT osm_id, type, lon5, lat5, nrefs, mtypes, mroles FROM e
+          |WHERE (type IN ('w','r') AND p_brand IN ('Brand#13','Brand#23'))
+          |   OR (type = 'n' AND p_type IS NOT NULL)""".stripMargin)),
+  )
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("dedup_exact")(spark, "/root/testdata/sf0.001")
 
+  /** The query names of a comma-separated list, as the registry mains take
+    * it: names trimmed, blanks dropped, list order kept. Fails naming every
+    * name that is not a `queries` key, and on a list with no names, so a
+    * misspelled selection never runs nothing and passes.
+    */
+  def resolveQueries(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    require(names.nonEmpty, s"no query names in '$list'")
+    val unknown = names.filterNot(queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map[String, Query](
     // --- erde op/subset (erde/op/subset.py) -------------------------------
     "subset_cols" -> ((s, dir) =>
       Subset(t(s, dir, "customer"), "c_custkey: id, c_acctbal: bal, c_mktsegment")),
@@ -240,31 +525,8 @@ object SparkEntry {
       Clustering.kmeans(t(s, dir, "embeddings"), "embedding", "vec_id",
         k = 8, iters = 3)),
 
-    "hilbert_read" -> ((s, dir) => {
-      val pts = t(s, dir, "customer")
-        .withColumn("lon", expr("(c_custkey % 120) * 0.5 - 30 + 0.25"))
-        .withColumn("lat", expr("(c_custkey % 80) * 0.5 - 20 + 0.25"))
-        .select("c_custkey", "lon", "lat")
-      val out = s"/tmp/graft_hilb_${new java.io.File(dir).getName}"
-      GeoOps.writeZOrdered(pts, "lon", "lat", out, bits = 16, partitions = 8,
-        curve = "hilbert")
-      GeoOps.readZOrdered(s, out, "lon", "lat", -10.0, -10.0, 5.0, 5.0,
-          curve = "hilbert")
-        .select(col("c_custkey"),
-          round(col("lon"), 6).as("lon6"), round(col("lat"), 6).as("lat6"))
-    }),
-
-    "zorder_read" -> ((s, dir) => {
-      val pts = t(s, dir, "customer")
-        .withColumn("lon", expr("(c_custkey % 120) * 0.5 - 30 + 0.25"))
-        .withColumn("lat", expr("(c_custkey % 80) * 0.5 - 20 + 0.25"))
-        .select("c_custkey", "lon", "lat")
-      val out = s"/tmp/graft_zord_${new java.io.File(dir).getName}"
-      GeoOps.writeZOrdered(pts, "lon", "lat", out, bits = 16, partitions = 8)
-      GeoOps.readZOrdered(s, out, "lon", "lat", -10.0, -10.0, 5.0, 5.0)
-        .select(col("c_custkey"),
-          round(col("lon"), 6).as("lon6"), round(col("lat"), 6).as("lat6"))
-    }),
+    "hilbert_read" -> curveRead("hilbert"),
+    "zorder_read" -> curveRead("morton"),
 
     // --- erde op/sjoin sjfull (erde/op/sjoin.py) --------------------------
     "sjoin_full" -> ((s, dir) =>
@@ -389,227 +651,12 @@ object SparkEntry {
     }),
 
     // --- erde op/convert to UTM (transverse Mercator, EPSG:32631) ----------
-    "geo_convert_utm" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").withColumn("geometry",
-        st_point(expr("(c_custkey % 60) * 0.1 + 0.05"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
-      pts.withColumn("geometry", st_transform(col("geometry"), "EPSG:4326", "EPSG:32631"))
-        .select(col("c_custkey"),
-          round(st_x(col("geometry")), 3).as("easting"),
-          round(st_y(col("geometry")), 3).as("northing"))
-    }),
+    "geo_convert_utm" -> projectTo("EPSG:32631"),
 
     // --- parameterized projections: Lambert-93 (LCC 2SP) and LAEA Europe ---
-    "geo_convert_lcc" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").withColumn("geometry",
-        st_point(expr("(c_custkey % 60) * 0.1 + 0.05"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
-      pts.withColumn("geometry", st_transform(col("geometry"), "EPSG:4326", "EPSG:2154"))
-        .select(col("c_custkey"),
-          round(st_x(col("geometry")), 3).as("easting"),
-          round(st_y(col("geometry")), 3).as("northing"))
-    }),
-    "geo_convert_albers" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").withColumn("geometry",
-        st_point(expr("(c_custkey % 60) * 0.1 + 0.05"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
-      pts.withColumn("geometry", st_transform(col("geometry"), "EPSG:4326", "EPSG:5070"))
-        .select(col("c_custkey"),
-          round(st_x(col("geometry")), 3).as("easting"),
-          round(st_y(col("geometry")), 3).as("northing"))
-    }),
-    "geo_convert_laea" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").withColumn("geometry",
-        st_point(expr("(c_custkey % 60) * 0.1 + 0.05"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
-      pts.withColumn("geometry", st_transform(col("geometry"), "EPSG:4326", "EPSG:3035"))
-        .select(col("c_custkey"),
-          round(st_x(col("geometry")), 3).as("easting"),
-          round(st_y(col("geometry")), 3).as("northing"))
-    }),
-
-    // --- fgb driver end-to-end: write + read + decode (erde/io/fgb.py) -----
-    "fgb_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(freshRoot("fgb", dir))
-      out.mkdirs()
-      graft.sources.Fgb.write(pts, s"$out/customer.fgb")
-      graft.sources.Fgb.read(s, out.toString)
-        .select(col("c_custkey"), col("c_acctbal"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- shp driver end-to-end: own ESRI writer + shx-indexed ranged reader
-    "shp_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(freshRoot("shp", dir))
-      out.mkdirs()
-      graft.sources.Shapefile.write(pts, s"$out/customer")
-      graft.sources.Shapefile.read(s, s"$out/customer.shp")
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          round(col("c_acctbal").cast("double"), 2).as("acctbal2"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- IO entry point: suffix-dispatched write→read (erde read_df/write_df)
-    "auto_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_auto_${new java.io.File(dir).getName}")
-      out.mkdirs()
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.geojsonl")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.geojsonl")
-        .select(element_at(col("properties"), "c_custkey").cast("long").as("c_custkey"),
-          element_at(col("properties"), "c_acctbal").cast("double").as("c_acctbal"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- JSONL driver end-to-end (LLM-corpus interchange; WKT geometry) ----
-    // --- xlsx write → read roundtrip (WKT geometry, typed re-inference) ---
-    // the reference's xlsx driver is read-only (write_df raises
-    // NotImplementedError); graft's sharded OOXML export must round-trip its
-    // own typed reader, geometry as WKT like the read side
-    "xlsx_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_xlsxw_${new java.io.File(dir).getName}")
-      out.mkdirs()
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.xlsx")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.xlsx")
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          round(col("c_acctbal").cast("double"), 2).as("acctbal2"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- generic SQLite roundtrip (supplier → .sqlite shard dir → read) ----
-    // writeSharded emits one standalone SQLite database per partition (the
-    // page graph is not splittable; parallelism = many files), the directory
-    // reads back as one frame through the same from-scratch pager/B-tree
-    // codec the GeoPackage driver uses
-    "sqlite_roundtrip" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier")
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("s_nationkey"))
-      val out = freshRoot("sqlitew", dir)
-      graft.sources.SqliteDb.writeSharded(sup.repartition(4), out, table = "supplier")
-      graft.sources.SqliteDb.read(s, out, Some("supplier"))
-        .select(col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
-          round(col("s_acctbal").cast("double"), 2).as("bal2"),
-          col("s_nationkey").cast("long").as("s_nationkey"))
-    }),
-
-    "jsonl_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_jsonl_${new java.io.File(dir).getName}")
-      out.mkdirs()
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.jsonl")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.jsonl")
-        .select(col("c_custkey").cast("long").as("c_custkey"),
-          round(col("c_acctbal").cast("double"), 2).as("acctbal2"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- ORC through the auto-dispatch: Spark-native columnar sibling ------
-    "orc_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(s"/tmp/graft_orc_${new java.io.File(dir).getName}")
-      out.mkdirs()
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.orc")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.orc")
-        .select(col("c_custkey"), col("c_acctbal"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- avro driver end-to-end: own container writer + splittable reader --
-    "avro_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = freshRoot("avro", dir)
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.avro")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.avro")
-        .select(col("c_custkey"), col("c_acctbal"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- arrow IPC driver end-to-end: footer-indexed splittable reads ------
-    // the embeddings table exercises the LIST column path (the format's
-    // differentiator); element probes compare exactly — no float summation
-    "arrow_roundtrip" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val out = freshRoot("arrow", dir)
-      graft.sources.GeoSources.writeAuto(emb, s"$out/embeddings.arrow")
-      graft.sources.GeoSources.readAuto(s, s"$out/embeddings.arrow")
-        .select(col("vec_id"), col("label"), size(col("embedding")).as("dim"),
-          round(element_at(col("embedding"), 1).cast("double"), 6).as("c_first"),
-          round(element_at(col("embedding"), -1).cast("double"), 6).as("c_last"))
-    }),
-
-    // --- arrow STREAMING-format twin (.arrows: footerless, per-file tasks) -
-    "arrows_roundtrip" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      val out = freshRoot("arrows", dir)
-      graft.sources.GeoSources.writeAuto(emb, s"$out/embeddings.arrows")
-      graft.sources.GeoSources.readAuto(s, s"$out/embeddings.arrows")
-        .select(col("vec_id"), col("label"), size(col("embedding")).as("dim"),
-          round(element_at(col("embedding"), 1).cast("double"), 6).as("c_first"),
-          round(element_at(col("embedding"), -1).cast("double"), 6).as("c_last"))
-    }),
-
-    // --- gpkg driver end-to-end: own SQLite writer + b-tree reader ---------
-    "gpkg_roundtrip" -> ((s, dir) => {
-      val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-      val out = new java.io.File(freshRoot("gpkg", dir))
-      out.mkdirs()
-      graft.sources.GeoSources.writeAuto(pts, s"$out/customer.gpkg")
-      graft.sources.GeoSources.readAuto(s, s"$out/customer.gpkg")
-        .select(col("c_custkey"), col("c_acctbal"),
-          round(st_x(col("geometry")), 6).as("px"),
-          round(st_y(col("geometry")), 6).as("py"))
-    }),
-
-    // --- postgres driver end-to-end: wire-protocol write + partitioned read
-    // against the in-process PgMiniServer (loopback; hermetic) --------------
-    "pg_roundtrip" -> ((s, dir) => {
-      val server = new graft.sources.PgMiniServer()
-      try {
-        val pts = custPoints(s, dir).select(col("c_custkey"), col("c_acctbal"), col("geometry"))
-        val url = s"postgresql://graft@127.0.0.1:${server.port}/graftdb/customer_pts@geometry"
-        graft.sources.GeoSources.writeAuto(pts, url)
-        graft.sources.Postgres.read(s, url,
-            partitionColumn = Some("c_custkey"), numPartitions = 4)
-          .select(col("c_custkey"), col("c_acctbal"),
-            round(st_x(col("geometry")), 6).as("px"),
-            round(st_y(col("geometry")), 6).as("py"))
-          .localCheckpoint(true) // materialize before the server dies
-      } finally server.close()
-    }),
-
-    // --- osm.pbf driver end-to-end: write + read + tag filter --------------
-    "osm_pbf_roundtrip" -> ((s, dir) => {
-      val elements = t(s, dir, "part").select(
-        element_at(array(lit("n"), lit("w"), lit("r")), (col("p_partkey") % 3 + 1).cast("int")).as("type"),
-        col("p_partkey").as("id"),
-        map(lit("brand"), col("p_brand"), lit("container"), col("p_type")).as("tags"),
-        when(col("p_partkey") % 3 === 0, expr("(p_partkey % 60) * 0.1 + 0.05").cast("double")).as("lon"),
-        when(col("p_partkey") % 3 === 0, expr("(p_partkey % 35) * 0.1 - 1.05").cast("double")).as("lat"),
-        when(col("p_partkey") % 3 === 1, array(col("p_partkey") - 1, col("p_partkey") + 2))
-          .when(col("p_partkey") % 3 === 2, array(col("p_partkey") - 1, col("p_partkey") + 1))
-          .as("refs"),
-        when(col("p_partkey") % 3 === 2, array(lit("w"), lit("n"))).as("member_types"),
-        when(col("p_partkey") % 3 === 2, array(lit("outer"), lit(""))).as("member_roles"))
-      val out = new java.io.File(freshRoot("pbf", dir))
-      out.mkdirs()
-      graft.sources.OsmPbf.write(elements, s"$out/elements.osm.pbf")
-      // NULL doubles become NaN in the driver's pandas compare and NaN never
-      // equals NaN — sentinel the way/relation rows instead (both sides)
-      OsmFilter.tagFilter(graft.sources.OsmPbf.read(s, out.toString),
-          Seq("wr/brand=Brand#13,Brand#23", "n/container"))
-        .select(col("id").as("osm_id"), col("type"),
-          coalesce(round(col("lon"), 5), lit(-999.0)).as("lon5"),
-          coalesce(round(col("lat"), 5), lit(-999.0)).as("lat5"),
-          when(col("type") === "n", lit(-1)).otherwise(size(col("refs"))).as("nrefs"),
-          when(col("type") === "r", concat_ws("|", col("member_types"))).otherwise(lit("-")).as("mtypes"),
-          when(col("type") === "r", concat_ws("|", col("member_roles"))).otherwise(lit("-")).as("mroles"))
-    }),
+    "geo_convert_lcc" -> projectTo("EPSG:2154"),
+    "geo_convert_albers" -> projectTo("EPSG:5070"),
+    "geo_convert_laea" -> projectTo("EPSG:3035"),
 
     // --- skew stress: every point in ONE grid cell; salting spreads it -----
     "sjoin_skew" -> ((s, dir) => {
@@ -794,45 +841,13 @@ object SparkEntry {
         .select(col("cohort"), col("offset"), col("n_active"), col("n_cohort"),
           round(col("retention"), 6).as("retention6"))),
 
-    "events_asof" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val purchases = e.where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts"), col("value"))
-      // unmatched-left payload nulls become sentinels: the gate's tuple
-      // compare (and possibly the driver's hash) treats NaN != NaN, so a
-      // genuinely-null double column can never MATCH
-      Ops.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          rightCols = Seq("click_id", "value", "ts"), rightTieCol = Some("click_id"))
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 4).as("purchase_value"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(round(col("value_right"), 4), lit(-1.0)).as("click_value"),
-          coalesce(unix_micros(col("ts")) - unix_micros(col("ts_right")), lit(-1L))
-            .as("lag_us"))
-    }),
+    "events_asof" -> purchaseAsofClick(None),
 
     // --- as-of join, hot-key split guard active on real data ---------------
     // timeBucket = 6h splits every user's timeline across multiple window
     // partitions with cross-bucket carries; output must equal the unsplit
     // path — the SAME native DuckDB ASOF oracle gates it per round
-    "events_asof_split" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val purchases = e.where(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts", "value")
-      val clicks = e.where(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("ts"), col("value"))
-      Ops.asofJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
-          rightCols = Seq("click_id", "value", "ts"), rightTieCol = Some("click_id"),
-          timeBucket = Some(21600.0))
-        .select(col("event_id"), col("user_id"),
-          round(col("value"), 4).as("purchase_value"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(round(col("value_right"), 4), lit(-1.0)).as("click_value"),
-          coalesce(unix_micros(col("ts")) - unix_micros(col("ts_right")), lit(-1L))
-            .as("lag_us"))
-    }),
+    "events_asof_split" -> purchaseAsofClick(Some(21600.0)),
 
     // --- osm tag filter (erde/op/osm.py re-expressed) ----------------------
     "osm_tagfilter" -> ((s, dir) => {
@@ -1069,10 +1084,8 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val (assigned, centroids) =
         Similarity.ivfBuildIndex(emb, "embedding", "vec_id", nlist = 8)
-      val out = s"/tmp/graft_ivfidx_${new java.io.File(dir).getName}"
-      graft.operators.Concurrent.awaitAll( // independent dirs: one submit (guide §2.6)
-        () => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned"),
-        () => centroids.write.mode("overwrite").parquet(s"$out/centroids"))
+      val out = freshRoot("ivf_index", dir)
+      writeIndex(out, assigned, "centroids" -> centroids)
       Similarity.ivfSearchIndex(
           s.read.parquet(s"$out/assigned"), s.read.parquet(s"$out/centroids"),
           emb.where(col("vec_id") < 8), "embedding", "vec_id", k = 5, nprobe = 8)
@@ -1086,14 +1099,12 @@ object SparkEntry {
     // nprobe = nlist: exactly brute force over the UNION corpus
     "sim_ivf_refresh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val root = freshRoot("ivf_rf", dir)
+      val scratch = freshRoot("ivf_refresh", dir)
+      val (root, out) = (s"$scratch/table", s"$scratch/index")
       ManifestTable.append(emb.where(col("vec_id") % 3 =!= 2), root)
-      val out = s"/tmp/graft_ivfrf_${new java.io.File(dir).getName}"
       val (assigned, centroids) = Similarity.ivfBuildIndex(
         ManifestTable.read(s, root), "embedding", "vec_id", nlist = 8)
-      graft.operators.Concurrent.awaitAll( // independent dirs: one submit (guide §2.6)
-        () => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned"),
-        () => centroids.write.mode("overwrite").parquet(s"$out/centroids"))
+      writeIndex(out, assigned, "centroids" -> centroids)
       ManifestTable.append(emb.where(col("vec_id") % 3 === 2), root)
       Similarity.ivfRefreshIndex(s, out,
         ManifestTable.readSince(s, root, sinceExclusive = 1L), "embedding", "vec_id")
@@ -1125,10 +1136,8 @@ object SparkEntry {
       val emb = t(s, dir, "embeddings")
       val (assigned, centroids) =
         Similarity.ivfBuildIndex(emb, "embedding", "vec_id", nlist = 8)
-      val out = s"/tmp/graft_i8ivfidx_${new java.io.File(dir).getName}"
-      graft.operators.Concurrent.awaitAll( // independent dirs: one submit (guide §2.6)
-        () => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned"),
-        () => centroids.write.mode("overwrite").parquet(s"$out/centroids"))
+      val out = freshRoot("int8_ivf_index", dir)
+      writeIndex(out, assigned, "centroids" -> centroids)
       Similarity.int8IvfSearchIndex(
           s.read.parquet(s"$out/assigned"), s.read.parquet(s"$out/centroids"),
           emb.where(col("vec_id") < 8), "embedding", "vec_id",
@@ -1198,11 +1207,8 @@ object SparkEntry {
       val cb = Similarity.pqSampleCodebooks(emb, "embedding", "vec_id", m = 8, ksub = 16)
       val (assigned, centroids, cbDf) = Similarity.ivfPqBuildIndex(
         emb, "embedding", "vec_id", nlist = 8, m = 8, ksub = 16, codebooks = Some(cb))
-      val out = s"/tmp/graft_ivfpqidx_${new java.io.File(dir).getName}"
-      graft.operators.Concurrent.awaitAll( // independent dirs: one submit (guide §2.6)
-        () => assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned"),
-        () => centroids.write.mode("overwrite").parquet(s"$out/centroids"),
-        () => cbDf.write.mode("overwrite").parquet(s"$out/codebook"))
+      val out = freshRoot("ivf_pq_index", dir)
+      writeIndex(out, assigned, "centroids" -> centroids, "codebook" -> cbDf)
       Similarity.ivfPqSearchIndex(
           s.read.parquet(s"$out/assigned"), s.read.parquet(s"$out/centroids"),
           s.read.parquet(s"$out/codebook"),
@@ -1275,10 +1281,7 @@ object SparkEntry {
     // --- BM25 full-text top-k search (inverted-index term join) ------------
     "text_bm25" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val qs = docs.where(col("doc_id") % 100 === 7)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
-      TextAnalysis.searchBM25(docs, qs, topK = 10)
+      TextAnalysis.searchBM25(docs, bm25Probes(docs), topK = 10)
     }),
 
     // --- BM25 persisted index: build-once / search-many roundtrip ----------
@@ -1287,12 +1290,9 @@ object SparkEntry {
     // the bucket-directory read is plan-spec'd in TextAnalysisSpec
     "text_bm25_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val qs = docs.where(col("doc_id") % 100 === 7)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
-      val out = s"/tmp/graft_bm25idx_${new java.io.File(dir).getName}"
+      val out = freshRoot("bm25_index", dir)
       TextAnalysis.buildBM25Index(docs, out)
-      TextAnalysis.searchBM25Index(s, out, qs, topK = 10)
+      TextAnalysis.searchBM25Index(s, out, bm25Probes(docs), topK = 10)
     }),
 
     // --- BM25 index incremental refresh composed with readSince ------------
@@ -1303,17 +1303,14 @@ object SparkEntry {
     // oracle verbatim
     "text_bm25_refresh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val root = freshRoot("bm25_rf", dir)
+      val scratch = freshRoot("bm25_refresh", dir)
+      val (root, out) = (s"$scratch/table", s"$scratch/index")
       ManifestTable.append(docs.where(col("doc_id") % 3 =!= 2), root)
-      val out = s"/tmp/graft_bm25rf_${new java.io.File(dir).getName}"
       TextAnalysis.buildBM25Index(ManifestTable.read(s, root), out)
       ManifestTable.append(docs.where(col("doc_id") % 3 === 2), root)
       TextAnalysis.refreshBM25Index(s, out,
         ManifestTable.readSince(s, root, sinceExclusive = 1L))
-      val qs = docs.where(col("doc_id") % 100 === 7)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
-      TextAnalysis.searchBM25Index(s, out, qs, topK = 10)
+      TextAnalysis.searchBM25Index(s, out, bm25Probes(docs), topK = 10)
     }),
 
     // --- PII redaction (pre-training scrub; patterns mirrored in SQL) ------
@@ -1355,8 +1352,7 @@ object SparkEntry {
 
     // --- small-files compaction: content-identical size-targeted rewrite ---
     "data_compact" -> ((s, dir) => {
-      val out = s"/tmp/graft_compact_${new java.io.File(dir).getName}"
-      graft.sources.Compact.compactFiles(s, s"$dir/lineitem.parquet", out,
+      graft.sources.Compact.compactFiles(s, s"$dir/lineitem.parquet", freshRoot("compact", dir),
           targetFileBytes = 1L << 20, sortCols = Seq("l_orderkey", "l_linenumber"))
         .select("l_orderkey", "l_linenumber", "l_quantity")
     }),
@@ -1540,38 +1536,10 @@ object SparkEntry {
     }),
 
     // --- manifest z-order compaction (two-column clustering) ---------------
-    // four interleaved appends, z-order rewrite on (custkey, orderkey), then
-    // a stats-pruned scan on custkey — results must equal plain SQL exactly
-    "data_manifest_zorder" -> ((s, dir) => {
-      val root = freshRoot("manifest_zo", dir)
-      val orders = t(s, dir, "orders")
-      (0 until 4).foreach(i =>
-        ManifestTable.append(orders.where(col("o_orderkey") % 4 === i)
-          .select("o_orderkey", "o_custkey", "o_orderstatus"), root))
-      val mx = orders.agg(max("o_custkey")).head().getLong(0) // bounded: 1 row
-      ManifestTable.compact(s, root, targetBytes = 64L << 10,
-        zorderBy = Seq("o_custkey", "o_orderkey"))
-      ManifestTable.scan(s, root,
-          ManifestTable.Between("o_custkey", mx / 4, mx / 2))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("cnt"), sum("o_orderkey").cast("long").as("sum_key"))
-    }),
+    "data_manifest_zorder" -> manifestCurveScan("zorder"),
 
     // --- manifest hilbert compaction (the no-seam curve twin of zorder) ----
-    "data_manifest_hilbert" -> ((s, dir) => {
-      val root = freshRoot("manifest_hb", dir)
-      val orders = t(s, dir, "orders")
-      (0 until 4).foreach(i =>
-        ManifestTable.append(orders.where(col("o_orderkey") % 4 === i)
-          .select("o_orderkey", "o_custkey", "o_orderstatus"), root))
-      val mx = orders.agg(max("o_custkey")).head().getLong(0) // bounded: 1 row
-      ManifestTable.compact(s, root, targetBytes = 64L << 10,
-        hilbertBy = Seq("o_custkey", "o_orderkey"))
-      ManifestTable.scan(s, root,
-          ManifestTable.Between("o_custkey", mx / 4, mx / 2))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("cnt"), sum("o_orderkey").cast("long").as("sum_key"))
-    }),
+    "data_manifest_hilbert" -> manifestCurveScan("hilbert"),
 
     // --- manifest schema evolution (mergeSchema append) --------------------
     // v1 appends two columns, v2 adds o_totalprice; v1's files read back
@@ -1687,10 +1655,7 @@ object SparkEntry {
       val chunks = TextAnalysis.chunkDocuments(spreadScan(docs), chunkTokens = 24, overlap = 8)
         .select((col("doc_id") * 100000 + col("chunk_id")).as("doc_id"),
           col("chunk_text").as("text"))
-      val qs = docs.where(col("doc_id") % 100 === 7)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
-      val hits = TextAnalysis.searchBM25(chunks, qs, topK = 10)
+      val hits = TextAnalysis.searchBM25(chunks, bm25Probes(docs), topK = 10)
       val byDoc = hits
         .withColumn("src_doc", expr("doc_id div 100000"))
         .groupBy("query_id", "src_doc").agg(max("score").as("score"))
@@ -2090,10 +2055,7 @@ object SparkEntry {
     "sim_hybrid" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val emb = t(s, dir, "embeddings")
-      val qs = docs.where(col("doc_id") % 100 === 7)
-        .select(col("doc_id").as("query_id"),
-          array_join(slice(TextAnalysis.wordTokens(col("text")), 1, 4), " ").as("query"))
-      val lex = TextAnalysis.searchBM25(docs, qs, topK = 10)
+      val lex = TextAnalysis.searchBM25(docs, bm25Probes(docs), topK = 10)
       val sem = Similarity.bruteForceTopK(emb,
           emb.where(col("vec_id") % 100 === 7), "embedding", "vec_id", k = 10)
         .select(col("query_id"), col("neighbor_id").as("doc_id"), col("cosine"))
@@ -2211,41 +2173,14 @@ object SparkEntry {
     }),
 
     // --- interval overlap join: bucketed range join, exactly-once pairs ----
-    "interval_join" -> ((s, dir) => {
-      val f = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("k"),
-        (col("l_orderkey") * 10 + col("l_linenumber")).as("iid"),
-        datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01"))).as("s0"),
-        (datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01")))
-          + floor(col("l_quantity")).cast("int")).as("e0"),
-        col("l_quantity").as("q"))
-      Joins.intervalJoin(f, f, Seq("k"), "s0", "e0", "s0", "e0", bucketWidth = 32.0)
-        .where(col("iid") =!= col("iid_right"))
-        .groupBy("iid")
-        .agg(count(lit(1)).as("n_overlap"),
-          round(sum(col("q_right")), 4).as("qty_overlap_sum"))
-    }),
+    "interval_join" -> lineitemIntervalJoin(None),
 
     // --- interval join, level-ladder guard active on real data -------------
     // maxReplication = 2 forces maxLvl >= 1 on lineitem spans (up to ~50
     // days vs (n-1)·w = 32), so the two-half native-build plan runs inside
     // the per-round gate against the SAME native-IEJoin oracle as the flat
     // path — identical output required
-    "interval_join_ladder" -> ((s, dir) => {
-      val f = t(s, dir, "lineitem").select(
-        col("l_suppkey").as("k"),
-        (col("l_orderkey") * 10 + col("l_linenumber")).as("iid"),
-        datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01"))).as("s0"),
-        (datediff(col("l_shipdate").cast("date"), to_date(lit("1992-01-01")))
-          + floor(col("l_quantity")).cast("int")).as("e0"),
-        col("l_quantity").as("q"))
-      Joins.intervalJoin(f, f, Seq("k"), "s0", "e0", "s0", "e0", bucketWidth = 32.0,
-          maxReplication = Some(2))
-        .where(col("iid") =!= col("iid_right"))
-        .groupBy("iid")
-        .agg(count(lit(1)).as("n_overlap"),
-          round(sum(col("q_right")), 4).as("qty_overlap_sum"))
-    }),
+    "interval_join_ladder" -> lineitemIntervalJoin(Some(2)),
 
     // --- bloom-pruned join: semi-join reduction ahead of the exchange ------
     // exact-equivalence oracle: bloom has no false negatives and the exact
@@ -2424,15 +2359,13 @@ object SparkEntry {
           stepDeg = 0.05, halfCells = 8, keyCols = Seq("r_regionkey"), withGeometry = false)
         .select("r_regionkey", "level_s", "n_cells")
     }),
-  )
+  ) ++ roundtrips.map(r => r.name -> (r.query _))
 
-  /** DuckDB-runnable SQL twin for each `queries` key (same column names). */
-  // the BM25 fit+score CTE chain (WITH body, through ranked `rk`) — shared
-  // by the text_bm25 / text_bm25_index oracles and the sim_hybrid fusion
-  // oracle so a scoring change can never fork the mirrors
-  /** BM25 fit+score CTE bundle over `corpus(doc_id, text)` — queries stay
-    * the first-4-token probes of `documents`; `pipeline_rag` points the
-    * corpus at a chunk CTE.
+  /** BM25 fit+score CTE bundle over `corpus(doc_id, text)` (WITH body,
+    * through ranked `rk`) — shared by the text_bm25 / text_bm25_index
+    * oracles and the sim_hybrid fusion oracle so a scoring change can never
+    * fork the mirrors. Queries stay the first-4-token probes of `documents`
+    * ([[bm25Probes]]); `pipeline_rag` points the corpus at a chunk CTE.
     */
   private def bm25ScoreCtes(corpus: String = "documents"): String =
       s"""q AS (SELECT doc_id AS query_id,
@@ -2476,10 +2409,7 @@ object SparkEntry {
        |qv AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
        |  WHERE vec_id % 100 = 7),
        |scv AS (SELECT qv.query_id, e.vec_id AS doc,
-       |  list_sum(list_transform(list_zip(qv.qe, e.embedding),
-       |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-       |  / (sqrt(list_sum(list_transform(qv.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-       |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+       |  ${OracleSql.cos("qv.qe", "e.embedding")} AS cos
        |  FROM embeddings e, qv),
        |sem AS (SELECT query_id, doc, rn FROM (
        |    SELECT query_id, doc,
@@ -2498,6 +2428,18 @@ object SparkEntry {
        |FROM r
        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY rrf DESC, doc) <= 10""".stripMargin
 
+  /** Exact cosine top-5 for queries vec_id < 8 — `sim_topk`'s brute force
+    * and the mirror every nprobe = nlist IVF path reduces to (`sim_ivf`,
+    * `sim_ivf_index` and the incrementally-refreshed `sim_ivf_refresh`).
+    */
+  private val exactTopkOracle: String =
+    s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
+       |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+       |  ${OracleSql.cos("q.qe", "e.embedding")} AS cos
+       |  FROM embeddings e, q)
+       |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
+       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin
+
   /** int8-prefilter-then-float-rescore mirror at nprobe = nlist: normalize →
     * symmetric int8 quantize (sim_int8's exact arithmetic) → top rescore·k =
     * 20 candidates per query by the rescaled integer dot → true float cosine
@@ -2505,23 +2447,8 @@ object SparkEntry {
     * `sim_int8_ivf` (inline per-query path) and `sim_int8_ivf_index` (the
     * persisted parquet layout) — the two MUST be value-identical.
     */
-  /** Exact cosine top-5 for queries vec_id < 8 — the brute-force mirror
-    * every nprobe = nlist IVF-index path reduces to (`sim_ivf_index` and the
-    * incrementally-refreshed `sim_ivf_refresh` both gate on it).
-    */
-  private val ivfExactTopkOracle: String =
-    """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-      |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-      |  list_sum(list_transform(list_zip(q.qe, e.embedding),
-      |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-      |  / (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-      |  FROM embeddings e, q)
-      |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
-      |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin
-
   private val int8IvfOracle: String =
-    """WITH nz AS (SELECT vec_id,
+    s"""WITH nz AS (SELECT vec_id,
       |    CASE WHEN n > 0
       |      THEN list_transform(e, x -> CAST(x AS DOUBLE) / n)
       |      ELSE list_transform(e, x -> CAST(x AS DOUBLE)) END AS en
@@ -2542,17 +2469,68 @@ object SparkEntry {
       |cand AS (SELECT query_id, neighbor_id FROM sc
       |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) <= 20),
       |re AS (SELECT cand.query_id, cand.neighbor_id,
-      |  list_sum(list_transform(list_zip(q.embedding, e.embedding),
-      |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-      |  / (sqrt(list_sum(list_transform(q.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
+      |  ${OracleSql.cos("q.embedding", "e.embedding")} AS cos
       |  FROM cand
       |  JOIN embeddings e ON e.vec_id = cand.neighbor_id
       |  JOIN embeddings q ON q.vec_id = cand.query_id)
       |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM re
       |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
+  /** [[purchaseAsofClick]]'s mirror: DuckDB's native ASOF join. */
+  private val purchaseAsofClickOracle: String =
+    """WITH p AS (SELECT event_id, user_id, ts, value FROM events
+      |          WHERE event_type = 'purchase'),
+      |     c AS (SELECT event_id AS click_id, user_id, ts, value FROM events
+      |          WHERE event_type = 'click')
+      |SELECT p.event_id, p.user_id, round(p.value, 4) AS purchase_value,
+      |       coalesce(c.click_id, -1) AS click_id,
+      |       coalesce(round(c.value, 4), -1.0) AS click_value,
+      |       coalesce(epoch_us(p.ts) - epoch_us(c.ts), -1) AS lag_us
+      |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin
+
+  /** [[lineitemIntervalJoin]]'s mirror: the plain overlap self-join. */
+  private val lineitemIntervalJoinOracle: String =
+    """WITH f AS (SELECT l_suppkey AS k,
+      |    l_orderkey * 10 + l_linenumber AS iid,
+      |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS s0,
+      |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
+      |      + CAST(floor(l_quantity) AS INT) AS e0,
+      |    l_quantity AS q
+      |  FROM lineitem)
+      |SELECT a.iid, count(*) AS n_overlap,
+      |       round(sum(b.q), 4) AS qty_overlap_sum
+      |FROM f a JOIN f b
+      |  ON a.k = b.k AND a.iid <> b.iid AND a.s0 <= b.e0 AND b.s0 <= a.e0
+      |GROUP BY a.iid""".stripMargin
+
+  /** [[curveRead]]'s mirror: the bbox filter over the same points. */
+  private val curveReadOracle: String =
+    """WITH pts AS (SELECT c_custkey,
+      |    (c_custkey % 120) * 0.5 - 30 + 0.25 AS lon,
+      |    (c_custkey % 80) * 0.5 - 20 + 0.25 AS lat FROM customer)
+      |SELECT c_custkey, round(lon, 6) AS lon6, round(lat, 6) AS lat6
+      |FROM pts
+      |WHERE lon >= -10.0 AND lon <= 5.0 AND lat >= -10.0 AND lat <= 5.0""".stripMargin
+
+  /** [[manifestCurveScan]]'s mirror: the custkey range over all orders. */
+  private val manifestCurveScanOracle: String =
+    """WITH b AS (SELECT max(o_custkey) AS mx FROM orders)
+      |SELECT o_orderstatus, count(*) AS cnt,
+      |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
+      |FROM orders, b
+      |WHERE o_custkey >= b.mx // 4 AND o_custkey <= b.mx // 2
+      |GROUP BY 1""".stripMargin
+
+  /** The orders of the two appends (key % 4 of 0 and 1) a manifest table
+    * reads back, per status.
+    */
+  private val twoOrderAppendsOracle: String =
+    """SELECT o_orderstatus, count(*) AS cnt,
+      |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
+      |FROM orders WHERE o_orderkey % 4 <= 1 GROUP BY 1""".stripMargin
+
+  /** DuckDB-runnable SQL twin for each `queries` key (same column names). */
+  def oracleSql: Map[String, String] = Map[String, String](
     "subset_cols" ->
       "SELECT c_custkey AS id, c_acctbal AS bal, c_mktsegment FROM customer",
     "crossjoin_count" ->
@@ -2691,78 +2669,6 @@ object SparkEntry {
         |  AND ((l_orderkey % 80) * 0.5 - 20 + 0.25) > ((n_nationkey % 5) * 8.0 - 20)
         |  AND ((l_orderkey % 80) * 0.5 - 20 + 0.25) < ((n_nationkey % 5) * 8.0 - 20 + 6.0)
         |GROUP BY n_nationkey""".stripMargin,
-    "osm_pbf_roundtrip" ->
-      """WITH e AS (SELECT p_partkey AS osm_id, p_brand, p_type,
-        |  CASE (p_partkey % 3) WHEN 0 THEN 'n' WHEN 1 THEN 'w' ELSE 'r' END AS type,
-        |  CASE WHEN p_partkey % 3 = 0 THEN CAST(round((p_partkey % 60) * 0.1 + 0.05, 5) AS DOUBLE)
-        |       ELSE -999.0 END AS lon5,
-        |  CASE WHEN p_partkey % 3 = 0 THEN CAST(round((p_partkey % 35) * 0.1 - 1.05, 5) AS DOUBLE)
-        |       ELSE -999.0 END AS lat5,
-        |  CASE WHEN p_partkey % 3 = 0 THEN -1 ELSE 2 END AS nrefs,
-        |  CASE WHEN p_partkey % 3 = 2 THEN 'w|n' ELSE '-' END AS mtypes,
-        |  CASE WHEN p_partkey % 3 = 2 THEN 'outer|' ELSE '-' END AS mroles
-        |  FROM part)
-        |SELECT osm_id, type, lon5, lat5, nrefs, mtypes, mroles FROM e
-        |WHERE (type IN ('w','r') AND p_brand IN ('Brand#13','Brand#23'))
-        |   OR (type = 'n' AND p_type IS NOT NULL)""".stripMargin,
-    "fgb_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "shp_roundtrip" ->
-      """SELECT c_custkey, round(c_acctbal, 2) AS acctbal2,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "xlsx_roundtrip" ->
-      """SELECT c_custkey, round(c_acctbal, 2) AS acctbal2,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "sqlite_roundtrip" ->
-      """SELECT s_suppkey, s_name, round(s_acctbal, 2) AS bal2, s_nationkey
-        |FROM supplier""".stripMargin,
-    "jsonl_roundtrip" ->
-      """SELECT c_custkey, round(c_acctbal, 2) AS acctbal2,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "auto_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "orc_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "avro_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "arrow_roundtrip" ->
-      """SELECT vec_id, label, len(embedding) AS dim,
-        |  round(CAST(embedding[1] AS DOUBLE), 6) AS c_first,
-        |  round(CAST(embedding[-1] AS DOUBLE), 6) AS c_last
-        |FROM embeddings""".stripMargin,
-    "arrows_roundtrip" ->
-      """SELECT vec_id, label, len(embedding) AS dim,
-        |  round(CAST(embedding[1] AS DOUBLE), 6) AS c_first,
-        |  round(CAST(embedding[-1] AS DOUBLE), 6) AS c_last
-        |FROM embeddings""".stripMargin,
-    "gpkg_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
-    "pg_roundtrip" ->
-      """SELECT c_custkey, c_acctbal,
-        |  round((c_custkey % 120) * 0.5 - 30 + 0.25, 6) AS px,
-        |  round((c_custkey % 80) * 0.5 - 20 + 0.25, 6) AS py
-        |FROM customer""".stripMargin,
     "sjoin_skew" ->
       """SELECT s_suppkey, count(*) AS n_items, round(sum(l_quantity), 2) AS qty_sum
         |FROM lineitem, supplier
@@ -2909,28 +2815,10 @@ object SparkEntry {
         |      ELSE 1 END) AS funnel_level,
         |  CAST(sum(CASE WHEN t3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_complete
         |FROM v3 GROUP BY u""".stripMargin,
-    "events_asof" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-        |          WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS click_id, user_id, ts, value FROM events
-        |          WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, round(p.value, 4) AS purchase_value,
-        |       coalesce(c.click_id, -1) AS click_id,
-        |       coalesce(round(c.value, 4), -1.0) AS click_value,
-        |       coalesce(epoch_us(p.ts) - epoch_us(c.ts), -1) AS lag_us
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
+    "events_asof" -> purchaseAsofClickOracle,
     // guard twin: the hot-key split path must reproduce the SAME native
     // ASOF result — identical oracle by construction
-    "events_asof_split" ->
-      """WITH p AS (SELECT event_id, user_id, ts, value FROM events
-        |          WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id AS click_id, user_id, ts, value FROM events
-        |          WHERE event_type = 'click')
-        |SELECT p.event_id, p.user_id, round(p.value, 4) AS purchase_value,
-        |       coalesce(c.click_id, -1) AS click_id,
-        |       coalesce(round(c.value, 4), -1.0) AS click_value,
-        |       coalesce(epoch_us(p.ts) - epoch_us(c.ts), -1) AS lag_us
-        |FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.ts >= c.ts""".stripMargin,
+    "events_asof_split" -> purchaseAsofClickOracle,
     "osm_tagfilter" ->
       """WITH e AS (SELECT p_partkey AS osm_id, p_brand, p_type,
         |  CASE (p_partkey % 3) WHEN 0 THEN 'n' WHEN 1 THEN 'w' ELSE 'r' END AS type
@@ -3023,35 +2911,20 @@ object SparkEntry {
     // identical arithmetic in both engines, so the survivor SET matches
     // bit-for-bit and the oracle pins the whole composition
     "sim_matryoshka" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-        |s1 AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(q.qe[1:16], e.embedding[1:16]),
-        |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(q.qe[1:16], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(e.embedding[1:16], x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos1
-        |  FROM embeddings e, q),
-        |surv AS (SELECT query_id, neighbor_id FROM s1
-        |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos1 DESC, neighbor_id) <= 20),
-        |sc AS (SELECT s.query_id, s.neighbor_id,
-        |  list_sum(list_transform(list_zip(q.qe, e.embedding),
-        |      z -> CAST(z[1] AS DOUBLE) * CAST(z[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        |  FROM surv s
-        |  JOIN embeddings e ON e.vec_id = s.neighbor_id
-        |  JOIN q ON q.query_id = s.query_id)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
-    "sim_topk" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-        |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(q.qe, e.embedding),
-        |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        |  FROM embeddings e, q)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
+         |s1 AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+         |  ${OracleSql.cos("q.qe[1:16]", "e.embedding[1:16]")} AS cos1
+         |  FROM embeddings e, q),
+         |surv AS (SELECT query_id, neighbor_id FROM s1
+         |  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos1 DESC, neighbor_id) <= 20),
+         |sc AS (SELECT s.query_id, s.neighbor_id,
+         |  ${OracleSql.cos("q.qe", "e.embedding")} AS cos
+         |  FROM surv s
+         |  JOIN embeddings e ON e.vec_id = s.neighbor_id
+         |  JOIN q ON q.query_id = s.query_id)
+         |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
+         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
+    "sim_topk" -> exactTopkOracle,
     // int8 mirror: normalize -> quantize -> integer dot, all arithmetic in
     // the same shapes/order as the Spark side (round() is half-away-from-
     // zero on doubles in both engines)
@@ -3076,26 +2949,17 @@ object SparkEntry {
         |  FROM qz c, qs)
         |SELECT query_id, neighbor_id, round(score, 6) AS score FROM sc
         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) <= 5""".stripMargin,
-    // probing all nlist cells makes IVF ≡ exact top-k (see queries entry)
     "sim_project" -> OracleSql.simProject(),
-    "sim_ivf" ->
-      """WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-        |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(q.qe, e.embedding),
-        |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        |  FROM embeddings e, q)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
+    // probing all nlist cells makes IVF ≡ exact top-k (see queries entry)
+    "sim_ivf" -> exactTopkOracle,
     // persisted-index search at nprobe = nlist is exactly brute force — the
     // parquet roundtrip must not change a single cosine
-    "sim_ivf_index" -> ivfExactTopkOracle,
+    "sim_ivf_index" -> exactTopkOracle,
     // the incrementally-refreshed index at nprobe = nlist probes every cell,
     // so the search is exactly brute force over base ∪ refreshed rows — the
     // same mirror gates it; assignment parity with a full rebuild is the
     // spec's job
-    "sim_ivf_refresh" -> ivfExactTopkOracle,
+    "sim_ivf_refresh" -> exactTopkOracle,
     // composed retriever at nprobe = nlist: int8 prefilter (sim_int8's exact
     // quantization mirror) keeps the top rescore·k = 20 per query, then the
     // true float cosine (sim_topk's mirror) ranks the survivors for top-5
@@ -3131,10 +2995,7 @@ object SparkEntry {
       Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), threshold = 0.7),
     "data_compact" ->
       "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem",
-    "data_manifest_roundtrip" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
-        |FROM orders WHERE o_orderkey % 4 <= 1 GROUP BY 1""".stripMargin,
+    "data_manifest_roundtrip" -> twoOrderAppendsOracle,
     "data_manifest_timetravel" ->
       """SELECT CAST(1 AS BIGINT) AS version, count(*) AS cnt,
         |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
@@ -3217,24 +3078,9 @@ object SparkEntry {
         |UNION ALL
         |SELECT 'o_orderstatus', min(o_orderstatus), max(o_orderstatus),
         |  CAST(0 AS BIGINT), count(*) FROM orders""".stripMargin,
-    "data_manifest_hilbert" ->
-      """WITH b AS (SELECT max(o_custkey) AS mx FROM orders)
-        |SELECT o_orderstatus, count(*) AS cnt,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
-        |FROM orders, b
-        |WHERE o_custkey >= b.mx // 4 AND o_custkey <= b.mx // 2
-        |GROUP BY 1""".stripMargin,
-    "data_manifest_restore" ->
-      """SELECT o_orderstatus, count(*) AS cnt,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
-        |FROM orders WHERE o_orderkey % 4 <= 1 GROUP BY 1""".stripMargin,
-    "data_manifest_zorder" ->
-      """WITH b AS (SELECT max(o_custkey) AS mx FROM orders)
-        |SELECT o_orderstatus, count(*) AS cnt,
-        |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key
-        |FROM orders, b
-        |WHERE o_custkey >= b.mx // 4 AND o_custkey <= b.mx // 2
-        |GROUP BY 1""".stripMargin,
+    "data_manifest_hilbert" -> manifestCurveScanOracle,
+    "data_manifest_restore" -> twoOrderAppendsOracle,
+    "data_manifest_zorder" -> manifestCurveScanOracle,
     "data_manifest_evolve" ->
       """SELECT o_orderstatus, count(*) AS cnt,
         |  CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
@@ -3332,20 +3178,8 @@ object SparkEntry {
     "geo_dbscan" -> OracleSql.geoDbscan(),
     "sim_kmeans" -> OracleSql.simKmeans(k = 8, iters = 3, seed = 42L, dim = 64),
     "geo_geohash" -> OracleSql.geoGeohash(),
-    "hilbert_read" ->
-      """WITH pts AS (SELECT c_custkey,
-        |    (c_custkey % 120) * 0.5 - 30 + 0.25 AS lon,
-        |    (c_custkey % 80) * 0.5 - 20 + 0.25 AS lat FROM customer)
-        |SELECT c_custkey, round(lon, 6) AS lon6, round(lat, 6) AS lat6
-        |FROM pts
-        |WHERE lon >= -10.0 AND lon <= 5.0 AND lat >= -10.0 AND lat <= 5.0""".stripMargin,
-    "zorder_read" ->
-      """WITH pts AS (SELECT c_custkey,
-        |    (c_custkey % 120) * 0.5 - 30 + 0.25 AS lon,
-        |    (c_custkey % 80) * 0.5 - 20 + 0.25 AS lat FROM customer)
-        |SELECT c_custkey, round(lon, 6) AS lon6, round(lat, 6) AS lat6
-        |FROM pts
-        |WHERE lon >= -10.0 AND lon <= 5.0 AND lat >= -10.0 AND lat <= 5.0""".stripMargin,
+    "hilbert_read" -> curveReadOracle,
+    "zorder_read" -> curveReadOracle,
     "geo_convert_lcc" -> OracleSql.geoConvertLcc(),
     "geo_convert_laea" -> OracleSql.geoConvertLaea(),
     "geo_convert_albers" -> OracleSql.geoConvertAlbers(),
@@ -3672,33 +3506,9 @@ object SparkEntry {
         |SELECT doc_id, count(*) AS n_similar, min(doc_id_right) AS min_partner,
         |  max(overlap) AS max_overlap
         |FROM p GROUP BY doc_id""".stripMargin,
-    "interval_join" ->
-      """WITH f AS (SELECT l_suppkey AS k,
-        |    l_orderkey * 10 + l_linenumber AS iid,
-        |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS s0,
-        |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
-        |      + CAST(floor(l_quantity) AS INT) AS e0,
-        |    l_quantity AS q
-        |  FROM lineitem)
-        |SELECT a.iid, count(*) AS n_overlap,
-        |       round(sum(b.q), 4) AS qty_overlap_sum
-        |FROM f a JOIN f b
-        |  ON a.k = b.k AND a.iid <> b.iid AND a.s0 <= b.e0 AND b.s0 <= a.e0
-        |GROUP BY a.iid""".stripMargin,
+    "interval_join" -> lineitemIntervalJoinOracle,
     // guard twin: the level ladder must reproduce the flat pair set exactly
-    "interval_join_ladder" ->
-      """WITH f AS (SELECT l_suppkey AS k,
-        |    l_orderkey * 10 + l_linenumber AS iid,
-        |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE)) AS s0,
-        |    date_diff('day', DATE '1992-01-01', CAST(l_shipdate AS DATE))
-        |      + CAST(floor(l_quantity) AS INT) AS e0,
-        |    l_quantity AS q
-        |  FROM lineitem)
-        |SELECT a.iid, count(*) AS n_overlap,
-        |       round(sum(b.q), 4) AS qty_overlap_sum
-        |FROM f a JOIN f b
-        |  ON a.k = b.k AND a.iid <> b.iid AND a.s0 <= b.e0 AND b.s0 <= a.e0
-        |GROUP BY a.iid""".stripMargin,
+    "interval_join_ladder" -> lineitemIntervalJoinOracle,
     "join_bloom" ->
       """SELECT o.o_orderkey, c.c_name, o.o_totalprice
         |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -3768,17 +3578,14 @@ object SparkEntry {
     "sim_ivf_pq_residual" -> OracleSql.simPqResidual(k = 5, m = 8, ksub = 16, dim = 64, rescore = 4),
     "sim_bitq" -> OracleSql.simBitq(k = 5, rescore = 4),
     "sim_hardneg" ->
-      """WITH q AS (SELECT vec_id AS query_id, label AS ql, embedding AS qe
-        |  FROM embeddings WHERE vec_id < 8),
-        |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
-        |  list_sum(list_transform(list_zip(q.qe, e.embedding),
-        |      s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE)))
-        |  / (sqrt(list_sum(list_transform(q.qe, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |   * sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS cos
-        |  FROM embeddings e, q
-        |  WHERE e.label IS DISTINCT FROM q.ql)
-        |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
-        |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
+      s"""WITH q AS (SELECT vec_id AS query_id, label AS ql, embedding AS qe
+         |  FROM embeddings WHERE vec_id < 8),
+         |sc AS (SELECT q.query_id, e.vec_id AS neighbor_id,
+         |  ${OracleSql.cos("q.qe", "e.embedding")} AS cos
+         |  FROM embeddings e, q
+         |  WHERE e.label IS DISTINCT FROM q.ql)
+         |SELECT query_id, neighbor_id, round(cos, 6) AS cosine FROM sc
+         |QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) <= 5""".stripMargin,
     "isochrone_contours" -> OracleSql.isochroneContours(),
     "isochrone_cells" ->
       s"""WITH src AS (SELECT r_regionkey,
@@ -3788,5 +3595,5 @@ object SparkEntry {
          |     (VALUES (CAST(600.0 AS DOUBLE)), (CAST(1200.0 AS DOUBLE))) lv(level_s)
          |WHERE ${havSql("lon", "lat", "lon + i * 0.05", "lat + j * 0.05")} / 25.0 <= level_s
          |GROUP BY r_regionkey, level_s""".stripMargin,
-  )
+  ) ++ roundtrips.map(r => r.name -> r.shape.oracle)
 }

@@ -7,9 +7,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // optional third arg: comma-separated query names, for fast local
-    // iteration on one operator (the driver always runs the full set)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    // iteration on one operator (SparkEntry.resolveQueries' rules)
+    val only = args.lift(2).map(SparkEntry.resolveQueries(_).toSet)
     val spark = tools.Harness.localSession(tools.Harness.defaultCores)
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]

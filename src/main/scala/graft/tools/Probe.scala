@@ -20,7 +20,11 @@ import graft.operators.Caches
   *    overhead-vs-compute split a local run can't show without a UI.
   *  - `plan <qs> <sfDir> [outDir suffix]`: `.explain("formatted")` per query,
   *    to stdout, or to `<outDir>/<query>_<suffix>.txt` — the round's plan
-  *    artifacts (plans/rNN/<query>_before|after.txt).
+  *    artifacts (plans/rNN/<query>_before|after.txt). Exits 1 after naming
+  *    the queries whose plan failed.
+  *
+  * `<qs>` follows [[graft.SparkEntry.resolveQueries]]: an unknown name fails
+  * before any work.
   */
 object Probe {
 
@@ -28,20 +32,25 @@ object Probe {
     require(args.length >= 3,
       "usage: Probe <time|jobs|plan> <q1,q2,...> <sfDir> [runs | outDir suffix]")
     val mode = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val names = SparkEntry.resolveQueries(args(1))
     val sfDir = args(2)
     require(Set("time", "jobs", "plan")(mode), s"unknown mode '$mode' (time|jobs|plan)")
     val spark = Harness.localSession(Harness.defaultCores)
-    try mode match {
+    val failed = try mode match {
       case "plan" => plan(spark, names, sfDir, args.lift(3).zip(args.lift(4)))
-      case _ => count(spark, names, sfDir, args.lift(3).fold(3)(_.toInt), mode == "jobs")
+      case _ => count(spark, names, sfDir, args.lift(3).fold(3)(_.toInt), mode == "jobs"); Nil
     } finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[probe] ${failed.size} plans failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 
+  /** Prints or dumps each query's plan; returns the queries that failed. */
   private def plan(spark: SparkSession, names: Seq[String],
-      sfDir: String, out: Option[(String, String)]): Unit = {
+      sfDir: String, out: Option[(String, String)]): Seq[String] = {
     out.foreach { case (dir, _) => Files.createDirectories(Paths.get(dir)) }
-    names.foreach { name =>
+    names.filterNot { name =>
       try {
         val text = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.explainString(FormattedMode)
@@ -51,10 +60,15 @@ object Probe {
             println(s"dumped $name")
           case None => println(s"== $name\n$text")
         }
-      } catch { case e: Exception => println(s"FAILED $name: ${e.getMessage}") }
-      // plan-only consumer: release operator-internal caches the query
-      // registered for its (never-run) action (Caches contract)
-      Caches.releaseAll()
+        true
+      } catch { case e: Exception =>
+        println(s"FAILED $name: ${e.getMessage}")
+        false
+      } finally {
+        // plan-only consumer: release operator-internal caches the query
+        // registered for its (never-run) action (Caches contract)
+        Caches.releaseAll()
+      }
     }
   }
 

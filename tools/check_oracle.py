@@ -3,8 +3,10 @@ sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 # optional third arg: the comma-separated query list graft.Verify took, so a
 # partial Verify run is checked for exactly the queries it wrote; with none,
-# every oracle is checked
-only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
+# every oracle is checked. Exits 1 when any query is a MISMATCH or an ERROR.
+only = ({n.strip() for n in sys.argv[3].split(",") if n.strip()}
+        if len(sys.argv) > 3 else None)
+counts = {"MATCH": 0, "MISMATCH": 0, "ERROR": 0}
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
@@ -12,6 +14,7 @@ oracles = json.load(open(f"{out}/oracle_sql.json"))
 if only is not None:
     for name in sorted(only - oracles.keys()):
         print(f"{name}: ERROR no oracle SQL for this query")
+        counts["ERROR"] += 1
     oracles = {k: v for k, v in oracles.items() if k in only}
 
 # Sketch queries whose contract is an epsilon band, not value equality: the
@@ -70,6 +73,7 @@ for name, sql in sorted(oracles.items()):
         vals_ok = a == b or (eps is not None and rows_close(a, b, eps))
         ok = vals_ok and ta == tb
         tag = "MATCH" if ok else "MISMATCH"
+        counts[tag] += 1
         if ok and eps is not None and a != b:
             tag = f"MATCH (within eps={eps})"
         print(f"{name}: rows {len(a)} vs {len(b)} -> {tag}")
@@ -86,3 +90,6 @@ for name, sql in sorted(oracles.items()):
                 if x != y: print("  spark:", x, " oracle:", y)
     except Exception as e:
         print(f"{name}: ERROR {e}")
+        counts["ERROR"] += 1
+print(", ".join(f"{n} {k}" for k, n in counts.items()))
+sys.exit(1 if counts["MISMATCH"] or counts["ERROR"] else 0)
