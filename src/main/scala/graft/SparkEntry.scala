@@ -24,14 +24,25 @@ object SparkEntry {
 
   /** Deterministic per-SF scratch dir, wiped before use — the only place a
     * query writes files, under a tag of its own. Manifest-table queries must
-    * start from version 0 on every Verify/Bench run (the log is append-only
-    * by design, so a reused root would keep growing), and a sharded write
-    * refuses a directory holding an earlier write's shards.
+    * start from version 0 on every run of the same query (the log is
+    * append-only by design, so a reused root would keep growing), and a
+    * sharded write refuses a directory holding an earlier write's shards.
+    * Every such dir lives under [[scratchParent]].
     */
   private def freshRoot(tag: String, dir: String): String = {
-    val p = java.nio.file.Paths.get(s"/tmp/graft_${tag}_${new java.io.File(dir).getName}")
+    val p = scratchParent.resolve(s"${tag}_${new java.io.File(dir).getName}")
     deleteRecursively(p)
     p.toString
+  }
+
+  /** This JVM's parent of every [[freshRoot]] dir: created on first use
+    * under the temp dir, removed with everything under it when the JVM
+    * exits, so no scratch dir outlives the run and two JVMs never share one.
+    */
+  private lazy val scratchParent: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory("graft_")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(p)))
+    p
   }
 
   /** Synthetic OSM elements table from `part`: nodes (id ≡ 0 mod 3) with
@@ -1184,10 +1195,7 @@ object SparkEntry {
       val r0 = emb.select(col("vec_id").cast("long").as("id"),
           col("embedding").cast("array<double>").as("v"))
         .orderBy("id").limit(1).collect()(0) // bounded: the 1-row quantizer
-      val v = r0.getSeq[Double](1).toArray
-      var n2 = 0.0; var i = 0
-      while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-      val c0 = if (n2 > 0) { val n = math.sqrt(n2); v.map(_ / n) } else v
+      val c0 = Similarity.l2normalizeByDivision(r0.getSeq[Double](1).toArray)
       val c0f = c0.map(x => x.toFloat.toDouble) // fitAssign stores float32
       val cb = Similarity.pqSampleCodebooks(emb, "embedding", "vec_id",
         m = 8, ksub = 16, center = Some(c0f))

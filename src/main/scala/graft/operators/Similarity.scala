@@ -51,10 +51,13 @@ object Similarity {
       Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long))
 
   /** Bounded top-k buffer: (id, score) pairs, kept sorted by [[topKOrder]].
-    * Map-side partials merge in O(k).
+    * Map-side partials merge in O(k). Every top-k entry point builds one
+    * while it builds its plan, so `k < 1` fails there, before any job: an
+    * empty buffer would otherwise die on `buf.last` inside a task.
     */
   class TopKAggregator(k: Int)
       extends Aggregator[(Long, Double), Seq[(Long, Double)], Seq[(Long, Double)]] {
+    require(k >= 1, s"k must be >= 1, got $k")
     override def zero: Seq[(Long, Double)] = Nil
     override def reduce(buf: Seq[(Long, Double)], x: (Long, Double)): Seq[(Long, Double)] =
       if (buf.size >= k && topKOrder.gteq(x, buf.last)) buf
@@ -169,13 +172,7 @@ object Similarity {
       sample: Array[Array[Float]], nlist: Int, iters: Int, seed: Long): Array[Array[Double]] = {
     require(sample.nonEmpty, "empty training sample")
     val dim = sample(0).length
-    def normalize(v: Array[Double]): Array[Double] = {
-      var n = 0.0; var i = 0
-      while (i < dim) { n += v(i) * v(i); i += 1 }
-      val inv = if (n <= 0) 0.0 else 1.0 / math.sqrt(n)
-      v.map(_ * inv)
-    }
-    val unit = sample.map(v => normalize(v.map(_.toDouble)))
+    val unit = sample.map(v => l2normalize(v.map(_.toDouble)))
     // deterministic spread init: rows picked by a seeded hash of their index
     val picks = unit.indices.sortBy(i => graft.functions.TextKernel.mix64(seed ^ i)).take(nlist)
     var centroids = picks.map(unit).toArray
@@ -229,25 +226,13 @@ object Similarity {
         ci += 1
       }
       centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c) else normalize(sums(c))
+        if (counts(c) == 0) centroids(c) else l2normalize(sums(c))
       }.toArray
       it += 1
     }
     centroids
   }
 
-  /** IVF (inverted-file) ANN: a cosine KMeans coarse quantizer partitions the
-    * corpus into `nlist` cells; each query probes its `nprobe` nearest
-    * centroids and scores exactly only within those cells.
-    *
-    * Scale shape: the fit runs locally on a bounded, corpus-spanning sample
-    * (seeded-hash top-cap, one pass, see below); cell assignment is a pure
-    * codegen'd expression over a literal
-    * centroid array — the corpus is scanned ONCE, with no fit/transform
-    * passes, no persist, and no shuffle before the probe join. The third
-    * similarity tier: brute force (exact) → IVF (high recall, ~nprobe/nlist
-    * of the work) → hyperplane LSH (cheapest).
-    */
   /** Fit-sample row cap: at most `hardCap` rows AND `capBytes` of float32
     * vector data (dim-2048 floats are 8 KiB/row — a row-only cap would let
     * the driver fit balloon to ~800 MB), never below `nlist` rows.
@@ -263,10 +248,61 @@ object Similarity {
     math.max(nlist, math.min(math.min(hardCap, byBytes), byCells))
   }
 
+  /** The length of the first vector in column `vec` of `df`, 0 when `df` has
+    * no rows: one single-row read, which sizes the fit-sample cap.
+    */
+  private def vectorDim(df: DataFrame, vec: String): Int =
+    df.select(size(col(vec))).head(1) match {
+      case Array(r) => r.getInt(0)
+      case _ => 0
+    }
+
+  /** The fit sample of every trained quantizer here (the IVF coarse
+    * quantizer, PQ codebooks, residual codebooks): `cols` of the
+    * `fitRowCap(dim, fitSampleBytes, cells)` rows of `df` with the smallest
+    * seeded hash of `hashed`, i.e. a deterministic uniform draw across every
+    * partition — a bare limit() would read the first file(s) of the scan,
+    * fitting to whichever shard sorts first (one crawl domain, one day).
+    * orderBy+limit lowers to TakeOrderedAndProject: per-partition top-cap
+    * heaps + one driver merge, a single pass, no full sort. Each caller
+    * keeps its own hash input (the input-typed or the float-cast vector),
+    * which fixes which rows are drawn.
+    */
+  private def fitSample(df: DataFrame, hashed: Column, seed: Long, dim: Int,
+      fitSampleBytes: Long, cells: Int, cols: Column*): Array[Row] =
+    df.select(cols :+ xxhash64(lit(seed), hashed).as("__h"): _*)
+      .orderBy("__h")
+      .limit(fitRowCap(dim, fitSampleBytes, cells))
+      .collect()
+
+  /** L2-normalizes one vector by reciprocal multiply (the cosine-quantizer
+    * contract: argmax dot against unit centroids ≡ argmax cosine). Zero
+    * vectors stay zero.
+    */
+  private def l2normalize(v: Array[Double]): Array[Double] = {
+    var n = 0.0; var i = 0
+    while (i < v.length) { n += v(i) * v(i); i += 1 }
+    val inv = if (n <= 0) 0.0 else 1.0 / math.sqrt(n)
+    v.map(_ * inv)
+  }
+
+  /** L2-normalizes one vector by DIVISION (x / n), zero-norm left unchanged
+    * — the exact arithmetic of [[l2Prep]]'s column path and the oracle's nz
+    * CTE. [[l2normalize]]'s reciprocal multiply differs in the last ulp and
+    * would break the value-exact mirror, so the two rules stay apart.
+    */
+  private[graft] def l2normalizeByDivision(v: Array[Double]): Array[Double] = {
+    var n2 = 0.0; var i = 0
+    while (i < v.length) { n2 += v(i) * v(i); i += 1 }
+    val n = math.sqrt(n2)
+    if (n > 0) v.map(_ / n) else v
+  }
+
   /** Shared IVF front end: fit the coarse quantizer on a bounded,
     * corpus-spanning sample and assign every corpus row its cell. Returns
     * the assigned corpus (`neighbor_id`, `__cv`, `__cell`) plus the centroid
-    * table (`__cell`, `__centroid`) for query-side probing.
+    * table (`cell`, `centroid`), the persisted index's shape, for
+    * query-side probing.
     *
     * The TWO Lloyd fits in this codebase meet here: the default is the
     * byte-capped sampled LOCAL fit below (speed — one corpus pass for the
@@ -278,16 +314,6 @@ object Similarity {
     * centroids are L2-normalized on entry; `nlist` is ignored in favor of
     * `centroids.length`.
     */
-  /** L2-normalizes one vector (the cosine-quantizer contract: argmax dot
-    * against unit centroids ≡ argmax cosine). Zero vectors stay zero.
-    */
-  private def l2normalize(v: Array[Double]): Array[Double] = {
-    var n = 0.0; var i = 0
-    while (i < v.length) { n += v(i) * v(i); i += 1 }
-    val inv = if (n <= 0) 0.0 else 1.0 / math.sqrt(n)
-    v.map(_ * inv)
-  }
-
   private[operators] def fitAssign(
       corpus: DataFrame,
       vecCol: String,
@@ -314,22 +340,10 @@ object Similarity {
           "explicit centroids must share one dimensionality")
         cs.map(l2normalize)
       case None =>
-        val dim = featured.select(size(col("__cv"))).head(1) match {
-          case Array(r) => r.getInt(0)
-          case _ => 0
-        }
-        // corpus-spanning fit sample: the smallest-cap rows by a seeded content
-        // hash, i.e. a deterministic uniform draw across every partition — a
-        // bare limit() would read the first file(s) of the scan, fitting the
-        // centroids to whichever shard sorts first (one crawl domain, one day).
-        // orderBy+limit lowers to TakeOrderedAndProject: per-partition top-cap
-        // heaps + one driver merge, still a single corpus pass, no full sort.
-        val sample = featured
-          .select(col("__cv").cast("array<float>").as("__cv"),
-            xxhash64(lit(seed), col("__cv")).as("__h"))
-          .orderBy("__h")
-          .limit(fitRowCap(dim, fitSampleBytes, nlist))
-          .collect().map(_.getSeq[Float](0).toArray)
+        // hashed on the input-typed vector, sampled as array<float>
+        val sample = fitSample(featured, col("__cv"), seed, vectorDim(featured, "__cv"),
+            fitSampleBytes, nlist, col("__cv").cast("array<float>").as("__cv"))
+          .map(_.getSeq[Float](0).toArray)
         fitCentroidsLocal(sample, nlist, iters = 8, seed = seed)
     }
 
@@ -348,35 +362,51 @@ object Similarity {
     import spark.implicits._
     val centroidTable = cents.zipWithIndex
       .map { case (c, i) => (i, c.map(_.toFloat)) }.toSeq
-      .toDF("__cell", "__centroid")
+      .toDF("cell", "centroid")
     (assigned, centroidTable)
   }
 
-  /** The IVF entry points' argument check, made before any job runs: `k = 0`
-    * would otherwise die inside a task and `nprobe = 0` return no rows.
+  /** The IVF entry points' argument check, made before any job runs: `k < 1`
+    * would otherwise pass their first jobs (the fit, a centroid or codebook
+    * read) before [[TopKAggregator]] rejects it, and `nprobe < 1` return no
+    * rows.
     */
   private def requireTopK(k: Int, nprobe: Int): Unit = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
   }
 
-  /** Query-side probe set: each query's `nprobe` nearest centroids by
-    * cosine, deterministic tie-break on cell id. The window runs over the
-    * query×nlist pair table — model-sized, never the corpus.
+  /** Query-side probe set: each query's `nprobe` nearest centroids of a
+    * `(cell, centroid)` table by cosine, deterministic tie-break on cell id,
+    * as `(query_id, __qv, __cell)`. The window runs over the query×nlist
+    * pair table — model-sized, never the corpus.
     */
   private def probeCells(
       queries: DataFrame, centroids: DataFrame,
       vecCol: String, idCol: String, nprobe: Int): DataFrame = {
     val q = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
     val probed = q.crossJoin(broadcast(centroids))
-      .withColumn("__csim", cosineSim(col("__qv"), col("__centroid")))
+      .withColumn("__csim", cosineSim(col("__qv"), col("centroid")))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("__csim").desc, col("__cell"))
+      .partitionBy("query_id").orderBy(col("__csim").desc, col("cell"))
     probed.withColumn("__rank", row_number().over(w))
       .where(col("__rank") <= nprobe)
-      .select("query_id", "__qv", "__cell")
+      .select(col("query_id"), col("__qv"), col("cell").as("__cell"))
   }
 
+  /** IVF (inverted-file) ANN: a cosine KMeans coarse quantizer partitions the
+    * corpus into `nlist` cells; each query probes its `nprobe` nearest
+    * centroids and scores exactly only within those cells. The third
+    * similarity tier: brute force (exact) → IVF (high recall, ~nprobe/nlist
+    * of the work) → hyperplane LSH (cheapest).
+    *
+    * Per call, this is [[ivfBuildIndex]] followed by [[ivfSearchIndex]]: the
+    * fit runs locally on a bounded, corpus-spanning sample (seeded-hash
+    * top-cap, one pass); cell assignment is a pure codegen'd expression over
+    * a literal centroid array — the corpus is scanned ONCE, with no
+    * fit/transform passes, no persist, and no shuffle before the probe join.
+    * A small local query frame takes [[ivfSearchIndex]]'s driver path.
+    */
   def ivfTopK(
       corpus: DataFrame,
       queries: DataFrame,
@@ -389,12 +419,9 @@ object Similarity {
       fitSampleBytes: Long = 64L << 20,
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
     requireTopK(k, nprobe)
-    val (assigned, centroidTable) =
-      fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, centroids)
-    val probes = probeCells(queries, centroidTable, vecCol, idCol, nprobe)
-    val scored = assigned.join(probes, Seq("__cell"))
-      .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
-    topkColumns(scored, k)
+    val (assigned, cents) =
+      ivfBuildIndex(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, centroids)
+    ivfSearchIndex(assigned, cents, queries, vecCol, idCol, k, nprobe)
   }
 
   /** Brute-force top-k in Johnson–Lindenstrauss-projected space: both sides
@@ -434,9 +461,9 @@ object Similarity {
     * (int8 candidates × float rescore — the production path) without
     * re-fitting or re-assigning — the build-once/search-many split that
     * turns ANN at 100 TB from a per-query-batch corpus job into index-table
-    * algebra. Fit/assignment are identical to [[ivfTopK]]'s front end;
-    * quantization is identical to [[int8IvfTopK]]'s inline prep, so the
-    * persisted search reproduces the per-query path value-for-value.
+    * algebra. The per-call [[ivfTopK]] and [[int8IvfTopK]] are this build
+    * followed by the matching search, so a persisted search reproduces them
+    * value-for-value.
     */
   def ivfBuildIndex(
       corpus: DataFrame,
@@ -452,7 +479,7 @@ object Similarity {
       keep = Seq("__cell", "__cv"))
     (withQ.select(col("neighbor_id"), col("__cv").as("vec"),
         col("q8"), col("q8_scale"), col("__cell").as("cell")),
-      centroids.select(col("__cell").as("cell"), col("__centroid").as("centroid")))
+      centroids)
   }
 
   /** Assigns NEW vectors against a persisted index's FROZEN coarse
@@ -569,8 +596,7 @@ object Similarity {
       case None =>
         val a = assigned.select(col("neighbor_id"), col("vec").as("__cv"),
           col("cell").as("__cell"))
-        val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
-        val probes = probeCells(queries, c, vecCol, idCol, nprobe)
+        val probes = probeCells(queries, centroids, vecCol, idCol, nprobe)
         val scored = a.join(probes, Seq("__cell"))
           .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
         topkColumns(scored, k)
@@ -632,8 +658,8 @@ object Similarity {
 
   /** Serves a query batch from a persisted [[ivfBuildIndex]] layout with the
     * composed production retriever: IVF cell pruning × int8 candidate
-    * scoring × exact float rescore — [[int8IvfTopK]]'s algorithm without the
-    * fit/quantize passes, because the index already stores `(q8, q8_scale)`.
+    * scoring × exact float rescore, without fit/quantize passes, because
+    * the index already stores `(q8, q8_scale)`.
     *
     * Scan shape against the persisted parquet: the candidate stage reads
     * ONLY `(neighbor_id, cell, q8, q8_scale)` — the float `vec` column is
@@ -658,23 +684,22 @@ object Similarity {
     requireTopK(k, nprobe)
     val narrow = assigned.select(col("neighbor_id"), col("cell").as("__cell"),
       col("q8").as("__cq"), col("q8_scale").as("__cs"))
-    val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
     val qq = int8Prep(queries, vecCol, idCol, "query_id")
       .select(col("query_id"), col("q8").as("__qq"), col("q8_scale").as("__qs"))
-    val probes = probeCells(queries, c, vecCol, idCol, nprobe)
+    val probes = probeCells(queries, centroids, vecCol, idCol, nprobe)
       .select("query_id", "__cell")
       .join(broadcast(qq), Seq("query_id"))
     val candScored = narrow.join(broadcast(probes), Seq("__cell"))
       .withColumn("cosine", int8Dot(col("__qq"), col("__qs"), col("__cq"), col("__cs")))
-    val survivors = topkColumns(candScored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
     // exact rescore against the index's own float column — only survivor
     // rows (model-sized broadcast) touch the wide vec read
-    rescoreExact(indexCorpus(assigned, vecCol, idCol), queries, vecCol, idCol, survivors, k)
+    rescoreExact(candScored, rescore, k, indexCorpus(assigned, vecCol, idCol), queries,
+      vecCol, idCol)
   }
 
   /** The composed 100 TB retrieval path: IVF cell pruning × int8 candidate
-    * scoring × exact float rescore of the survivors.
+    * scoring × exact float rescore of the survivors. Per call, this is
+    * [[ivfBuildIndex]] followed by [[int8IvfSearchIndex]].
     *
     * Stage shape, in corpus-scan terms:
     *   1. cell assignment (one corpus pass, codegen'd argmax over the
@@ -687,11 +712,10 @@ object Similarity {
     *      partial-merge aggregator as every other top-k here (no window
     *      over the candidate space).
     *   3. exact rescore: the survivor list (queries × rescore·k rows —
-    *      model-sized) is broadcast back against the corpus floats, so the
-    *      wide column is touched for only the survivors, and the final
-    *      top-k ranks by TRUE cosine. At 100 TB the floats stay in cold
-    *      storage (parquet column never scanned by stages 1-2 thanks to
-    *      column pruning) and only survivor row-groups pay the read.
+    *      model-sized) is broadcast back against the index's float column
+    *      (the corpus vectors minus null rows, which are never survivors),
+    *      so the wide column is touched for only the survivors, and the
+    *      final top-k ranks by TRUE cosine.
     *
     * With `nprobe = nlist` and `rescore·k ≥ |corpus|` this is exactly
     * [[bruteForceTopK]]; with `nprobe = nlist` and a finite rescore it is
@@ -713,22 +737,8 @@ object Similarity {
       quantizer: Option[Array[Array[Double]]] = None): DataFrame = {
     requireTopK(k, nprobe)
     val (assigned, centroids) =
-      fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, quantizer)
-    // narrow candidate-stage projection: quantize, then DROP the float column
-    val narrow = int8Prep(assigned, "__cv", "neighbor_id", "neighbor_id", keep = Seq("__cell"))
-      .select(col("neighbor_id"), col("__cell"),
-        col("q8").as("__cq"), col("q8_scale").as("__cs"))
-    val qq = int8Prep(queries, vecCol, idCol, "query_id")
-      .select(col("query_id"), col("q8").as("__qq"), col("q8_scale").as("__qs"))
-    val probes = probeCells(queries, centroids, vecCol, idCol, nprobe)
-      .select("query_id", "__cell")
-      .join(broadcast(qq), Seq("query_id"))
-
-    val candScored = narrow.join(broadcast(probes), Seq("__cell"))
-      .withColumn("cosine", int8Dot(col("__qq"), col("__qs"), col("__cq"), col("__cs")))
-    val survivors = topkColumns(candScored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+      ivfBuildIndex(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, quantizer)
+    int8IvfSearchIndex(assigned, centroids, queries, vecCol, idCol, k, nprobe, rescore)
   }
 
   /** Matryoshka truncated-prefix retrieval (MRL, Kusupati et al. 2022 —
@@ -751,28 +761,31 @@ object Similarity {
       dims: Int,
       rescore: Int = 4): DataFrame = {
     require(dims >= 1, "dims must be >= 1")
-    require(k >= 1 && rescore >= 1, "k and rescore must be >= 1")
+    require(rescore >= 1, "rescore must be >= 1")
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       slice(col(vecCol).cast("array<double>"), 1, dims).as("__cv"))
     val q = queries.select(col(idCol).cast("long").as("query_id"),
       slice(col(vecCol).cast("array<double>"), 1, dims).as("__qv"))
     val scored = c.crossJoin(broadcast(q))
       .withColumn("cosine", cosineSim(col("__qv"), col("__cv")))
-    val survivors = topkColumns(scored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+    rescoreExact(scored, rescore, k, corpus, queries, vecCol, idCol)
   }
 
   /** A persisted index's float column as a corpus for [[rescoreExact]]. */
   private def indexCorpus(assigned: DataFrame, vecCol: String, idCol: String): DataFrame =
     assigned.select(col("neighbor_id").as(idCol), col("vec").as(vecCol))
 
-  /** Exact float rescore of a survivor list: the (query, neighbor) pairs are
-    * model-sized — broadcast them onto the corpus so the wide float column
-    * is read only where it matters, and rank by TRUE cosine.
+  /** The candidates → survivors → exact-rescore tail of every two-stage
+    * retriever here: the top `max(k, rescore·k)` candidates per query by
+    * their first-stage `cosine` survive; the (query, neighbor) survivor
+    * pairs are model-sized, so they are broadcast onto the corpus, the wide
+    * float column is read only where it matters, and the final top-k ranks
+    * by TRUE cosine.
     */
-  private def rescoreExact(corpus: DataFrame, queries: DataFrame,
-      vecCol: String, idCol: String, survivors: DataFrame, k: Int): DataFrame = {
+  private def rescoreExact(candidates: DataFrame, rescore: Int, k: Int, corpus: DataFrame,
+      queries: DataFrame, vecCol: String, idCol: String): DataFrame = {
+    val survivors = topkColumns(candidates, math.max(k, rescore * k))
+      .select("query_id", "neighbor_id")
     val qFloat = queries.select(col(idCol).cast("long").as("query_id"), col(vecCol).as("__qv"))
     val rescored = corpus
       .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("__cv"))
@@ -818,9 +831,7 @@ object Similarity {
       .dropDuplicates("query_id", "neighbor_id")
     val candScored = cands
       .withColumn("cosine", int8Dot(col("__qq"), col("__qs"), col("__cq"), col("__cs")))
-    val survivors = topkColumns(candScored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+    rescoreExact(candScored, rescore, k, corpus, queries, vecCol, idCol)
   }
 
   /** LSH-bucketed ANN (the scale path): `tables` independent random-hyperplane
@@ -868,17 +879,8 @@ object Similarity {
       .where(col("__v").isNotNull)
       .orderBy("__id").limit(ksub).collect()
     require(rows.length == ksub, s"sample codebook needs >= $ksub corpus rows, got ${rows.length}")
-    // normalize by DIVISION (x / n), zero-norm left unchanged — the exact
-    // arithmetic of l2Prep's column path and the oracle's nz CTE; the
-    // reciprocal-multiply in l2normalize differs in the last ulp and would
-    // break the value-exact mirror
-    val normed = rows.map { r =>
-      val v = r.getSeq[Double](1).toArray
-      var n2 = 0.0; var i = 0
-      while (i < v.length) { n2 += v(i) * v(i); i += 1 }
-      val n = math.sqrt(n2)
-      if (n > 0) v.map(_ / n) else v
-    }
+    // normalized by division: the oracle mirrors this codebook value-exactly
+    val normed = rows.map(r => l2normalizeByDivision(r.getSeq[Double](1).toArray))
     // optional RESIDUAL seam: subtract a fixed center (the coarse centroid,
     // float32-rounded exactly as fitAssign stores it) so the sample-init
     // codebook lives in residual space — the ivfPqTopK(residual = true)
@@ -915,19 +917,13 @@ object Similarity {
     require(m >= 1 && ksub >= 2 && iters >= 1, "m >= 1, ksub >= 2, iters >= 1 required")
     val featured = corpus.select(col(vecCol).cast("array<float>").as("__cv"))
       .where(col("__cv").isNotNull)
-    val dim = featured.select(size(col("__cv"))).head(1) match {
-      case Array(r) => r.getInt(0)
-      case _ => 0
-    }
+    val dim = vectorDim(featured, "__cv")
     require(dim > 0 && dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val dsub = dim / m
-    val sample = featured
-      .select(col("__cv"), xxhash64(lit(seed), col("__cv")).as("__h"))
-      .orderBy("__h")
-      .limit(fitRowCap(dim, fitSampleBytes, ksub))
-      .collect().map(r => l2normalize(r.getSeq[Float](0).map(_.toDouble).toArray))
+    // hashed on the array<float> cast
+    val sample = fitSample(featured, col("__cv"), seed, dim, fitSampleBytes, ksub, col("__cv"))
+      .map(r => l2normalize(r.getSeq[Float](0).map(_.toDouble).toArray))
     require(sample.nonEmpty, "empty training sample")
-    fitSubspaces(sample, m, ksub, iters, dsub)
+    fitSubspaces(sample, m, ksub, iters, dim / m)
   }
 
   /** Per-subspace squared-L2 Lloyd on an in-memory sample — the shared
@@ -1011,23 +1007,20 @@ object Similarity {
         vec_pq_lut(col("__nv"), flatCb, dsub, ksub).as("__lut"))
     val scored = c.crossJoin(broadcast(q))
       .withColumn("cosine", pq_adc(col("__lut"), col("__code"), ksub))
-    if (rescore == 0)
-      topkColumns(scored, k).withColumnRenamed("cosine", "score")
-    else {
-      val survivors = topkColumns(scored, math.max(k, rescore * k))
-        .select("query_id", "neighbor_id")
-      rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
-    }
+    if (rescore == 0) topkColumns(scored, k).withColumnRenamed("cosine", "score")
+    else rescoreExact(scored, rescore, k, corpus, queries, vecCol, idCol)
   }
 
-  /** IVF × PQ × float rescore — the FAISS-IVFPQ shape (without residual
-    * encoding: codes quantize the vector itself, so the PQ stage is
-    * independent of the coarse quantizer and `nprobe = nlist` reduces
-    * EXACTLY to [[pqTopK]]'s rescore path, which is how the oracle gates
-    * it). Candidate rows carry only (id, cell, m-byte code): at 100 TB the
-    * probed-cell scan reads 32× fewer vector bytes than float32, the ADC
-    * loop is m adds per pair, and the float column is read only for the
-    * rescore survivors.
+  /** IVF × PQ × float rescore — the FAISS-IVFPQ shape. Without residual
+    * encoding, this is [[ivfPqBuildIndex]] followed by [[ivfPqSearchIndex]]:
+    * codes quantize the vector itself, so the PQ stage is independent of the
+    * coarse quantizer and `nprobe = nlist` reduces EXACTLY to [[pqTopK]]'s
+    * rescore path, which is how the oracle gates it. Candidate rows carry
+    * only (id, cell, m-byte code): at 100 TB the probed-cell scan reads 32×
+    * fewer vector bytes than float32, the ADC loop is m adds per pair, and
+    * the float column is read only for the rescore survivors. With
+    * `residual = true` the codes quantize the residual against the cell's
+    * centroid instead (below), which has no index twin.
     */
   def ivfPqTopK(
       corpus: DataFrame,
@@ -1046,24 +1039,12 @@ object Similarity {
       quantizer: Option[Array[Array[Double]]] = None,
       residual: Boolean = false): DataFrame = {
     require(rescore >= 1, "ivfPqTopK always rescores: rescore >= 1 required")
-    val (assigned, centroids) =
-      fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, quantizer)
+    requireTopK(k, nprobe)
     if (!residual) {
-      val flatCb = codebooks.getOrElse(pqTrainCodebooks(corpus, vecCol, m, ksub, seed = seed))
-      val dsub = flatCb.length / (m * ksub)
-      val narrow = l2Prep(assigned, "__cv", "neighbor_id", "neighbor_id", keep = Seq("__cell"))
-        .select(col("neighbor_id"), col("__cell"),
-          vec_pq_encode(col("__nv"), flatCb, dsub, ksub).as("__code"))
-      val qlut = l2Prep(queries, vecCol, idCol, "query_id")
-        .select(col("query_id"), vec_pq_lut(col("__nv"), flatCb, dsub, ksub).as("__lut"))
-      val probes = probeCells(queries, centroids, vecCol, idCol, nprobe)
-        .select("query_id", "__cell")
-        .join(broadcast(qlut), Seq("query_id"))
-      val candScored = narrow.join(broadcast(probes), Seq("__cell"))
-        .withColumn("cosine", pq_adc(col("__lut"), col("__code"), ksub))
-      val survivors = topkColumns(candScored, math.max(k, rescore * k))
-        .select("query_id", "neighbor_id")
-      return rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+      val (assigned, centroids, codebook) = ivfPqBuildIndex(corpus, vecCol, idCol, nlist, m, ksub,
+        seed, fitSampleBytes, codebooks, quantizer)
+      return ivfPqSearchIndex(assigned, centroids, codebook, queries, vecCol, idCol, k, nprobe,
+        rescore)
     }
     // RESIDUAL encoding (the FAISS-IVFPQ default): codes quantize
     // (x̂ − c_cell) — residuals are tighter-clustered than raw vectors, so
@@ -1080,19 +1061,18 @@ object Similarity {
     // error), and the nlist=1 EXPLICIT-quantizer degenerate case — where
     // the residual is (x̂ − c₀) with a literal c₀ — is oracled end-to-end
     // as sim_ivf_pq_residual.
-    val cmap = centroids.select(col("__cell").cast("int"), col("__centroid"))
+    val (assigned, centroids) =
+      fitAssign(corpus, vecCol, idCol, nlist, seed, fitSampleBytes, quantizer)
+    val cmap = centroids.select(col("cell").cast("int"), col("centroid"))
       .collect() // bounded: the ≤nlist-row quantizer model
       .map(r => r.getInt(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
     val prep = l2Prep(assigned, "__cv", "neighbor_id", "neighbor_id",
       keep = Seq("__cell", "__cv"))
     val flatCb = codebooks.getOrElse {
       val dim = cmap.head._2.length
-      val rows = prep
-        .select(col("__nv"), col("__cell"), xxhash64(lit(seed), col("__cv")).as("__h"))
-        .orderBy("__h")
-        .limit(fitRowCap(dim, fitSampleBytes, ksub))
-        .collect()
-      val sample = rows.map { r =>
+      // hashed on the input-typed vector
+      val sample = fitSample(prep, col("__cv"), seed, dim, fitSampleBytes, ksub,
+          col("__nv"), col("__cell")).map { r =>
         val v = r.getSeq[Double](0).toArray
         val c = cmap(r.getInt(1))
         Array.tabulate(v.length)(j => v(j) - c(j))
@@ -1102,8 +1082,8 @@ object Similarity {
       fitSubspaces(sample, m, ksub, iters = 8, dsub = dim / m)
     }
     val dsub = flatCb.length / (m * ksub)
-    val cents = centroids.select(col("__cell"),
-      col("__centroid").cast("array<double>").as("__cd"))
+    val cents = centroids.select(col("cell").as("__cell"),
+      col("centroid").cast("array<double>").as("__cd"))
     val narrow = prep
       .join(broadcast(cents), Seq("__cell"))
       .withColumn("__res", zip_with(col("__nv"), col("__cd"), (a, b) => a - b))
@@ -1127,9 +1107,7 @@ object Similarity {
       .join(broadcast(qlut), Seq("query_id"))
     val candScored = narrow.join(broadcast(probes), Seq("__cell"))
       .withColumn("cosine", col("__dotqc") + pq_adc(col("__lut"), col("__code"), ksub))
-    val survivors = topkColumns(candScored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+    rescoreExact(candScored, rescore, k, corpus, queries, vecCol, idCol)
   }
 
   /** Builds the PERSISTABLE IVF-PQ index: `assigned(neighbor_id, vec,
@@ -1164,9 +1142,7 @@ object Similarity {
     val spark = corpus.sparkSession
     import spark.implicits._
     val cbDf = Seq((dsub, ksub, flatCb.toSeq)).toDF("dsub", "ksub", "cb")
-    (withCode,
-      centroids.select(col("__cell").as("cell"), col("__centroid").as("centroid")),
-      cbDf)
+    (withCode, centroids, cbDf)
   }
 
   /** Serves a query batch from a persisted [[ivfPqBuildIndex]] layout: probe
@@ -1186,23 +1162,22 @@ object Similarity {
       k: Int,
       nprobe: Int = 4,
       rescore: Int = 4): DataFrame = {
+    requireTopK(k, nprobe)
     val cbRow = codebook.select(col("dsub").cast("int"), col("ksub").cast("int"), col("cb"))
       .head() // bounded: the one-row codebook table
     val dsub = cbRow.getInt(0); val ksub = cbRow.getInt(1)
     val flatCb = cbRow.getSeq[Double](2).toArray
     val narrow = assigned.select(col("neighbor_id"), col("cell").as("__cell"),
       col("pq_code").as("__code"))
-    val c = centroids.select(col("cell").as("__cell"), col("centroid").as("__centroid"))
     val qlut = l2Prep(queries, vecCol, idCol, "query_id")
       .select(col("query_id"), vec_pq_lut(col("__nv"), flatCb, dsub, ksub).as("__lut"))
-    val probes = probeCells(queries, c, vecCol, idCol, nprobe)
+    val probes = probeCells(queries, centroids, vecCol, idCol, nprobe)
       .select("query_id", "__cell")
       .join(broadcast(qlut), Seq("query_id"))
     val candScored = narrow.join(broadcast(probes), Seq("__cell"))
       .withColumn("cosine", pq_adc(col("__lut"), col("__code"), ksub))
-    val survivors = topkColumns(candScored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(indexCorpus(assigned, vecCol, idCol), queries, vecCol, idCol, survivors, k)
+    rescoreExact(candScored, rescore, k, indexCorpus(assigned, vecCol, idCol), queries,
+      vecCol, idCol)
   }
 
   /** Per-group mean-pooled embeddings — the standard long-document /
@@ -1239,7 +1214,6 @@ object Similarity {
       idCol: String,
       labelCol: String,
       k: Int): DataFrame = {
-    require(k >= 1, "k must be >= 1")
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       col(labelCol).as("__cl"), col(vecCol).as("__cv"))
     val q = queries.select(col(idCol).cast("long").as("query_id"),
@@ -1283,6 +1257,7 @@ object Similarity {
       idCol: String,
       k: Int,
       nprobe: Int = 4): DataFrame = {
+    requireTopK(k, nprobe)
     val cents = centroids.select(col("cell").cast("int"), col("centroid"))
       .collect() // bounded: the ≤nlist-row quantizer model
       .map(r => (r.getInt(0), r.getSeq[Float](1).map(_.toDouble).toArray))
@@ -1332,7 +1307,7 @@ object Similarity {
       idCol: String,
       k: Int,
       rescore: Int = 4): DataFrame = {
-    require(k >= 1 && rescore >= 1, "k and rescore must be >= 1")
+    require(rescore >= 1, "rescore must be >= 1")
     val c = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       vec_sign_bits(col(vecCol)).as("__cb"))
     val q = queries.select(col(idCol).cast("long").as("query_id"),
@@ -1342,9 +1317,7 @@ object Similarity {
     val scored = c.crossJoin(broadcast(q))
       .withColumn("cosine",
         -bit_count(col("__qb").bitwiseXOR(col("__cb"))).cast("double"))
-    val survivors = topkColumns(scored, math.max(k, rescore * k))
-      .select("query_id", "neighbor_id")
-    rescoreExact(corpus, queries, vecCol, idCol, survivors, k)
+    rescoreExact(scored, rescore, k, corpus, queries, vecCol, idCol)
   }
 
   /** Greedy farthest-point (k-center) sampling — diversity/coreset

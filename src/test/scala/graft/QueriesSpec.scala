@@ -39,6 +39,16 @@ class QueriesSpec extends SparkSpec {
     }
   }
 
+  test("each in-memory IVF query returns its persisted-index twin's rows") {
+    def rows(name: String) =
+      SparkEntry.queries(name)(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    Seq("sim_ivf" -> "sim_ivf_index", "sim_int8_ivf" -> "sim_int8_ivf_index",
+        "sim_ivf_pq" -> "sim_ivf_pq_index").foreach { case (inline, index) =>
+      val want = rows(index)
+      assert(want.nonEmpty && rows(inline) == want, s"$inline vs $index")
+    }
+  }
+
   test("resolveQueries trims names and fails naming unknown ones") {
     assert(SparkEntry.resolveQueries(" geo_area, sjoin_full ,,") == Seq("geo_area", "sjoin_full"))
     val e = intercept[IllegalArgumentException](

@@ -411,9 +411,21 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val dir = tmpDir("ivfargs")
     writeIvf(Similarity.ivfBuildIndex(corpus, "embedding", "vec_id", nlist = 4), dir)
     val (assigned, centroids) = persistedIvf(dir)
+    val pq = Similarity.ivfPqBuildIndex(corpus, "embedding", "vec_id", nlist = 4, m = 4, ksub = 8)
+    pq._1.write.parquet(s"$dir/pq/assigned")
+    pq._3.write.parquet(s"$dir/pq/codebook")
+    val (pqAssigned, codebook) = (spark.read.parquet(s"$dir/pq/assigned"),
+      spark.read.schema("dsub INT, ksub INT, cb ARRAY<DOUBLE>").parquet(s"$dir/pq/codebook"))
     val queries = corpus.where(col("vec_id") < 2)
     Seq((0, 2), (3, 0)).foreach { case (k, nprobe) =>
-      val calls = Seq[() => org.apache.spark.sql.DataFrame](
+      // the top-k entry points without a probe count take only the k case
+      val topK = if (nprobe < 1) Nil else Seq[() => org.apache.spark.sql.DataFrame](
+        () => Similarity.bruteForceTopK(corpus, queries, "embedding", "vec_id", k),
+        () => Similarity.int8TopK(corpus, queries, "embedding", "vec_id", k),
+        () => Similarity.projectedTopK(corpus, queries, "embedding", "vec_id", k),
+        () => Similarity.lshTopK(corpus, queries, "embedding", "vec_id", k),
+        () => Similarity.int8LshTopK(corpus, queries, "embedding", "vec_id", k))
+      val calls = topK ++ Seq[() => org.apache.spark.sql.DataFrame](
         () => Similarity.ivfTopK(corpus, queries, "embedding", "vec_id", k,
           nlist = 4, nprobe = nprobe),
         () => Similarity.ivfSearchIndex(assigned, centroids, queries,
@@ -421,6 +433,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         () => Similarity.int8IvfTopK(corpus, queries, "embedding", "vec_id", k,
           nlist = 4, nprobe = nprobe),
         () => Similarity.int8IvfSearchIndex(assigned, centroids, queries,
+          "embedding", "vec_id", k, nprobe),
+        () => Similarity.ivfPqTopK(corpus, queries, "embedding", "vec_id", k,
+          nlist = 4, nprobe = nprobe, m = 4, ksub = 8),
+        () => Similarity.ivfPqSearchIndex(pqAssigned, centroids, codebook, queries,
+          "embedding", "vec_id", k, nprobe),
+        () => Similarity.int8IvfServeStream(queries, assigned, centroids,
           "embedding", "vec_id", k, nprobe))
       calls.foreach { call =>
         val (e, jobs, _) = traced(intercept[IllegalArgumentException](call().collect()))
