@@ -68,16 +68,24 @@ object SparkEntry {
   /** One point per customer row: lon ∈ [-29.75, 29.75], lat ∈ [-19.75, 19.75];
     * fractional part 0.25 so points never sit on integer zone boundaries.
     */
-  private def custPoints(s: SparkSession, dir: String): DataFrame =
+  private[graft] def custPoints(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "customer").withColumn("geometry",
       st_point(expr("(c_custkey % 120) * 0.5 - 30 + 0.25"), expr("(c_custkey % 80) * 0.5 - 20 + 0.25")))
 
   /** One disjoint 4°×6° rectangle zone per nation row. */
-  private def nationZones(s: SparkSession, dir: String): DataFrame = {
+  private[graft] def nationZones(s: SparkSession, dir: String): DataFrame = {
     val lon0 = expr("(n_nationkey % 12) * 5.0 - 30")
     val lat0 = expr("(n_nationkey % 5) * 8.0 - 20")
     t(s, dir, "nation").withColumn("geometry",
       st_envelope(st_makeline(st_point(lon0, lat0), st_point(lon0 + 4.0, lat0 + 6.0))))
+  }
+
+  /** One 2°×2.5° rectangle per supplier row, overlapping its neighbours. */
+  private[graft] def supplierRects(s: SparkSession, dir: String): DataFrame = {
+    val lon0 = expr("(s_suppkey % 40) * 1.5 - 30")
+    val lat0 = expr("(s_suppkey % 25) * 1.6 - 20")
+    t(s, dir, "supplier").withColumn("geometry",
+      st_envelope(st_makeline(st_point(lon0, lat0), st_point(lon0 + 2.0, lat0 + 2.5))))
   }
 
   /** Distinct undirected co-purchase edges between parts sharing an order
@@ -696,10 +704,7 @@ object SparkEntry {
 
     // --- areal interpolation: nation-zone values onto supplier rects -------
     "sjoin_areal" -> ((s, dir) => {
-      val lon0 = expr("(s_suppkey % 40) * 1.5 - 30")
-      val lat0 = expr("(s_suppkey % 25) * 1.6 - 20")
-      val targets = t(s, dir, "supplier").withColumn("geometry",
-        st_envelope(st_makeline(st_point(lon0, lat0), st_point(lon0 + 2.0, lat0 + 2.5))))
+      val targets = supplierRects(s, dir)
       val src = nationZones(s, dir)
         .withColumn("pop", ((col("n_nationkey") + 1) * 100).cast("double"))
       GeoOps.arealInterpolate(targets, src, "s_suppkey", "pop")
@@ -708,11 +713,7 @@ object SparkEntry {
 
     // --- heavy sjoin: every customer point × overlapping supplier rects ----
     "sjoin_heavy" -> ((s, dir) => {
-      val lon0 = expr("(s_suppkey % 40) * 1.5 - 30")
-      val lat0 = expr("(s_suppkey % 25) * 1.6 - 20")
-      val rects = t(s, dir, "supplier").withColumn("geometry",
-        st_envelope(st_makeline(st_point(lon0, lat0), st_point(lon0 + 2.0, lat0 + 2.5))))
-      SJoin.sagg(rects, custPoints(s, dir),
+      SJoin.sagg(supplierRects(s, dir), custPoints(s, dir),
           Seq(count(lit(1)).as("n_pts"), round(sum("c_acctbal"), 2).as("bal_sum")),
           predicate = "contains", how = "inner")
         .select("s_suppkey", "n_pts", "bal_sum")

@@ -437,10 +437,6 @@ object GeomKernel {
     new GenericArrayData(out)
   }
 
-  /** WKB parts of [[graft.geom.Subdivide.subdivide]]: each part at most
-    * `maxVertices` vertices — explode ahead of spatial joins to bound
-    * per-candidate predicate cost by a constant.
-    */
   /** Grid-snapped geometry (PostGIS ST_SnapToGrid semantics): nearest grid
     * intersection half-up, consecutive duplicates collapsed, degenerate
     * parts dropped — the quantization step before WKB hash-dedup.
@@ -448,6 +444,10 @@ object GeomKernel {
   def snapToGrid(b: Array[Byte], size: Double): Array[Byte] =
     WKB.write(Algos.snapToGrid(WKB.read(b), size))
 
+  /** WKB parts of [[graft.geom.Subdivide.subdivide]]: each part at most
+    * `maxVertices` vertices — explode ahead of spatial joins to bound
+    * per-candidate predicate cost by a constant.
+    */
   def subdivide(b: Array[Byte], maxVertices: Int): ArrayData =
     new GenericArrayData(
       graft.geom.Subdivide.subdivide(WKB.read(b), maxVertices).map(WKB.write))

@@ -1,22 +1,52 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.functions.GeoFunctions._
 
 /** Spatial join family (reference: erde/op/sjoin.py — sjfull / sagg /
   * slookup / sfilter with predicates intersects / within / contains).
   *
-  * Scale design (SURVEY §4): geometries are exploded onto the covering cells
-  * of a lon/lat grid and the join runs hash-partitioned on the cell id, so
-  * shuffle weight is O(rows × avg cells covered), never O(N×M). Duplicate
-  * candidate pairs (bboxes overlapping several shared cells) are eliminated
-  * *without a distinct shuffle* by the reference-cell rule: a pair is emitted
-  * only in the single cell containing the top-left corner of the two bboxes'
-  * intersection. Skew (dense cities) spreads because the cell id is the
-  * shuffle key and AQE splits oversized partitions; `cellDeg` tunes
-  * cover-vs-selectivity per call.
+  * Scale design (SURVEY §4). Two paths, chosen per call:
+  *
+  *  - Index path ([[sagg]], [[slookup]], [[sfilter]] with one small side):
+  *    erde's sjoins are mostly dimension-table joins (points looked up in,
+  *    filtered by or counted per a few thousand zones). The small side is
+  *    collected once at call time, a [[GridIndex]] over its parsed
+  *    geometries is broadcast, and the other side probes it in one narrow
+  *    pass: no row tag, no persist, no cell explode, no join-back shuffle.
+  *    `sfilter` and `slookup` index the right side, `sagg` the left. The
+  *    gate has two steps and no knob of its own. First, with no job: the
+  *    path is skipped when either side streams, when
+  *    `spark.sql.autoBroadcastJoinThreshold` (the bound Spark already uses
+  *    to broadcast a join side) is negative, or when Catalyst's size
+  *    estimate of the side is known (every leaf of its plan has one) and
+  *    above that threshold. Second, one collect of at most [[IndexRows]] +
+  *    1 rows: Spark's `limit` collect, which runs over growing batches of
+  *    partitions and stops once that many rows came back, so a side of
+  *    unknown size is never scanned whole and the driver keeps at most
+  *    IndexRows + 1 of its rows. The path runs when the side has at most
+  *    IndexRows rows and their estimated size fits the same threshold.
+  *    Otherwise those rows are dropped and the grid path runs. `cellDeg`
+  *    and `tuning` apply to the grid path only.
+  *  - Grid path (two large sides, streams, [[sjfull]], [[pairs]]):
+  *    geometries are exploded onto the covering cells of a lon/lat grid and
+  *    the join runs hash-partitioned on the cell id, so shuffle weight is
+  *    O(rows × avg cells covered), never O(N×M). Duplicate candidate pairs
+  *    (bboxes overlapping several shared cells) are eliminated *without a
+  *    distinct shuffle* by the reference-cell rule: a pair is emitted only
+  *    in the single cell containing the top-left corner of the two bboxes'
+  *    intersection. Skew (dense cities) spreads because the cell id is the
+  *    shuffle key and AQE splits oversized partitions; `cellDeg` tunes
+  *    cover-vs-selectivity per call.
+  *
+  * Both paths evaluate the same `st_within` / `st_contains` /
+  * `st_intersects` kernels on the same argument order and return the same
+  * schema (names, types, nullability, column order).
   */
 object SJoin {
 
@@ -39,12 +69,17 @@ object SJoin {
   private val LID = "__graft_lid"
   private val SALT = "__graft_salt"
 
-  private def pred(p: String, l: Column, r: Column): Column = p match {
-    case "intersects" => st_intersects(l, r)
-    case "within" => st_within(l, r)
-    case "contains" => st_contains(l, r)
-    case other => throw new IllegalArgumentException(
-      s"unknown predicate '$other' (intersects|within|contains)")
+  private def checkPredicate(p: String): Unit =
+    if (!Set("intersects", "within", "contains")(p))
+      throw new IllegalArgumentException(s"unknown predicate '$p' (intersects|within|contains)")
+
+  private def pred(p: String, l: Column, r: Column): Column = {
+    checkPredicate(p)
+    p match {
+      case "intersects" => st_intersects(l, r)
+      case "within" => st_within(l, r)
+      case _ => st_contains(l, r)
+    }
   }
 
   /** Inner candidate-pair join: left row ++ right row (right columns that
@@ -62,6 +97,30 @@ object SJoin {
       tuning: Tuning = Tuning()): DataFrame =
     // no row-id tag: pairs() is a pure stateless transform, usable on streams
     pairsKeyed(left, right, predicate, leftGeom, rightGeom, cellDeg, rightSuffix, tuning)
+
+  /** Rows up to which [[sagg]], [[slookup]] and [[sfilter]] index their
+    * small side: the crossover timed on 4 cores against 150k probe points
+    * (the index path won all three operators from 1k to 64k small-side
+    * rows, 0.18-0.60 s against 0.45-0.87 s for the grid path, and lost at
+    * 128k). It also bounds what the driver collects and indexes.
+    */
+  private[graft] val IndexRows = 65536
+
+  /** `side`'s rows when the index path takes it (see the object doc's
+    * gate), else None.
+    */
+  private def smallSide(side: DataFrame, other: DataFrame, cap: Int): Option[Array[Row]] = {
+    val conf = side.sparkSession.sessionState.conf
+    val limit = conf.autoBroadcastJoinThreshold
+    if (limit < 0 || side.isStreaming || other.isStreaming) None
+    else {
+      val plan = side.queryExecution.optimizedPlan
+      val known = plan.collectLeaves().forall(_.stats.sizeInBytes < conf.defaultSizeInBytes)
+      if (known && plan.stats.sizeInBytes > limit) None
+      else Some(side.limit(cap + 1).collect()).filter(rows =>
+        rows.length <= cap && org.apache.spark.util.SizeEstimator.estimate(rows) <= limit)
+    }
+  }
 
   /** Left side with a stable row id (narrow — no shuffle) for the join-back
     * variants (left joins, sagg, slookup, sfilter).
@@ -153,14 +212,14 @@ object SJoin {
       if (clash(c0)) df.withColumnRenamed(c0, c0 + suffix) else df
     }
 
-  /** Left columns (beyond the geometry) that user expressions reference by
-    * name — the slim pair pass must carry exactly those, so aggs/lookups
-    * over left attributes keep resolving as they did when the full left
-    * payload rode along. An expression whose references can't be enumerated
-    * (`expr("…")` SQL text, a star, a raw catalyst Expression) keeps EVERY
-    * left column — correctness over narrowness.
+  /** Left columns that user expressions reference by name — the slim pair
+    * pass (and [[sagg]]'s index-path pairs) must carry exactly those, so
+    * aggs/lookups over left attributes keep resolving as they did when the
+    * full left payload rode along. An expression whose references can't be
+    * enumerated (`expr("…")` SQL text, a star, a raw catalyst Expression)
+    * keeps EVERY left column — correctness over narrowness.
     */
-  private def referencedLeftCols(lt: DataFrame, leftGeom: String, cols: Seq[Column]): Seq[String] = {
+  private def referencedLeftCols(lt: DataFrame, cols: Seq[Column]): Seq[String] = {
     val walked = cols.map(org.apache.spark.sql.graftbridge.ColumnBridge.attributeNames)
     // name matching honors the session's resolution mode: with the default
     // spark.sql.caseSensitive=false, sum(col("QTY")) must keep left column
@@ -171,7 +230,7 @@ object SJoin {
     val names: Set[String] =
       if (walked.exists(_.isEmpty)) lt.columns.map(norm).toSet // opaque: assume all referenced
       else walked.flatMap(_.get).map(norm).toSet
-    lt.columns.toIndexedSeq.filter(c => c != leftGeom && c != LID && names.contains(norm(c)))
+    lt.columns.toIndexedSeq.filter(c => c != LID && names.contains(norm(c)))
   }
 
   private def pairsKeyed(
@@ -461,9 +520,21 @@ object SJoin {
   }
 
   /** Aggregates right-side values per left row (reference: erde sjoin `sagg`).
-    * `aggs` are aggregate Columns over right columns, e.g.
-    * `Seq(sum("pop").as("pop_sum"), count(lit(1)).as("n"))`. Spark runs them
-    * with map-side partial aggregation over the grid-join output.
+    * `aggs` are aggregate Columns over right columns (clashing right names
+    * carry `_right`) and, optionally, left columns, e.g.
+    * `Seq(sum("pop").as("pop_sum"), count(lit(1)).as("n"))`.
+    *
+    * Index path (small left, see the object doc): the left side is
+    * collected at call time and indexed; each right row explodes the left
+    * indexes it matches, Spark aggregates by index with a map-side partial
+    * step (the only shuffle), and the result is broadcast onto the collected
+    * left rows, which come back as a local frame. Duplicate left rows are
+    * separate entries, so each gets its own aggregates. That frame is a
+    * snapshot of `left` taken at call time, and its left columns are new
+    * attributes: refer to them by name on the result, since a column
+    * reference taken from `left` itself (`left("pop")`, or a join back on
+    * `left`) no longer resolves against it. Otherwise the grid join feeds
+    * the same aggregation and the result keeps `left`'s lineage.
     */
   def sagg(
       left: DataFrame,
@@ -474,30 +545,68 @@ object SJoin {
       leftGeom: String = "geometry",
       rightGeom: String = "geometry",
       cellDeg: Double = DefaultCellDeg,
-      tuning: Tuning = Tuning()): DataFrame = {
-    val (lt, content) = stableTagged(left)
-    val clash = lt.columns.toSet
+      tuning: Tuning = Tuning()): DataFrame =
+    sagg(left, right, aggs, predicate, how, leftGeom, rightGeom, cellDeg, tuning, IndexRows)
+
+  /** [[sagg]] with the index path's row cap (0 forces the grid path for a
+    * non-empty left).
+    */
+  private[graft] def sagg(left: DataFrame, right: DataFrame, aggs: Seq[Column],
+      predicate: String, how: String, leftGeom: String, rightGeom: String, cellDeg: Double,
+      tuning: Tuning, cap: Int): DataFrame = {
+    checkPredicate(predicate)
+    val clash = left.columns.toSet + LID
     val renamed = renameClashing(right, clash, "_right")
     val rGeom = if (clash(rightGeom)) rightGeom + "_right" else rightGeom
-    // Only (tag, geometry, agg-referenced left columns) feed pair generation
-    // — the join-back restores the full left payload, so the pair pass never
-    // carries columns nobody aggregates. Content-path only: identical left
-    // rows share a tag, so their candidate pairs would merge under
-    // groupBy(tag) and double every sum — collapse duplicate tags (narrow
-    // shuffle) so each distinct row aggregates once; the join-back then fans
-    // the correct result onto every duplicate.
-    val keep = Seq(LID, leftGeom) ++ referencedLeftCols(lt, leftGeom, aggs)
-    val slim0 = lt.select(keep.map(col): _*)
-    val slim = if (content) slim0.dropDuplicates(Seq(LID)) else slim0
-    val inner = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
-    val agged = inner.groupBy(col(LID)).agg(aggs.head, aggs.tail: _*)
-    lt.join(agged, Seq(LID), how).drop(LID)
+    smallSide(left, right, cap) match {
+      case Some(rows) =>
+        val spark = left.sparkSession
+        val g = left.schema.fieldIndex(left.select(leftGeom).columns.head)
+        val index = GridIndex.broadcast(spark, rows.map(_.getAs[Array[Byte]](g)), predicate,
+          indexedLeft = true)
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(
+            rows.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }: _*),
+          left.schema.add(LID, IntegerType, nullable = false))
+        val pairs = renamed.withColumn(LID, explode(GridIndex.probe(index, "all", col(rGeom))))
+        val refs = referencedLeftCols(left, aggs)
+        val withLeft =
+          if (refs.isEmpty) pairs
+          else pairs.join(broadcast(local.select((LID +: refs).map(col): _*)), LID)
+        val agged = withLeft.groupBy(col(LID)).agg(aggs.head, aggs.tail: _*)
+        local.join(broadcast(agged), Seq(LID), how).drop(LID)
+      case None =>
+        val (lt, content) = stableTagged(left)
+        // Only (tag, geometry, agg-referenced left columns) feed pair
+        // generation — the join-back restores the full left payload, so the
+        // pair pass never carries columns nobody aggregates. Content-path
+        // only: identical left rows share a tag, so their candidate pairs
+        // would merge under groupBy(tag) and double every sum — collapse
+        // duplicate tags (narrow shuffle) so each distinct row aggregates
+        // once; the join-back then fans the correct result onto every
+        // duplicate.
+        val keep = (Seq(LID, leftGeom) ++ referencedLeftCols(lt, aggs)).distinct
+        val slim0 = lt.select(keep.map(col): _*)
+        val slim = if (content) slim0.dropDuplicates(Seq(LID)) else slim0
+        val inner = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
+        val agged = inner.groupBy(col(LID)).agg(aggs.head, aggs.tail: _*)
+        lt.join(agged, Seq(LID), how).drop(LID)
+    }
   }
 
   /** First-match attribute lookup (reference: erde sjoin `slookup`): attaches
-    * `columns` from the matching right row with the smallest `orderBy` value —
-    * deterministic, unlike pandas row order. min_by keeps the shuffle at one
-    * candidate per (left row × input partition).
+    * `columns` from the matching right row with the smallest `orderBy` value
+    * (rows whose `orderBy` is null are picked only when no other row
+    * matches, and then give nulls, as `min_by`) — deterministic, unlike
+    * pandas row order. Ties keep one real row.
+    *
+    * Index path (small right, see the object doc; `columns` and `orderBy`
+    * must name right columns): the right side is collected at call time in
+    * Spark's ascending order of `orderBy`, so the pick is the first matching
+    * index; each left row probes the index in one narrow pass and `columns`
+    * attach through a broadcast join on that index. Otherwise the grid join
+    * feeds one min_by per left row, with the shuffle at one candidate per
+    * (left row × input partition).
     */
   def slookup(
       left: DataFrame,
@@ -509,30 +618,72 @@ object SJoin {
       leftGeom: String = "geometry",
       rightGeom: String = "geometry",
       cellDeg: Double = DefaultCellDeg,
-      tuning: Tuning = Tuning()): DataFrame = {
-    val (lt, _) = stableTagged(left)
-    val clash = lt.columns.toSet
+      tuning: Tuning = Tuning()): DataFrame =
+    slookup(left, right, columns, orderBy, predicate, how, leftGeom, rightGeom, cellDeg, tuning,
+      IndexRows)
+
+  /** [[slookup]] with the index path's row cap (0 forces the grid path for
+    * a non-empty right).
+    */
+  private[graft] def slookup(left: DataFrame, right: DataFrame, columns: Seq[String],
+      orderBy: String, predicate: String, how: String, leftGeom: String, rightGeom: String,
+      cellDeg: Double, tuning: Tuning, cap: Int): DataFrame = {
+    checkPredicate(predicate)
+    val clash = left.columns.toSet + LID
     val renamed = renameClashing(right, clash, "_right")
     val rGeom = if (clash(rightGeom)) rightGeom + "_right" else rightGeom
-    // min_by is idempotent under whole-candidate-set duplication, so the
-    // content tag needs no duplicate collapse here (unlike sagg): merged
-    // duplicates pick the same minimum, and the join-back fans it out.
     val named = (columns :+ orderBy).map(c0 => col(c0))
-    val keep = Seq(LID, leftGeom) ++ referencedLeftCols(lt, leftGeom, named)
-    val slim = lt.select(keep.map(col): _*)
-    val inner = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
-    // ATOMIC pick: one min_by over the packed column struct, never
-    // independent per-column min_bys — under orderBy ties those could stitch
-    // together values from different matching rows into a row that never
-    // existed. Ties keep one real row (unique orderBy ⇒ fully deterministic).
-    val agged = inner.groupBy(col(LID))
-      .agg(min_by(struct(columns.map(col): _*), col(orderBy)).as("__pick"))
-      .select(col(LID) +: columns.map(c0 => col("__pick").getField(c0).as(c0)): _*)
-    lt.join(agged, Seq(LID), how).drop(LID)
+    // a name that resolves to a LEFT column makes the grid path pick from
+    // the left row; only that path keeps those semantics
+    lazy val side = renamed.select(col(rGeom), col(orderBy), struct(named.init: _*))
+    val collected = if (referencedLeftCols(left, named).nonEmpty) None else smallSide(side, left, cap)
+    collected match {
+      case Some(rows) =>
+        val spark = left.sparkSession
+        val orderType = side.schema(1).dataType
+        val ord = TypeUtils.getInterpretedOrdering(orderType)
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(orderType)
+        val (valued, unvalued) = rows.partition(!_.isNullAt(1))
+        val sorted = valued.sortBy(r => toCatalyst(r.get(1)))(ord) ++ unvalued
+        val index = GridIndex.broadcast(spark, sorted.map(_.getAs[Array[Byte]](0)), predicate,
+          indexedLeft = false)
+        val picked = side.schema(2).dataType.asInstanceOf[StructType].fields.zip(columns)
+          .map { case (f, c0) => StructField(c0, f.dataType, nullable = true) }
+        val local = spark.createDataFrame(
+          java.util.Arrays.asList(sorted.zipWithIndex.map { case (r, i) =>
+            val values = if (r.isNullAt(1)) Seq.fill(columns.length)(null) else r.getStruct(2).toSeq
+            Row.fromSeq(i +: values)
+          }: _*),
+          StructType(StructField(LID, IntegerType, nullable = false) +: picked))
+        left.withColumn(LID, GridIndex.probe(index, "first", col(leftGeom)))
+          .join(broadcast(local), Seq(LID), how).drop(LID)
+      case None =>
+        val (lt, _) = stableTagged(left)
+        // min_by is idempotent under whole-candidate-set duplication, so the
+        // content tag needs no duplicate collapse here (unlike sagg): merged
+        // duplicates pick the same minimum, and the join-back fans it out.
+        val keep = (Seq(LID, leftGeom) ++ referencedLeftCols(lt, named)).distinct
+        val slim = lt.select(keep.map(col): _*)
+        val inner = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
+        // ATOMIC pick: one min_by over the packed column struct, never
+        // independent per-column min_bys — under orderBy ties those could
+        // stitch together values from different matching rows into a row
+        // that never existed.
+        val agged = inner.groupBy(col(LID))
+          .agg(min_by(struct(columns.map(col): _*), col(orderBy)).as("__pick"))
+          .select(col(LID) +: columns.map(c0 => col("__pick").getField(c0).as(c0)): _*)
+        lt.join(agged, Seq(LID), how).drop(LID)
+    }
   }
 
   /** Spatial semi/anti filter (reference: erde sjoin `sfilter`): left rows
-    * that do (or, `negative`, do not) match any right geometry.
+    * that do (or, `negative`, do not) match any right geometry; a null or
+    * empty left geometry matches nothing.
+    *
+    * Index path (small right, see the object doc): the right geometries are
+    * collected at call time and indexed, and the result is `left` filtered
+    * on "any match" in one narrow pass. Otherwise the grid join's matched
+    * tags are semi- (anti-) joined back onto the left.
     */
   def sfilter(
       left: DataFrame,
@@ -542,16 +693,34 @@ object SJoin {
       leftGeom: String = "geometry",
       rightGeom: String = "geometry",
       cellDeg: Double = DefaultCellDeg,
-      tuning: Tuning = Tuning()): DataFrame = {
-    val (lt, _) = stableTagged(left)
-    val clash = lt.columns.toSet
-    val renamed = renameClashing(right, clash, "_right")
-    val rGeom = if (clash(rightGeom)) rightGeom + "_right" else rightGeom
-    // semi/anti joins see tag membership only, so duplicate content tags are
-    // harmless (identical rows match identically and keep their multiplicity).
-    val slim = lt.select(col(LID), col(leftGeom))
-    val matched = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
-      .select(LID)
-    lt.join(matched, Seq(LID), if (negative) "left_anti" else "left_semi").drop(LID)
+      tuning: Tuning = Tuning()): DataFrame =
+    sfilter(left, right, predicate, negative, leftGeom, rightGeom, cellDeg, tuning, IndexRows)
+
+  /** [[sfilter]] with the index path's row cap (0 forces the grid path for
+    * a non-empty right).
+    */
+  private[graft] def sfilter(left: DataFrame, right: DataFrame, predicate: String,
+      negative: Boolean, leftGeom: String, rightGeom: String, cellDeg: Double, tuning: Tuning,
+      cap: Int): DataFrame = {
+    checkPredicate(predicate)
+    smallSide(right.select(rightGeom), left, cap) match {
+      case Some(rows) =>
+        val index = GridIndex.broadcast(left.sparkSession, rows.map(_.getAs[Array[Byte]](0)),
+          predicate, indexedLeft = false)
+        val hit = GridIndex.probe(index, "any", col(leftGeom))
+        left.where(if (negative) !hit else hit)
+      case None =>
+        val (lt, _) = stableTagged(left)
+        val clash = lt.columns.toSet
+        val renamed = renameClashing(right, clash, "_right")
+        val rGeom = if (clash(rightGeom)) rightGeom + "_right" else rightGeom
+        // semi/anti joins see tag membership only, so duplicate content tags
+        // are harmless (identical rows match identically and keep their
+        // multiplicity).
+        val slim = lt.select(col(LID), col(leftGeom))
+        val matched = pairsKeyed(slim, renamed, predicate, leftGeom, rGeom, cellDeg, "_right", tuning)
+          .select(LID)
+        lt.join(matched, Seq(LID), if (negative) "left_anti" else "left_semi").drop(LID)
+    }
   }
 }

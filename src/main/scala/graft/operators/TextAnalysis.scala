@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -843,7 +843,7 @@ object TextAnalysis {
     val tokens = indexTokens(newDocs, textCol, idCol)
     val local =
       if (driverTokens < 1) None
-      else collectUpTo(occurrences(tokens).withColumn("__bucket", termBucket(col("__term"))),
+      else graft.collectUpTo(occurrences(tokens).withColumn("__bucket", termBucket(col("__term"))),
         driverTokens)
     val planned = if (local.isEmpty) Some(indexPostings(tokens).persist()) else None
     try {
@@ -857,7 +857,7 @@ object TextAnalysis {
       var oldStats: Row = null
       Concurrent.awaitAll(
         () => counts = delta.counts(),
-        () => clash = collectUpTo(delta.overlap, 0).isEmpty,
+        () => clash = graft.collectUpTo(delta.overlap, 0).isEmpty,
         () => oldStats = spark.read.schema(statsSchema).parquet(s"$path/stats").head())
       if (counts._1 == 0L) return // nothing to add
       require(!clash,
@@ -909,14 +909,6 @@ object TextAnalysis {
         (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
       })
   }
-
-  /** `df`'s rows if it has at most `cap` of them, else None: one job whose
-    * tasks each return at most cap + 1 rows, so the driver never holds more
-    * than tasks × (cap + 1).
-    */
-  private def collectUpTo(df: DataFrame, cap: Int): Option[Array[Row]] =
-    Some(df.mapPartitions(_.take(cap + 1))(Encoders.row(df.schema)).collect())
-      .filter(_.length <= cap)
 
   /** Serves a query batch against a [[buildBM25Index]] layout. Each query's
     * distinct terms and their buckets are collected to the driver once (a
@@ -1002,7 +994,7 @@ object TextAnalysis {
         var post = Option.empty[Array[Row]]
         var st = Array.empty[Row]
         Concurrent.awaitAll(
-          () => post = collectUpTo(postings.select("__term", "__doc", "__tf", "__dl"),
+          () => post = graft.collectUpTo(postings.select("__term", "__doc", "__tf", "__dl"),
             driverPostings),
           () => st = stats.collect())
         post.map((_, st))

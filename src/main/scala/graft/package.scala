@@ -1,4 +1,4 @@
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -82,6 +82,15 @@ package object graft {
         Map("spark.local.dir" -> "/dev/shm/graft_spark_local")
       else Map.empty
     }
+
+  /** `df`'s rows if it has at most `cap` of them, else None: one job whose
+    * tasks each return at most cap + 1 rows, so the driver never holds more
+    * than tasks × (cap + 1). The one capped collect of the BM25 driver
+    * paths (search and refresh).
+    */
+  private[graft] def collectUpTo(df: DataFrame, cap: Int): Option[Array[Row]] =
+    Some(df.mapPartitions(_.take(cap + 1))(Encoders.row(df.schema)).collect())
+      .filter(_.length <= cap)
 
   /** Deletes `p` and everything under it; a missing path is a no-op. Each
     * directory listing is closed before its directory is removed.

@@ -15,17 +15,27 @@ import graft.operators.{Clustering, Dedup, GeoOps, Graph, Joins, Kll, Ops, OsmFi
   * changes, so copies don't near-dup each other), embeddings a per-copy
   * circular component shift (cosine between copies ≈ random), spatial
   * points a per-copy coordinate offset inside the grid. It then times each
-  * operator at 1× and factor× and prints the wall-clock ratio; ≲ factor ×
+  * operator at 1× and factor× (each point the minimum of three runs) and
+  * prints the wall-clock ratio; ≲ factor ×
   * log-ish is a pass, super-linear ratios flag a scale bug. Results are
   * recorded in SURVEY §6.
   */
 object ScaleCheck {
 
+  /** Runs per timed point: one run of a sub-second operator is mostly
+    * noise, so each point is the minimum of these.
+    */
+  private val Runs = 3
+
+  /** Minimum wall time of [[Runs]] counts of `df`, each building it anew. */
   private def timeIt(label: String)(df: => DataFrame): Double = {
-    val t0 = System.nanoTime()
-    val n = df.count()
-    val s = (System.nanoTime() - t0) / 1e9
-    println(f"  $label%-28s $s%8.2fs rows=$n")
+    val runs = Seq.fill(Runs) {
+      val t0 = System.nanoTime()
+      val n = df.count()
+      ((System.nanoTime() - t0) / 1e9, n)
+    }
+    val s = runs.map(_._1).min
+    println(f"  $label%-28s $s%8.2fs rows=${runs.head._2} (min of $Runs: ${runs.map(r => f"${r._1}%.2f").mkString(" ")})")
     s
   }
 

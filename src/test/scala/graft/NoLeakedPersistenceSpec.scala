@@ -100,8 +100,10 @@ class NoLeakedPersistenceSpec extends AnyFunSuite with SparkSpec {
       .where(rand(7) >= -1.0)
     val points = Seq((1, 1.0, 1.0), (2, 9.0, 9.0)).toDF("pid", "lon", "lat")
       .select(col("pid"), st_point(col("lon"), col("lat")).as("geometry"))
+    // an index row cap of 0 forces the grid path, whose fallback persists
     val agg = graft.operators.SJoin.sagg(zones, points, Seq(count(lit(1)).as("n")),
-      predicate = "contains", how = "left")
+      "contains", "left", "geometry", "geometry", graft.operators.SJoin.DefaultCellDeg,
+      graft.operators.SJoin.Tuning(), 0)
     // node 1 inside the area, way 10 keeps through it, relation 20 through
     // the way — every id frame is a lazy localCheckpoint
     val osm = Seq(

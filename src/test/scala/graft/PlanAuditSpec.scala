@@ -18,12 +18,47 @@ class PlanAuditSpec extends SparkSpec {
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, sfDir)
 
   test("grid spatial joins are hash joins on cell keys, never cartesian") {
-    Seq("sjoin_full", "sjoin_agg", "sjoin_filter", "sjoin_heavy").foreach { name =>
-      val plan = physical(q(name))
+    // sagg / sfilter over these small sides take the index path by default;
+    // an index row cap of 0 forces the grid path audited here
+    import graft.operators.SJoin
+    val (custPoints, nationZones) =
+      (SparkEntry.custPoints(spark, sfDir), SparkEntry.nationZones(spark, sfDir))
+    def gridSagg(l: DataFrame) = SJoin.sagg(l, custPoints, Seq(count(lit(1)).as("n_pts")),
+      "contains", "inner", "geometry", "geometry", SJoin.DefaultCellDeg, SJoin.Tuning(), 0)
+    Seq(
+      "sjoin_full" -> q("sjoin_full"),
+      "sjoin_agg" -> gridSagg(nationZones),
+      "sjoin_filter" -> SJoin.sfilter(custPoints, nationZones, "within", false, "geometry",
+        "geometry", SJoin.DefaultCellDeg, SJoin.Tuning(), 0),
+      "sjoin_heavy" -> gridSagg(SparkEntry.supplierRects(spark, sfDir))
+    ).foreach { case (name, df) =>
+      val plan = physical(df)
       assert(!plan.contains("CartesianProduct"), s"$name degenerated to cartesian:\n$plan")
       assert(plan.contains("HashJoin") || plan.contains("SortMergeJoin"),
         s"$name lost its equi-join:\n$plan")
     }
+  }
+
+  test("small-side sjoins probe a broadcast index: sfilter and slookup never shuffle, sagg only for its aggregate") {
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object Plans extends AdaptiveSparkPlanHelper
+    def shuffles(df: DataFrame): Seq[SparkPlan] = {
+      df.collect() // the final adaptive plan, query stages included
+      val plan = df.queryExecution.executedPlan
+      assert(plan.toString.contains("grid_probe"), s"no index probe:\n$plan")
+      Plans.collect(plan) { case e: ShuffleExchangeLike => e.child }
+    }
+    Seq("sjoin_filter", "sjoin_lookup").foreach { name =>
+      val found = shuffles(q(name))
+      assert(found.isEmpty, s"$name shuffles:\n${found.mkString("\n")}")
+    }
+    val found = shuffles(q("sjoin_agg"))
+    assert(found.length == 1, s"sjoin_agg shuffles more than its aggregate:\n${found.mkString("\n")}")
+    val partial = found.head match { case w: WholeStageCodegenExec => w.child; case p => p }
+    assert(partial.nodeName.contains("HashAggregate"),
+      s"sjoin_agg's shuffle is not its aggregate:\n$partial")
   }
 
   test("the deliberate cross join is the ONLY cartesian in the suite") {
@@ -339,7 +374,9 @@ class PlanAuditSpec extends SparkSpec {
     val pts = geoms("point_id", 200)(i => GeomKernel.point(i * 0.001, 0.0))
     Seq(
       GeoOps.lengthM(GeoOps.areaM(zones)) -> Seq("areaM", "lengthM"),
-      SJoin.sagg(zones, pts, Seq(count(lit(1)).as("n")), predicate = "contains") ->
+      // the grid path (an index row cap of 0 forces it)
+      SJoin.sagg(zones, pts, Seq(count(lit(1)).as("n")), "contains", "left", "geometry",
+        "geometry", SJoin.DefaultCellDeg, SJoin.Tuning(), 0) ->
         Seq("contains", "cellCover", "cellOf", "bbox"),
       GeoOps.convert(zones, "EPSG:4326", "EPSG:3857") -> Seq("toMercator"),
       GeoOps.bufferM(pts, 100.0) -> Seq("bufferM")

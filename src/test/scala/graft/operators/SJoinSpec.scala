@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +10,7 @@ import graft.functions.GeoFunctions._
 class SJoinSpec extends AnyFunSuite with SparkSpec {
 
   import testImplicits._
+  import SJoinSpec._
 
   // points: a 5×5 grid at (i+0.25, j+0.25), i,j ∈ 0..4
   private lazy val points: DataFrame =
@@ -176,11 +177,12 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
       .toDF("prio", "a", "b", "wkt")
       .select(col("prio"), col("a"), col("b"), st_geomfromtext(col("wkt")).as("geometry"))
     val one = points.where(col("pid") === 0) // (0.25, 0.25)
-    val out = SJoin.slookup(one, tiedZones, columns = Seq("a", "b"), orderBy = "prio",
-      predicate = "within", how = "inner")
-    val r = out.select("a", "b").as[(Int, Int)].collect()
-    assert(r.length == 1)
-    assert(r(0) == (1, 9) || r(0) == (9, 1)) // one REAL row, never (1, 1)
+    for (cap <- Seq(SJoin.IndexRows, Grid)) {
+      val out = slookup(cap)(one, tiedZones, Seq("a", "b"), "prio", "within", "inner")
+      val r = out.select("a", "b").as[(Int, Int)].collect()
+      assert(r.length == 1, s"cap $cap")
+      assert(r(0) == (1, 9) || r(0) == (9, 1), s"cap $cap: $r") // one REAL row, never (1, 1)
+    }
   }
 
   test("sfilter semi and anti partition the left side") {
@@ -199,11 +201,11 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
     assert(aOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
     // dropDuplicates over a SUBSET keeps order-dependent non-key columns
     val dd = points.withColumn("grp", col("pid") % 5).dropDuplicates("grp")
-    val dOut = SJoin.sfilter(dd, zones, predicate = "within")
+    val dOut = sfilter(Grid)(dd, zones, "within")
     assert(dOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
     // full-row dropDuplicates is safe: duplicates are identical
     val full = points.unionByName(points).dropDuplicates()
-    val fOut = SJoin.sfilter(full, zones, predicate = "within")
+    val fOut = sfilter(Grid)(full, zones, "within")
     assert(!fOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
     assert(fOut.count() == SJoin.sfilter(points, zones, predicate = "within").count())
     spark.sharedState.cacheManager.clearCache()
@@ -228,15 +230,13 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
         // must persist too (full-keep variants so the baseline still matches)
         _.sample(1.0, 7),
         _.limit(1000))) {
-      val aOut = SJoin.sagg(wrap(zones), points, Seq(count(lit(1)).as("n")),
-        predicate = "contains", how = "left")
+      val aOut = sagg(Grid)(wrap(zones), points, Seq(count(lit(1)).as("n")), "contains", "left")
       assert(aOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
       assert(aOut.select("zid", "n").collect().map(r => r.getInt(0) -> r.get(1)).toMap == aggBase)
-      val lOut = SJoin.slookup(wrap(points), zones, Seq("zid"), "zid",
-        predicate = "within", how = "left")
+      val lOut = slookup(Grid)(wrap(points), zones, Seq("zid"), "zid", "within", "left")
       assert(lOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
       assert(lOut.select("pid", "zid").collect().map(r => r.getInt(0) -> r.get(1)).toMap == lkBase)
-      val fOut = SJoin.sfilter(wrap(points), zones, predicate = "within")
+      val fOut = sfilter(Grid)(wrap(points), zones, "within")
       assert(fOut.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
       assert(fOut.select("pid").as[Int].collect().toSet == sfBase)
     }
@@ -247,8 +247,8 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
     // identical left rows share a content tag; without the pre-agg collapse
     // their candidate pairs would merge and double every sum
     val dupZone = zones.where(col("zid") === 1).unionByName(zones.where(col("zid") === 1))
-    val out = SJoin.sagg(dupZone, points, Seq(count(lit(1)).as("n"), sum("pid").as("s")),
-      predicate = "contains", how = "left")
+    val out = sagg(Grid)(dupZone, points, Seq(count(lit(1)).as("n"), sum("pid").as("s")),
+      "contains", "left")
     assert(!out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
     val rows = out.select("n", "s").collect()
     assert(rows.length == 2, "both duplicate rows must survive the join-back")
@@ -260,56 +260,54 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
     }
     // slookup/sfilter are idempotent under duplication — multiplicity kept
     val dupPts = points.where(col("pid") === 12).unionByName(points.where(col("pid") === 12))
-    assert(SJoin.slookup(dupPts, zones, Seq("zid"), "zid", "within", "left").count() == 2)
-    assert(SJoin.sfilter(dupPts, zones, predicate = "within").count() == 2)
+    assert(slookup(Grid)(dupPts, zones, Seq("zid"), "zid", "within", "left").count() == 2)
+    assert(sfilter(Grid)(dupPts, zones, "within").count() == 2)
   }
 
   test("sagg/slookup may reference LEFT columns; the slim pair pass carries them") {
     // the pair pass only ships columns the user's expressions name — an agg
-    // over a left attribute (zid) must still resolve
-    val out = SJoin.sagg(zones, points,
-      Seq(count(lit(1)).as("n"), max(col("zid") * 1000 + col("pid")).as("mix")),
-      predicate = "contains", how = "left")
-    val m = out.select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
-    // zone 1 holds the 3×3 grid pids {0,1,2,5,6,7,10,11,12} → max 12
-    assert(m(1) == 1012L)
-    assert(m(2) == 2024L) // zone 2: pids {12,…,24} → max 24
-    assert(m(3) == null)
-    val lk = SJoin.slookup(points, zones, columns = Seq("zid"), orderBy = "zid",
-      predicate = "within", how = "left")
-    assert(lk.count() == 25)
-    // expr("...") hides its references in SQL text — the slim pass must go
-    // conservative and keep every left column, not drop zid
-    val ex = SJoin.sagg(zones, points,
-      Seq(expr("max(zid * 1000 + pid)").as("mix")), predicate = "contains", how = "left")
-      .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
-    assert(ex(1) == 1012L && ex(2) == 2024L && ex(3) == null)
-    // colRegex also hides its references (resolving needs the schema) — the
-    // slim pass must keep every left column rather than drop zid
-    val rx = SJoin.sagg(zones, points,
-      Seq(max(zones.colRegex("`^z.d$`") * 1000 + col("pid")).as("mix")),
-      predicate = "contains", how = "left")
-      .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
-    assert(rx(1) == 1012L && rx(2) == 2024L && rx(3) == null)
+    // over a left attribute (zid) must still resolve, on both paths
+    for (cap <- Seq(SJoin.IndexRows, Grid)) {
+      val out = sagg(cap)(zones, points,
+        Seq(count(lit(1)).as("n"), max(col("zid") * 1000 + col("pid")).as("mix")), "contains", "left")
+      val m = out.select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      // zone 1 holds the 3×3 grid pids {0,1,2,5,6,7,10,11,12} → max 12
+      assert(m(1) == 1012L)
+      assert(m(2) == 2024L) // zone 2: pids {12,…,24} → max 24
+      assert(m(3) == null)
+      val lk = slookup(cap)(points, zones, Seq("zid"), "zid", "within", "left")
+      assert(lk.count() == 25)
+      // expr("...") hides its references in SQL text — the slim pass must go
+      // conservative and keep every left column, not drop zid
+      val ex = sagg(cap)(zones, points, Seq(expr("max(zid * 1000 + pid)").as("mix")), "contains", "left")
+        .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      assert(ex(1) == 1012L && ex(2) == 2024L && ex(3) == null)
+      // colRegex also hides its references (resolving needs the schema) — the
+      // slim pass must keep every left column rather than drop zid
+      val rx = sagg(cap)(zones, points,
+        Seq(max(zones.colRegex("`^z.d$`") * 1000 + col("pid")).as("mix")), "contains", "left")
+        .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      assert(rx(1) == 1012L && rx(2) == 2024L && rx(3) == null)
+    }
   }
 
   test("left-column references match case-insensitively (session default)") {
     // sum(col("ZID")) against left column "zid": the analyzer resolves it
     // case-insensitively with spark.sql.caseSensitive=false, so the slim
     // pair pass must keep "zid" — dropping it fails analysis
-    val m = SJoin.sagg(zones, points,
-        Seq(max(col("ZID") * 1000 + col("pid")).as("mix")),
-        predicate = "contains", how = "left")
-      .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
-    assert(m(1) == 1012L && m(2) == 2024L && m(3) == null)
+    for (cap <- Seq(SJoin.IndexRows, Grid)) {
+      val m = sagg(cap)(zones, points, Seq(max(col("ZID") * 1000 + col("pid")).as("mix")),
+          "contains", "left")
+        .select("zid", "mix").collect().map(r => r.getInt(0) -> r.get(1)).toMap
+      assert(m(1) == 1012L && m(2) == 2024L && m(3) == null)
+    }
   }
 
   test("persist fallback frees its storage once the consuming action completes") {
     spark.sharedState.cacheManager.clearCache()
     // rand() makes the left nondeterministic → monotonic tag + persist path
     val nd = zones.where(rand(7) >= -1.0)
-    val out = SJoin.sagg(nd, points, Seq(count(lit(1)).as("n")),
-      predicate = "contains", how = "left")
+    val out = sagg(Grid)(nd, points, Seq(count(lit(1)).as("n")), "contains", "left")
     assert(out.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
     assert(out.count() == 3)
     // the release listener runs on the async listener bus — poll briefly
@@ -320,8 +318,7 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
       "stableTagged persist fallback was not released after its action completed")
     // an unrelated action in between must NOT release a pending fallback
     spark.sharedState.cacheManager.clearCache()
-    val out2 = SJoin.sagg(nd, points, Seq(count(lit(1)).as("n")),
-      predicate = "contains", how = "left")
+    val out2 = sagg(Grid)(nd, points, Seq(count(lit(1)).as("n")), "contains", "left")
     out2.queryExecution.executedPlan // plan (and persist registration) only
     points.count() // unrelated action
     Thread.sleep(500)
@@ -494,4 +491,24 @@ class SJoinSpec extends AnyFunSuite with SparkSpec {
       .distinct().as[(Int, Int)].collect().toSet
     assert(subPairs === wholePairs)
   }
+}
+
+object SJoinSpec {
+  /** The index-path row cap that forces the grid path for a non-empty small side. */
+  val Grid = 0
+
+  def sagg(cap: Int)(l: DataFrame, r: DataFrame, aggs: Seq[Column], predicate: String,
+      how: String): DataFrame =
+    SJoin.sagg(l, r, aggs, predicate, how, "geometry", "geometry", SJoin.DefaultCellDeg,
+      SJoin.Tuning(), cap)
+
+  def slookup(cap: Int)(l: DataFrame, r: DataFrame, columns: Seq[String], orderBy: String,
+      predicate: String, how: String): DataFrame =
+    SJoin.slookup(l, r, columns, orderBy, predicate, how, "geometry", "geometry",
+      SJoin.DefaultCellDeg, SJoin.Tuning(), cap)
+
+  def sfilter(cap: Int)(l: DataFrame, r: DataFrame, predicate: String,
+      negative: Boolean = false): DataFrame =
+    SJoin.sfilter(l, r, predicate, negative, "geometry", "geometry", SJoin.DefaultCellDeg,
+      SJoin.Tuning(), cap)
 }
